@@ -244,20 +244,22 @@ def test_verify_dial_validation():
         dedup.incremental_verdicts(None, None, ref_index={}, verify="sh")
 
 
-def test_grouped_candidates_equal_self_join(spark, monkeypatch):
-    """Round 13: the grouped (groupBy + within-bucket combinations)
-    candidate path — DEFAULT since the sf100 A/B measured 1.54× with
-    hash-identical sets — must emit exactly the self-join's candidates,
-    with the hot-bucket gate on and off."""
+def test_forced_slicing_keeps_pairs(spark):
+    """Slicing every multi-row bucket into pair groups (hot_bucket_min 2
+    and 3) must emit exactly the unsliced pairs on the oracle corpus: each
+    candidate pair is owned by exactly one (band, group)."""
     corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
-    shingled = dedup.shingle_docs(corpus, hh_only=True)
-    for hot in (None, 0):
-        kw = {} if hot is None else {"hot_bucket_min": hot}
-        monkeypatch.setenv("SPARK_GRAFT_CAND_GROUPED", "0")
-        sj = sorted(tuple(r) for r in dedup.minhash_candidates(shingled, **kw).collect())
-        monkeypatch.setenv("SPARK_GRAFT_CAND_GROUPED", "1")
-        gp = sorted(tuple(r) for r in dedup.minhash_candidates(shingled, **kw).collect())
-        assert sj == gp and len(sj) > 0, f"hot_bucket_min={hot}"
+    shingled = dedup.shingle_docs(corpus)
+
+    def pairs(**kw):
+        return sorted(tuple(r) for r in dedup.minhash_pairs(corpus, shingled=shingled, **kw).collect())
+
+    base = pairs()
+    assert len(base) > 0
+    for hot in (2, 3):
+        assert pairs(hot_bucket_min=hot) == base, f"hot_bucket_min={hot}"
+    with pytest.raises(ValueError, match="hot_bucket_min"):
+        dedup.minhash_pairs(corpus, hot_bucket_min=0)
 
 
 def test_hh_only_shingled_with_sh_verify_raises(spark):

@@ -42,6 +42,12 @@ def test_upsert_partitions_is_idempotent(spark, tmp_path):
     assert after2.filter(F.col("ship_ym") == "2001-03").count() == fixed.count()
     assert after2.filter(F.col("ship_ym") != "2001-03").count() == n1 - n_march
 
+    # the overwrite mode is a writer option: the session conf stays unset
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    upsert_partitions(fixed, path, ("ship_ym",))
+    assert spark.conf.get(key, None) is None
+
 
 def test_clustered_write_rowgroup_stats_prune(spark, tmp_path):
     path = str(tmp_path / "clustered")

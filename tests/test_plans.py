@@ -90,6 +90,21 @@ def test_dedup_exact_single_shuffle(spark):
     assert _n_exchanges(plan) == 1, plan
 
 
+def test_dedup_minhash_is_one_linear_plan(spark):
+    # one shingle pass, one signature pass, no broadcast side branch: the
+    # pair groups verify every candidate in place (operators/dedup.py)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = _QUERIES["dedup_minhash"](spark, SF_ORACLE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
 def test_avg_rank_single_window_pass(spark):
     # avg_rank counts ties via the ORDER-BY-peers RANGE frame under the
     # rank's own spec, so rank + tie count plan as ONE Window over ONE sort

@@ -48,10 +48,9 @@ def test_salt_spreads_hot_key(spark):
 
 
 # ---------------------------------------------------------------------------
-# Dedup hot-bucket gate (round 9, VERDICT r8 item 7): a boilerplate corpus
-# collapsing onto one LSH band bucket must (a) produce IDENTICAL pairs
-# through the salted path and (b) actually split the hot bucket's pair
-# build across salt groups.
+# Dedup hot buckets: a boilerplate corpus collapsing onto one LSH band
+# bucket must (a) produce IDENTICAL pairs when the bucket is sliced into
+# pair groups and (b) bound every pair group at 2 × hot_bucket_min rows.
 # ---------------------------------------------------------------------------
 
 
@@ -67,99 +66,37 @@ def _boilerplate_corpus(spark, n_docs=600):
 
 
 def test_dedup_hot_bucket_salted_pairs_identical(spark):
-    from wnba_data_pipeline_spark.functions.hashing import md5_long
-    from wnba_data_pipeline_spark.operators.dedup import (
-        HB_SAMPLE_MOD,
-        _minhash_band_keys,
-        minhash_pairs,
-        shingle_docs,
-    )
+    from wnba_data_pipeline_spark.operators.dedup import minhash_pairs
 
     docs = _boilerplate_corpus(spark)
-    # the sampled detector must actually fire on this corpus (otherwise the
-    # equality below only exercises the cold branch): recompute the
-    # estimate with the operator's own constants
-    est = (
-        shingle_docs(docs)
-        .filter(
-            F.pmod(
-                md5_long(F.concat(F.lit("hb:"), F.col("doc_id").cast("string"))),
-                F.lit(HB_SAMPLE_MOD),
-            )
-            == 0
-        )
-        .select(F.explode(F.array(*_minhash_band_keys(F.col("sh")))).alias("band_key"))
-        .groupBy("band_key")
-        .count()
-        .filter(F.col("count") >= 2)
-        .count()
-    )
-    assert est > 0, "sampled hot-bucket detection did not fire; grow the corpus"
-    plain = {
+    sliced = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
         for r in minhash_pairs(docs, hot_bucket_min=32).collect()
     }
-    salted = {
+    # a bar above the corpus size: every bucket is one group, no slicing
+    whole = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in minhash_pairs(docs, hot_bucket_min=0).collect()
+        for r in minhash_pairs(docs, hot_bucket_min=10**6).collect()
     }
-    assert plain == salted
-    assert len(plain) > 1000  # the quadratic shape is real
+    assert sliced == whole
+    assert len(sliced) > 1000  # the quadratic shape is real
 
 
-def test_dedup_hot_bucket_actually_splits(spark):
-    from wnba_data_pipeline_spark.functions.skew import SALT_COL as SC
-    from wnba_data_pipeline_spark.functions.skew import HOT_SALTS, with_salt
-    from wnba_data_pipeline_spark.operators.dedup import (
-        _minhash_band_keys,
-        shingle_docs,
+def test_dedup_hot_bucket_groups_bounded(spark):
+    """The operator's own pair-group rows: the planted bucket is far past
+    the bar, so it is sliced, and no (band_key, _sub) group — the unit one
+    task pairs up — holds more than 2 × hot_bucket_min rows."""
+    from wnba_data_pipeline_spark.operators.dedup import band_slices, shingle_docs
+
+    hot_min = 32
+    sliced = band_slices(shingle_docs(_boilerplate_corpus(spark)), hot_bucket_min=hot_min)
+    biggest_bucket = (
+        sliced.groupBy("band_key").agg(F.countDistinct("doc_id").alias("n")).agg(F.max("n"))
+    ).collect()[0][0]
+    assert biggest_bucket > 8 * hot_min  # the planted bucket exists
+    groups = sliced.groupBy("band_key", "_sub").agg(
+        F.count(F.lit(1)).alias("c"), F.max("_s").alias("s")
     )
-
-    docs = _boilerplate_corpus(spark)
-    shingled = shingle_docs(docs)
-    banded = shingled.select(
-        "doc_id",
-        F.explode(F.array(*_minhash_band_keys(F.col("sh")))).alias("band_key"),
-    )
-    sizes = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_n"))
-    hot_max = sizes.agg(F.max("_n")).collect()[0][0]
-    assert hot_max > 32  # the planted bucket exists
-    # the salted probe side splits that bucket ~evenly across HOT_SALTS
-    # groups, so no single task builds the whole |B|^2 pair block
-    hot = banded.join(sizes.filter(F.col("_n") > 32), "band_key").select("doc_id", "band_key")
-    dist = [
-        r["c"]
-        for r in with_salt(hot, HOT_SALTS)
-        .groupBy("band_key", SC)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
-    assert max(dist) <= 4 * (hot_max // HOT_SALTS + 1)
-
-
-def test_disabled_gate_never_takes_grouped_path(spark):
-    """Round 14 (VERDICT r13 item 5 / ADVICE r13): with the hot gate
-    DISABLED (hot_bucket_min=0) nothing bounds bucket size, so the grouped
-    collect_list + C(B,2) combinations path — which builds a bucket's whole
-    pair array in ONE row — must not engage; the branch falls back to the
-    band-key self-join, which streams a giant bucket's pairs across join
-    tasks. Plan-asserted on the planted-giant-bucket corpus, and the pair
-    sets stay identical to the gated default."""
-    from wnba_data_pipeline_spark.operators.dedup import (
-        minhash_candidates,
-        minhash_pairs,
-        shingle_docs,
-    )
-
-    docs = _boilerplate_corpus(spark, n_docs=120)
-    shingled = shingle_docs(docs)
-    plan = minhash_candidates(shingled, hot_bucket_min=0)._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan  # the grouped path's signature agg
-    assert "Join" in plan  # self-join engaged (AQE picks the physical kind)
-    gated = {
-        (r["doc_a"], r["doc_b"]) for r in minhash_pairs(docs).collect()
-    }
-    disabled = {
-        (r["doc_a"], r["doc_b"]) for r in minhash_pairs(docs, hot_bucket_min=0).collect()
-    }
-    assert gated == disabled
+    row = groups.agg(F.max("c").alias("c"), F.max("s").alias("s")).collect()[0]
+    assert row["s"] > 1  # slicing engaged
+    assert row["c"] <= 2 * hot_min

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
 
-# Salt fan-out for the dedup hot-bucket gate (operators/dedup.minhash_pairs):
-# a hot band bucket's |B|² pair build spreads over this many tasks.
-HOT_SALTS = 16
-
 
 def with_salt(df: DataFrame, n_salts: int, *, salt_col: str = SALT_COL) -> DataFrame:
     """Deterministic row salt in [0, n_salts)."""

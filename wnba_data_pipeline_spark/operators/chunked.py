@@ -53,13 +53,16 @@ from ..functions.hashing import md5_long
 # every task owns ~312k anyway; the chunked machinery's summary join +
 # probe union cost 2-3x for nothing), while a 33%-hot user is a genuine
 # single-task wall. So a key is hot iff its estimated rows ≥
-# max(HOT_KEY_MIN, HOT_PARTITION_FACTOR × est_total / shuffle_partitions):
-# the relative bar finds the keys that actually dominate a task wave at
-# ANY scale (at 100 TB / 8000 cores a 64k-row key is noise), the absolute
-# floor stops flapping on tiny corpora.
+# max(HOT_KEY_MIN, min(HOT_PARTITION_FACTOR × est_total / shuffle_partitions,
+# HOT_SHARE_CAP × est_total)): the relative bar finds the keys that actually
+# dominate a task wave at ANY scale (at 100 TB / 8000 cores a 64k-row key
+# is noise), the absolute floor stops flapping on tiny corpora. The share
+# cap keeps the bar reachable at ≤ 4 shuffle partitions, where the
+# partition term alone reaches est_total and no key could ever be hot.
 HOT_KEY_MIN = 65536
 HOT_PARTITION_FACTOR = 4
-HK_SAMPLE_MOD = 64  # detection sample fraction (1/64, same as HB_SAMPLE_MOD)
+HOT_SHARE_CAP = 0.5
+HK_SAMPLE_MOD = 64  # detection sample fraction (1/64)
 CHUNK_US = 24 * 3600 * 1_000_000  # chunk width: 1 day of event time
 
 
@@ -83,14 +86,14 @@ def detect_hot_keys(
     partition_factor: int = HOT_PARTITION_FACTOR,
 ) -> bool:
     """True iff some key's ESTIMATED row count clears the relative bar
-    ``max(hot_key_min, partition_factor × est_total / shuffle_partitions)``
-    — see the constants above for why the bar is relative. Estimates come
-    from a deterministic 1/``sample_mod`` row sample (md5 of ``id_col`` —
-    reshuffle-proof, retry-stable; same construction as the dedup
-    hot-bucket gate): a true B-row key appears ~B/sample_mod times, so
-    keys at the genuinely-dominating scale are detected with
-    near-certainty, and a key needs ≥2 sampled rows before it can trip
-    anything (small-corpus noise immunity). One cheap aggregate job over
+    ``max(hot_key_min, min(partition_factor × est_total / shuffle_partitions,
+    HOT_SHARE_CAP × est_total))`` — see the constants above for why the
+    bar is relative and capped. Estimates come from a deterministic
+    1/``sample_mod`` row sample (md5 of ``id_col`` — reshuffle-proof,
+    retry-stable): a true B-row key appears ~B/sample_mod times, so keys
+    at the genuinely-dominating scale are detected with near-certainty,
+    and a key needs ≥2 sampled rows before it can trip anything
+    (small-corpus noise immunity). One cheap aggregate job over
     two columns; the result picks a PLAN SHAPE only — both branches
     return identical rows (tests/test_chunked.py)."""
     sampled = df.filter(
@@ -107,7 +110,8 @@ def detect_hot_keys(
     est_max = row["_mx"] * sample_mod
     est_total = row["_tot"] * sample_mod
     parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    return est_max >= max(hot_key_min, partition_factor * est_total // max(parts, 1))
+    relative = min(partition_factor * est_total // max(parts, 1), int(HOT_SHARE_CAP * est_total))
+    return est_max >= max(hot_key_min, relative)
 
 
 _HOT_EVENTS_CACHE: dict[tuple, bool] = {}

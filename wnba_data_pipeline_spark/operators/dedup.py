@@ -21,9 +21,9 @@ duplicates. The augmentation is part of the query on both engines.
 Scale posture (100 TB):
 - exact dedup: one shuffle on content_hash (uniform by construction — md5
   can't skew); survivors picked per-hash-partition, no global sort.
-- minhash: the candidate step is a BANDED BUCKET JOIN (explode k/r band
-  keys, self-join on band_key) — candidates ~ O(colliding pairs), never the
-  all-pairs O(n²); exact Jaccard verification runs only on candidates.
+- minhash: candidates come from BANDED BUCKETS (explode k/r band keys,
+  group on band_key) — pair work ~ O(colliding pairs), never the all-pairs
+  O(n²); exact Jaccard runs once per candidate, inside its bucket group.
 - simhash: embarrassingly parallel map (no shuffle at all); downstream
   near-dup grouping is a groupBy on the 16-bit fingerprint.
 """
@@ -95,13 +95,12 @@ EXACT_COPY_OFFSET = 2_000_000  # doc_id offset for planted exact copies
 NEAR_COPY_OFFSET = 1_000_000  # doc_id offset for planted near-copies
 SIMHASH_BITS = 16
 
-# LSH band buckets above this size pair through the salted self-join (see
-# minhash_pairs docstring). The sf30 organic maximum bucket was 359 rows
-# (BENCH_SCALE_r09 minhash_probe), so only adversarial boilerplate
-# corpora cross this line. Detection runs on a 1/HB_SAMPLE_MOD doc sample
-# (cost, not correctness — both plan branches emit identical pairs).
+# LSH band buckets above this many rows are sliced into pair groups of at
+# most 2 × HOT_BUCKET_MIN rows (see band_slices). The sf30 organic
+# maximum bucket was 359 rows (BENCH_SCALE_r09 minhash_probe), so only
+# adversarial boilerplate corpora cross this line.
 HOT_BUCKET_MIN = 1024
-HB_SAMPLE_MOD = 64
+PAIR_EST_SAMPLE_MOD = 64  # doc sample fraction of estimate_pair_volume
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +250,7 @@ _SIG_SQL = "[" + ", ".join(f"list_min(list_transform(hh, h -> ({a}*(h%{P})+{b})%
 # int64 vector, segment-min via minimum.reduceat) — identical arithmetic
 # (md5 hashes are 60-bit POSITIVE int64, so %/× match the JVM exactly;
 # overflow-free by the same a·(h%P) < 2^62 bound), so this is a PHYSICAL
-# switch like the hot-bucket gate, never a semantic dial: both branches
+# switch, never a semantic dial: both branches
 # emit byte-identical signatures (tests/test_dedup_arrow.py).
 #
 # DEFAULT AT EVERY K since round 14: the round-11 gate (Arrow only at
@@ -381,19 +380,21 @@ def _band_keys_from_sig(sig: Column, n_bands: int, band_rows: int) -> list[Colum
     ]
 
 
-def banded_keys(
+def _with_band_keys(
     shingled: DataFrame,
+    keep: list[str],
     *,
     coeffs: list[tuple[int, int]] | None = None,
     band_rows: int | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """(doc_id, sh[, hh]) → exploded (doc_id, band_key) — the shared
-    signature+band map behind ``minhash_pairs`` and the incremental
-    screen. The Arrow signature pass is the DEFAULT at every K since
-    round 14 (4.12× at sf100 on the default geometry — see the
-    ``_sig_arrow_enabled`` note); ``SPARK_GRAFT_SIG_ARROW=0`` opts back
-    to the expression plan. Both branches emit identical band keys."""
+    """(… sh[, hh] …) → (``keep`` columns, ``_keys``): each row's band keys as an
+    array<string> in band-index order — the signature+band map behind
+    ``minhash_pairs`` and ``banded_keys``. Key
+    ``t`` of every doc starts with ``"t:"``, so two docs share a key at
+    some band iff their key arrays overlap. The Arrow signature pass
+    is the default at every K (4.12× at sf100 on the default geometry —
+    see the ``_sig_arrow_enabled`` note); ``SPARK_GRAFT_SIG_ARROW=0`` opts
+    back to the expression plan. Both branches emit identical band keys."""
     coeffs = COEFFS if coeffs is None else coeffs
     band_rows = BAND_ROWS if band_rows is None else band_rows
     n_bands = len(coeffs) // band_rows
@@ -422,23 +423,25 @@ def banded_keys(
             F.col("sh").getItem(0).isNull(), F.lit(None).cast("array<bigint>")
         ).otherwise(F.transform(F.col("sh"), md5_long))
     if _sig_arrow_enabled():
-        sigged = shingled.select(id_col, minhash_sig_udf(coeffs)(hh).alias("sig"))
-        return sigged.select(
-            id_col,
-            F.explode(F.array(*_band_keys_from_sig(F.col("sig"), n_bands, band_rows))).alias(
-                "band_key"
-            ),
-        )
-    return shingled.select(
-        id_col,
-        F.explode(
-            F.array(
-                *_minhash_band_keys(
-                    F.col("sh"), coeffs=coeffs, band_rows=band_rows, hashes=hh
-                )
-            )
-        ).alias("band_key"),
-    )
+        sigged = shingled.select(*keep, minhash_sig_udf(coeffs)(hh).alias("_sig"))
+        keys = _band_keys_from_sig(F.col("_sig"), n_bands, band_rows)
+        return sigged.select(*keep, F.array(*keys).alias("_keys"))
+    keys = _minhash_band_keys(F.col("sh"), coeffs=coeffs, band_rows=band_rows, hashes=hh)
+    return shingled.select(*keep, F.array(*keys).alias("_keys"))
+
+
+def banded_keys(
+    shingled: DataFrame,
+    *,
+    coeffs: list[tuple[int, int]] | None = None,
+    band_rows: int | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(doc_id, sh[, hh]) → exploded (doc_id, band_key): one row per doc
+    and band (see ``_with_band_keys``)."""
+    keyed = _with_band_keys(shingled, [id_col], coeffs=coeffs, band_rows=band_rows)
+    # _outer: see band_slices
+    return keyed.select(id_col, F.explode_outer("_keys").alias("band_key"))
 
 
 # Geometry advisory (round 11, VERDICT r10 item 7): run_curation logs a
@@ -461,15 +464,15 @@ def estimate_pair_volume(
     *,
     coeffs: list[tuple[int, int]] | None = None,
     band_rows: int | None = None,
-    sample_mod: int = HB_SAMPLE_MOD,
+    sample_mod: int = PAIR_EST_SAMPLE_MOD,
 ) -> int:
-    """Estimated per-band LSH candidate-pair volume from the deterministic
-    1/``sample_mod`` doc sample (the hot-bucket gate's sample): a bucket
-    holding B docs contributes C(B,2) pairs, and each pair survives the
-    doc sample with probability 1/m² — so Σ_buckets C(b_sampled, 2) × m²
-    is UNBIASED for the corpus pair volume. One small agg job over ~1/m of
-    the docs (the band map runs only on the sample). Estimates per-band
-    pair SLOTS (the join's work), slightly above distinct candidates —
+    """Estimated per-band LSH candidate-pair volume from a deterministic
+    1/``sample_mod`` doc sample: a bucket holding B docs contributes
+    C(B,2) pairs, and each pair survives the doc sample with probability
+    1/m² — so Σ_buckets C(b_sampled, 2) × m² is UNBIASED for the corpus
+    pair volume. One small agg job over ~1/m of the docs (the band map
+    runs only on the sample). Estimates per-band
+    pair SLOTS (the pair groups' work), slightly above distinct pairs —
     the right cost proxy (sf100: 19.54 M slots vs 19.14 M distinct)."""
     gate = (
         F.pmod(
@@ -582,10 +585,9 @@ def shingle_docs_arrow(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
 def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
     """(… doc_id, text …) → (doc_id, sh, hh): the per-doc distinct-shingle
     arrays every MinHash consumer derives from, PLUS their md5-int64 hash
-    array ``hh`` materialized once. Exposed so a caller that evaluates the
-    pair plan eagerly (the curation funnel) can persist ONE shingle
-    computation across its three uses inside ``minhash_pairs`` (band
-    explode + both verification payload joins).
+    array ``hh`` materialized once. Exposed so a caller can persist ONE
+    shingle computation across several plans (the curation funnel shares
+    it between its geometry advisory and ``minhash_pairs``).
 
     Why ``hh`` rides along (round 10 — the §14.7 signature-cost target):
     the K signature mins each contain ``transform(sh, md5_long)`` as a
@@ -620,6 +622,66 @@ def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
     )
 
 
+def band_slices(
+    shingled: DataFrame,
+    *,
+    verify: str = "sh",
+    coeffs: list[tuple[int, int]] | None = None,
+    band_rows: int | None = None,
+    hot_bucket_min: int | None = None,
+) -> DataFrame:
+    """The pair-group rows of :func:`minhash_pairs`: one row per (doc,
+    band, pair group) of every bucket holding two or more docs, carrying
+    ``doc_id``, the verify payload ``_v``, the doc's band-key array
+    ``_keys``, its band index ``_band`` and ``band_key``, the bucket's
+    size ``_n`` and slice count ``_s``, the doc's salt ``_salt`` in
+    [0, _s) and the pair-group id ``_sub``.
+
+    A bucket of n rows gets S = ceil(n / hot_bucket_min) slices, so S = 1
+    (one group, ``_sub`` 0, no replication) for every bucket up to
+    ``hot_bucket_min`` rows. A doc's salt is its doc_id rank in the bucket
+    mod S, so each salt holds at most ceil(n / S) ≤ ``hot_bucket_min``
+    docs. A doc with salt s replicates into the S groups
+    {(min(s, j), max(s, j)) : j < S} (encoded ``i*S + j``): every
+    within-bucket pair meets in exactly the group keyed by its two salts,
+    and a group holds the docs of at most two salts, ≤ 2 ×
+    ``hot_bucket_min`` rows. S is uncapped so that bound holds at any
+    bucket size."""
+    if hot_bucket_min is None:
+        hot_bucket_min = HOT_BUCKET_MIN
+    if hot_bucket_min < 1:
+        raise ValueError(f"hot_bucket_min must be >= 1, got {hot_bucket_min}")
+    keyed = _with_band_keys(
+        shingled, ["doc_id", verify], coeffs=coeffs, band_rows=band_rows
+    ).withColumnRenamed(verify, "_v")
+    # _outer only to stop the optimizer inferring a size(_keys) > 0 filter
+    # below the explode, which re-runs the signature UDF for the filter;
+    # the key array is never empty, so the rows are the same
+    banded = keyed.select("*", F.posexplode_outer("_keys").alias("_band", "band_key"))
+    # one sort, one Window pass: the count's whole-bucket frame shares the
+    # rank's partitioning and order
+    w = Window.partitionBy("band_key").orderBy("doc_id")
+    n = F.count(F.lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    s, salt = F.col("_s"), F.col("_salt")
+    return (
+        banded.withColumn("_n", n)
+        .filter(F.col("_n") >= 2)  # a one-doc bucket owns no pair
+        .withColumn("_s", F.ceil(F.col("_n") / F.lit(hot_bucket_min)))
+        .withColumn("_salt", F.pmod(F.row_number().over(w), s))
+        .withColumn(
+            "_sub",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0).cast("long"), s - 1),
+                    lambda j: F.least(salt, j) * s + F.greatest(salt, j),
+                )
+            ),
+        )
+    )
+
+
 def minhash_pairs(
     docs: DataFrame,
     *,
@@ -630,57 +692,53 @@ def minhash_pairs(
     hot_bucket_min: int | None = None,
     verify: str = "sh",
 ) -> DataFrame:
-    """(… doc_id, text …) → near-dup pairs (doc_a, doc_b, jaccard) via
-    MinHash-LSH — the reusable transform behind ``q_dedup_minhash`` and
-    the curation pipeline's near-dup stage.
+    """(… doc_id, text …) → near-dup pairs (doc_a < doc_b, jaccard) with
+    Jaccard ≥ ``threshold`` among MinHash-LSH candidates — the reusable
+    transform behind ``q_dedup_minhash`` and the curation funnels'
+    near-dup stage.
 
-    Plan: shingle+signature are per-row expressions (no shuffle); explode
-    N_BANDS band keys; self-join on band_key (the LSH bucket join — the
-    step that replaces O(n²) all-pairs at 100 TB); distinct candidate
-    pairs; exact shingle-Jaccard verification ONLY on candidates.
+    One linear plan, one job, three stages:
 
-    Hot-bucket gate (round 9, VERDICT r8 item 7): an adversarial corpus
-    where thousands of docs share one boilerplate template collapses a
-    band bucket onto ONE join partition — |B|²/2 candidate pairs built by
-    a single task while 31 cores idle (AQE skew splitting does not split
-    a self-join key group). Buckets above ``hot_bucket_min`` (default
-    ``HOT_BUCKET_MIN``; the sf30 organic maximum measured 359, so normal
-    corpora never engage it) therefore pair through a SALTED self-join
-    (``functions.skew``): probe rows get a deterministic salt in
-    [0, HOT_SALTS), the build side replicates per salt, and each task
-    builds |B|²/HOT_SALTS pairs. Output-identical to the plain join (every
-    (a<b) pair matches exactly once, at a's salt — equality-asserted in
-    tests/test_skew.py), so the ORACLE and survivor semantics are
-    untouched. Hot buckets are detected from a 1/HB_SAMPLE_MOD doc sample
-    split off via broadcast hash joins — see the inline comment for why
-    (an exact full count via window measured +38-52 s at sf30; the sample
-    costs ~nothing and misdetection only changes the physical branch,
-    never the pairs). Pass ``0`` to disable (the measured-off baseline).
+    1. one shingle + signature pass per doc, carrying (doc_id, verify
+       payload, band-key array), then a posexplode of the band keys;
+    2. exchange on band_key: a window count sizes every bucket, one-doc
+       buckets drop out, and the rows of buckets above ``hot_bucket_min``
+       replicate into pair groups (:func:`band_slices`);
+    3. exchange on (band_key, pair group): each group emits every pair it
+       owns with its exact Jaccard.
 
-    ``shingled``: optionally pass a (persisted) ``shingle_docs`` frame to
-    share the shingle computation across this plan's three consumers —
-    lifecycle stays with the caller (lazy registry/oracle consumers keep
-    the default pure-plan form).
+    A pair's owner is the first band where the two docs share a key, in
+    the group keyed by their two salts, so every candidate pair is
+    verified exactly once with no ``distinct`` and no payload join — the
+    whole plan runs the shingle and signature passes once. Only
+    (doc_a, doc_b, jaccard) structs leave a group, never payload pairs,
+    and a group holds at most 2 × ``hot_bucket_min`` rows (default
+    ``HOT_BUCKET_MIN``), so a boilerplate bucket of any size spreads its
+    C(n, 2) pair work over ~S²/2 groups instead of one task. The explicit
+    repartition matters: a groupBy alone is satisfied by the window's
+    band_key partitioning and would leave all slices of a bucket in one
+    task. The Jaccard is ``round(|∩|/|∪|, 6)`` as a Spark expression, the
+    DuckDB oracle's arithmetic.
 
-    ``verify`` (round 12, VERDICT r11 item 4): which column the exact
-    Jaccard runs over — ``"sh"`` (the string shingle arrays; the oracle
-    contract, default) or ``"hh"`` (their md5-int64 hash arrays — the
-    SCALE dial: 8-byte longs instead of ~25-byte strings through both
-    verification shuffles and long-vs-long comparisons inside
-    array_intersect/array_union). The r8 negative REVERSED at the
-    decade: 13.6 s vs 46.7 s over 19.1 M candidates at sf100, pair sets
-    hash-identical (BENCH_SCALE_r12 stages100 re-measures the identity
-    every round, and a collision between two distinct shingles of one
-    compared pair — the only way values could diverge — has probability
-    ~|union|²/2⁶⁰ per pair). The curation funnel passes "hh"; the
-    registry/oracle row keeps "sh" so the DuckDB twin stays the
-    definition."""
+    ``shingled``: optionally pass a (persisted) ``shingle_docs`` frame —
+    lifecycle stays with the caller (the curation funnel shares it with
+    its geometry advisory).
+
+    ``verify``: which column the exact Jaccard runs over — ``"sh"`` (the
+    string shingle arrays; the oracle contract, default) or ``"hh"``
+    (their md5-int64 hash arrays — the scale dial: 8-byte longs instead of
+    ~25-byte strings through the pair-group exchange, long-vs-long
+    comparisons inside array_intersect/array_union; 13.6 s vs 46.7 s over
+    19.1 M candidates at sf100 with hash-identical pair sets,
+    BENCH_SCALE_r12 stages100 — values diverge only on an md5-60-bit
+    collision between two shingles of one compared pair, probability
+    ~|union|²/2⁶⁰). The curation funnel passes "hh"; the registry/oracle
+    row keeps "sh" so the DuckDB twin stays the definition."""
     if verify not in ("sh", "hh"):
         raise ValueError(f"verify must be 'sh' or 'hh', got {verify!r}")
     if shingled is not None and verify not in shingled.columns:
         # an hh_only shingled frame with the default verify="sh" would
         # otherwise surface as an opaque unresolved-column analysis error
-        # deep in the verify join (ADVICE r12)
         raise ValueError(
             f"shingled frame has no {verify!r} column (columns: "
             f"{shingled.columns}); pass verify={'hh' if verify == 'sh' else 'sh'!r} "
@@ -690,173 +748,48 @@ def minhash_pairs(
         # the hh pipeline never reads the string arrays — keep them out
         # of the Arrow transfer entirely (see shingle_docs)
         shingled = shingle_docs(docs, hh_only=(verify == "hh"))
-        # Round 15 tried repartition("doc_id") here so the three shingled
-        # consumers (band table + two verify fetch sides) would share one
-        # exchange; REJECTED by measurement — column pruning specializes
-        # each branch's subtree below the exchange (the band branch reads
-        # hh, the verify sides read the verify column), so ReuseExchange
-        # never fires in the full plan and the lazy row gained six
-        # specialized exchanges for a wall change inside host noise
-        # (interleaved min 2.52–3.08 s across all four repartition
-        # variants, outputs identical). The funnel shares the computation
-        # through its persisted frame instead.
-    cand = minhash_candidates(
-        shingled, coeffs=coeffs, band_rows=band_rows, hot_bucket_min=hot_bucket_min
+    sliced = band_slices(
+        shingled,
+        verify=verify,
+        coeffs=coeffs,
+        band_rows=band_rows,
+        hot_bucket_min=hot_bucket_min,
     )
-    v_a = shingled.select(F.col("doc_id").alias("doc_a"), F.col(verify).alias("v_a"))
-    v_b = shingled.select(F.col("doc_id").alias("doc_b"), F.col(verify).alias("v_b"))
-    return (
-        cand.join(v_a, "doc_a")
-        .join(v_b, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("v_a", "v_b")) / F.size(F.array_union("v_a", "v_b")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    m, band, s, sub = F.col("_m"), F.col("_band"), F.col("_s"), F.col("_sub")
 
-
-def minhash_candidates(
-    shingled: DataFrame,
-    *,
-    coeffs: list[tuple[int, int]] | None = None,
-    band_rows: int | None = None,
-    hot_bucket_min: int | None = None,
-) -> DataFrame:
-    """The LSH candidate step of :func:`minhash_pairs`, exposed on its own
-    (round 12 — the per-stage attribution probe times candidates and
-    verification separately through the SAME plan code the production pair
-    path runs, instead of a probe-local replica): banded band-key self-join
-    → distinct (doc_a < doc_b) pairs, hot buckets through the salted branch
-    (see the ``minhash_pairs`` docstring for the gate's anatomy)."""
-    if hot_bucket_min is None:
-        hot_bucket_min = HOT_BUCKET_MIN
-    # signature+band map: Arrow numpy pass at every K since round 14
-    # (see banded_keys) — the round-11 fix that makes GEOMETRY_LARGE_N
-    # actually pay at sf100
-    banded = banded_keys(shingled, coeffs=coeffs, band_rows=band_rows)
-
-    def _self_pairs(side: DataFrame, extra_keys: list[str]) -> DataFrame:
-        a, b = side.alias("a"), side.alias("b")
-        cond = (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-        for k in extra_keys:
-            cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-        return a.join(b, cond).select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-
-    def _grouped_pairs(side: DataFrame) -> DataFrame:
-        """Within-bucket pair generation via groupBy(band_key) +
-        collect_list + a combinations expression — ONE shuffle of the band
-        table instead of the self-join's two sides. DEFAULT since round 13:
-        measured 36.7 s vs 56.7 s median-of-3 over the 11.7 M sf100 band
-        rows (1.54×), candidate sets hash-identical (BENCH_SCALE_r13
-        cand_join_ab; equality also pinned in tests/test_dedup_arrow.py).
-        Emits exactly the (doc_a < doc_b) pair slots the self-join builds
-        (ids sorted ascending per bucket, every ordered pair once per
-        bucket), so the downstream distinct yields an identical candidate
-        set. Only ever applied to the COLD (non-hot-bucket) side: bucket
-        size is bounded by the hot gate (≤ ~HOT_BUCKET_MIN rows → ≤ ~0.5 M
-        pairs per bucket task), while a giant bucket's C(B,2) explode
-        would land in one task — the exact skew the salted branch exists
-        for. When the gate is DISABLED (``hot_bucket_min <= 0``) the
-        bound disappears, so that branch falls back to ``_self_pairs``
-        (round 14, VERDICT r13 item 5): the self-join streams a giant
-        bucket's pairs across join tasks instead of building them as one
-        collect_list + C(B,2) flatten in a single row.
-        ``SPARK_GRAFT_CAND_GROUPED=0`` opts back to the self-join."""
-        ids = F.col("_ids")
-        pair_structs = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + F.lit(2), F.greatest(F.size(ids) - i - F.lit(1), F.lit(0))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
+    def _owned(x: Column, y: Column) -> Column:
+        # this group's slice, and no shared key in an earlier band
+        lo = F.least(x["_salt"], y["_salt"])
+        hi = F.greatest(x["_salt"], y["_salt"])
         return (
-            side.groupBy("band_key")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
-            .filter(F.size("_ids") >= 2)
-            .select(F.explode(pair_structs).alias("_p"))
-            .select(F.col("_p.doc_a"), F.col("_p.doc_b"))
+            (x["doc_id"] != y["doc_id"])
+            & (lo * s + hi == sub)
+            & ~F.arrays_overlap(F.slice(x["_keys"], 1, band), F.slice(y["_keys"], 1, band))
         )
 
-    cold_pairs = (
-        _grouped_pairs
-        if os.environ.get("SPARK_GRAFT_CAND_GROUPED", "1") != "0"
-        else lambda side: _self_pairs(side, [])
+    def _pair(x: Column, y: Column) -> Column:
+        jaccard = F.round(
+            F.size(F.array_intersect(x["_v"], y["_v"]))
+            / F.size(F.array_union(x["_v"], y["_v"])),
+            6,
+        )
+        return F.struct(
+            F.least(x["doc_id"], y["doc_id"]).alias("doc_a"),
+            F.greatest(x["doc_id"], y["doc_id"]).alias("doc_b"),
+            jaccard.alias("jaccard"),
+        )
+
+    def _pairs_of(x: Column, i: Column) -> Column:
+        later = F.slice(m, i + F.lit(2), F.greatest(F.size(m) - i - F.lit(1), F.lit(0)))
+        return F.transform(F.filter(later, lambda y: _owned(x, y)), lambda y: _pair(x, y))
+
+    pairs = F.filter(F.flatten(F.transform(m, _pairs_of)), lambda p: p["jaccard"] >= threshold)
+    return (
+        sliced.repartition("band_key", "_sub")
+        .groupBy("band_key", "_sub", "_band", "_s")
+        .agg(F.collect_list(F.struct("doc_id", "_salt", "_keys", "_v")).alias("_m"))
+        .select(F.inline(pairs))
     )
-
-    if hot_bucket_min <= 0:
-        # gate disabled → no bucket-size bound → the grouped path would
-        # materialize a giant bucket's whole C(B,2) pair array in ONE row
-        # (collect_list + flatten in a single task); the self-join spreads
-        # that work across join tasks, so it is the only safe shape here
-        # (VERDICT r13 item 5 / ADVICE r13)
-        return _self_pairs(banded, []).distinct()
-    else:
-        from ..functions.skew import HOT_SALTS, explode_salts, with_salt
-
-        # (round 15 also tried repartition("band_key") below the three
-        # banded consumers — rejected by the same measurement: Spark's
-        # ENSURE_REQUIREMENTS exchanges already reuse across the matching
-        # consumers, and walls were identical within noise both with
-        # persisted shingles and on the lazy plan.)
-
-        # Hot buckets are DETECTED ON A SAMPLE, not by counting the full
-        # band table (the round-9 first cut counted via a band_key window
-        # and measured +38-52 s at sf30 — the Sort+Window re-ran per join
-        # consumer). A deterministic 1/HB_SAMPLE_MOD doc sample bands
-        # ~1/64 of the corpus; a true bucket of B rows appears ~B/64
-        # times, so `>= max(2, min/128)` engages the salted branch with
-        # ~certainty for the B >> 10k buckets where single-task pair
-        # builds actually hurt. Detection nondeterminism is IRRELEVANT to
-        # output: both branches emit exactly the same pairs — the sample
-        # only picks the physical join shape per bucket. Cost when no
-        # bucket is hot (every organic corpus measured): the tiny
-        # sampled agg + two broadcast hash joins streaming over banded —
-        # no extra sort, no extra shuffle, no second signature pass.
-        sample_gate_col = (
-            F.pmod(
-                md5_long(F.concat(F.lit("hb:"), F.col("doc_id").cast("string"))),
-                F.lit(HB_SAMPLE_MOD),
-            )
-            == 0
-        )
-        # Round 15: gate BEFORE banding, not after — the gate depends only
-        # on doc_id, and band keys are a pure per-doc function, so banding
-        # the 1/HB_SAMPLE_MOD doc sample yields the identical sampled band
-        # table while the signature pass runs over 1/64 of the rows
-        # instead of all of them (the old ``banded.filter(gate)`` computed
-        # every signature and then dropped 63/64 of them).
-        hot_keys = (
-            banded_keys(shingled.filter(sample_gate_col), coeffs=coeffs, band_rows=band_rows)
-            .groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= max(2, hot_bucket_min // (2 * HB_SAMPLE_MOD)))
-            .select("band_key")
-        )
-        cold = banded.join(F.broadcast(hot_keys), "band_key", "left_anti")
-        hot = banded.join(F.broadcast(hot_keys), "band_key", "left_semi")
-        hot_a = with_salt(hot, HOT_SALTS)
-        hot_b = explode_salts(hot, HOT_SALTS)
-        hot_pairs = (
-            hot_a.alias("a")
-            .join(
-                hot_b.alias("b"),
-                (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.__salt") == F.col("b.__salt"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        )
-        return cold_pairs(cold).unionByName(hot_pairs).distinct()
 
 
 def near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -602,7 +602,7 @@ def _screen_salt_enabled() -> bool:
 
 
 SCREEN_SALT_MAX = 1024  # slice-count cap (keeps the group id in 20 bits)
-_SCREEN_HOT_SAMPLE_MOD = 64  # detection sample 1/64 — the dedup hot-gate dial
+_SCREEN_HOT_SAMPLE_MOD = 64  # detection sample 1/64
 
 
 def _hot_bucket_slices(
@@ -614,9 +614,8 @@ def _hot_bucket_slices(
     span: int,
 ) -> dict[int, int]:
     """Estimate (band, bucket) populations from a deterministic 1/64 id
-    sample (the ``dedup.py`` hot-gate template: band keys are a pure
-    per-row function, so banding the sample yields the identical sampled
-    band rows) and return ``{band_key: n_slices}`` for every bucket whose
+    sample (band keys are a pure per-row function, so banding the sample
+    yields the identical sampled band rows) and return ``{band_key: n_slices}`` for every bucket whose
     estimated size exceeds the screen row budget. One small eager job at
     plan build; {} on every fixture corpus (the budget needs ~1.5 k
     SAMPLED rows in one bucket before anything collects)."""

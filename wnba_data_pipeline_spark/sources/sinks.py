@@ -57,13 +57,14 @@ def upsert_partitions(df: DataFrame, path: str, partition_by: tuple[str, ...], c
     touches only the partitions the batch covers."""
     if column_order:
         df = df.select(*column_order)
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # a writer option, not the session conf, so concurrent writes keep
+    # their own overwrite mode
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def write_clustered(df: DataFrame, path: str, cluster_by: str, *, n_files: int = 4) -> None:
