@@ -52,3 +52,11 @@ def duck():
     con = make_duck(SF_ORACLE)
     yield con
     con.close()
+
+
+def assert_handle_matches_path(spark, handle, path: str) -> None:
+    """A sink's returned handle reads the same table as a fresh
+    ``spark.read.parquet(path)``: same schema, same rows (as multisets)."""
+    ref = spark.read.parquet(path)
+    assert handle.schema == ref.schema, (path, handle.schema.simpleString(), ref.schema.simpleString())
+    assert sorted(map(repr, handle.collect())) == sorted(map(repr, ref.collect())), path

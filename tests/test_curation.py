@@ -14,7 +14,7 @@ from wnba_data_pipeline_spark.plans import curation
 from wnba_data_pipeline_spark.sources.sinks import overwrite_table, read_table
 from wnba_data_pipeline_spark.sources.tables import load_table
 
-from .conftest import SF_ORACLE, SF_SMOKE
+from .conftest import SF_ORACLE, SF_SMOKE, assert_handle_matches_path
 
 
 def _plant_dups(spark, tmp_path):
@@ -314,11 +314,12 @@ def test_geometry_advisory_fires_and_respects_explicit_dial(spark, caplog):
 
 
 def test_near_dedup_seam_hook_contract(spark, tmp_path):
-    """Round 14: the funnel_gap_attrib probe keys on these seam names —
-    pin the contract so a rename breaks a test, not a bench round. The
-    tiny corpus stays below the advisory's min_docs bar, so the estimate
-    seam is absent by design (count-only) while every structural seam is
-    present; values must be real non-negative walls."""
+    """The benchmark's layer report keys on these seam names — pin the
+    contract so a rename breaks a test, not a bench round. The tiny
+    corpus stays below the advisory's min_docs bar, so the estimate seam
+    is absent by design (count-only), and its small pair graph takes the
+    driver labeling path (no symmetrize seam), while every structural
+    seam is present; values must be real non-negative walls."""
     src = _plant_dups(spark, tmp_path)
     base = str(tmp_path / "wh-seams")
     seams: dict = {}
@@ -327,8 +328,6 @@ def test_near_dedup_seam_hook_contract(spark, tmp_path):
         "shingle_mat_sec",
         "shingle_advisory_sec",
         "edges_checkpoint_sec",
-        "symmetrize_sec",
-        "count_sec",
         "labeling_sec",
         "pairs_cc_total_sec",
         "anti_join_write_sec",
@@ -429,3 +428,21 @@ def test_screen_branch_replan_vs_persist_plan_mechanism(spark, tmp_path):
         assert plan2.count("InMemoryTableScan") >= 2, plan2[:2000]
     finally:
         survivors.unpersist()
+
+
+def test_curation_stage_handles_equal_reads_by_path(spark, tmp_path, monkeypatch):
+    # every stage (and the report) is built from the handle its upstream
+    # write returned: each handle reads what a fresh read by path reads
+    written = {}
+    real = curation.overwrite_table
+
+    def recording(df, path, *args, **kwargs):
+        written[path] = real(df, path, *args, **kwargs)
+        return written[path]
+
+    monkeypatch.setattr(curation, "overwrite_table", recording)
+    base = str(tmp_path / "wh")
+    curation.run_curation(spark, SF_SMOKE, base)
+    assert {os.path.basename(p) for p in written} == {*curation.STAGES, "funnel_report"}
+    for path, handle in written.items():
+        assert_handle_matches_path(spark, handle, path)

@@ -170,6 +170,40 @@ def test_cc_seam_seconds_hook(spark):
     seams: dict = {}
     comps = connected_components(_edges(spark, [(1, 2), (2, 3)]), seam_seconds=seams)
     assert {r["id"]: r["comp"] for r in comps.collect()} == {1: 1, 2: 1, 3: 1}
-    assert set(seams) == {
-        "edges_checkpoint_sec", "symmetrize_sec", "count_sec", "labeling_sec",
-    }
+    # the driver path: one checkpoint, one bounded collect, no symmetrize
+    assert set(seams) == {"edges_checkpoint_sec", "labeling_sec"}
+
+
+def test_zero_edge_graph_labels_nothing(spark):
+    # the driver path builds its (id, comp) frame from an empty Arrow
+    # table: no rows, typed like the edge ids
+    for ids, name in (("long", "bigint"), ("int", "int")):
+        comps = connected_components(spark.createDataFrame([], f"src {ids}, dst {ids}"))
+        assert comps.collect() == []
+        assert comps.dtypes == [("id", name), ("comp", name)]
+
+
+def test_int_ids_keep_their_type_on_both_paths(spark):
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src int, dst int")
+    via_driver = connected_components(edges)
+    via_distributed = connected_components(edges, driver_max_edges=0)
+    assert via_driver.dtypes == via_distributed.dtypes == [("id", "int"), ("comp", "int")]
+    want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    assert {tuple(r) for r in via_driver.collect()} == want
+    assert {tuple(r) for r in via_distributed.collect()} == want
+
+
+def test_driver_gate_boundary(spark):
+    """The bounded-collect gate keeps the symmetrized-edge bound: exactly
+    ``max // 2`` one-sided edges take the driver path (no symmetrize
+    seam), one more takes the distributed loop, and both label alike."""
+    for max_edges in (10, 11):
+        n = max_edges // 2
+        for n_edges, driver in ((n, True), (n + 1, False)):
+            edges = _edges(spark, [(2 * i, 2 * i + 1) for i in range(n_edges)])
+            seams: dict = {}
+            comps = connected_components(edges, driver_max_edges=max_edges, seam_seconds=seams)
+            got = {tuple(r) for r in comps.collect()}
+            assert ("symmetrize_sec" not in seams) == driver, (max_edges, n_edges)
+            want = {(v, 2 * i) for i in range(n_edges) for v in (2 * i, 2 * i + 1)}
+            assert got == want

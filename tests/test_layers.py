@@ -4,14 +4,20 @@ independently in DuckDB."""
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+import threading
+import uuid
 
 import duckdb
+import pytest
 
 from wnba_data_pipeline_spark.plans import layers
+from wnba_data_pipeline_spark.sources import tables
 from wnba_data_pipeline_spark.sources.sinks import json_export_files, read_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, assert_handle_matches_path
 
 
 def test_full_pipeline(spark, tmp_path):
@@ -76,3 +82,73 @@ def test_rerun_overwrite_is_idempotent(spark, tmp_path):
     layers.run_analytics_layer(spark, base)  # overwrite, not append
     after = read_table(spark, layers.layer_tables(base)["analytics.supplier_stats"]).count()
     assert before == after
+
+
+def test_run_all_handles_equal_reads_by_path(spark, tmp_path):
+    # the hand-off: every table run_all writes comes back as a
+    # schema-pinned handle reading what a fresh read by path reads —
+    # partitioned raw tables (partition column last) and timestamp_ntz
+    # audit columns included
+    base = str(tmp_path / "wh")
+    handles = layers.run_all(spark, SF_SMOKE, base)
+    assert set(handles) == set(layers.layer_tables(base))
+    for name, path in layers.layer_tables(base).items():
+        assert_handle_matches_path(spark, handles[name], path)
+    assert handles["raw.lineitem_box"].columns[-1] == "ship_ym"
+    assert dict(handles["raw.lineitem_box"].dtypes)["created_at"] == "timestamp_ntz"
+
+
+def test_run_all_job_budget(spark, tmp_path, monkeypatch):
+    """With AQE off every write is one Spark job, so run_all's jobs are its
+    13 writes (2 upserts, 2 analytics tables, 1 feature table, 4 marts, 4
+    JSON exports), the schema inference of its 2 fixture loads, and the
+    parallel listing of each raw table with more month directories than
+    Spark's parallel partition-discovery threshold. Any other job would be
+    a schema-inference read of a table this process wrote."""
+    monkeypatch.setattr(tables, "_HANDLES", {})  # fixture loads infer afresh
+    base = str(tmp_path / "wh")
+    sc = spark.sparkContext
+    group = f"run-all-budget-{uuid.uuid4().hex}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "run_all job budget")
+    try:
+        layers.run_all(spark, SF_SMOKE, base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    paths = layers.layer_tables(base)
+    listings = sum(
+        len(glob.glob(os.path.join(paths[t], "*=*"))) > threshold
+        for t in ("raw.lineitem_box", "raw.orders_box")
+    )
+    writes, fixture_loads = 13, 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == writes + fixture_loads + listings
+
+
+def _pool_threads() -> set:
+    return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
+
+
+def test_failed_concurrent_write_propagates(spark, tmp_path, monkeypatch):
+    # one write of the concurrent stats ‖ rolling group fails: run_all
+    # raises that error only after its sibling write has finished, and
+    # leaves no worker thread running
+    base = str(tmp_path / "wh")
+    paths = layers.layer_tables(base)
+    real = layers.overwrite_table
+
+    def failing(df, path, *args, **kwargs):
+        if path == paths["analytics.supplier_rolling"]:
+            raise RuntimeError("planted write failure")
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(layers, "overwrite_table", failing)
+    before = _pool_threads()
+    with pytest.raises(RuntimeError, match="planted write failure"):
+        layers.run_all(spark, SF_SMOKE, base)
+    assert not _pool_threads() - before
+    assert os.path.exists(os.path.join(paths["analytics.supplier_stats"], "_SUCCESS"))
+    assert not os.path.exists(paths["ml_features.supplier_features"])

@@ -4,15 +4,19 @@ prune range predicates — both verified against real files, not just plans."""
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, MapType, StringType, StructField, StructType, TimestampNTZType,
+)
 
-from wnba_data_pipeline_spark.sources.sinks import read_table, upsert_partitions, write_clustered
+from wnba_data_pipeline_spark.sources.sinks import overwrite_table, read_table, upsert_partitions, write_clustered
 from wnba_data_pipeline_spark.sources.tables import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, assert_handle_matches_path
 
 
 def _with_ym(df):
@@ -30,8 +34,10 @@ def test_upsert_partitions_is_idempotent(spark, tmp_path):
     march = li.filter(F.col("ship_ym") == "2001-03")
     n_march = march.count()
     assert n_march > 0
-    upsert_partitions(march, path, ("ship_ym",))
+    handle = upsert_partitions(march, path, ("ship_ym",))
     after = read_table(spark, path)
+    # the returned handle reads the whole table, untouched months included
+    assert_handle_matches_path(spark, handle, path)
     assert after.count() == n1  # total unchanged: replace, not append
     assert after.filter(F.col("ship_ym") == "2001-03").count() == n_march
 
@@ -208,3 +214,29 @@ def test_zorder_key_places_nulls_in_min_cell(spark):
         )
         want = ok.withColumn("z", zorder_key(li, ("l_orderkey", "l_suppkey"))).collect()[0]["z"]
         assert probe[0]["z"] == want
+
+
+def test_sink_handles_pin_the_schema_a_read_infers(spark, tmp_path):
+    # non-nullable top-level, array-element, struct-field and map-value
+    # types, a timestamp_ntz column, and a partition column that is not
+    # last: the handle's pinned schema is what a read by path infers
+    schema = StructType([
+        StructField("part", StringType(), False),
+        StructField("id", LongType(), False),
+        StructField("xs", ArrayType(IntegerType(), False), False),
+        StructField("s", StructType([StructField("a", IntegerType(), False)]), False),
+        StructField("m", MapType(StringType(), ArrayType(LongType(), False), False), True),
+        StructField("ts", TimestampNTZType(), False),
+    ])
+    rows = [
+        (p, i, [i, i + 1], (i,), {"k": [i]}, dt.datetime(2001, 9, 1, 0, i))
+        for p in ("2001-08", "2001-09") for i in range(3)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    flat = overwrite_table(df, str(tmp_path / "flat"))
+    assert_handle_matches_path(spark, flat, str(tmp_path / "flat"))
+    parted = overwrite_table(df, str(tmp_path / "parted"), partition_by=("part",))
+    assert_handle_matches_path(spark, parted, str(tmp_path / "parted"))
+    assert parted.columns[-1] == "part"
+    upserted = upsert_partitions(df, str(tmp_path / "upserted"), ("part",))
+    assert_handle_matches_path(spark, upserted, str(tmp_path / "upserted"))

@@ -27,8 +27,9 @@ near-dup clusters, and invariants (tests/test_graph.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # Below this many (symmetrized) edges the component labeling runs as a
 # driver-local union-find instead of the distributed loop: each distributed
@@ -44,10 +45,15 @@ from pyspark.sql import functions as F
 DRIVER_CC_MAX_EDGES = 100_000
 
 
-def _driver_components(sym: DataFrame) -> DataFrame:
-    """Union-find with path compression over a collected edge list; labels
-    every vertex with the smallest reachable vertex id — the same contract
-    as the distributed loop (equality-tested in tests/test_graph.py)."""
+def _driver_components(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Union-find with path compression over collected one-sided edges
+    (union-find needs no symmetrized copy); labels every vertex with the
+    smallest reachable vertex id — the same contract as the distributed
+    loop (equality-tested in tests/test_graph.py). The (id, comp) frame is
+    built from an Arrow table, typed like the edge ids, so reading it needs
+    no Python worker."""
+    import pyarrow as pa
+
     parent: dict = {}
 
     def find(x):
@@ -58,8 +64,7 @@ def _driver_components(sym: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in sym.collect():
-        a, b = row[0], row[1]
+    for a, b in rows:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -69,11 +74,12 @@ def _driver_components(sym: DataFrame) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(v, find(v)) for v in parent]
-    schema = sym.schema
-    return sym.sparkSession.createDataFrame(
-        rows, f"id {schema[0].dataType.simpleString()}, comp {schema[1].dataType.simpleString()}"
+    ids = list(parent)
+    labels = StructType(
+        [StructField("id", schema[0].dataType), StructField("comp", schema[1].dataType)]
     )
+    # createDataFrame casts the Arrow columns to the edge id type
+    return spark.createDataFrame(pa.table({"id": ids, "comp": [find(v) for v in ids]}), labels)
 
 
 def connected_components(
@@ -98,9 +104,10 @@ def connected_components(
     the funnel (round-4 ADVICE). Raises rather than returning a partial
     labeling on non-convergence.
 
-    ``seam_seconds``: pass a dict to receive per-seam wall seconds
-    (edge materialization / symmetrize / count / labeling) — the
-    BENCH_SCALE_r14 funnel_gap_attrib hook; zero cost when not passed.
+    ``seam_seconds``: pass a dict to receive per-seam wall seconds:
+    ``edges_checkpoint_sec`` (the one pair materialization),
+    ``symmetrize_sec`` (distributed path only) and ``labeling_sec``; zero
+    cost when not passed.
     """
     import time as _time
 
@@ -137,16 +144,18 @@ def connected_components(
         F.col("src").alias("a"), F.col("dst").alias("b")
     ).localCheckpoint()
     _mark("edges_checkpoint_sec")
+    # the driver-path gate is one bounded collect over the one-sided
+    # edges: 2 × n_one ≤ driver_max_edges exactly when n_one ≤ max // 2,
+    # so reading one row past that decides the gate
+    head = one.limit(driver_max_edges // 2 + 1).collect()
+    if 2 * len(head) <= driver_max_edges:
+        out = _driver_components(edges.sparkSession, head, one.schema)
+        _mark("labeling_sec")
+        return out
     sym = one.unionByName(
         one.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
     _mark("symmetrize_sec")
-    n_sym = sym.count()
-    _mark("count_sec")
-    if n_sym <= driver_max_edges:
-        out = _driver_components(sym)
-        _mark("labeling_sec")
-        return out
     labels = (
         sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
     ).localCheckpoint()

@@ -25,6 +25,7 @@ the ``as_of`` audit column is injected like the layer jobs'.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,41 +74,49 @@ def run_curation(
     near_dedup_seconds: dict | None = None,
     band_geometry: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Run the four-stage funnel over ``documents``; writes every stage to
-    the curation warehouse and returns the funnel report (stage, n_docs,
-    n_tokens) as a DataFrame (also persisted). ``cc_max_iter`` bounds the
-    connected-components rounds in the near-dedup stage (log-diameter
-    convergence — see ``operators.graph.connected_components``).
+    """Run the funnel over ``documents``: corpus → quality gate → sample
+    gate → exact dedup → transitive near-dedup → sequence packing. Writes
+    every stage, then the funnel report (stage, n_docs, n_tokens), to the
+    curation warehouse and returns the report as a DataFrame.
 
-    ``near_dedup`` picks the near-duplicate detector (round-6, verdict
-    item 7): ``"minhash"`` (text MinHash-LSH pairs — the data-INdependent
-    path) or ``"semantic"`` (SemDeDup: k-means cells over the documents'
-    embeddings + within-cell cosine — the data-DEPENDENT path; documents
-    without an embedding row pass through undeduplicated, the honest
-    behavior when vector coverage is partial). Both feed the SAME
-    transitive closure + keep-lowest survivor contract
-    (``cluster_survivors``), so the funnel downstream of the pair source
-    is identical.
+    Each stage is a linear chain of one write: it is built from the
+    schema-pinned handle its upstream write returned
+    (``sources.sinks.overwrite_table``), and so is the report, so no read
+    of a stage this run wrote launches a schema-inference job.
 
-    ``stage_seconds``: pass a dict to receive per-stage wall seconds
-    (each stage is write-materialized, so the walls are real work, not
-    laziness artifacts) — the bench hook for BENCH_SCALE_r08.
+    ``cc_max_iter`` bounds the connected-components rounds in the
+    near-dedup stage (log-diameter convergence — see
+    ``operators.graph.connected_components``).
+
+    ``near_dedup`` picks the near-duplicate detector: ``"minhash"`` (text
+    MinHash-LSH pairs, the data-independent path) or ``"semantic"``
+    (SemDeDup: k-means cells over the documents' embeddings + within-cell
+    cosine, the data-dependent path; documents without an embedding row
+    pass through undeduplicated). Both feed the same transitive closure +
+    keep-lowest survivor contract (``cluster_survivors``), so the funnel
+    downstream of the pair source is identical.
+
+    ``stage_seconds``: pass a dict to receive per-stage wall seconds, keyed
+    ``corpus_write``, ``quality_gate``, ``sample_gate``, ``exact_dedup``,
+    ``near_dedup`` and ``packing``. Each stage is write-materialized, so
+    the walls are real work, not laziness artifacts.
 
     ``near_dedup_seconds``: pass a dict to receive the near-dedup stage's
-    per-seam walls (shingle+advisory, pair materialization, symmetrize,
-    component labeling, anti-join+write) through the SAME plan the stage
-    ships — the BENCH_SCALE_r14 funnel_gap_attrib hook that closed the
-    263 s-vs-~92 s end-to-end/stage-median gap. Zero cost when not
+    per-seam walls through the same plan the stage ships:
+    ``shingle_mat_sec`` and ``advisory_estimate_sec`` (the geometry
+    advisory), ``shingle_advisory_sec``, the connected-components seams
+    (``edges_checkpoint_sec``, ``labeling_sec``, ...),
+    ``pairs_cc_total_sec`` and ``anti_join_write_sec``. Zero cost when not
     passed; minhash path only.
 
     ``band_geometry``: optional (K, band_rows) override for the MinHash
-    near-dup detector — the EXPLICIT dial for the candidate quadratic
-    the sf100 ladder caught (see ``dedup.GEOMETRY_LARGE_N`` and the
-    K_MINHASH comment): at ≳1 M docs pass ``dedup.GEOMETRY_LARGE_N`` to
-    re-linearize the candidate step (measured 19.1 M → ~linear at sf100,
-    BENCH_SCALE_r10). A deliberate semantic choice (it moves the S-curve
-    midpoint), so no auto-switch — and the incremental funnel must run
-    the SAME detector for increment-equals-batch to hold."""
+    near-dup detector, the explicit dial for the candidate quadratic of
+    the default geometry at large corpora (see ``dedup.GEOMETRY_LARGE_N``
+    and the K_MINHASH comment): at ≳1 M docs pass
+    ``dedup.GEOMETRY_LARGE_N`` to re-linearize the candidate step. A
+    deliberate semantic choice (it moves the S-curve midpoint), so no
+    auto-switch — and the incremental funnel must run the same detector
+    for increment-equals-batch to hold."""
     import time as _time
 
     _t = _time.perf_counter()
@@ -117,9 +126,16 @@ def run_curation(
         if stage_seconds is not None:
             stage_seconds[stage] = round(_time.perf_counter() - _t, 2)
         _t = _time.perf_counter()
+
+    written: dict[str, DataFrame] = {}
+
+    def write(stage: str, df: DataFrame) -> DataFrame:
+        written[stage] = overwrite_table(df, _p(base, "curation", stage))
+        return written[stage]
+
     audit = F.lit(as_of).cast("timestamp_ntz").alias("curated_at")
     docs = load_table(spark, sf_dir, "documents")
-    overwrite_table(docs.select("*", audit), _p(base, "curation", "corpus"))
+    write("corpus", docs.select("*", audit))
     _mark("corpus_write")
 
     # 1. quality gate: the score is a ROW-LOCAL expression, so it stacks
@@ -130,17 +146,15 @@ def run_curation(
     kept = docs.withColumn("quality_score", quality_score_col("text")).filter(
         F.col("quality_score") >= QUALITY_MIN
     )
-    overwrite_table(kept.select("*", audit), _p(base, "curation", "quality_kept"))
+    kept = write("quality_kept", kept.select("*", audit))
     _mark("quality_gate")
 
     # 2. stratified sampling (hash gate — reshuffle-proof)
-    sampled = sample_gate(read_table(spark, _p(base, "curation", "quality_kept")))
-    overwrite_table(sampled, _p(base, "curation", "sampled"))
+    sampled = write("sampled", sample_gate(kept))
     _mark("sample_gate")
 
     # 3. exact dedup (content hash, keep lowest doc_id)
-    deduped = exact_survivors(read_table(spark, _p(base, "curation", "sampled")))
-    overwrite_table(deduped, _p(base, "curation", "deduped"))
+    deduped = write("deduped", exact_survivors(sampled))
     _mark("exact_dedup")
 
     # 4. transitive near-dup removal: near-dup PAIRS (MinHash-LSH or
@@ -148,7 +162,6 @@ def run_curation(
     # → drop every non-survivor. The cluster labeling runs over the PAIR
     # graph only (tiny next to the corpus); the corpus-side removal is one
     # anti-join on doc_id.
-    deduped = read_table(spark, _p(base, "curation", "deduped"))
     _nt = _time.perf_counter()
 
     def _nmark(key: str) -> None:
@@ -200,19 +213,17 @@ def run_curation(
         .filter(~F.col("is_survivor"))
         .select(F.col("id").alias("doc_id"))
     )
-    near_deduped = deduped.join(losers, "doc_id", "left_anti")
-    overwrite_table(near_deduped, _p(base, "curation", "near_deduped"))
+    near_deduped = write("near_deduped", deduped.join(losers, "doc_id", "left_anti"))
     _nmark("anti_join_write_sec")
     if shingled is not None:
         shingled.unpersist()
     _mark("near_dedup")
 
     # 5. sequence packing to the token budget
-    packed = pack_docs(read_table(spark, _p(base, "curation", "near_deduped")))
-    overwrite_table(packed, _p(base, "curation", "packed"))
+    write("packed", pack_docs(near_deduped))
     _mark("packing")
 
-    report = funnel_report(spark, base)
+    report = funnel_report(written)
     overwrite_table(report, _p(base, "curation", "funnel_report"))
     return report
 
@@ -469,11 +480,12 @@ def run_curation_incremental(
     return read_table(spark, _p(base, "curation_inc", "near_deduped"))
 
 
-def funnel_report(spark: SparkSession, base: str) -> DataFrame:
-    """(stage, n_docs, n_tokens) per funnel stage, in funnel order."""
+def funnel_report(stages: Mapping[str, DataFrame]) -> DataFrame:
+    """(stage, n_docs, n_tokens) per funnel stage, in funnel order, over
+    the stage tables keyed by ``STAGES`` name."""
     frames = []
     for idx, stage in enumerate(STAGES):
-        df = read_table(spark, _p(base, "curation", stage))
+        df = stages[stage]
         n_tok = (
             F.sum("n_tok") if "n_tok" in df.columns
             else F.sum(F.size(F.split(F.col("text"), " ")))

@@ -13,6 +13,9 @@ DataFrameWriter over a partitioned parquet layout:
 - JSON export writes distributed shards; ``single_file=True`` coalesces to
   one shard for byte-parity with the reference's one-file-per-table export
   (only sane for mart-sized frames — documented, not default).
+- the overwrite and upsert sinks return a read of the table they wrote
+  whose schema is pinned to the written one, so the writer's downstream
+  plans skip parquet schema inference (one Spark job per read).
 """
 
 from __future__ import annotations
@@ -36,15 +39,29 @@ def append_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = (), c
     w.parquet(path)
 
 
-def overwrite_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
-    """A7 overwrite sink (the reference's DROP + CTAS)."""
+def _read_written(df: DataFrame, path: str) -> DataFrame:
+    """The hand-off read of a table this process just wrote from ``df``,
+    pinned to ``df``'s schema, so the read launches no schema-inference
+    job. A file source reads a given schema the way it infers one: every
+    field nullable (nested ones too) and the partition columns last. Only
+    the writer may use it: a path another process rewrites needs
+    ``read_table``."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def overwrite_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> DataFrame:
+    """A7 overwrite sink (the reference's DROP + CTAS). Returns a
+    schema-pinned read of the written table."""
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    return _read_written(df, path)
 
 
-def upsert_partitions(df: DataFrame, path: str, partition_by: tuple[str, ...], column_order: tuple[str, ...] = ()) -> None:
+def upsert_partitions(
+    df: DataFrame, path: str, partition_by: tuple[str, ...], column_order: tuple[str, ...] = ()
+) -> DataFrame:
     """Idempotent partition re-ingest: overwrite ONLY the partitions present
     in ``df``, leave every other partition untouched (dynamic partition
     overwrite). The fix for the reference's re-run hazard — its daily cron
@@ -54,7 +71,10 @@ def upsert_partitions(df: DataFrame, path: str, partition_by: tuple[str, ...], c
 
     At 100 TB this is the standard incremental-ingest contract: the job is
     keyed by partition (date), re-runs are idempotent, and the write
-    touches only the partitions the batch covers."""
+    touches only the partitions the batch covers.
+
+    Returns a schema-pinned read of the whole table, the partitions this
+    batch left untouched included (they share the batch's schema)."""
     if column_order:
         df = df.select(*column_order)
     # a writer option, not the session conf, so concurrent writes keep
@@ -65,6 +85,7 @@ def upsert_partitions(df: DataFrame, path: str, partition_by: tuple[str, ...], c
         .partitionBy(*partition_by)
         .parquet(path)
     )
+    return _read_written(df, path)
 
 
 def write_clustered(df: DataFrame, path: str, cluster_by: str, *, n_files: int = 4) -> None:
