@@ -229,25 +229,16 @@ def test_payload_resize_geometry(spark):
         assert 0 <= r["first_byte"] <= 255 and 0 <= r["last_byte"] <= 255
 
 
-def test_contamination_plan_broadcasts_eval_side(spark, monkeypatch):
-    # round 16: the default (Arrow) plan folds the eval-gram broadcast
-    # into the gram pass — the whole query is one zero-shuffle map (the
-    # eval side is collected at plan build, the old plan broadcast the
-    # same bytes to every executor)
-    monkeypatch.setenv("SPARK_GRAFT_TEXT_ARROW", "1")
+def test_contamination_plan_broadcasts_eval_side(spark):
+    # the eval-gram broadcast is folded into the gram pass: the eval side
+    # is collected at plan build (the bytes a broadcast join would ship to
+    # every executor), so the whole query is one zero-shuffle map — the
+    # corpus side never shuffles before the match
     df = text.q_contamination_check(spark, SF_ORACLE)
     plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     assert "Join" not in plan, plan
     assert ") Exchange" not in plan, plan
     assert "MapInPandas" in plan, plan
-    # the expression opt-out keeps the r5-r15 shape: the probe join must
-    # broadcast the (tiny) eval side — the corpus side never shuffles
-    # before the match
-    monkeypatch.setenv("SPARK_GRAFT_TEXT_ARROW", "0")
-    df = text.q_contamination_check(spark, SF_ORACLE)
-    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_mixture_sample_matches_oracle(spark, duck):

@@ -338,35 +338,28 @@ def test_near_dedup_seam_hook_contract(spark, tmp_path):
 def test_inc_persist_auto_mode_is_span_keyed():
     """Round 15: per-batch persist pays only when plan re-execution
     dominates materialization (sf100 batches), and COSTS 3x at tiny
-    spans (the r15 sf0.1 smoke A/B) -- the auto mode keys on the batch
-    span; an explicit SPARK_GRAFT_INC_PERSIST (the probe arm switch)
-    always wins."""
+    spans (the r15 sf0.1 smoke A/B) -- the mode keys on the batch span."""
     from wnba_data_pipeline_spark.plans.curation import (
         INC_PERSIST_MIN_BATCH,
         _should_persist_batches,
     )
 
-    assert _should_persist_batches(INC_PERSIST_MIN_BATCH, None) is True
-    assert _should_persist_batches(INC_PERSIST_MIN_BATCH - 1, None) is False
-    assert _should_persist_batches(1_000_000, None) is True  # the sf100 regime
-    assert _should_persist_batches(1_000, None) is False  # the sf0.1 regime
-    # explicit arm pins beat the span heuristic in both directions
-    assert _should_persist_batches(1_000, "1") is True
-    assert _should_persist_batches(1_000_000, "0") is False
-    assert _should_persist_batches(1_000, "") is False  # empty env = unset
+    assert _should_persist_batches(INC_PERSIST_MIN_BATCH) is True
+    assert _should_persist_batches(INC_PERSIST_MIN_BATCH - 1) is False
+    assert _should_persist_batches(1_000_000) is True  # the sf100 regime
+    assert _should_persist_batches(1_000) is False  # the sf0.1 regime
 
 
 def test_inc_persist_arms_keep_identical_survivors(spark, tmp_path, monkeypatch):
     """Round 15: the per-batch persist is PHYSICAL, never semantic — the
     suite-side twin of the BENCH_SCALE_r15 assembler gate that refuses to
-    emit if the sf100 arms' survivor fingerprints differ. Both explicit
-    arms (SPARK_GRAFT_INC_PERSIST=1 / =0, the probe switch that overrides
-    the span-keyed auto mode in either direction) must keep exactly the
-    same survivor set and the same packed layout."""
+    emit if the sf100 arms' survivor fingerprints differ. Both arms (the
+    span gate forced each way through INC_PERSIST_MIN_BATCH) must keep
+    exactly the same survivor set and the same packed layout."""
     src = _plant_dups(spark, tmp_path)
     outs = {}
-    for arm in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_INC_PERSIST", arm)
+    for arm, min_batch in (("1", 0), ("0", 1 << 62)):
+        monkeypatch.setattr(curation, "INC_PERSIST_MIN_BATCH", min_batch)
         base = str(tmp_path / f"wh_inc_arm{arm}")
         curation.run_curation_incremental(spark, src, base, n_batches=3)
         outs[arm] = {

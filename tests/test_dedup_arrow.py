@@ -1,26 +1,40 @@
-"""Arrow signature pass (round 11, VERDICT r10 item 1): the vectorized
-numpy signature map must be BYTE-IDENTICAL to the Catalyst expression
-path — it is a physical switch (like the hot-bucket gate), never a
-semantic dial. Verified at both geometries on the oracle corpus plus a
-multibyte corpus (CJK/emoji shingles cross the md5 contract too)."""
+"""The Arrow shingle and signature passes against their DuckDB twins
+(``_SHINGLES_SQL``, ``_sig_sql``, ``_minhash_band_keys_sql``): band keys
+at both geometries on the oracle corpus, multibyte texts (CJK/emoji
+shingles cross the md5 contract too), and edge rows — NULL texts share
+one Arrow batch with real docs, the case where pyarrow would deliver the
+whole batch's hashes as float64."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from wnba_data_pipeline_spark.functions.hashing import minhash_coeffs
+from wnba_data_pipeline_spark.functions.hashing import md5_long_sql, minhash_coeffs
 from wnba_data_pipeline_spark.operators import dedup
 
 from .conftest import SF_ORACLE
+from .duck_twins import EDGE_DOCS, band_keys_sql, duck_docs, duck_frame, rows, shingles_sql
+from .oracle_compare import compare
+
+NULL_KEYS = {str(t) for t in range(dedup.N_BANDS)}  # concat_ws skips the NULL mins
 
 
-def _band_rows(monkeypatch, spark, flag: str, coeffs, band_rows):
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", flag)
-    corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
-    shingled = dedup.shingle_docs(corpus)
-    banded = dedup.banded_keys(shingled, coeffs=coeffs, band_rows=band_rows)
-    return sorted(tuple(r) for r in banded.collect())
+def _spark_docs(spark, docs):
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
+def _band_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _duck_band_rows(docs, coeffs=None, band_rows=None):
+    return rows(duck_docs(docs), band_keys_sql(shingles_sql(), coeffs, band_rows))
+
+
+def _doc_rows(docs):
+    return [tuple(r) for r in docs.select("doc_id", "text").collect()]
 
 
 @pytest.mark.parametrize(
@@ -28,151 +42,118 @@ def _band_rows(monkeypatch, spark, flag: str, coeffs, band_rows):
     [None, dedup.GEOMETRY_LARGE_N],
     ids=["default_16x4", "large_n_48x8"],
 )
-def test_arrow_signatures_equal_expression(spark, monkeypatch, geom):
+def test_arrow_signatures_equal_expression(spark, geom):
+    """Band keys of the planted near-dup corpus equal the DuckDB SQL
+    expression of the signature at both geometries."""
     if geom is None:
         coeffs, band_rows = None, None
     else:
         k, band_rows = geom
         coeffs = minhash_coeffs(k)
-    expr = _band_rows(monkeypatch, spark, "0", coeffs, band_rows)
-    arrow = _band_rows(monkeypatch, spark, "1", coeffs, band_rows)
-    assert expr == arrow
-    assert len(expr) > 0
+    corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
+    got = _band_rows(
+        dedup.banded_keys(dedup.shingle_docs(corpus), coeffs=coeffs, band_rows=band_rows)
+    )
+    assert got == _duck_band_rows(_doc_rows(corpus), coeffs, band_rows)
+    assert len(got) > 0
 
 
-def test_arrow_pairs_equal_expression_sharp_geometry(spark, monkeypatch):
+def test_arrow_pairs_equal_expression_sharp_geometry(spark, duck):
+    """Near-dup pairs at the sharp GEOMETRY_LARGE_N equal the DuckDB twin
+    rendered at that geometry (the registry row checks the default one)."""
     k, band_rows = dedup.GEOMETRY_LARGE_N
     coeffs = minhash_coeffs(k)
     corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
-
-    def pairs(flag):
-        monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", flag)
-        return sorted(
-            tuple(r)
-            for r in dedup.minhash_pairs(corpus, coeffs=coeffs, band_rows=band_rows).collect()
-        )
-
-    off, on = pairs("0"), pairs("1")
-    assert off == on
-    assert len(off) > 0  # the planted near-copies are found either way
+    want = duck.sql(dedup._oracle_dedup_minhash(coeffs, band_rows)).df()
+    compare(
+        dedup.minhash_pairs(corpus, coeffs=coeffs, band_rows=band_rows),
+        want,
+        "dedup_minhash_large_n",
+    )
+    assert len(want) > 0  # the planted near-copies are found
 
 
-def test_arrow_signatures_multibyte(spark, monkeypatch):
-    rows = [
+def test_arrow_signatures_multibyte(spark):
+    docs = [
         (1, "汉字 テスト 🙂🙂 汉字 テスト éé 汉字 テスト end"),
-        (2, "á b́ ć d e f 🙂‍🙂 g h"),
+        (2, "á b́ ć d e f 🙂‍🙂 g h"),
         (3, "one two"),  # < 3 words -> whole-text shingle fallback
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    shingled = dedup.shingle_docs(docs)
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "0")
-    expr = sorted(tuple(r) for r in dedup.banded_keys(shingled).collect())
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "1")
-    arrow = sorted(tuple(r) for r in dedup.banded_keys(shingled).collect())
-    assert expr == arrow
+    got = _band_rows(dedup.banded_keys(dedup.shingle_docs(_spark_docs(spark, docs))))
+    assert got == _duck_band_rows(docs)
 
 
-def test_arrow_default_on_with_opt_out(monkeypatch):
-    # round 14: the Arrow signature pass is the default at EVERY K (the
-    # r11 K>=32 gate was re-measured stale at sf100 — BENCH_SCALE_r14
-    # sig_arrow_ab, 4.12x on the default geometry); =0 is the opt-out.
-    # Round 15 (VERDICT r14 item 5): the dead ``k`` parameter is gone —
-    # the env flag is the only gate.
-    monkeypatch.delenv("SPARK_GRAFT_SIG_ARROW", raising=False)
-    assert dedup._sig_arrow_enabled()
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "1")
-    assert dedup._sig_arrow_enabled()
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "0")
-    assert not dedup._sig_arrow_enabled()
+def test_arrow_signatures_null_and_edge_texts(spark):
+    """A NULL text shingles to hh=[NULL], so every band key degrades to the
+    bare 't' prefix; every other doc's keys equal the DuckDB twin's —
+    incl. empty and whitespace-only texts (whole-text shingle fallback).
 
-
-def test_arrow_signatures_null_and_edge_texts(spark, monkeypatch):
-    """Round 14 (the default-ON flip's new edge): a NULL text shingles to
-    hh=[NULL]; the expression branch's array_min over all-NULLs is NULL
-    per hash, so every band key degrades to the bare 't' prefix. The
-    Arrow branch must emit byte-identical keys for those rows (all-NULL
-    signature), and identical keys everywhere else — incl. empty and
-    whitespace-only texts (whole-text shingle fallback).
-
-    Round 15 (ADVICE r14 high+medium): the frame is COALESCED TO ONE
-    PARTITION so the NULL rows share an Arrow batch with the real docs —
-    an element-level null anywhere in a batch makes pyarrow deliver the
-    whole batch's list values as float64, silently corrupting the
-    sibling rows' 60-bit hashes in the int64 cast. The r14 version of
-    this test spread its 6 rows across default-parallelism partitions,
-    never exercised that path, and passed against the broken code; this
-    version fails against r14 HEAD (32 diverging keys for docs 2/3) and
-    pins banded_keys' plan-side list-level-NULL collapse."""
-    rows = [
-        (1, None),
-        (2, ""),
-        (3, "   "),
-        (4, "one two"),
-        (5, "alpha beta gamma delta alpha beta"),
-        (6, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    shingled = dedup.shingle_docs(docs).coalesce(1)
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "0")
-    expr = sorted(tuple(r) for r in dedup.banded_keys(shingled).collect())
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "1")
-    arrow = sorted(tuple(r) for r in dedup.banded_keys(shingled).collect())
-    assert expr == arrow
-    # the NULL-text rows really degrade to the bare band prefix
-    null_keys = {k for d, k in expr if d in (1, 6)}
-    assert null_keys == {str(t) for t in range(dedup.K_MINHASH // dedup.BAND_ROWS)}
-    # and the real docs' keys carry actual signature values (not the
-    # degraded prefix) — the corruption mode produced WRONG values, so
-    # also pin that every non-NULL doc emits N_BANDS fully-formed keys
-    for d in (2, 3, 4, 5):
-        keys = [k for dd, k in expr if dd == d]
+    The frame is COALESCED TO ONE PARTITION so the NULL rows share an
+    Arrow batch with the real docs: an element-level null anywhere in a
+    batch makes pyarrow deliver the whole batch's list values as float64,
+    silently corrupting the sibling rows' 60-bit hashes in the int64 cast
+    unless ``_with_band_keys`` collapses the null-containing array to a
+    list-level NULL first."""
+    docs = EDGE_DOCS + [(9, "   "), (10, "alpha beta gamma delta alpha beta"), (11, None)]
+    shingled = dedup.shingle_docs(_spark_docs(spark, docs)).coalesce(1)
+    got = _band_rows(dedup.banded_keys(shingled))
+    null_ids = {d for d, t in docs if t is None}
+    assert {k for d, k in got if d in null_ids} == NULL_KEYS
+    real = [r for r in got if r[0] not in null_ids]
+    assert real == _duck_band_rows([r for r in docs if r[0] not in null_ids])
+    # every non-NULL doc emits N_BANDS fully-formed keys
+    for d in {r[0] for r in real}:
+        keys = [k for dd, k in real if dd == d]
         assert len(keys) == dedup.N_BANDS
         assert all(k.count(":") == dedup.BAND_ROWS for k in keys)
 
 
-def test_arrow_signatures_whole_null_sh_fallback(spark, monkeypatch):
-    """ADVICE r14 low: a frame WITHOUT a materialized ``hh`` whose ``sh``
-    is a literal NULL array reaches banded_keys' computed-hh fallback —
-    ``F.transform(NULL, md5_long)`` is NULL, which arrived in the r14 UDF
-    as ``np.asarray(None)`` (a 0-d object array) and crashed the
-    per-row null scan with TypeError. The plan-side collapse now turns it
-    into the all-NULL signature row; both branches must agree. One
-    partition so the NULL row shares the real docs' Arrow batch."""
-    rows = [
+def test_arrow_signatures_whole_null_sh_fallback(spark):
+    """A frame WITHOUT a materialized ``hh`` whose ``sh`` is a NULL array
+    reaches the computed-hh fallback (``transform(NULL, md5_long)`` is
+    NULL): it must get the degraded all-NULL keys, and the real docs the
+    DuckDB twin's keys. One partition so the NULL row shares the real
+    docs' Arrow batch."""
+    docs = [
         (1, None),
         (2, ["alpha beta gamma", "beta gamma delta"]),
         (3, ["solo shingle"]),
     ]
-    shingled = spark.createDataFrame(rows, "doc_id long, sh array<string>").coalesce(1)
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "0")
-    expr = sorted(tuple(r) for r in dedup.banded_keys(shingled).collect())
-    monkeypatch.setenv("SPARK_GRAFT_SIG_ARROW", "1")
-    arrow = sorted(tuple(r) for r in dedup.banded_keys(shingled).collect())
-    assert expr == arrow
-    null_keys = {k for d, k in expr if d == 1}
-    assert null_keys == {str(t) for t in range(dedup.K_MINHASH // dedup.BAND_ROWS)}
+    shingled = spark.createDataFrame(docs, "doc_id long, sh array<string>").coalesce(1)
+    got = _band_rows(dedup.banded_keys(shingled))
+    assert {k for d, k in got if d == 1} == NULL_KEYS
+    con = duck_docs([])
+    duck_frame(con, "sh_docs", pd.DataFrame({"doc_id": [2, 3], "sh": [docs[1][1], docs[2][1]]}))
+    hashed = f"SELECT doc_id, list_transform(sh, s -> {md5_long_sql('s')}) AS hh FROM sh_docs"
+    assert [r for r in got if r[0] != 1] == rows(con, band_keys_sql(hashed))
 
 
-def _shingled_rows(spark, monkeypatch, flag, df):
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_ARROW", flag)
-    out = sorted(
-        (r["doc_id"], tuple(r["sh"]), tuple(r["hh"]))
-        for r in dedup.shingle_docs(df).collect()
+def _shingled_rows(df):
+    return sorted(
+        (r["doc_id"], tuple(sorted(r["sh"])), tuple(sorted(r["hh"])))
+        for r in df.collect()
     )
-    monkeypatch.delenv("SPARK_GRAFT_SHINGLE_ARROW")
-    return out
 
 
-def test_arrow_shingles_equal_expression_on_corpus(spark, monkeypatch):
+def _duck_shingled_rows(docs):
+    return sorted(
+        (d, tuple(sorted(sh)), tuple(sorted(hh)))
+        for d, sh, hh in duck_docs(docs).execute(shingles_sql()).fetchall()
+    )
+
+
+def test_arrow_shingles_equal_expression_on_corpus(spark):
+    """Shingle and hash arrays of the planted near-dup corpus equal the
+    DuckDB SQL expression (``_SHINGLES_SQL`` + ``md5_long_sql``); arrays
+    compare as sets, the order ``list_distinct`` leaves is unspecified."""
     corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
-    expr = _shingled_rows(spark, monkeypatch, "0", corpus)
-    arrow = _shingled_rows(spark, monkeypatch, "1", corpus)
-    assert expr == arrow
-    assert len(expr) > 0
+    got = _shingled_rows(dedup.shingle_docs(corpus))
+    assert got == _duck_shingled_rows(_doc_rows(corpus))
+    assert len(got) > 0
 
 
-def test_arrow_shingles_edge_rows(spark, monkeypatch):
-    rows = [
+def test_arrow_shingles_edge_rows(spark):
+    docs = [
         (1, "one two"),                      # <3 words -> whole-text fallback
         (2, ""),                             # empty text -> [""] fallback
         (3, "a  b c"),                       # double space -> empty word kept
@@ -182,23 +163,13 @@ def test_arrow_shingles_edge_rows(spark, monkeypatch):
         (7, " leading"),                     # leading empty word
         (8, None),                           # NULL text -> sh=[NULL], hh=[NULL]
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    expr = _shingled_rows(spark, monkeypatch, "0", docs)
-    arrow = _shingled_rows(spark, monkeypatch, "1", docs)
-    assert expr == arrow
-    # the NULL-text contract itself (ADVICE r12: the Arrow pass used to
-    # raise AttributeError where the expression plan yielded [NULL]s)
-    null_row = [r for r in expr if r[0] == 8][0]
-    assert null_row == (8, (None,), (None,))
-
-
-def test_arrow_shingles_feed_identical_pairs(spark, monkeypatch):
-    corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_ARROW", "1")
-    arrow_pairs = sorted(tuple(r) for r in dedup.minhash_pairs(corpus).collect())
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_ARROW", "0")
-    expr_pairs = sorted(tuple(r) for r in dedup.minhash_pairs(corpus).collect())
-    assert arrow_pairs == expr_pairs and len(arrow_pairs) > 0
+    out = dedup.shingle_docs(_spark_docs(spark, docs).coalesce(1)).collect()
+    null_row = [r for r in out if r["doc_id"] == 8][0]
+    assert (null_row["sh"], null_row["hh"]) == ([None], [None])
+    got = _shingled_rows(dedup.shingle_docs(_spark_docs(spark, docs[:-1])))
+    assert got == _duck_shingled_rows(docs[:-1])
+    # first-occurrence order, distinct
+    assert [r["sh"] for r in out if r["doc_id"] == 5] == [["a b c", "b c a", "c a b"]]
 
 
 def test_hh_verify_pairs_equal_sh_verify(spark):
@@ -272,21 +243,18 @@ def test_hh_only_shingled_with_sh_verify_raises(spark):
         dedup.minhash_pairs(corpus, shingled=shingled)  # default verify="sh"
 
 
-def test_hh_only_matches_full_shingles(spark, monkeypatch):
+def test_hh_only_matches_full_shingles(spark):
     """shingle_docs(hh_only=True) must emit exactly the (doc_id, hh)
-    projection of the full output — in BOTH physical arms (it changes
-    what crosses the Arrow boundary / what a cache holds, never
-    values)."""
+    projection of the full output (it changes what crosses the Arrow
+    boundary / what a cache holds, never values)."""
     corpus = dedup.near_dup_corpus(spark, SF_ORACLE)
-    for flag in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_SHINGLE_ARROW", flag)
-        full = sorted(
-            (r["doc_id"], tuple(r["hh"]))
-            for r in dedup.shingle_docs(corpus).select("doc_id", "hh").collect()
-        )
-        hh = sorted(
-            (r["doc_id"], tuple(r["hh"]))
-            for r in dedup.shingle_docs(corpus, hh_only=True).collect()
-        )
-        assert full == hh and len(full) > 0
-        assert dedup.shingle_docs(corpus, hh_only=True).columns == ["doc_id", "hh"]
+    full = sorted(
+        (r["doc_id"], tuple(r["hh"]))
+        for r in dedup.shingle_docs(corpus).select("doc_id", "hh").collect()
+    )
+    hh = sorted(
+        (r["doc_id"], tuple(r["hh"]))
+        for r in dedup.shingle_docs(corpus, hh_only=True).collect()
+    )
+    assert full == hh and len(full) > 0
+    assert dedup.shingle_docs(corpus, hh_only=True).columns == ["doc_id", "hh"]

@@ -95,50 +95,57 @@ def test_hard_negatives_bucketed_shuffles_ids_only(spark):
 
 
 def test_srp_arrow_band_keys_match_expression(spark):
-    # round 15 (optimization): the Arrow band-key pass must emit
-    # BIT-IDENTICAL (id, key) multisets to the expression fold, for both
-    # geometries (8-plane near-dup, 4-plane hard-negative). exceptAll both
-    # ways = multiset equality (duplicates included).
+    """The Arrow band-key pass emits the (id, key) multisets of the DuckDB
+    SQL expressions ``_nd_band_key_sql`` (8-plane near-dup geometry, on the
+    augmented corpus) and ``_hn_band_key_sql`` (4-plane hard-negative
+    geometry, on the embeddings) — plus edge vectors: the all-zero vector
+    (every dot is exactly 0, so every bit takes the fold's >= 0 side) and
+    a one-hot vector."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
-    wn = similarity._augmented_corpus(spark, SF_ORACLE)
-    arrow_nd = similarity._srp_banded_rows(
-        wn.select("vec_id", "embedding"),
-        [("vec_id", "long")],
-        n_planes=similarity.ND_PLANES,
-        n_bands=similarity.ND_BANDS,
-        span=similarity.ND_BUCKET_SPAN,
-        key_name="bkey",
-    )
-    keys = F.array(
-        *[similarity._nd_band_key(F.col("embedding"), b) for b in range(similarity.ND_BANDS)]
-    )
-    expr_nd = wn.select("vec_id", F.explode(keys).alias("bkey"))
-    assert arrow_nd.exceptAll(expr_nd).count() == 0
-    assert expr_nd.exceptAll(arrow_nd).count() == 0
+    from .duck_twins import duck_docs, duck_frame, rows
 
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    arrow_hn = similarity._srp_banded_rows(
-        emb.select("vec_id", "label", F.col("embedding").cast("array<double>").alias("embedding")),
-        [("vec_id", "long"), ("label", "int")],
-        n_planes=similarity.HN_PLANES,
-        n_bands=similarity.ND_BANDS,
-        span=1 << similarity.HN_PLANES,
-        key_name="_bk",
+    zero = [0.0] * similarity.DIM
+    one_hot = [1.0] + [0.0] * (similarity.DIM - 1)
+    edge = spark.createDataFrame(
+        [(-1, zero), (-2, one_hot)], "vec_id long, embedding array<double>"
     )
-    bands = F.array(
-        *[similarity._hn_band_key(F.col("embedding"), b) for b in range(similarity.ND_BANDS)]
+    wn = similarity._augmented_corpus(spark, SF_ORACLE).select("vec_id", "embedding")
+    emb = load_table(spark, SF_ORACLE, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    expr_hn = emb.select("vec_id", "label", F.explode(bands).alias("_bk"))
-    assert arrow_hn.exceptAll(expr_hn).count() == 0
-    assert expr_hn.exceptAll(arrow_hn).count() == 0
+    for vecs, n_planes, span, key_sql in (
+        (wn, similarity.ND_PLANES, similarity.ND_BUCKET_SPAN, similarity._nd_band_key_sql),
+        (emb, similarity.HN_PLANES, 1 << similarity.HN_PLANES, similarity._hn_band_key_sql),
+    ):
+        vecs = vecs.unionByName(edge)
+        got = sorted(
+            tuple(r)
+            for r in similarity._srp_banded_rows(
+                vecs,
+                [("vec_id", "long")],
+                n_planes=n_planes,
+                n_bands=similarity.ND_BANDS,
+                span=span,
+                key_name="bkey",
+            ).collect()
+        )
+        con = duck_docs([])
+        duck_frame(con, "vecs", pd.DataFrame([tuple(r) for r in vecs.collect()], columns=["vec_id", "embedding"]))
+        keys = ", ".join(key_sql("embedding", b) for b in range(similarity.ND_BANDS))
+        want = rows(con, f"SELECT vec_id, unnest([{keys}]) AS bkey FROM vecs")
+        assert got == want, n_planes
+        assert {k for v, k in got if v == -1} == {
+            b * span + span - 1 for b in range(similarity.ND_BANDS)
+        }
 
 
 def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
-    """Round 16 (VERDICT r15 item 3): a bucket bigger than the screen row
-    budget must be sub-bucket-salted — no screen task materializes the
-    whole bucket — while the candidate/verify rows stay exceptAll-identical
-    to the unsalted arm. Synthetic hot corpus: every vector is a tiny
+    """A bucket bigger than the screen row budget must be sub-bucket-salted
+    — no screen task materializes the whole bucket — while the
+    candidate/verify rows stay exceptAll-identical to the unsalted plan the
+    production budget picks. Synthetic hot corpus: every vector is a tiny
     perturbation of one base vector, so all rows share one (band, bucket)
     per band in BOTH geometries."""
     import numpy as np
@@ -156,7 +163,8 @@ def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, "vec_id: long, label: int, embedding: array<double>")
-    monkeypatch.setenv("SPARK_GRAFT_SCREEN_BUDGET", "50")
+    production_budget = similarity.SCREEN_ROW_BUDGET
+    monkeypatch.setattr(similarity, "SCREEN_ROW_BUDGET", 50)
 
     # the estimator must fire on the planted bucket with >1 slices
     slices_hn = similarity._hot_bucket_slices(
@@ -170,7 +178,7 @@ def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
 
     # ... and stay silent on the fixture corpus at the production budget
     # (the default registry plans keep the r15 single-group shape)
-    monkeypatch.setenv("SPARK_GRAFT_SCREEN_BUDGET", "100000")
+    monkeypatch.setattr(similarity, "SCREEN_ROW_BUDGET", production_budget)
     emb_fix = load_table(spark, SF_ORACLE, "embeddings")
     assert (
         similarity._hot_bucket_slices(
@@ -182,7 +190,7 @@ def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
         )
         == {}
     )
-    monkeypatch.setenv("SPARK_GRAFT_SCREEN_BUDGET", "50")
+    monkeypatch.setattr(similarity, "SCREEN_ROW_BUDGET", 50)
 
     # peak-group bound: with S slices a screen group holds ~rows/S per
     # side; the biggest (band, bucket, slice) group must be far below the
@@ -204,11 +212,12 @@ def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
     )
     assert sizes < n / 2, sizes  # bounded groups, not the whole bucket
 
-    # hard negatives: salted arm ≡ unsalted arm, row for row
-    monkeypatch.setenv("SPARK_GRAFT_SCREEN_SALT", "1")
+    # hard negatives: salted plan ≡ unsalted plan, row for row (at the
+    # production budget the 400-row bucket is cold: no slices)
     salted = similarity.hard_negatives_bucketed(df)
-    monkeypatch.setenv("SPARK_GRAFT_SCREEN_SALT", "0")
+    monkeypatch.setattr(similarity, "SCREEN_ROW_BUDGET", production_budget)
     cold = similarity.hard_negatives_bucketed(df)
+    monkeypatch.setattr(similarity, "SCREEN_ROW_BUDGET", 50)
     assert salted.exceptAll(cold).count() == 0
     assert cold.exceptAll(salted).count() == 0
     assert salted.count() > 0
@@ -243,26 +252,3 @@ def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
     assert cand_salted.exceptAll(cand_cold).count() == 0
     assert cand_cold.exceptAll(cand_salted).count() == 0
     assert cand_salted.count() > 0
-
-
-def test_srp_arrow_paths_match_expression_plans(spark, monkeypatch):
-    # round 15 (optimization): every query that grew an Arrow screen/band
-    # pass must return EXACTLY the rows of its pure-expression plan (the
-    # SPARK_GRAFT_SRP_ARROW=0 branch) — the physical switch is never
-    # allowed to be semantic. The gate is read at plan-BUILD time, so
-    # toggling the env around construction compares real plans.
-    from wnba_data_pipeline_spark.operators import clustering
-
-    for fn in (
-        similarity.q_emb_near_dup,
-        similarity.q_emb_near_dup_bucketed,
-        similarity.q_hard_negatives_bucketed,
-        similarity.q_sim_topk,
-        clustering.q_semantic_dedup,
-    ):
-        monkeypatch.setenv("SPARK_GRAFT_SRP_ARROW", "0")
-        legacy = fn(spark, SF_ORACLE)
-        monkeypatch.setenv("SPARK_GRAFT_SRP_ARROW", "1")
-        arrow = fn(spark, SF_ORACLE)
-        assert arrow.exceptAll(legacy).count() == 0, fn.__name__
-        assert legacy.exceptAll(arrow).count() == 0, fn.__name__

@@ -33,11 +33,11 @@ def test_meta_probe_matches_scan_probe(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("driver_max", ["256", "0"])
+@pytest.mark.parametrize("driver_max", [256, 0])
 def test_meta_probe_multifile_directory(spark, tmp_path, monkeypatch, driver_max):
     # both physical paths: driver-side footer reads (default at this file
-    # count) and the distributed mapInPandas path (forced via the override)
-    monkeypatch.setenv("SPARK_GRAFT_PROBE_DRIVER_MAX", driver_max)
+    # count) and the distributed mapInPandas path (forced by a zero cap)
+    monkeypatch.setattr(quality, "PROBE_DRIVER_MAX", driver_max)
     out = str(tmp_path / "li_multi")
     load_table(spark, SF_ORACLE, "lineitem").repartition(7).write.parquet(out)
     got = quality.parquet_stats_probe(spark, out).collect()[0].asDict()

@@ -1,155 +1,102 @@
-"""Round-15 optimization differentials: the text-family Arrow passes
-(SPARK_GRAFT_TEXT_ARROW) must be byte-identical to the pure-expression
-plans they replace — same posture as tests/test_dedup_arrow.py for the
-shingle/signature passes. Each registry query that gained an Arrow branch
-is compared across both flag settings on the smoke tables, and the helper
-passes are pinned on planted edge rows (NULL/empty/short/multibyte texts,
-repeated grams, double spaces — the places split/md5/distinct semantics
-could diverge)."""
+"""Edge-row oracle tests for the text-family Arrow passes: each pass runs
+over planted edge rows (NULL/empty/short/multibyte texts, repeated grams,
+double spaces) coalesced into ONE Arrow batch and must return exactly the
+rows of its DuckDB twin — the places where split/md5/distinct semantics
+could diverge between Python and SQL. Whole-table parity of the registry
+queries built on these passes is tests/test_oracle_parity.py's."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from wnba_data_pipeline_spark.operators import spans, text
-from .conftest import SF_SMOKE
+
+from .duck_twins import EDGE_DOCS, duck_docs, rows, word_grams_sql
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _both(monkeypatch, build):
-    monkeypatch.setenv("SPARK_GRAFT_TEXT_ARROW", "0")
-    expr = _rows(build())
-    monkeypatch.setenv("SPARK_GRAFT_TEXT_ARROW", "1")
-    arrow = _rows(build())
-    return expr, arrow
+def _edge_frame(spark, docs=EDGE_DOCS):
+    return spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
 
 
-@pytest.mark.parametrize(
-    "qname",
-    [
-        "contamination_check",
-        "doc_winnow",
-        "substring_spans",
-        "heavy_hitters_cms",
-        "hh_cms_vs_exact",
-    ],
-)
-def test_query_arrow_branch_identical(qname, spark, monkeypatch):
-    import __spark_entry__ as entrymod
-
-    fn = entrymod.queries()[qname]
-    expr, arrow = _both(monkeypatch, lambda: fn(spark, SF_SMOKE))
-    assert expr == arrow
-    # the smoke tables exercise every non-threshold query; the CMS rows
-    # are threshold-gated (≥ HH_MIN_COUNT) and may be empty at sf0.001 —
-    # their value coverage comes from the sf0.01 oracle sweep
-    if not qname.startswith(("heavy_hitters", "hh_")):
-        assert len(expr) > 0
-
-
-EDGE_DOCS = [
-    (1, None),
-    (2, ""),
-    (3, "one"),
-    (4, "a b c d e"),  # exactly CONTAM_NGRAM words → one 5-gram
-    (5, "x y x y x y x y x y x y"),  # repeated grams → distinct collapses
-    (6, "päivää ääkkösiä ü ü ü ü ü ü ü ü ü"),  # multibyte tokens
-    (7, "a  b   c d e f g h i"),  # double spaces → empty tokens kept
-    (8, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"),
-]
-
-
-def _edge_frame(spark):
-    return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string").coalesce(1)
-
-
-def test_word_gram_rows_edge_texts(spark, monkeypatch):
+def test_word_gram_rows_edge_texts(spark):
     docs = _edge_frame(spark)
+    con = duck_docs(EDGE_DOCS)
     n = text.CONTAM_NGRAM
-    words = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(n)),
-        lambda i: text.md5_long(
-            F.concat_ws(" ", *[F.element_at(words, i + F.lit(k + 1)) for k in range(n)])
-        ),
-    )
-    for distinct in (False, True):
-        g = F.array_distinct(grams) if distinct else grams
-        expr = _rows(
-            docs.filter(F.size(words) >= n).select("doc_id", F.explode(g).alias("gh"))
-        )
-        arrow = _rows(
-            text.word_gram_hash_rows(docs, n_words=n, distinct=distinct)
-        )
-        assert expr == arrow
+    grams = word_grams_sql(n)
+    want = rows(con, f"SELECT doc_id, gh FROM ({grams})")
+    assert _rows(text.word_gram_hash_rows(docs, n_words=n)) == want
+    want_distinct = rows(con, f"SELECT DISTINCT doc_id, gh FROM ({grams})")
+    assert _rows(text.word_gram_hash_rows(docs, n_words=n, distinct=True)) == want_distinct
+    # doc 4 holds exactly n words → one gram; doc 5's 8 grams collapse to 2
+    assert sum(1 for d, _ in want if d == 4) == 1
+    assert sum(1 for d, _ in want_distinct if d == 5) == 2
+    assert {d for d, _ in want} == {4, 5, 6, 7, 8}
 
 
 def test_word_gram_rows_positions(spark):
     docs = _edge_frame(spark)
+    con = duck_docs(EDGE_DOCS)
     w = spans.SPAN_W
-    words = F.split(F.col("text"), " ")
-    expr = _rows(
-        docs.filter(F.size(words) >= w).select(
-            "doc_id", F.posexplode(spans._gram_hashes(words)).alias("pos", "gh")
-        )
-    )
-    arrow = _rows(text.word_gram_hash_rows(docs, n_words=w, with_pos=True))
-    assert expr == arrow
+    want = rows(con, word_grams_sql(w))
+    assert _rows(text.word_gram_hash_rows(docs, n_words=w, with_pos=True)) == want
+    assert len(want) > 0
 
 
 def test_bigram_partial_counts_sum_to_exact(spark):
     docs = _edge_frame(spark)
-    exact = _rows(text._bigram_stream(docs).groupBy("bigram").count())
+    con = duck_docs(EDGE_DOCS)
+    # the heavy-hitter twin's bigram stream, every count kept
+    exact = text.ORACLE_HEAVY_HITTERS_CMS.replace(f">= {text.HH_MIN_COUNT}", ">= 1")
     partial = _rows(
         text.bigram_count_rows(docs).groupBy("bigram").agg(F.sum("n").cast("long"))
     )
-    assert exact == partial
+    assert partial == rows(con, exact)
+    assert ("x y", 6) in partial and ("a ", 1) in partial  # repeats; empty token
 
 
-def test_winnow_stats_edge_texts(spark, monkeypatch):
+def test_winnow_stats_edge_texts(spark):
     # char-gram path: add texts around the length threshold k+w-1=11
-    rows = EDGE_DOCS + [
+    docs = EDGE_DOCS + [
         (9, "0123456789"),  # 10 chars → below threshold, emits nothing
         (10, "0123456789a"),  # exactly 11 → 4 grams, 1 window
         (11, "ääkkösiä ovat tässä pitkässä tekstissä mukana"),  # multibyte chars
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
-
-    def build():
-        if text._text_arrow_enabled():
-            s = text._winnow_stats_rows(docs, k=text.SHINGLE_CHARS, w=text.WINNOW_WINDOW)
-        else:
-            fps = text.winnow_fingerprints(docs)
-            s = fps.select(
-                "doc_id",
-                "n_grams",
-                "n_windows",
-                F.size("fps").cast("long").alias("n_fingerprints"),
-                F.array_min("fps").alias("fp_min"),
-                F.array_max("fps").alias("fp_max"),
-            )
-        return s
-
-    expr, arrow = _both(monkeypatch, build)
-    assert expr == arrow
-    assert any(r[0] == 10 for r in arrow) and not any(r[0] == 9 for r in arrow)
+    got = _rows(
+        text._winnow_stats_rows(_edge_frame(spark, docs), k=text.SHINGLE_CHARS, w=text.WINNOW_WINDOW)
+    )
+    want = rows(
+        duck_docs(docs),
+        "SELECT doc_id, n_grams, n_windows, n_fingerprints, fp_min, fp_max "
+        f"FROM ({text.ORACLE_DOC_WINNOW})",
+    )
+    assert got == want
+    assert any(r[0] == 10 for r in got) and not any(r[0] == 9 for r in got)
+    assert any(r[0] == 11 for r in got)
 
 
-def test_dup_gram_hits_edge_texts(spark, monkeypatch):
+def test_dup_gram_hits_edge_texts(spark):
     # two docs sharing an 8-gram + one unique doc + edge rows
     shared = "s1 s2 s3 s4 s5 s6 s7 s8"
-    rows = [
+    docs = [
         (1, None),
         (2, "a b c"),
         (3, f"intro {shared} outro"),
         (4, f"{shared} tail words here now"),
         (5, "u1 u2 u3 u4 u5 u6 u7 u8 u9"),
+        (6, "päivää ääkkösiä ü ü ü ü ü ü ü ü ü"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
-    expr, arrow = _both(monkeypatch, lambda: spans.dup_gram_hits(docs))
-    assert expr == arrow
-    assert {r[0] for r in arrow} == {3, 4}
+    got = _rows(spans.dup_gram_hits(_edge_frame(spark, docs)))
+    want = rows(
+        duck_docs(docs),
+        f"""
+WITH g AS ({word_grams_sql(spans.SPAN_W)}),
+dup AS (SELECT gh FROM (SELECT DISTINCT doc_id, gh FROM g) GROUP BY gh HAVING count(*) > 1)
+SELECT doc_id, pos, gh FROM g JOIN dup USING (gh)
+""",
+    )
+    assert got == want
+    assert {r[0] for r in got} == {3, 4}

@@ -64,7 +64,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import DIM, _augmented_corpus, _cosine_sql, _dot, _srp_arrow_enabled
+from .similarity import DIM, _augmented_corpus, _cosine_sql, _dot
 
 # fixed-point scales: components are O(1) floats, so round(x*1e9) is exact
 # in a double (|x|*1e9 << 2^53) and loses nothing that matters to a mean
@@ -892,9 +892,10 @@ def semantic_pairs(
 
     ``path`` picks the within-cell pair physics:
 
-    - ``"join"`` (default): self-join on cell + a JVM fold cosine per
-      candidate. Oracle-exact (the fold is the same left-associative sum
-      the DuckDB twin unrolls) — the registry query's path.
+    - ``"join"`` (default): a per-cell Gram screen, then a JVM fold
+      cosine per surviving candidate. Oracle-exact (the fold is the same
+      left-associative sum the DuckDB twin unrolls) — the registry
+      query's path.
     - ``"gram"``: one Arrow batch per cell via ``applyInPandas``; the
       cell's cosines come from one numpy Gram matmul. Same pairs (numpy
       dot vs the fold differ only in last-ulp association; both round to
@@ -911,73 +912,41 @@ def semantic_pairs(
     once (``sd_fit_mod_for`` computes the funnel's dial; 1 = exact
     previous behavior, the registry/oracle default)."""
     model = kmeans_fit(corpus, k=k, max_iter=max_iter, sample_mod=fit_sample_mod)
-    # Round 15, second pass: under the Arrow gate the probe expansion
-    # takes the pandas path explicitly — the k=8 × dim=64 geometry sits
-    # exactly AT the 512-term expression budget, and the sorted-struct
-    # expression probe measured 1.31 s for 2 400 corpus rows at sf0.1
-    # (~0.55 ms/row interpreted) vs ~0.35 s through Arrow. Cells are
-    # identical (stable argsort ≡ the (distance, index) struct sort —
-    # equality-tested in tests/test_clustering.py); SPARK_GRAFT_SRP_ARROW=0
-    # restores the expression plan end to end.
-    asg = probe_assignments(
-        corpus,
-        model.centroids,
-        nprobe=nprobe,
-        path="pandas" if _srp_arrow_enabled() else None,
-    )
+    # The probe expansion takes the pandas path explicitly: the k=8 × dim=64
+    # geometry sits exactly AT the 512-term expression budget of the auto
+    # path, and the sorted-struct expression probe measured 1.31 s for
+    # 2 400 corpus rows at sf0.1 (~0.55 ms/row interpreted) vs ~0.35 s
+    # through Arrow. Cells are identical (stable argsort ≡ the (distance,
+    # index) struct sort of the DuckDB twin).
+    asg = probe_assignments(corpus, model.centroids, nprobe=nprobe, path="pandas")
     if path == "gram":
         return _gram_cell_pairs(asg, threshold=threshold)
     if path != "join":
         raise ValueError(f"unknown semantic_pairs path: {path!r}")
-    if _srp_arrow_enabled():
-        # Round 15 (optimization, guide §3.2/§8.4 — the q_emb_near_dup
-        # screen applied to the oracle-exact join path): the within-cell
-        # candidate pairs come from a per-cell Gram SCREEN at
-        # threshold − 1e-9 (one numpy matmul per cell instead of an
-        # interpreted 64-term fold per candidate pair — ~3 M folds at
-        # sf0.1, measured 26.4 s → ~3 s), and the handful of screen
-        # survivors then flow through the UNCHANGED exact verify: the
-        # same 0.0-seeded left-fold dot, norm division, ≥ threshold
-        # filter and HALF_UP round. No pair can be lost — prenormalized
-        # GEMM vs fold/(na·nb) differ ≤ ~2·DIM·eps ≈ 1e-12 on cosines,
-        # 1000× inside the margin — and false positives are dropped by
-        # the exact filter, so rows stay byte-identical to the join plan
-        # and the DuckDB twin (hash-verified at every SF).
-        # SPARK_GRAFT_SRP_ARROW=0 opts back to the join-everything plan.
-        cand = (
-            asg.select("cell", "vec_id", "embedding", "norm")
-            .groupBy("cell")
-            .applyInPandas(_cell_screen_fn(threshold - 1e-9), "vec_a long, vec_b long")
-            .distinct()  # a pair can collide in up to nprobe shared cells
-        )
-        a = corpus.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("_ea"), F.col("norm").alias("_na"))
-        b = corpus.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("_eb"), F.col("norm").alias("_nb"))
-        return (
-            cand.join(a, "vec_a")
-            .join(b, "vec_b")
-            .withColumn("_cos", _dot(F.col("_ea"), F.col("_eb")) / (F.col("_na") * F.col("_nb")))
-            .filter(F.col("_cos") >= threshold)
-            .select("vec_a", "vec_b", F.round(F.col("_cos"), 6).alias("cosine"))
-        )
-    a = asg.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("_ea"),
-        F.col("norm").alias("_na"),
-        "cell",
+    # The within-cell candidate pairs come from a per-cell Gram SCREEN at
+    # threshold − 1e-9 (one numpy matmul per cell instead of an
+    # interpreted 64-term fold per candidate pair — ~3 M folds at sf0.1,
+    # measured 26.4 s → ~3 s), and the handful of screen survivors then
+    # flow through the exact verify: the 0.0-seeded left-fold dot, norm
+    # division, ≥ threshold filter and HALF_UP round. No pair can be lost
+    # — prenormalized GEMM vs fold/(na·nb) differ ≤ ~2·DIM·eps ≈ 1e-12 on
+    # cosines, 1000× inside the margin — and false positives are dropped
+    # by the exact filter, so rows equal the DuckDB twin's
+    # shared-cell join (hash-verified at every SF).
+    cand = (
+        asg.select("cell", "vec_id", "embedding", "norm")
+        .groupBy("cell")
+        .applyInPandas(_cell_screen_fn(threshold - 1e-9), "vec_a long, vec_b long")
+        .distinct()  # a pair can collide in up to nprobe shared cells
     )
-    b = asg.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("_eb"),
-        F.col("norm").alias("_nb"),
-        "cell",
-    )
+    a = corpus.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("_ea"), F.col("norm").alias("_na"))
+    b = corpus.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("_eb"), F.col("norm").alias("_nb"))
     return (
-        a.join(b, ["cell"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
+        cand.join(a, "vec_a")
+        .join(b, "vec_b")
         .withColumn("_cos", _dot(F.col("_ea"), F.col("_eb")) / (F.col("_na") * F.col("_nb")))
         .filter(F.col("_cos") >= threshold)
         .select("vec_a", "vec_b", F.round(F.col("_cos"), 6).alias("cosine"))
-        .distinct()  # a pair can collide in up to nprobe shared cells
     )
 
 

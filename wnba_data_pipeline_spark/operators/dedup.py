@@ -30,8 +30,6 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -190,111 +188,56 @@ _SHINGLES_SQL = """list_distinct(CASE WHEN len(words) >= 3
     ELSE [text] END)"""
 
 
-def _minhash_band_keys(
-    shingles: Column,
-    *,
-    coeffs: list[tuple[int, int]] | None = None,
-    band_rows: int | None = None,
-    hashes: Column | None = None,
-) -> list[Column]:
-    """Band-key strings 't:s:...:s' from the minhash signature (defaults:
-    the module geometry; explicit ``coeffs``/``band_rows`` let the A/B
-    probe build alternative geometries against the same corpus).
-
-    h_i(x) = (a_i·(x mod P) + b_i) mod P over the md5-int64 shingle hashes;
-    a·(x%P) < 2^62 so the arithmetic is overflow-free int64 in both engines.
-    Pass ``hashes`` (the materialized ``hh`` column from ``shingle_docs``)
-    to feed the K mins from integers — inlined, the md5 transform is a
-    subexpression of EVERY min and Spark does not CSE across higher-order
-    functions, so each shingle would be md5-hashed K times (see
-    shingle_docs)."""
-    def _uhash(a: int, b: int):
-        # closure (not default args): PySpark derives lambda arity by signature
-        return lambda h: (F.lit(a) * (h % F.lit(P)) + F.lit(b)) % F.lit(P)
-
-    coeffs = COEFFS if coeffs is None else coeffs
-    band_rows = BAND_ROWS if band_rows is None else band_rows
-    n_bands = len(coeffs) // band_rows
-    hashes = F.transform(shingles, md5_long) if hashes is None else hashes
-    sig = [F.array_min(F.transform(hashes, _uhash(a, b))) for a, b in coeffs]
-    return [
-        F.concat_ws(":", F.lit(str(t)), *[sig[t * band_rows + r].cast("string") for r in range(band_rows)])
-        for t in range(n_bands)
-    ]
-
-
-def _minhash_band_keys_sql() -> str:
-    """DuckDB twin of _minhash_band_keys: a list of N_BANDS band-key strings
-    built from the same (a, b) literals (expects columns ``sig`` built by
-    _SIG_SQL below)."""
+def _minhash_band_keys_sql(n_bands: int = N_BANDS, band_rows: int = BAND_ROWS) -> str:
+    """DuckDB twin of the band keys ``_with_band_keys`` emits: a list of
+    ``n_bands`` band-key strings 't:s:...:s' (expects a column ``sig``
+    built by ``_sig_sql`` from the same (a, b) literals)."""
     bands = []
-    for t in range(N_BANDS):
-        parts = " || ':' || ".join(f"CAST(sig[{t * BAND_ROWS + r + 1}] AS VARCHAR)" for r in range(BAND_ROWS))
+    for t in range(n_bands):
+        parts = " || ':' || ".join(f"CAST(sig[{t * band_rows + r + 1}] AS VARCHAR)" for r in range(band_rows))
         bands.append(f"'{t}:' || {parts}")
     return "[" + ", ".join(bands) + "]"
 
 
-_SIG_SQL = "[" + ", ".join(f"list_min(list_transform(hh, h -> ({a}*(h%{P})+{b})%{P}))" for a, b in COEFFS) + "]"
+def _sig_sql(coeffs: list[tuple[int, int]] = COEFFS) -> str:
+    """DuckDB twin of ``minhash_sig_udf``: the K universal-hash mins over a
+    materialized ``hh`` list column."""
+    return "[" + ", ".join(f"list_min(list_transform(hh, h -> ({a}*(h%{P})+{b})%{P}))" for a, b in coeffs) + "]"
 
 
-# The signature map's OTHER cost term (round 11, VERDICT r10 item 1):
-# with ``hh`` materialized the md5 runs once, but the K universal-hash
-# mins are still K separate Catalyst higher-order expressions
-# (``array_min(transform(hh, …))``), and higher-order functions are
-# INTERPRETED per element (no whole-stage codegen, boxed Long per value)
-# — at GEOMETRY_LARGE_N that is 48 boxed array traversals per doc, which
-# made the sharp geometry SLOWER end-to-end than the default at sf100
-# (511.6 s vs 397.8 s, BENCH_SCALE_r10) even though it cuts candidates
-# 69×. The Arrow path below computes all K mins in ONE vectorized numpy
-# pass (flatten the batch's hash arrays, K affine remixes over the flat
-# int64 vector, segment-min via minimum.reduceat) — identical arithmetic
-# (md5 hashes are 60-bit POSITIVE int64, so %/× match the JVM exactly;
-# overflow-free by the same a·(h%P) < 2^62 bound), so this is a PHYSICAL
-# switch, never a semantic dial: both branches
-# emit byte-identical signatures (tests/test_dedup_arrow.py).
-#
-# DEFAULT AT EVERY K since round 14: the round-11 gate (Arrow only at
-# K ≥ 32) was set when the SHARP geometry was the
-# question and the K=16 expression plan looked competitive — re-measured
-# at sf100 (BENCH_SCALE_r14 sig_arrow_ab, arms interleaved, 2.93 M docs,
-# DEFAULT 16×4 geometry) the Arrow pass wins 4.12× median / 2.96× min
-# (62.7 → 15.2 s) with hash-identical candidate sets and far lower
-# same-JVM drift (walls 14.1-15.3 s vs 41.6-80.0 s). Like the shingle
-# Arrow default (round 12) this makes pandas+pyarrow a worker dependency
-# of every banded consumer — already true via the shingle pass;
-# SPARK_GRAFT_SIG_ARROW=0 opts back to the pure-expression plan (which
-# needs only the JVM).
-# (The historical round-11..13 auto gate "Arrow only at K >= 32" is
-# retired — VERDICT r14 item 5: the flag below is the only gate, there is
-# no K threshold anymore.)
+_SIG_SQL = _sig_sql()
 
 
-def _sig_arrow_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_SIG_ARROW", "1") != "0"
+# The signature map runs as one vectorized numpy pass per Arrow batch
+# (``minhash_sig_udf``): flatten the batch's hash arrays, K affine remixes
+# over the flat int64 vector, segment-min via minimum.reduceat. As K
+# Catalyst higher-order expressions (``array_min(transform(hh, …))``) the
+# mins would be interpreted per element (no whole-stage codegen, boxed Long
+# per value) — 48 boxed array traversals per doc at GEOMETRY_LARGE_N;
+# measured at sf100 on the default 16×4 geometry the Arrow pass is 4.12×
+# faster (62.7 → 15.2 s, BENCH_SCALE_r14 sig_arrow_ab). The arithmetic is
+# _SIG_SQL's: md5 hashes are 60-bit POSITIVE int64, so %/× match DuckDB
+# exactly, overflow-free by the a·(h%P) < 2^62 bound.
 
 
 def minhash_sig_udf(coeffs: list[tuple[int, int]]):
     """Arrow-batched signature column: ``hh`` (array<long> of md5 shingle
-    hashes) → array<long> of the K universal-hash mins, all K computed in
-    one numpy pass per Arrow batch (see the default-ON note above
-    ``_sig_arrow_enabled``).
+    hashes) → array<long> of the K universal-hash mins (``_SIG_SQL``), all
+    K computed in one numpy pass per Arrow batch (see the note above).
 
-    NULL rows (round 15, ADVICE r14 high — the round-14 element-level
-    handling was WRONG batch-wide): when an Arrow batch's flattened list
-    values contain ANY null, pyarrow converts the ENTIRE batch's values to
-    float64 — so the 60-bit md5 hashes of the *sibling non-NULL rows* lose
-    their low bits in the int64 cast and their band keys silently diverge
-    from the expression branch (reproduced with the NULL differential
-    corpus coalesced to one partition). Precision is lost before this UDF
-    ever sees the data, so the fix is PLAN-SIDE: ``banded_keys`` collapses
-    a null-containing ``hh`` to a list-level NULL (list-level nulls keep
-    sibling rows exact int64 — only element-level nulls poison the values
-    buffer). Here a ``None`` row gets the all-NULL signature, which
-    degrades every band key to the bare ``"t"`` prefix (concat_ws skips
-    NULLs) — byte-identical to the expression branch's ``array_min`` over
-    a NULL/all-NULL array (differential rows, single-partition so NULL and
+    NULL rows: when an Arrow batch's flattened list values contain ANY
+    null, pyarrow converts the ENTIRE batch's values to float64 — so the
+    60-bit md5 hashes of the *sibling non-NULL rows* would lose their low
+    bits in the int64 cast and their band keys would silently diverge.
+    Precision is lost before this UDF ever sees the data, so the fix is
+    PLAN-SIDE: ``_with_band_keys`` collapses a null-containing ``hh`` to a
+    list-level NULL (list-level nulls keep sibling rows exact int64 — only
+    element-level nulls poison the values buffer). Here a ``None`` row
+    gets the all-NULL signature, which degrades every band key to the bare
+    ``"t"`` prefix (concat_ws skips NULLs) — the keys of SQL's list_min
+    over a NULL/all-NULL list (edge rows, single-partition so NULL and
     real docs share one batch, in tests/test_dedup_arrow.py). A float64
-    batch whose values exceed 2^53 can now only mean a caller bypassed the
+    batch whose values exceed 2^53 can only mean a caller bypassed the
     collapse — refuse loudly rather than emit corrupt signatures."""
     import numpy as np
     import pandas as pd
@@ -323,8 +266,8 @@ def minhash_sig_udf(coeffs: list[tuple[int, int]]):
             # collapse above) — but a direct caller bypassing banded_keys
             # could deliver them, and then pyarrow has ALREADY degraded
             # the whole batch's values to float64 (see docstring). Treat
-            # a null-containing row as all-NULL like the expression path,
-            # and refuse loudly if sibling rows lost int64 precision.
+            # a null-containing row as all-NULL, and refuse loudly if
+            # sibling rows lost int64 precision.
             if va.dtype == object:
                 has_null = any(x is None for x in va)
             elif va.dtype.kind == "f":
@@ -346,9 +289,9 @@ def minhash_sig_udf(coeffs: list[tuple[int, int]]):
                 arrs.append(va.astype(np.int64, copy=False))
         lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n)
         if (lens == 0).any():
-            # shingles are never empty (whole-text fallback in _shingles);
-            # refuse loudly rather than silently diverge from the
-            # expression path's NULL-min semantics
+            # shingles are never empty (whole-text fallback in
+            # shingle_docs); refuse loudly rather than silently diverge
+            # from list_min's NULL-on-empty semantics
             raise ValueError("empty shingle hash array")
         flat = np.concatenate(arrs)
         r = flat % P  # md5_long is 60-bit positive → % matches JVM/SQL
@@ -368,8 +311,8 @@ def minhash_sig_udf(coeffs: list[tuple[int, int]]):
 
 
 def _band_keys_from_sig(sig: Column, n_bands: int, band_rows: int) -> list[Column]:
-    """Band-key strings from a materialized signature array column —
-    identical strings to ``_minhash_band_keys`` by construction."""
+    """Band-key strings 't:s:...:s' from a materialized signature array
+    column — the strings of ``_minhash_band_keys_sql``."""
     return [
         F.concat_ws(
             ":",
@@ -391,26 +334,23 @@ def _with_band_keys(
     array<string> in band-index order — the signature+band map behind
     ``minhash_pairs`` and ``banded_keys``. Key
     ``t`` of every doc starts with ``"t:"``, so two docs share a key at
-    some band iff their key arrays overlap. The Arrow signature pass
-    is the default at every K (4.12× at sf100 on the default geometry —
-    see the ``_sig_arrow_enabled`` note); ``SPARK_GRAFT_SIG_ARROW=0`` opts
-    back to the expression plan. Both branches emit identical band keys."""
+    some band iff their key arrays overlap. Signatures come from the Arrow
+    pass (``minhash_sig_udf``); keys equal ``_minhash_band_keys_sql``."""
     coeffs = COEFFS if coeffs is None else coeffs
     band_rows = BAND_ROWS if band_rows is None else band_rows
     n_bands = len(coeffs) // band_rows
-    # NULL collapse (round 15, ADVICE r14 high): an ELEMENT-level null in
-    # ``hh`` poisons the Arrow transfer of its whole batch — pyarrow
-    # converts the batch's flattened values to float64 and sibling rows'
-    # 60-bit hashes silently lose their low bits in the int64 cast.
-    # Collapse null-containing arrays to a LIST-level NULL (which keeps
-    # sibling rows exact int64) before either branch. Null hashes only
-    # arise as the whole array [NULL] (a NULL/<=0-word text shingles to a
+    # NULL collapse: an ELEMENT-level null in ``hh`` poisons the Arrow
+    # transfer of its whole batch — pyarrow converts the batch's flattened
+    # values to float64 and sibling rows' 60-bit hashes silently lose their
+    # low bits in the int64 cast. Collapse null-containing arrays to a
+    # LIST-level NULL (which keeps sibling rows exact int64). Null hashes
+    # only arise as the whole array [NULL] (a NULL text shingles to a
     # single NULL entry and md5_long of a non-null string is never NULL),
     # so testing element 0 is O(1)-exact: hh NULL → NULL stays NULL,
-    # [NULL] → NULL, real arrays untouched. Semantics are unchanged in
-    # BOTH branches — array_min over NULL ≡ array_min over [NULL] ≡ NULL —
-    # verified byte-identical in tests/test_dedup_arrow.py with NULL and
-    # real docs forced into one Arrow batch.
+    # [NULL] → NULL, real arrays untouched. The keys are unchanged —
+    # list_min over NULL ≡ list_min over [NULL] ≡ NULL — pinned in
+    # tests/test_dedup_arrow.py with NULL and real docs forced into one
+    # Arrow batch.
     if "hh" in shingled.columns:
         hh = F.when(
             F.col("hh").getItem(0).isNull(), F.lit(None).cast("array<bigint>")
@@ -422,12 +362,9 @@ def _with_band_keys(
         hh = F.when(
             F.col("sh").getItem(0).isNull(), F.lit(None).cast("array<bigint>")
         ).otherwise(F.transform(F.col("sh"), md5_long))
-    if _sig_arrow_enabled():
-        sigged = shingled.select(*keep, minhash_sig_udf(coeffs)(hh).alias("_sig"))
-        keys = _band_keys_from_sig(F.col("_sig"), n_bands, band_rows)
-        return sigged.select(*keep, F.array(*keys).alias("_keys"))
-    keys = _minhash_band_keys(F.col("sh"), coeffs=coeffs, band_rows=band_rows, hashes=hh)
-    return shingled.select(*keep, F.array(*keys).alias("_keys"))
+    sigged = shingled.select(*keep, minhash_sig_udf(coeffs)(hh).alias("_sig"))
+    keys = _band_keys_from_sig(F.col("_sig"), n_bands, band_rows)
+    return sigged.select(*keep, F.array(*keys).alias("_keys"))
 
 
 def banded_keys(
@@ -491,47 +428,41 @@ def estimate_pair_volume(
     return int((row["_p"] or 0) * sample_mod * sample_mod)
 
 
-def _shingle_arrow_enabled() -> bool:
-    """Env gate for the Arrow shingle pass — default ON since round 12:
-    the sf100 A/B (BENCH_SCALE_r12 stages100, 2.93 M docs) measured the
-    Arrow pass at 22.6 s vs 333.7 s for the interpreted higher-order
-    expression chain (14.8×), with every downstream count, pair set, and
-    survivor hash identical across arms (funnel_ab100 asserts the
-    survivor hash, not just counts). ``SPARK_GRAFT_SHINGLE_ARROW=0`` is
-    the opt-out back to the pure-expression plan (the byte-identity
-    differentials in tests/test_dedup_arrow.py pin both arms either
-    way). Note the default-ON flip makes pandas+pyarrow a hard WORKER
-    dependency of every shingle consumer (registry oracle rows included);
-    on a cluster whose executors lack them, set the opt-out — the
-    expression plan needs only the JVM."""
-    return os.environ.get("SPARK_GRAFT_SHINGLE_ARROW", "1") != "0"
+def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
+    """(… doc_id, text …) → (doc_id, sh, hh): the per-doc distinct 3-word
+    shingle arrays every MinHash consumer derives from, PLUS their
+    md5-int64 hash array ``hh`` materialized once. Exposed so a caller can
+    persist ONE shingle computation across several plans (the curation
+    funnel shares it between its geometry advisory and ``minhash_pairs``).
 
+    Computed row-batch-at-a-time in one Arrow pass — as interpreted
+    Catalyst higher-order chains (split → sequence → 3×element_at →
+    concat_ws → array_distinct → per-element md5, none of it codegen'd)
+    the same arrays cost 14.8× more at sf100 (BENCH_SCALE_r12 stages100).
+    Rows equal the DuckDB twin (``_SHINGLES_SQL`` and ``md5_long_sql``
+    over ``string_split(text, ' ')``):
 
-def shingle_docs_arrow(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
-    """Arrow twin of :func:`shingle_docs` — same (doc_id, sh, hh) rows,
-    computed row-batch-at-a-time in Python instead of interpreted Catalyst
-    higher-order chains (split → sequence → 3×element_at → concat_ws →
-    array_distinct → per-element md5 — none of it codegen'd; measured
-    ~5 ms/doc-core at sf30, the dominant map-side term of the whole
-    near-dedup funnel). Byte-identical by construction:
+    - ``text.split(" ")`` ≡ ``string_split`` (inner AND trailing empty
+      words kept);
+    - first-occurrence dedup (dict.fromkeys) ≡ ``list_distinct``'s set;
+    - ``int(md5(utf8).hexdigest()[:15], 16)`` ≡ ``md5_long_sql``;
+    - texts under 3 words shingle to the whole text; a NULL text to
+      sh=[NULL], hh=[NULL].
 
-    - ``text.split(" ")`` ≡ ``F.split(text, " ")`` (Java regex split with
-      limit -1 keeps inner AND trailing empties, same as Python's
-      str.split with an explicit separator);
-    - first-occurrence dedup (dict.fromkeys) ≡ ``array_distinct``;
-    - ``int(md5(utf8).hexdigest()[:15], 16)`` ≡ ``conv(substring(md5(s),
-      1, 15), 16, 10)`` (Spark md5 hashes the UTF-8 bytes of the string);
-    - the <3-word whole-text fallback matches ``_shingles``.
-
-    Differential-tested (incl. multibyte + empty/whitespace edge rows) in
+    Edge rows (multibyte, empty, whitespace, NULL) in
     tests/test_dedup_arrow.py.
 
-    ``hh_only`` (round 12): skip the string arrays in the OUTPUT — the
-    pure-hh pipeline (band keys from ``hashes``, hh verify) never reads
-    ``sh``, and the string shingles of a 2.9 M-doc corpus are the bulk
-    of both the Arrow transfer and the funnel's persisted cache. The
-    strings are still built transiently (the hashes are defined over
-    them), but never serialized across the Python→JVM boundary."""
+    ``hh`` rides along so the K signature mins read integers: inline, the
+    md5 transform would be a subexpression of EVERY min, and Spark does
+    not CSE across higher-order functions. The DuckDB twin has the same
+    shape (``_SIG_SQL`` reads a materialized ``hh`` list).
+
+    ``hh_only``: emit only (doc_id, hh) — the pure-hh pipeline
+    (``verify="hh"``) never reads ``sh``, and the string shingles of a
+    2.9 M-doc corpus are the bulk of both the Arrow transfer and the
+    funnel's persisted cache. The strings are still built transiently
+    (the hashes are defined over them), but never serialized across the
+    Python→JVM boundary."""
     import hashlib
 
     import pandas as pd
@@ -541,12 +472,6 @@ def shingle_docs_arrow(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
             sh_out, hh_out = [], []
             for text in pdf["text"]:
                 if text is None:
-                    # NULL text: the expression plan yields sh=[NULL],
-                    # hh=[NULL] (split(NULL)→NULL words, the when()
-                    # condition is NULL → array(text), md5(NULL)→NULL) —
-                    # match it byte-for-byte instead of raising
-                    # AttributeError inside the worker (ADVICE r12;
-                    # differential row in tests/test_dedup_arrow.py)
                     if not hh_only:
                         sh_out.append([None])
                     hh_out.append([None])
@@ -580,46 +505,6 @@ def shingle_docs_arrow(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
         else "doc_id long, sh array<string>, hh array<long>"
     )
     return docs.select("doc_id", "text").mapInPandas(_batch, schema)
-
-
-def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
-    """(… doc_id, text …) → (doc_id, sh, hh): the per-doc distinct-shingle
-    arrays every MinHash consumer derives from, PLUS their md5-int64 hash
-    array ``hh`` materialized once. Exposed so a caller can persist ONE
-    shingle computation across several plans (the curation funnel shares
-    it between its geometry advisory and ``minhash_pairs``).
-
-    Why ``hh`` rides along (round 10 — the §14.7 signature-cost target):
-    the K signature mins each contain ``transform(sh, md5_long)`` as a
-    subexpression, and Spark performs NO common-subexpression elimination
-    across higher-order functions (same limitation the doc_stats
-    quality-score inlining works around) — so an inline band-keys
-    expression md5-hashes every shingle K times (48× under
-    GEOMETRY_LARGE_N; measured as the dominant signature wall at sf100).
-    Hashing once into a column lets the persisted/banded plan feed the K
-    universal-hash mins from integers. The DuckDB twin always had this
-    shape (``_SIG_SQL`` reads a materialized ``hh`` list), so cross-engine
-    values are untouched.
-
-    The Arrow twin (:func:`shingle_docs_arrow`) is the DEFAULT since
-    round 12 (14.8× at sf100, byte-identical);
-    ``SPARK_GRAFT_SHINGLE_ARROW=0`` opts back to the expression plan.
-
-    ``hh_only`` (round 12): emit only (doc_id, hh) — the pure-hh
-    pipeline (``verify="hh"`` + band keys from ``hashes``) never reads
-    the string arrays, and dropping them from the output keeps a
-    corpus's worth of strings out of the Arrow transfer AND out of the
-    funnel's persisted cache (the strings still exist transiently —
-    the hashes are defined over them)."""
-    if _shingle_arrow_enabled():
-        return shingle_docs_arrow(docs, hh_only=hh_only)
-    words = F.split(F.col("text"), " ")
-    sh = _shingles(F.col("text"), words)
-    if hh_only:
-        return docs.select("doc_id", F.transform(sh, md5_long).alias("hh"))
-    return docs.select(
-        "doc_id", sh.alias("sh"), F.transform(sh, md5_long).alias("hh")
-    )
 
 
 def band_slices(
@@ -813,7 +698,10 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs(near_dup_corpus(spark, sf_dir))
 
 
-ORACLE_DEDUP_MINHASH = f"""
+def _oracle_dedup_minhash(coeffs: list[tuple[int, int]] = COEFFS, band_rows: int = BAND_ROWS) -> str:
+    """DuckDB twin of ``minhash_pairs`` over ``near_dup_corpus`` at a band
+    geometry (the registry row uses the module geometry)."""
+    return f"""
 WITH aug AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -826,9 +714,9 @@ WITH aug AS (
 ), hashed AS (
   SELECT doc_id, sh, list_transform(sh, s -> {md5_long_sql("s")}) AS hh FROM shingled
 ), sigs AS (
-  SELECT doc_id, sh, {_SIG_SQL} AS sig FROM hashed
+  SELECT doc_id, sh, {_sig_sql(coeffs)} AS sig FROM hashed
 ), banded AS (
-  SELECT doc_id, unnest({_minhash_band_keys_sql()}) AS band_key FROM sigs
+  SELECT doc_id, unnest({_minhash_band_keys_sql(len(coeffs) // band_rows, band_rows)}) AS band_key FROM sigs
 ), cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -841,6 +729,9 @@ SELECT doc_a, doc_b, jaccard FROM (
   JOIN shingled y ON c.doc_b = y.doc_id
 ) WHERE jaccard >= 0.5
 """
+
+
+ORACLE_DEDUP_MINHASH = _oracle_dedup_minhash()
 
 
 # ---------------------------------------------------------------------------

@@ -241,12 +241,7 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
 
 PROBE_DRIVER_MAX = 256  # ≤ this many files: driver-side footer reads (no
 # extra Spark job / Python workers — measured 0.3 s fixed cost at sf10);
-# above it the probe distributes via mapInPandas. Env-overridable so the
-# distributed path stays testable at any file count.
-
-
-def _probe_driver_max() -> int:
-    return int(os.environ.get("SPARK_GRAFT_PROBE_DRIVER_MAX", str(PROBE_DRIVER_MAX)))
+# above it the probe distributes via mapInPandas. Read at call time.
 
 
 def _footer_metadata(path: str):
@@ -355,7 +350,7 @@ def parquet_stats_probe(spark: SparkSession, path: str) -> DataFrame:
         "n_rows long, null_qty long, null_flag long, "
         "price_max double, price_min double, ship_us long"
     )
-    if len(paths) <= _probe_driver_max():
+    if len(paths) <= PROBE_DRIVER_MAX:
         import pandas as pd
 
         rows = [
@@ -419,7 +414,7 @@ def footer_stats_row(spark: SparkSession, path: str) -> dict | None:
     paths = _list_parquet_files(spark, path)
     if not paths:
         raise ValueError(f"no parquet files under {path}")
-    if len(paths) > _probe_driver_max():
+    if len(paths) > PROBE_DRIVER_MAX:
         return None
     rows = [
         r
@@ -445,7 +440,7 @@ def footer_rowcount_value(spark: SparkSession, path: str) -> int | None:
     paths = _list_parquet_files(spark, path)
     if not paths:
         raise ValueError(f"no parquet files under {path}")
-    if len(paths) > _probe_driver_max():
+    if len(paths) > PROBE_DRIVER_MAX:
         return None
     return sum(int(_footer_metadata(p).num_rows) for p in paths)
 

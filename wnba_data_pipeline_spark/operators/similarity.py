@@ -86,82 +86,69 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_emb")
     )
     c = emb.select(F.col("vec_id").alias("n_vec_id"), F.col("embedding").alias("n_emb"))
-    if _srp_arrow_enabled():
-        # Round 15 (optimization): the all-pairs examination (N_QUERIES×N
-        # interpreted 3-fold cosines in the non-equi join) runs as a GEMM
-        # SCREEN first — per query, keep candidates within
-        # HN_SCREEN_MARGIN of the k-th best GEMM cosine, then the
-        # UNCHANGED exact verify (fold cosine, window, round) runs on the
-        # ~tens of survivors, so rows stay byte-identical (switch-equality
-        # pinned in tests/test_similarity_bucketed.py).
-        #
-        # Round 16 (VERDICT r15 "what's wrong" #3): the r15 shape ran the
-        # corpus through coalesce(1) — one task held every vector. The
-        # query set is N_QUERIES (=10) rows by definition, so it is
-        # collected ONCE at plan build (the same bounded-literal pattern
-        # as the fitted-centroid plans) and the screen becomes a
-        # DISTRIBUTED zero-shuffle map: each Arrow batch keeps, per query,
-        # the candidates within the margin of the query's k-th best
-        # IN-BATCH cosine. A batch's k-th best is never above the global
-        # k-th best (fewer candidates ⇒ a lower k-th value), so every
-        # global-top-k candidate survives its own batch — union over
-        # batches ⊇ the exact top-k, memory is O(batch), and each
-        # candidate appears in exactly one batch (no distinct needed).
-        q_rows = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-            .collect()
+    # GEMM SCREEN before the exact verify: instead of N_QUERIES×N
+    # interpreted 3-fold cosines in a non-equi join, the query set
+    # (N_QUERIES rows by definition) is collected ONCE at plan build and
+    # each Arrow batch keeps, per query, the candidates within
+    # HN_SCREEN_MARGIN of the query's k-th best IN-BATCH cosine. A batch's
+    # k-th best is never above the global k-th best (fewer candidates ⇒ a
+    # lower k-th value), so every global-top-k candidate survives its own
+    # batch — union over batches ⊇ the exact top-k, memory is O(batch),
+    # and each candidate appears in exactly one batch (no distinct
+    # needed). The exact verify (fold cosine, window, round) then runs on
+    # the ~tens of survivors, so rows equal the DuckDB twin's all-pairs
+    # ranking.
+    q_rows = (
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+        .collect()
+    )
+    q_ids = [int(r["vec_id"]) for r in q_rows]
+    q_vecs = [list(map(float, r["embedding"])) for r in q_rows]
+
+    def _screen(batches):
+        import numpy as np
+
+        qi = np.asarray(q_ids, dtype=np.int64)
+        Q = np.asarray(q_vecs, dtype=np.float64)
+        qn = np.sqrt((Q * Q).sum(axis=1))
+        empty = pd.DataFrame(
+            {"q_vec_id": pd.Series([], dtype="int64"), "n_vec_id": pd.Series([], dtype="int64")}
         )
-        q_ids = [int(r["vec_id"]) for r in q_rows]
-        q_vecs = [list(map(float, r["embedding"])) for r in q_rows]
-
-        def _screen(batches):
-            import numpy as np
-
-            qi = np.asarray(q_ids, dtype=np.int64)
-            Q = np.asarray(q_vecs, dtype=np.float64)
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            empty = pd.DataFrame(
-                {"q_vec_id": pd.Series([], dtype="int64"), "n_vec_id": pd.Series([], dtype="int64")}
+        got = False
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            got = True
+            idv = pdf["vec_id"].to_numpy()
+            X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
+            nv = np.sqrt((X * X).sum(axis=1))
+            C = (Q @ X.T) / np.outer(qn, nv)
+            mask = qi[:, None] != idv[None, :]
+            # NaN → +inf: match the verify window's NaN-largest DESC
+            # ordering (see _hn_bucket_screen — ADVICE r15)
+            C = np.where(mask, C, -np.inf)
+            C = np.where(np.isnan(C), np.inf, C)
+            kk = min(TOP_K, C.shape[1])
+            kth = -np.partition(-C, kk - 1, axis=1)[:, kk - 1]
+            thr = kth - HN_SCREEN_MARGIN
+            keep = (C >= thr[:, None]) & mask
+            bi, bj = np.nonzero(keep)
+            yield pd.DataFrame(
+                {
+                    "q_vec_id": qi[bi].astype("int64"),
+                    "n_vec_id": idv[bj].astype("int64"),
+                }
             )
-            got = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                got = True
-                idv = pdf["vec_id"].to_numpy()
-                X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
-                nv = np.sqrt((X * X).sum(axis=1))
-                C = (Q @ X.T) / np.outer(qn, nv)
-                mask = qi[:, None] != idv[None, :]
-                # NaN → +inf: match the verify window's NaN-largest DESC
-                # ordering (see _hn_bucket_screen — ADVICE r15)
-                C = np.where(mask, C, -np.inf)
-                C = np.where(np.isnan(C), np.inf, C)
-                kk = min(TOP_K, C.shape[1])
-                kth = -np.partition(-C, kk - 1, axis=1)[:, kk - 1]
-                thr = kth - HN_SCREEN_MARGIN
-                keep = (C >= thr[:, None]) & mask
-                bi, bj = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "q_vec_id": qi[bi].astype("int64"),
-                        "n_vec_id": idv[bj].astype("int64"),
-                    }
-                )
-            if not got:
-                yield empty
+        if not got:
+            yield empty
 
-        cand = emb.select("vec_id", "embedding").mapInPandas(
-            _screen, "q_vec_id long, n_vec_id long"
-        )
-        pairs = cand.join(F.broadcast(q), "q_vec_id").join(c, "n_vec_id").withColumn(
-            "_cos", _cosine(F.col("q_emb"), F.col("n_emb"))
-        )
-    else:
-        pairs = F.broadcast(q).join(c, F.col("q_vec_id") != F.col("n_vec_id")).withColumn(
-            "_cos", _cosine(F.col("q_emb"), F.col("n_emb"))
-        )
+    cand = emb.select("vec_id", "embedding").mapInPandas(
+        _screen, "q_vec_id long, n_vec_id long"
+    )
+    pairs = cand.join(F.broadcast(q), "q_vec_id").join(c, "n_vec_id").withColumn(
+        "_cos", _cosine(F.col("q_emb"), F.col("n_emb"))
+    )
     w = Window.partitionBy("q_vec_id").orderBy(F.col("_cos").desc(), F.col("n_vec_id"))
     return (
         pairs.withColumn("nn_rank", F.row_number().over(w))
@@ -340,29 +327,19 @@ def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape is ``q_emb_near_dup_bucketed`` below (same filter over
     banded-LSH candidates).
 
-    Round 15 (optimization, guide §3.2/§8.4): the all-pairs examination
-    runs as a blocked GEMM SCREEN in one Arrow pass (cos ≥ 0.9 − 1e-9)
-    instead of ~N²/2 interpreted 64-term fold evaluations in a
-    BroadcastNestedLoopJoin — measured 80.5 s → ~1.5 s at sf0.1. The
-    screen provably loses no pair: GEMM vs the JVM's left fold differ by
-    ≤ ~2·DIM·eps·Σ|a_i·b_i| ≈ 1e-12 on unit-normalized cosines, 1000×
-    inside the 1e-9 margin, and the handful of screen survivors then flow
-    through the UNCHANGED exact verify — the same 0.0-seeded left-fold
-    dot, norm product, ≥ 0.9 filter and round the all-pairs plan applied —
-    so the output stays byte-identical (false positives are dropped by
-    the exact filter; hash-verified against the DuckDB twin at every SF).
-    SPARK_GRAFT_SRP_ARROW=0 opts back to the pure-expression all-pairs
-    plan."""
+    Plan: the all-pairs examination runs as a blocked GEMM SCREEN in one
+    Arrow pass (cos ≥ 0.9 − 1e-9) instead of ~N²/2 interpreted 64-term
+    fold evaluations in a BroadcastNestedLoopJoin — measured 80.5 s →
+    ~1.5 s at sf0.1. The screen provably loses no pair: GEMM vs the
+    0.0-seeded left fold differ by ≤ ~2·DIM·eps·Σ|a_i·b_i| ≈ 1e-12 on
+    unit-normalized cosines, 1000× inside the 1e-9 margin, and the
+    handful of screen survivors then flow through the exact verify — the
+    left-fold dot, norm product, ≥ 0.9 filter and round of the DuckDB
+    twin — so false positives are dropped and the rows equal the twin's
+    (hash-verified at every SF)."""
     with_norm = _augmented_corpus(spark, sf_dir)
     a = with_norm.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), F.col("norm").alias("norm_a"))
     b = with_norm.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"), F.col("norm").alias("norm_b"))
-    if not _srp_arrow_enabled():
-        return (
-            a.join(b, F.col("vec_a") < F.col("vec_b"))
-            .withColumn("_cos", _dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b")))
-            .filter(F.col("_cos") >= ND_THRESHOLD)
-            .select("vec_a", "vec_b", F.round(F.col("_cos"), 6).alias("cosine"))
-        )
 
     def _screen(batches):
         import numpy as np
@@ -468,29 +445,15 @@ def _nd_coeffs(band: int, plane: int) -> list[int]:
 _ND_COEFFS = {(b, p): _nd_coeffs(b, p) for b in range(ND_BANDS) for p in range(ND_PLANES)}
 
 
-def _nd_band_key(v: Column, band: int) -> Column:
-    """band*span + bucket, bucket bit p = sign of the left-fold dot with the
-    integer plane (int→double products, 0.0-seeded fold: bit-identical in
-    both engines, so the sign can never disagree)."""
-    def _prod_term(ks: Column):
-        # closure (not default args): PySpark derives lambda arity by signature
-        return lambda i: F.element_at(v, i + F.lit(1)).cast("double") * F.element_at(ks, i + F.lit(1))
-
-    out = F.lit(band * ND_BUCKET_SPAN)
-    for p in range(ND_PLANES):
-        ks = F.array(*[F.lit(k) for k in _ND_COEFFS[(band, p)]])
-        prods = F.transform(F.sequence(F.lit(0), F.lit(DIM - 1)), _prod_term(ks))
-        d = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-        out = out + F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return out.cast("long")
-
-
 def _nd_band_key_sql(v: str, band: int) -> str:
+    """DuckDB twin of one band's key in ``_srp_banded_rows``: band*span +
+    bucket, bucket bit p = sign of the dot with the integer plane."""
     # dot products UNROLLED to a flat left-associative sum: indexing a
     # 64-literal list inside list_transform makes DuckDB rebuild the list
     # per element (measured 77 s for this oracle at sf0.01; unrolled: <1 s).
-    # Left-assoc `t1 + t2 + …` associates identically to the 0.0-seeded
-    # left fold on the Spark side, so the sign can never disagree.
+    # Left-assoc `t1 + t2 + …` is the 0.0-seeded left fold that
+    # ``_srp_banded_rows`` falls back to near zero, so the sign can never
+    # disagree.
     terms = [str(band * ND_BUCKET_SPAN)]
     for p in range(ND_PLANES):
         dot = " + ".join(
@@ -498,21 +461,6 @@ def _nd_band_key_sql(v: str, band: int) -> str:
         )
         terms.append(f"CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END")
     return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
-
-
-def _srp_arrow_enabled() -> bool:
-    """Round 15 (optimization): the SRP band-key assignment — ND_BANDS ×
-    n_planes interpreted 64-term folds per row (8,192 expression-tree
-    evaluations per vector for the near-dup geometry) — runs as ONE numpy
-    matmul per Arrow batch by default. Sign parity with the expression
-    fold is EXACT, not approximate: any dot whose magnitude falls inside
-    the combined float64 error bound of (GEMM vs left fold) is recomputed
-    with the literal 0.0-seeded left fold in Python (IEEE doubles, same
-    association ⇒ the identical sign the JVM branch produces) — see
-    ``_srp_banded_rows``. Measured at sf0.1: band-key stage 2.1 s → ~0.2 s.
-    SPARK_GRAFT_SRP_ARROW=0 opts back to the pure-expression plan (keeps
-    the JVM-only worker posture, same keys)."""
-    return _os.environ.get("SPARK_GRAFT_SRP_ARROW", "1") != "0"
 
 
 def _srp_banded_rows(
@@ -524,20 +472,22 @@ def _srp_banded_rows(
     span: int,
     key_name: str,
 ) -> DataFrame:
-    """Arrow twin of ``explode([_nd_band_key(v, b) for b in bands])``:
-    emits one (id_cols…, key) row per (input row, band), keys bit-identical
-    to the expression branch. ``df`` must carry the id columns plus
+    """SRP band keys in one numpy matmul per Arrow batch: emits one
+    (id_cols…, key) row per (input row, band), key = band*span + bucket,
+    bucket bit p = sign of the dot with the integer plane
+    ``_ND_COEFFS[(band, p)]`` for the first ``n_planes`` planes. Keys
+    equal the DuckDB twins ``_nd_band_key_sql`` (8 planes) and
+    ``_hn_band_key_sql`` (4 planes). ``df`` must carry the id columns plus
     ``embedding`` as ``array<double>`` (select exactly these first — the
-    Python crossing is opaque to column pruning, guide §4.1).
+    Python crossing is opaque to column pruning).
 
-    Exactness: D = V·Kᵀ via GEMM differs from the JVM's 0.0-seeded left
+    Exactness: D = V·Kᵀ via GEMM differs from the twins' 0.0-seeded left
     fold by at most ~2·DIM·eps·Σ|v_i·k_i| per element (standard float64
     summation bounds for either association). Every element with
     |D| ≤ 4·DIM·eps·Σ|v·k| — in practice none — is recomputed with the
     literal sequential fold (Python floats are IEEE doubles: identical
-    rounding, identical association, therefore the identical sign bit the
-    expression branch computes). All other elements' signs provably agree
-    with the fold already."""
+    rounding, identical association, therefore the identical sign bit).
+    All other elements' signs provably agree with the fold already."""
     coeff = [
         [float(_ND_COEFFS[(b, p)][i]) for i in range(DIM)]
         for b in range(n_bands)
@@ -588,17 +538,8 @@ def _srp_banded_rows(
 # bucket behind ONE shuffle key, which no shuffle-partition dial can split
 # (AQE cannot split a single key). Buckets estimated above this budget are
 # sub-bucket-salted so every screen group holds ~budget rows (~100 k × 64
-# float64 ≈ 51 MB of vectors + the blocked gram). Env-tunable so the
-# synthetic hot-bucket test can exercise the machinery at toy scale.
-def _screen_row_budget() -> int:
-    return int(_os.environ.get("SPARK_GRAFT_SCREEN_BUDGET", "100000"))
-
-
-def _screen_salt_enabled() -> bool:
-    """Opt-out dial for the hot-bucket gate + salting (default ON). With
-    the gate off the screens keep the r15 single-group-per-bucket shape —
-    the differential arm the equality tests pin against."""
-    return _os.environ.get("SPARK_GRAFT_SCREEN_SALT", "1") != "0"
+# float64 ≈ 51 MB of vectors + the blocked gram). Read at call time.
+SCREEN_ROW_BUDGET = 100_000
 
 
 SCREEN_SALT_MAX = 1024  # slice-count cap (keeps the group id in 20 bits)
@@ -621,7 +562,7 @@ def _hot_bucket_slices(
     SAMPLED rows in one bucket before anything collects)."""
     import math
 
-    budget = _screen_row_budget()
+    budget = SCREEN_ROW_BUDGET
     gate = (
         F.pmod(
             md5_long(F.concat(F.lit("srphot:"), F.col(id_col).cast("string"))),
@@ -751,7 +692,7 @@ def _nd_bucket_screen(threshold: float):
     GEMM-vs-left-fold float64 gap with 1 000× headroom — see the bound at
     the constant). False positives are dropped by the downstream
     exact-fold verify; false negatives are impossible, so the final rows
-    are byte-identical to the verify-every-collision plan."""
+    equal those of the DuckDB twin, which verifies every collision."""
 
     def _one_bucket(ids, X, nv, parts_a, parts_b):
         import numpy as np
@@ -829,66 +770,46 @@ def q_emb_near_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (explode ND_BANDS band keys per vector, self-join on the key) instead
     of the all-pairs non-equi cross product.
 
-    Plan: band-key assignment is a zero-shuffle codegen map; the candidate
-    join shuffles on the band key (the inverted index); distinct pairs
-    shuffle on (vec_a, vec_b) — candidates only, ~13× below all-pairs here
-    and asymptotically O(colliding pairs); the verify join fetches the two
-    vectors by id and evaluates the exact cosine ONLY on candidates.
-    Recovers exactly the all-pairs result at sf0.01 and sf0.1 (verified in
-    tests/test_similarity_bucketed.py), by the tuned (planes, bands) above.
+    Plan: band keys come from one Arrow matmul pass (``_srp_banded_rows``);
+    the banded rows shuffle once on (band key, slice), carrying the
+    embedding, and a per-bucket GEMM screen at threshold − margin
+    (``_nd_bucket_screen`` — the grouped twin of ``q_emb_near_dup``'s
+    corpus screen, same provably-no-false-negatives bound) emits only the
+    near-threshold pairs: at sf0.1 ~130 pairs instead of ~230 k
+    within-bucket collisions. The distinct pairs then fetch their two
+    vectors by id and the exact cosine verify runs on them alone, so the
+    rows equal the DuckDB twin's collide-then-verify join. Recovers
+    exactly the all-pairs result at sf0.01 and sf0.1 (verified in
+    tests/test_similarity_bucketed.py), by the tuned (planes, bands)
+    above.
     """
     with_norm = _augmented_corpus(spark, sf_dir)
-    if _srp_arrow_enabled():
-        # Round 15, second pass: candidates now come from a per-bucket GEMM
-        # screen at threshold − margin (the grouped twin of
-        # ``q_emb_near_dup``'s corpus screen — same provably-no-false-
-        # negatives bound, same unchanged exact verify downstream), instead
-        # of materializing EVERY within-bucket collision through the
-        # distinct. At sf0.1 that cuts the pair volume from ~230 k
-        # collisions to the ~130 true near-dup pairs before any pair
-        # exchange; the screen's groupBy is the one exchange that carries
-        # the embedding (n_bands×N rows, moved once — same trade as
-        # hard_negatives_bucketed, pinned there).
-        banded = _srp_banded_rows(
-            with_norm.select("vec_id", "embedding"),
-            [("vec_id", "long"), ("embedding", "array<double>")],
-            n_planes=ND_PLANES,
-            n_bands=ND_BANDS,
-            span=ND_BUCKET_SPAN,
-            key_name="bkey",
-        )
-        # Round 16 (VERDICT r15 item 3): buckets estimated past the screen
-        # row budget are sub-bucket-salted so no single screen task
-        # materializes an unbounded bucket (pair coverage and final rows
-        # unchanged — every pair still meets in exactly one slice group,
-        # the distinct + exact verify drop the redundancy). {} on every
-        # fixture corpus, where buckets top out in the hundreds of rows.
-        slices = (
-            _hot_bucket_slices(
-                with_norm.select("vec_id", "embedding"),
-                id_col="vec_id",
-                n_planes=ND_PLANES,
-                n_bands=ND_BANDS,
-                span=ND_BUCKET_SPAN,
-            )
-            if _screen_salt_enabled()
-            else {}
-        )
-        banded = _with_pair_slices(banded, slices, key_name="bkey", id_col="vec_id")
-        cand = (
-            banded.repartition("bkey", "_sub")
-            .mapInPandas(_nd_bucket_screen(ND_THRESHOLD), "vec_a long, vec_b long")
-            .distinct()
-        )
-    else:
-        keys = F.array(*[_nd_band_key(F.col("embedding"), b) for b in range(ND_BANDS)])
-        banded = with_norm.select("vec_id", F.explode(keys).alias("bkey"))
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = (
-            a.join(b, (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-            .distinct()
-        )
+    banded = _srp_banded_rows(
+        with_norm.select("vec_id", "embedding"),
+        [("vec_id", "long"), ("embedding", "array<double>")],
+        n_planes=ND_PLANES,
+        n_bands=ND_BANDS,
+        span=ND_BUCKET_SPAN,
+        key_name="bkey",
+    )
+    # Buckets estimated past the screen row budget are sub-bucket-salted so
+    # no single screen task materializes an unbounded bucket (pair coverage
+    # and final rows unchanged — every pair still meets in exactly one slice
+    # group, the distinct + exact verify drop the redundancy). {} on every
+    # fixture corpus, where buckets top out in the hundreds of rows.
+    slices = _hot_bucket_slices(
+        with_norm.select("vec_id", "embedding"),
+        id_col="vec_id",
+        n_planes=ND_PLANES,
+        n_bands=ND_BANDS,
+        span=ND_BUCKET_SPAN,
+    )
+    banded = _with_pair_slices(banded, slices, key_name="bkey", id_col="vec_id")
+    cand = (
+        banded.repartition("bkey", "_sub")
+        .mapInPandas(_nd_bucket_screen(ND_THRESHOLD), "vec_a long, vec_b long")
+        .distinct()
+    )
     ea = with_norm.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), F.col("norm").alias("norm_a"))
     eb = with_norm.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"), F.col("norm").alias("norm_b"))
     return (
@@ -1600,22 +1521,6 @@ HN_PLANES = 4  # hard-negative bands use 4-bit buckets: negatives live at
 HN_TOP_K = 3
 
 
-def _hn_band_key(v, band: int):
-    """4-bit SRP band key: the first HN_PLANES planes of the shared
-    ``_ND_COEFFS`` family (same fold/association contract as
-    ``_nd_band_key``)."""
-    def _prod_term(ks):
-        return lambda i: F.element_at(v, i + F.lit(1)).cast("double") * F.element_at(ks, i + F.lit(1))
-
-    out = F.lit(band * (1 << HN_PLANES))
-    for p in range(HN_PLANES):
-        ks = F.array(*[F.lit(k) for k in _ND_COEFFS[(band, p)]])
-        prods = F.transform(F.sequence(F.lit(0), F.lit(DIM - 1)), _prod_term(ks))
-        d = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-        out = out + F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return out.cast("long")
-
-
 # Screen margin for the per-bucket GEMM shortlist (round 15): GEMM vs the
 # JVM's 0.0-seeded left fold differ by ≤ ~2·DIM·eps·Σ|a_i·b_i| ≈ 1e-12 on
 # these near-unit vectors — 1 000× inside this margin, so a pair whose GEMM
@@ -1632,8 +1537,8 @@ def _hn_bucket_screen(k: int):
     ``HN_SCREEN_MARGIN`` of the bucket's k-th best GEMM cosine. False
     positives are dropped by the downstream EXACT fold verify; false
     negatives are impossible by the margin argument above, so the final
-    top-k rows are byte-identical to the verify-every-candidate plan
-    (exceptAll-pinned both directions in tests/test_similarity_bucketed.py)."""
+    top-k rows equal those of the DuckDB twin, which verifies every
+    colliding candidate."""
 
     def screen(pdf):
         import numpy as np
@@ -1732,90 +1637,56 @@ def hard_negatives_bucketed(emb: DataFrame, *, k: int = HN_TOP_K) -> DataFrame:
     only corpus×corpus contact), exact cosine + per-anchor top-k on the
     survivors. Same output schema as :func:`hard_negatives_exact`;
     measured top-1 recall against it is asserted in
-    tests/test_contamination.py. Band rows carry only (id, label, key) —
-    the bands × N band shuffle and the candidate-pair distinct never move
-    a vector (round-8 sixth review pass: the earlier shape shipped both
-    64-dim embeddings through both shuffles); the exact-cosine verify
-    fetches the two vectors by id afterwards, candidates only — the same
-    id-then-fetch plan as ``q_emb_near_dup_bucketed`` and this operator's
-    own DuckDB twin. Per-bucket candidate volume stays bounded by the
-    4-bit split per band.
+    tests/test_similarity_bucketed.py. The candidate-pair distinct
+    aggregates id longs only; the exact-cosine verify fetches the two
+    vectors by id afterwards, candidates only — the same id-then-fetch
+    plan as ``q_emb_near_dup_bucketed`` and this operator's own DuckDB
+    twin.
 
-    Round 15 (optimization, guide §1.2 per-task work): (a) band keys run
-    through the Arrow pass (``_srp_banded_rows``, exact sign parity) —
-    the expression branch evaluated ND_BANDS×HN_PLANES interpreted 64-term
-    folds per row; (b) norms are precomputed PER VECTOR on the fetch side
-    so the verify evaluates only dot(a,n) — ``_cosine`` re-derived BOTH
-    norms per CANDIDATE (3 folds × ~2.3 M candidates at sf0.1). The
-    factoring is value-exact: sqrt(fold(v,v)) is the same double wherever
-    computed, and dot/(norm_a·norm_n) multiplies/divides the identical
-    operands in the identical order — rows hash-identical to the DuckDB
-    twin (which keeps its per-pair ``_cosine_sql`` rendering)."""
-    if _srp_arrow_enabled():
-        # Round 15, second pass (guide §1.2 step 1 — fix the algorithm
-        # before the per-task work): at sf0.1 the band join emitted
-        # 2 298 822 DISTINCT candidate pairs (57% of ALL ordered pairs —
-        # top-k mining needs permissive bands), so the verify was doing
-        # near-quadratic work: a 64-term fold + two fetch joins + the
-        # window over 2.3 M rows (measured ~5 s candidates + ~3 s verify
-        # of the 11.8 s total). The candidates now come from a per-bucket
-        # GEMM SCREEN: within each of the ND_BANDS×2^HN_PLANES buckets,
-        # every anchor keeps only the candidates within HN_SCREEN_MARGIN
-        # of its k-th best bucket cosine — any pair of the anchor's exact
-        # global top-k survives in at least one shared bucket (the margin
-        # argument at _hn_bucket_screen), so the UNCHANGED exact verify
-        # below produces byte-identical rows from ≤ bands×N×(k+ties)
-        # shortlist rows instead of 2.3 M. Shuffle trade, 100 TB posture:
-        # the screen moves each vector n_bands× through one exchange
-        # (previously the band shuffle carried only ids) but removes the
-        # Σ per-bucket-collisions pair volume from every downstream
-        # exchange — strictly fewer bytes whenever the mean bucket holds
-        # more than ~n_bands·dim/k rows, which any mining-permissive
-        # geometry does by construction.
-        memb = _srp_banded_rows(
-            emb.select(
-                "vec_id", "label", F.col("embedding").cast("array<double>").alias("embedding")
-            ),
-            [("vec_id", "long"), ("label", "int"), ("embedding", "array<double>")],
-            n_planes=HN_PLANES,
-            n_bands=ND_BANDS,
-            span=1 << HN_PLANES,
-            key_name="_bk",
-        )
-        # Round 16 (VERDICT r15 item 3): buckets estimated past the screen
-        # row budget split into anchor×candidate salt slices so no single
-        # screen task materializes an unbounded bucket; the per-slice
-        # k-th-best screen still keeps every bucket-wide top-k candidate
-        # (see _with_role_slices), so the verify rows are unchanged. {}
-        # on every fixture corpus.
-        slices = (
-            _hot_bucket_slices(
-                emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
-                id_col="vec_id",
-                n_planes=HN_PLANES,
-                n_bands=ND_BANDS,
-                span=1 << HN_PLANES,
-            )
-            if _screen_salt_enabled()
-            else {}
-        )
-        memb = _with_role_slices(memb, slices, key_name="_bk", id_col="vec_id")
-        cand = (
-            memb.groupBy("_bk", "_sub")
-            .applyInPandas(_hn_bucket_screen(k), "a_vec_id long, n_vec_id long")
-            .distinct()  # a pair can survive the screen in several bands
-        )
-    else:
-        bands = F.array(*[_hn_band_key(F.col("embedding"), b) for b in range(ND_BANDS)])
-        keyed = emb.select("vec_id", "label", F.explode(bands).alias("_bk"))
-        a = keyed.select(F.col("vec_id").alias("a_vec_id"), F.col("label").alias("_al"), "_bk")
-        b = keyed.select(F.col("vec_id").alias("n_vec_id"), F.col("label").alias("_nl"), "_bk")
-        cand = (
-            a.join(b, ["_bk"])
-            .filter((F.col("a_vec_id") != F.col("n_vec_id")) & (F.col("_al") != F.col("_nl")))
-            .select("a_vec_id", "n_vec_id")
-            .distinct()  # a pair can collide in several bands
-        )
+    Plan: (a) band keys run through the Arrow pass (``_srp_banded_rows``,
+    exact sign parity with ``_hn_band_key_sql``); (b) candidates come from
+    a per-bucket GEMM SCREEN (``_hn_bucket_screen``): within each of the
+    ND_BANDS×2^HN_PLANES buckets, every anchor keeps only the candidates
+    within HN_SCREEN_MARGIN of its k-th best bucket cosine — any pair of
+    the anchor's exact global top-k survives in at least one shared
+    bucket (the margin argument at ``_hn_bucket_screen``), so the exact
+    verify below ranks ≤ bands×N×(k+ties) shortlist rows instead of every
+    collision (at sf0.1 2.3 M distinct pairs, 57% of all ordered pairs —
+    top-k mining needs permissive bands); (c) norms are precomputed PER
+    VECTOR on the fetch side so the verify evaluates only dot(a,n) —
+    value-exact: sqrt(fold(v,v)) is the same double wherever computed.
+    Rows hash-identical to the DuckDB twin (which keeps its per-pair
+    ``_cosine_sql`` rendering). Shuffle trade, 100 TB posture: the screen
+    moves each vector n_bands× through one exchange but removes the
+    Σ per-bucket-collisions pair volume from every downstream exchange."""
+    memb = _srp_banded_rows(
+        emb.select(
+            "vec_id", "label", F.col("embedding").cast("array<double>").alias("embedding")
+        ),
+        [("vec_id", "long"), ("label", "int"), ("embedding", "array<double>")],
+        n_planes=HN_PLANES,
+        n_bands=ND_BANDS,
+        span=1 << HN_PLANES,
+        key_name="_bk",
+    )
+    # Buckets estimated past the screen row budget split into
+    # anchor×candidate salt slices so no single screen task materializes an
+    # unbounded bucket; the per-slice k-th-best screen still keeps every
+    # bucket-wide top-k candidate (see _with_role_slices), so the verify
+    # rows are unchanged. {} on every fixture corpus.
+    slices = _hot_bucket_slices(
+        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
+        id_col="vec_id",
+        n_planes=HN_PLANES,
+        n_bands=ND_BANDS,
+        span=1 << HN_PLANES,
+    )
+    memb = _with_role_slices(memb, slices, key_name="_bk", id_col="vec_id")
+    cand = (
+        memb.groupBy("_bk", "_sub")
+        .applyInPandas(_hn_bucket_screen(k), "a_vec_id long, n_vec_id long")
+        .distinct()  # a pair can survive the screen in several bands
+    )
     norm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
     ea = emb.select(F.col("vec_id").alias("a_vec_id"), F.col("embedding").alias("_ae"), norm.alias("_an"))
     eb = emb.select(F.col("vec_id").alias("n_vec_id"), F.col("embedding").alias("_ne"), norm.alias("_nn"))
@@ -1844,9 +1715,11 @@ def q_hard_negatives_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hn_band_key_sql(v: str, band: int) -> str:
-    """DuckDB twin of ``_hn_band_key`` — same unrolled left-associative dot
-    products as ``_nd_band_key_sql`` (identical association ⇒ identical
-    sign), over the first HN_PLANES planes with the 4-bit band offset."""
+    """DuckDB twin of one band's 4-bit key in ``hard_negatives_bucketed``'s
+    ``_srp_banded_rows`` pass — same unrolled left-associative dot products
+    as ``_nd_band_key_sql`` (identical association ⇒ identical sign), over
+    the first HN_PLANES planes of the shared ``_ND_COEFFS`` family with
+    the 4-bit band offset."""
     terms = [str(band * (1 << HN_PLANES))]
     for p in range(HN_PLANES):
         dot = " + ".join(

@@ -14,15 +14,12 @@ overlapping gram hits into maximal per-document spans, and (in
 lowest-doc_id owner.
 
 Plan shape (and why it survives 100 TB):
-  1. gram inventory — per-row ``posexplode`` of rolling word-W-gram
-     hashes (zero shuffle, codegen'd);
-  2. duplicated-gram set — distinct (doc, gram) pairs, then grams seen in
-     >1 doc: two hash-aggregate shuffles on the uniform 60-bit gram hash;
-  3. hit join — gram occurrences ⋈ duplicated-gram set on the hash. The
-     duplicated set is the small side in a real (mostly-unique) corpus;
-     at 100 TB a bloom-filter semi-join or storing the set bucketed by
-     hash keeps this a one-sided shuffle;
-  4. span merge — per-doc gaps-and-islands over gram start positions (one
+  1. gram inventory — one Arrow pass emitting (doc, pos, gram hash) per
+     rolling word-W-gram (zero shuffle);
+  2. duplicated-gram hits — a window min/max of doc_id per gram hash keeps
+     the occurrences of grams seen in >1 doc: one shuffle on the uniform
+     60-bit gram hash, carrying metadata rows only;
+  3. span merge — per-doc gaps-and-islands over gram start positions (one
      window sort per doc partition, same family as sessionization).
 No suffix array is materialized: the suffix-array construction of the
 paper is a single-machine algorithm, while the n-gram inventory is
@@ -37,12 +34,12 @@ in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long, md5_long_sql
+from ..functions.hashing import md5_long_sql
 from ..sources.tables import load_table
-from .text import _text_arrow_enabled, word_gram_hash_rows
+from .text import word_gram_hash_rows
 
 SPAN_W = 8  # minimum duplicated run length, in tokens
 
@@ -51,14 +48,6 @@ SPAN_W = 8  # minimum duplicated run length, in tokens
 # islands (12 tokens = 5 overlapping 8-grams that must merge into ONE span)
 BOILERPLATE = "terms of service apply to all content provided by this site operator"
 BOILERPLATE_MOD = 5
-
-
-def _gram_hashes(words: Column) -> Column:
-    """Array of md5-int64 hashes of the rolling SPAN_W-word grams."""
-    return F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(SPAN_W)),
-        lambda i: md5_long(F.concat_ws(" ", F.slice(words, i + F.lit(1), F.lit(SPAN_W)))),
-    )
 
 
 def _gram_hashes_sql(words: str) -> str:
@@ -74,40 +63,19 @@ def dup_gram_hits(docs: DataFrame) -> DataFrame:
     hash appears in MORE THAN ONE document (stages 1–3 above). ``pos`` is
     the 0-based token index of the gram start.
 
-    Round 15 (optimization, guide §2.4/§4.2): the r14 plan built the gram
-    inventory TWICE — ``grams`` fed both the dup-set aggregation and the
-    hit join as separate subplans (no cross-branch CSE), each paying the
-    interpreted 8×slice → concat_ws → md5 lambda per gram. Default now:
-    ONE Arrow gram pass (``word_gram_hash_rows``, md5-int64 parity) and
-    the dup test as window min/max over ``gh`` — ``min(doc_id) ≠
-    max(doc_id)`` over a gram's occurrences ⟺ it appears in >1 distinct
-    doc, so the hit set is identical while the inventory executes once
-    and the only shuffle carries (long, int, long) metadata rows.
-    SPARK_GRAFT_TEXT_ARROW=0 restores the two-branch expression plan
-    (differential in tests/test_text_arrow.py)."""
-    if _text_arrow_enabled():
-        grams = word_gram_hash_rows(docs, n_words=SPAN_W, with_pos=True)
-        w = Window.partitionBy("gh")
-        return (
-            grams.withColumn("_mn", F.min("doc_id").over(w))
-            .withColumn("_mx", F.max("doc_id").over(w))
-            .filter(F.col("_mn") < F.col("_mx"))
-            .select("doc_id", "pos", "gh")
-        )
-    words = F.split(F.col("text"), " ")
-    grams = (
-        docs.filter(F.size(words) >= SPAN_W)
-        .select("doc_id", F.posexplode(_gram_hashes(words)).alias("pos", "gh"))
+    Plan: ONE Arrow gram pass (``word_gram_hash_rows``, the md5-int64
+    grams of ``_gram_hashes_sql``) and the dup test as a window min/max
+    over ``gh`` — ``min(doc_id) ≠ max(doc_id)`` over a gram's occurrences
+    ⟺ it appears in >1 distinct doc — so the inventory executes once and
+    the only shuffle carries (long, int, long) metadata rows."""
+    grams = word_gram_hash_rows(docs, n_words=SPAN_W, with_pos=True)
+    w = Window.partitionBy("gh")
+    return (
+        grams.withColumn("_mn", F.min("doc_id").over(w))
+        .withColumn("_mx", F.max("doc_id").over(w))
+        .filter(F.col("_mn") < F.col("_mx"))
+        .select("doc_id", "pos", "gh")
     )
-    dup_set = (
-        grams.select("doc_id", "gh")
-        .distinct()
-        .groupBy("gh")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-        .select("gh")
-    )
-    return grams.join(dup_set, "gh").select("doc_id", "pos", "gh")
 
 
 def dup_span_stats(docs: DataFrame) -> DataFrame:

@@ -19,8 +19,6 @@ the lang/source rollup shuffles only the (≤ #groups) partial aggregates.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -57,27 +55,21 @@ def _count_in_sql(words: str, vocab_sql: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Arrow text passes (round 15, optimization — guide §4.2)
+# Arrow text passes
 # ---------------------------------------------------------------------------
 #
-# The gram/bigram inventories in this module all share one physical shape:
-# split the text, slide a fixed window, md5-hash (or emit) each gram — per
-# gram an interpreted Catalyst higher-order chain (transform / element_at /
-# concat_ws / md5 lambdas are NOT whole-stage-codegen'd; the round-12
-# shingle A/B measured the identical chain at 333.7 s vs 22.6 s for the
-# Arrow twin at sf100). The passes below are the text-family application of
-# the dedup shingle pattern (operators/dedup.py::shingle_docs_arrow):
-# mapInPandas with only the needed columns crossing (guide §4.1), hashlib
-# md5 parity with the md5→int64 contract (int(hexdigest[:15], 16) ==
-# digest-first-60-bits, proven byte-identical since round 12), plan-side
-# consumers unchanged, and SPARK_GRAFT_TEXT_ARROW=0 as the opt-out back to
-# the pure-expression plans (byte-identity pinned both ways in
-# tests/test_text_arrow.py; like the shingle/signature defaults this makes
-# pandas+pyarrow a worker dependency of the gated consumers).
-
-
-def _text_arrow_enabled() -> bool:
-    return _os.environ.get("SPARK_GRAFT_TEXT_ARROW", "1") != "0"
+# The gram/bigram inventories in this module share one physical shape:
+# split the text, slide a fixed window, md5-hash (or emit) each gram. They
+# run as mapInPandas passes with only the needed columns crossing (pandas
+# and pyarrow are required on every executor — README "Worker
+# dependencies"), because the same chain as Catalyst higher-order
+# functions (transform / element_at / concat_ws / md5 lambdas) is
+# interpreted per gram, not whole-stage-codegen'd. Values follow the
+# DuckDB twins exactly: Python str.split(' ') ≡ string_split (inner and
+# trailing empty words kept), md5 over the UTF-8 bytes, and the
+# md5→int64 contract (the digest's first 60 bits). Edge rows (NULL,
+# empty, short, repeated grams, multibyte, double spaces) are pinned
+# against those twins in tests/test_text_arrow.py.
 
 
 def word_gram_hash_rows(
@@ -89,17 +81,14 @@ def word_gram_hash_rows(
     distinct: bool = False,
     with_pos: bool = False,
 ) -> DataFrame:
-    """(id, text) → one row per word ``n_words``-gram md5-int64 hash — the
-    Arrow twin of ``explode([array_distinct](transform(sequence(0, size-n),
-    i -> md5_long(concat_ws(' ', element_at(words, i+1..i+n)))))`` over
-    ``split(text, ' ')``. Docs with fewer than ``n_words`` words emit
-    nothing (the callers' ``size(words) >= n`` plan filter, folded in:
-    split(NULL) is NULL → size −1, also skipped). ``distinct`` mirrors
-    ``array_distinct`` on the hashes (first occurrence kept — order is
-    irrelevant post-explode); ``with_pos`` mirrors ``posexplode`` (0-based
-    gram start, int like posexplode's pos). Parity notes as in
-    ``shingle_docs_arrow``: Python str.split(' ') ≡ Java split limit −1,
-    md5 over UTF-8 bytes, first 60 bits."""
+    """(id, text) → one row per word ``n_words``-gram md5-int64 hash: the
+    rows of DuckDB's ``unnest([list_distinct](list_transform(range(len(w)
+    - n + 1), i -> md5_long(w[i+1] || ' ' || … || w[i+n]))))`` over
+    ``string_split(text, ' ')`` (the gram lists in ``_oracle_contamination``
+    and ``spans._gram_hashes_sql``). NULL texts and docs with fewer than
+    ``n_words`` words emit nothing. ``distinct`` keeps each doc's first
+    occurrence of a hash; ``with_pos`` adds the 0-based gram start as an
+    int ``pos``."""
     assert not (distinct and with_pos)
     import hashlib
 
@@ -163,13 +152,12 @@ def word_gram_hash_rows(
 
 
 def bigram_count_rows(docs: DataFrame) -> DataFrame:
-    """(text) → per-Arrow-batch PARTIAL ``(bigram, n)`` counts — the Arrow
-    twin of ``_bigram_stream`` with the map-side combine folded in (guide
-    §2.3 'aggregate before you shuffle'): ``groupBy('bigram').sum('n')``
-    over these rows equals ``groupBy('bigram').count()`` over the
-    occurrence stream exactly, while the Python→JVM boundary and the
-    shuffle carry one row per DISTINCT bigram per batch instead of one per
-    occurrence."""
+    """(text) → per-Arrow-batch PARTIAL ``(bigram, n)`` counts with the
+    map-side combine folded in: ``groupBy('bigram').sum('n')`` over these
+    rows equals the per-bigram occurrence count of the DuckDB twin (the
+    ``bg`` CTE of ``ORACLE_HEAVY_HITTERS_CMS``), while the Python→JVM
+    boundary and the shuffle carry one row per DISTINCT bigram per batch
+    instead of one per occurrence."""
     from collections import Counter
 
     import pandas as pd
@@ -435,57 +423,40 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, guaranteeing any match of length ≥ k+w-1 between two documents
     shares a fingerprint (the winnowing coverage property).
 
-    Zero-shuffle codegen map stage; expected fingerprint density is
-    2/(w+1) of positions, reported per doc. Oracle: identical positional
-    grams / window slices via DuckDB list_slice.
+    Zero-shuffle map stage; expected fingerprint density is 2/(w+1) of
+    positions, reported per doc. Oracle: identical positional grams /
+    window slices via DuckDB list_slice.
 
-    Round 15 (optimization, guide §4.2): the per-position md5 transform +
-    per-window array_min slide — ~2·n_chars interpreted lambda
-    evaluations per doc, the whole cost of this query — runs as one Arrow
-    pass by default (``_winnow_stats_rows``: hashlib md5 parity, numpy
-    sliding min, exact int64 throughout; the division/round stays
-    plan-side so the double arithmetic is the same codegen expression).
-    The registry row only reads the fingerprint SET's size/min/max, so
-    the Arrow pass never materializes the array; ``winnow_fingerprints``
-    (the property-testable set builder) is unchanged.
-    SPARK_GRAFT_TEXT_ARROW=0 opts back to the expression plan
-    (differential in tests/test_text_arrow.py)."""
+    The per-position md5 and per-window min run in one Arrow pass
+    (``_winnow_stats_rows``: hashlib md5, numpy sliding min, exact int64
+    throughout); the division/round stays plan-side so the double
+    arithmetic is a codegen expression. The registry row only reads the
+    fingerprint SET's size/min/max, so the pass never materializes the
+    array; ``winnow_fingerprints`` is the property-testable set builder."""
     docs = load_table(spark, sf_dir, "documents")
-    if _text_arrow_enabled():
-        stats = _winnow_stats_rows(docs, k=SHINGLE_CHARS, w=WINNOW_WINDOW)
-        return stats.select(
-            "doc_id",
-            "n_grams",
-            "n_windows",
-            "n_fingerprints",
-            "fp_min",
-            "fp_max",
-            F.round(F.col("n_fingerprints") / F.col("n_windows"), 6).alias("fp_density"),
-        )
-    fps = winnow_fingerprints(docs)
-    return fps.select(
+    stats = _winnow_stats_rows(docs, k=SHINGLE_CHARS, w=WINNOW_WINDOW)
+    return stats.select(
         "doc_id",
         "n_grams",
         "n_windows",
-        F.size("fps").cast("long").alias("n_fingerprints"),
-        F.array_min("fps").alias("fp_min"),
-        F.array_max("fps").alias("fp_max"),
-        F.round(F.size("fps") / F.col("n_windows"), 6).alias("fp_density"),
+        "n_fingerprints",
+        "fp_min",
+        "fp_max",
+        F.round(F.col("n_fingerprints") / F.col("n_windows"), 6).alias("fp_density"),
     )
 
 
 def _winnow_stats_rows(docs: DataFrame, *, k: int, w: int) -> DataFrame:
-    """Arrow twin of ``winnow_fingerprints`` reduced to the stats the
-    registry row reads: (doc_id, n_grams, n_windows, n_fingerprints,
-    fp_min, fp_max). Exactness: positional char grams are code-point
-    slices in both engines (Python str slicing ≡ Spark substring ≡ DuckDB
-    substr — all count code points), hashes are the md5→int64 contract
-    over the gram's UTF-8 bytes, window minima and the distinct-set
-    size/min/max are exact int64 (fp_min/max over the DISTINCT set equal
-    those over all window minima). ASCII texts hash byte slices of the
-    one-time UTF-8 encoding (identical bytes); multibyte texts fall back
-    to per-slice encoding (differential rows in tests/test_text_arrow.py
-    cover both)."""
+    """(doc_id, text) → the winnowing stats the registry row reads:
+    (doc_id, n_grams, n_windows, n_fingerprints, fp_min, fp_max), equal to
+    the matching columns of ``ORACLE_DOC_WINNOW``. Exactness: positional
+    char grams are code-point slices (Python str slicing ≡ DuckDB substr),
+    hashes are the md5→int64 contract over the gram's UTF-8 bytes, window
+    minima and the distinct-set size/min/max are exact int64 (fp_min/max
+    over the DISTINCT set equal those over all window minima). ASCII texts
+    hash byte slices of the one-time UTF-8 encoding (identical bytes);
+    multibyte texts fall back to per-slice encoding (edge rows for both
+    in tests/test_text_arrow.py)."""
     import hashlib
 
     import numpy as np
@@ -501,8 +472,7 @@ def _winnow_stats_rows(docs: DataFrame, *, k: int, w: int) -> DataFrame:
         # task), and scatters the hashes back per position. One Python
         # md5 call per distinct gram instead of per position — hash
         # values are identical bytes-for-bytes (same md5, same 60-bit
-        # fold), so windows, minima and the registry row are unchanged
-        # (differential rows in tests/test_text_arrow.py).
+        # fold), so windows, minima and the registry row are unchanged.
         cache: dict[bytes, int] = {}
         # k = 8 bytes packs a gram into one uint64 — np.unique on a native
         # integer dtype sorts ~2.5× faster than on the void record view
@@ -577,13 +547,12 @@ def _winnow_stats_rows(docs: DataFrame, *, k: int, w: int) -> DataFrame:
                 out["fp_max"].append(int(wins.max()))
             yield pd.DataFrame({kk: pd.Series(vv, dtype="int64") for kk, vv in out.items()})
 
-    # scan-level prefilter (round 16, VERDICT r15 item 4): the r15 Arrow
-    # rewrite dropped the expression plan's pushed IsNotNull + length
-    # guard, so NULL/short rows paid decode + the Python crossing for
-    # nothing at corpus scale. The Python skip (line above: text is None
-    # or len(text) < k+w-1) stays as the in-kernel belt; this filter drops
-    # exactly those rows plan-side (Spark length() counts code points like
-    # Python len), so output rows are identical.
+    # scan-level prefilter: the opaque mapInPandas hides the kernel's skip
+    # (text is None or len(text) < k+w-1) from the optimizer, so without
+    # this filter NULL/short rows would pay decode + the Python crossing
+    # for nothing and the scan would lose its pushed IsNotNull. It drops
+    # exactly the rows the kernel skips (Spark length() counts code points
+    # like Python len), so output rows are identical.
     return (
         docs.select("doc_id", "text")
         .filter(F.col("text").isNotNull() & (F.length("text") >= k + w - 1))
@@ -923,15 +892,8 @@ def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 word bigrams (n-gram statistics for tokenizer /
     contamination analysis): per-row bigram expansion (zero-shuffle), one
     count shuffle, TakeOrderedAndProject for the top-k."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(2)),
-        lambda i: F.concat_ws(" ", F.element_at(words, i + F.lit(1)), F.element_at(words, i + F.lit(2))),
-    )
     return (
-        docs.filter(F.size(words) >= 2)
-        .select(F.explode(bigrams).alias("bigram"))
+        _bigram_stream(load_table(spark, sf_dir, "documents"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram"))
@@ -1054,131 +1016,81 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     data?". Eval set = every 50th doc; eval docs appear in the corpus too,
     so they self-report with full overlap (the built-in positive control).
 
-    Plan: both sides explode to DISTINCT (doc, gram-hash) pairs; the eval
-    side is tiny (corpus/50) and BROADCASTS, so the fact-sized side never
-    shuffles for the probe join; per-(corpus, eval) counts shuffle only the
-    matching pairs, and the per-doc argmax is a map-side-combining max_by
-    (ordered by (count, -eval_id): deterministic without a window). At
-    100 TB this is the standard decontamination sweep shape: corpus-side
-    scan + broadcast eval grams.
+    Plan: the eval side (corpus/EVAL_MOD docs, a pushed-filter scan) runs
+    through the gram pass (``word_gram_hash_rows``, distinct per doc) and is
+    collected ONCE at plan build into a gram → eval-doc map — a bounded
+    side, the same bytes a broadcast join would ship to every executor.
+    Each corpus doc's distinct grams, overlap counts and argmax are then
+    computed locally in ONE zero-shuffle Arrow pass (a doc's whole answer
+    depends only on its own gram set and the eval map). Values equal the
+    DuckDB twin's distinct-pair join: n_shared = |doc grams ∩ eval doc
+    grams|, ties to the lowest eval id. Scale ceiling: the eval side must
+    fit one executor. At 100 TB this is the standard decontamination sweep
+    shape: corpus-side scan + broadcast eval grams.
 
     In the driver registry since the round-5 rotation; the same DuckDB
-    twin also runs locally in tests/test_contamination.py.
-
-    Round 15 (optimization, guide §4.2): both gram inventories run
-    through the Arrow pass (``word_gram_hash_rows`` — per distinct gram
-    the expression plan paid an interpreted 5×element_at → concat_ws →
-    md5 lambda, TWICE over the eval docs since the two sides are separate
-    subplans). The join/agg tail is unchanged, so rows are identical;
-    SPARK_GRAFT_TEXT_ARROW=0 restores the expression inventories
-    (differential in tests/test_text_arrow.py)."""
+    twin also runs locally in tests/test_contamination.py."""
     docs = load_table(spark, sf_dir, "documents")
-    if _text_arrow_enabled():
-        # Round 16 (VERDICT r15 item 7): the eval-gram BROADCAST folds into
-        # the gram pass. The eval side (corpus/EVAL_MOD docs, pushed-filter
-        # scan) is collected ONCE at plan build — the same bounded-side
-        # pattern as the broadcast relation the r15 plan shipped to every
-        # executor anyway — and the probe join + both groupBy exchanges
-        # disappear: each corpus doc's distinct grams, overlap counts and
-        # argmax are computed locally in ONE Arrow pass (a doc's whole
-        # answer depends only on its own gram set and the eval map).
-        # Values identical: same gram kernel (md5→int64 over UTF-8,
-        # first-occurrence distinct), n_shared = |doc grams ∩ eval doc
-        # grams| exactly as the distinct-pair join counted, ties to the
-        # lowest eval id exactly as max_by(struct(n, -eval_id)). Scale
-        # ceiling unchanged from r15: the eval side must fit one executor
-        # (the old plan force-broadcast it); SPARK_GRAFT_TEXT_ARROW=0
-        # restores the two-scan broadcast-join expression plan.
-        eval_rows = word_gram_hash_rows(
-            docs.filter(F.col("doc_id") % EVAL_MOD == 0),
-            n_words=CONTAM_NGRAM,
-            distinct=True,
-            out_id="eval_doc_id",
-        ).collect()
-        eval_map: dict[int, list[int]] = {}
-        for r in eval_rows:
-            eval_map.setdefault(r["gh"], []).append(r["eval_doc_id"])
+    eval_rows = word_gram_hash_rows(
+        docs.filter(F.col("doc_id") % EVAL_MOD == 0),
+        n_words=CONTAM_NGRAM,
+        distinct=True,
+        out_id="eval_doc_id",
+    ).collect()
+    eval_map: dict[int, list[int]] = {}
+    for r in eval_rows:
+        eval_map.setdefault(r["gh"], []).append(r["eval_doc_id"])
 
-        def _probe(it):
-            import hashlib
+    def _probe(it):
+        import hashlib
 
-            import pandas as pd
+        import pandas as pd
 
-            md5 = hashlib.md5
-            cache: dict[str, int] = {}
+        md5 = hashlib.md5
+        cache: dict[str, int] = {}
 
-            def _h(g: str) -> int:
-                h = cache.get(g)
-                if h is None:
-                    h = int.from_bytes(md5(g.encode("utf-8")).digest()[:8], "big") >> 4
-                    cache[g] = h
-                return h
+        def _h(g: str) -> int:
+            h = cache.get(g)
+            if h is None:
+                h = int.from_bytes(md5(g.encode("utf-8")).digest()[:8], "big") >> 4
+                cache[g] = h
+            return h
 
-            n_words = CONTAM_NGRAM
-            for pdf in it:
-                ids_out, top_out, n_out = [], [], []
-                for did, text in zip(pdf["doc_id"], pdf["text"]):
-                    if text is None:
-                        continue
-                    words = text.split(" ")
-                    m = len(words) - n_words + 1
-                    if m <= 0:
-                        continue
-                    hs = dict.fromkeys(
-                        _h(" ".join(words[i : i + n_words])) for i in range(m)
-                    )
-                    counts: dict[int, int] = {}
-                    for g in hs:
-                        for e in eval_map.get(g, ()):
-                            counts[e] = counts.get(e, 0) + 1
-                    if not counts:
-                        continue
-                    top, shared = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
-                    ids_out.append(did)
-                    top_out.append(top)
-                    n_out.append(shared)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids_out, dtype="int64"),
-                        "top_eval_doc": pd.Series(top_out, dtype="int64"),
-                        "max_shared": pd.Series(n_out, dtype="int64"),
-                    }
+        n_words = CONTAM_NGRAM
+        for pdf in it:
+            ids_out, top_out, n_out = [], [], []
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:
+                    continue
+                words = text.split(" ")
+                m = len(words) - n_words + 1
+                if m <= 0:
+                    continue
+                hs = dict.fromkeys(
+                    _h(" ".join(words[i : i + n_words])) for i in range(m)
                 )
-
-        return (
-            docs.select("doc_id", "text")
-            .filter(F.col("text").isNotNull() & (F.length("text") >= CONTAM_NGRAM - 1))
-            .mapInPandas(_probe, "doc_id long, top_eval_doc long, max_shared long")
-        )
-    words = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(CONTAM_NGRAM)),
-        lambda i: md5_long(
-            F.concat_ws(
-                " ", *[F.element_at(words, i + F.lit(k + 1)) for k in range(CONTAM_NGRAM)]
+                counts: dict[int, int] = {}
+                for g in hs:
+                    for e in eval_map.get(g, ()):
+                        counts[e] = counts.get(e, 0) + 1
+                if not counts:
+                    continue
+                top, shared = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
+                ids_out.append(did)
+                top_out.append(top)
+                n_out.append(shared)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids_out, dtype="int64"),
+                    "top_eval_doc": pd.Series(top_out, dtype="int64"),
+                    "max_shared": pd.Series(n_out, dtype="int64"),
+                }
             )
-        ),
-    )
-    eligible = docs.filter(F.size(words) >= CONTAM_NGRAM)
-    corpus = eligible.select("doc_id", F.explode(F.array_distinct(grams)).alias("gh"))
-    eval_side = (
-        eligible.filter(F.col("doc_id") % EVAL_MOD == 0)
-        .select(F.col("doc_id").alias("eval_doc_id"), F.explode(F.array_distinct(grams)).alias("gh"))
-    )
-    overlaps = (
-        corpus.join(F.broadcast(eval_side), "gh")
-        .groupBy("doc_id", "eval_doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
+
     return (
-        overlaps.groupBy("doc_id")
-        .agg(
-            F.max_by(
-                "eval_doc_id", F.struct(F.col("n_shared"), (-F.col("eval_doc_id")).alias("_neg"))
-            ).alias("top_eval_doc"),
-            F.max("n_shared").alias("max_shared"),
-        )
-        .select("doc_id", "top_eval_doc", F.col("max_shared").cast("long").alias("max_shared"))
+        docs.select("doc_id", "text")
+        .filter(F.col("text").isNotNull() & (F.length("text") >= CONTAM_NGRAM - 1))
+        .mapInPandas(_probe, "doc_id long, top_eval_doc long, max_shared long")
     )
 
 
@@ -1655,8 +1567,8 @@ CMS_WIDTH = 8192
 
 
 def _bigram_stream(docs: DataFrame) -> DataFrame:
-    """(text) → one row per bigram OCCURRENCE — zero-shuffle expansion,
-    shared by the exact top-k and the CMS pipeline."""
+    """(text) → one row per bigram OCCURRENCE — the zero-shuffle expansion
+    behind the exact top-k (``q_bigram_topk``)."""
     words = F.split(F.col("text"), " ")
     bigrams = F.transform(
         F.sequence(F.lit(0), F.size(words) - F.lit(2)),
@@ -1729,13 +1641,12 @@ def heavy_hitters_cms(
     filter), asserted equal to the direct computation in
     tests/test_cms.py.
 
-    Round 15 (optimization): the bigram path feeds PARTIAL per-batch
-    counts from the Arrow pass (``bigram_count_rows`` — guide §2.3
-    'aggregate before you shuffle') through the same sketch gate; the
-    gate is value-based, so filtering partials then summing equals
-    filtering occurrences then counting. SPARK_GRAFT_TEXT_ARROW=0
-    restores the occurrence-stream plan."""
-    if term_col == "bigram" and _text_arrow_enabled():
+    The bigram path feeds PARTIAL per-batch counts from the Arrow pass
+    (``bigram_count_rows``) through the same sketch gate; the gate is
+    value-based, so filtering partials then summing equals filtering
+    occurrences then counting. Any other ``term_col`` reads ``docs`` as
+    the occurrence stream itself."""
+    if term_col == "bigram":
         occ_counts = bigram_count_rows(docs)
         cms = cms_counts(occ_counts, term_col="bigram", count_col="n")
         candidates = occ_counts.filter(_cms_passes(F.col("bigram"), cms, min_count))
@@ -1744,9 +1655,8 @@ def heavy_hitters_cms(
             .agg(F.sum("n").cast("long").alias("n"))
             .filter(F.col("n") >= min_count)
         )
-    occ = _bigram_stream(docs) if term_col == "bigram" else docs
-    cms = cms_counts(occ, term_col=term_col)
-    candidates = occ.filter(_cms_passes(F.col(term_col), cms, min_count))
+    cms = cms_counts(docs, term_col=term_col)
+    candidates = docs.filter(_cms_passes(F.col(term_col), cms, min_count))
     return (
         candidates.groupBy(term_col)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1804,18 +1714,14 @@ def q_hh_cms_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (one bounded-key shuffle); the estimate join touches only heavy
     terms × depth rows.
 
-    Round 15 (optimization, guide §2.4): the r14 plan executed the bigram
-    stream TWICE (the exact side and the cells side are separate subplans
-    — no cross-branch CSE) and md5-hashed every OCCURRENCE ×depth; the
-    default plan is now LINEAR — one Arrow partial-count pass → one exact
-    per-bigram agg → buckets hashed per DISTINCT bigram → the (r, b) cell
-    agg carries each heavy term through as collect_list payload (bounded:
-    ≤ occurrences/HH_MIN_COUNT heavies exist) → per-term min over its
-    depth cells. Cell sums are weighted sums of exact counts ≡ occurrence
-    counts, every heavy term meets each of its depth cells exactly once
-    (r is distinct by construction), so rows are identical.
-    SPARK_GRAFT_TEXT_ARROW=0 restores the r14 two-branch plan
-    (differential in tests/test_text_arrow.py)."""
+    Plan (linear — the bigram stream executes once): one Arrow
+    partial-count pass → one exact per-bigram agg → buckets hashed per
+    DISTINCT bigram → the (r, b) cell agg carries each heavy term through
+    as collect_list payload (bounded: ≤ occurrences/HH_MIN_COUNT heavies
+    exist) → per-term min over its depth cells. Cell sums are weighted
+    sums of exact counts ≡ occurrence counts, and every heavy term meets
+    each of its depth cells exactly once (r is distinct by construction),
+    so the rows equal the twin's occurrence-level cell table."""
     docs = load_table(spark, sf_dir, "documents")
     buckets = F.array(
         *[
@@ -1826,53 +1732,25 @@ def q_hh_cms_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in range(CMS_DEPTH)
         ]
     )
-    if _text_arrow_enabled():
-        counts = (
-            bigram_count_rows(docs)
-            .groupBy("bigram")
-            .agg(F.sum("n").cast("long").alias("n_exact"))
-        )
-        cells = (
-            counts.select("bigram", "n_exact", F.posexplode(buckets).alias("r", "b"))
-            .groupBy("r", "b")
-            .agg(
-                F.sum("n_exact").alias("cell_n"),
-                # collect_list skips NULLs → only the ≥-threshold terms ride
-                F.collect_list(
-                    F.when(
-                        F.col("n_exact") >= HH_MIN_COUNT, F.struct("bigram", "n_exact")
-                    )
-                ).alias("_heavies"),
-            )
-        )
-        heav = cells.select("cell_n", F.explode("_heavies").alias("_h"))
-        return (
-            heav.groupBy(
-                F.col("_h.bigram").alias("bigram"), F.col("_h.n_exact").alias("n_exact")
-            )
-            .agg(F.min("cell_n").alias("cms_est"))
-            .select(
-                "bigram",
-                "n_exact",
-                F.col("cms_est").cast("long").alias("cms_est"),
-                (F.col("cms_est") - F.col("n_exact")).cast("long").alias("overcount"),
-            )
-        )
-    occ = _bigram_stream(docs)
+    counts = (
+        bigram_count_rows(docs)
+        .groupBy("bigram")
+        .agg(F.sum("n").cast("long").alias("n_exact"))
+    )
     cells = (
-        occ.select(F.posexplode(buckets).alias("r", "b"))
+        counts.select("bigram", "n_exact", F.posexplode(buckets).alias("r", "b"))
         .groupBy("r", "b")
-        .agg(F.count(F.lit(1)).alias("cell_n"))
+        .agg(
+            F.sum("n_exact").alias("cell_n"),
+            # collect_list skips NULLs → only the ≥-threshold terms ride
+            F.collect_list(
+                F.when(F.col("n_exact") >= HH_MIN_COUNT, F.struct("bigram", "n_exact"))
+            ).alias("_heavies"),
+        )
     )
-    exact = (
-        occ.groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .filter(F.col("n_exact") >= HH_MIN_COUNT)
-    )
+    heav = cells.select("cell_n", F.explode("_heavies").alias("_h"))
     return (
-        exact.select("bigram", "n_exact", F.posexplode(buckets).alias("r", "b"))
-        .join(cells, ["r", "b"])
-        .groupBy("bigram", "n_exact")
+        heav.groupBy(F.col("_h.bigram").alias("bigram"), F.col("_h.n_exact").alias("n_exact"))
         .agg(F.min("cell_n").alias("cms_est"))
         .select(
             "bigram",

@@ -51,13 +51,10 @@ DEFAULT_AS_OF = "2001-09-01 00:00:00"
 INC_PERSIST_MIN_BATCH = 50_000
 
 
-def _should_persist_batches(span: int, env: str | None) -> bool:
-    """Resolve the incremental funnel's per-batch persist mode: an explicit
-    SPARK_GRAFT_INC_PERSIST (the A/B probes' arm switch) always wins;
-    otherwise persist exactly when batches are big enough that plan
-    re-execution dominates materialization cost."""
-    if env is not None and env != "":
-        return env != "0"
+def _should_persist_batches(span: int) -> bool:
+    """The incremental funnel's per-batch persist mode: persist exactly
+    when batches are big enough that plan re-execution dominates
+    materialization cost. Reads ``INC_PERSIST_MIN_BATCH`` at call time."""
     return span >= INC_PERSIST_MIN_BATCH
 
 STAGES = ("corpus", "quality_kept", "sampled", "deduped", "near_deduped", "packed")
@@ -407,11 +404,10 @@ def run_curation_incremental(
     # 23.5–93.9 s batch_local_dedup / 10.4–81.8 s screen_verdicts walls
     # in BENCH_SCALE_r14 inc_shipped100). Persist the gated batch, its
     # shingles, and the local-survivor frame for the batch's lifetime —
-    # a PHYSICAL switch (values identical; A/B'd survivor-hash-equal in
-    # BENCH_SCALE_r15 inc_seam_attrib); SPARK_GRAFT_INC_PERSIST forces an
-    # arm, otherwise the span-keyed auto mode picks (see
+    # a PHYSICAL choice (values identical; A/B'd survivor-hash-equal in
+    # BENCH_SCALE_r15 inc_seam_attrib) that the span-keyed gate makes (see
     # _should_persist_batches). Seam walls land in ``batch_stage_walls``.
-    inc_persist = _should_persist_batches(span, os.environ.get("SPARK_GRAFT_INC_PERSIST"))
+    inc_persist = _should_persist_batches(span)
     _ts = 0.0
     for i in range(n_batches):
         t0 = _time.perf_counter()
