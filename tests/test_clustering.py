@@ -62,8 +62,10 @@ def _fold_sqdists(V: np.ndarray, cents: list[list[float]]) -> np.ndarray:
     return D
 
 
-def ref_kmeans(ids: np.ndarray, V: np.ndarray, k: int, max_iter: int) -> KMeansModel:
-    order = sorted(range(len(ids)), key=lambda i: (seed_hash(int(ids[i])), int(ids[i])))
+def ref_kmeans(ids: np.ndarray, V: np.ndarray, k: int, max_iter: int, rank=seed_hash) -> KMeansModel:
+    """Lloyd's as the module docstring specifies it; ``rank(id)`` is the
+    md5 seed rank (``seed_hash`` for the default ``km`` seed tag)."""
+    order = sorted(range(len(ids)), key=lambda i: (rank(int(ids[i])), int(ids[i])))
     cents = [[float(x) for x in V[i]] for i in order[:k]]
     inertia_hist, sizes, converged, n_iter = [], {}, False, 0
     for _ in range(max_iter):
@@ -188,11 +190,10 @@ def test_assignment_pandas_path_matches_expr_bitexact(spark):
 
 
 def test_kmeans_k256_pandas_path_bitexact_vs_reference(spark):
-    # production-SemDeDup-shaped k: 256 > KM_EXPR_MAX_K routes the fit's
-    # per-iteration assignment through the Arrow path; the fit must STILL
-    # be bit-exact against the numpy reference (same folds, same
-    # fixed-point sums), proving the k-scalable path changes the physical
-    # shape only
+    # production-SemDeDup-shaped k: 256 > KM_EXPR_MAX_K runs the fit's
+    # assignments through the gemm kernel and the full-corpus assignment
+    # through the Arrow path; both must STILL be bit-exact against the
+    # left-fold numpy reference — the standing canary of the gemm kernel
     from wnba_data_pipeline_spark.operators.clustering import KM_EXPR_MAX_K
     from wnba_data_pipeline_spark.sources.tables import load_table
 
@@ -213,52 +214,41 @@ def test_kmeans_k256_pandas_path_bitexact_vs_reference(spark):
     assert got == dict(zip(ids.tolist(), np.argmin(D, axis=1).tolist()))
 
 
-def test_kmeans_fused_iteration_equals_per_row_plan(spark, monkeypatch):
-    """Round 13 (VERDICT r12 item 2): the fused fit iteration (running
-    blocked argmin + per-batch integer partial sums in one Arrow pass —
-    the default above KM_EXPR_MAX_K) must be bit-identical to the r12
-    per-row plan (assignment frame + per-row fixed-point decimal agg):
-    centroids AND metadata, with and without the sample gate. Note the
-    k=256 reference test above already pins the fused path to numpy; this
-    pins the two physical Spark plans to each other."""
-    from wnba_data_pipeline_spark.operators.clustering import KM_EXPR_MAX_K
+def test_fit_sample_over_budget_raises_sample_mod(spark, monkeypatch):
+    """Over FIT_SAMPLE_MAX_VALUES the fit doubles sample_mod until its
+    sample fits, never collecting more than the budget's rows (+1, the
+    over-budget probe), records the modulus it used, and equals a direct
+    fit — and the numpy reference on the kms: hash-sample — at it."""
+    from wnba_data_pipeline_spark.functions.hashing import md5_long_py
     from wnba_data_pipeline_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    k = KM_EXPR_MAX_K + 16
-    for mod in (1, 2):
-        monkeypatch.setenv("SPARK_GRAFT_FIT_FUSED", "1")
-        fused = kmeans_fit(emb, k=k, max_iter=3, sample_mod=mod)
-        monkeypatch.setenv("SPARK_GRAFT_FIT_FUSED", "0")
-        plain = kmeans_fit(emb, k=k, max_iter=3, sample_mod=mod)
-        assert fused.centroids == plain.centroids, f"sample_mod={mod}"
-        assert (fused.n_iter, fused.inertia, fused.sizes, fused.converged) == (
-            plain.n_iter, plain.inertia, plain.sizes, plain.converged,
-        ), f"sample_mod={mod}"
+    budget = 200 * DIM  # the 500-row corpus needs sample_mod >= 4
+    collected = []
+    real = type(emb).toPandas
 
+    def spy(self):
+        pdf = real(self)
+        collected.append(len(pdf))
+        return pdf
 
-def test_fit_matmul_default_on_and_equals_left_fold_optout(spark, monkeypatch):
-    """The gemm distance kernel is the scaled-k DEFAULT since round 13
-    (measurement dossier at ``_fit_matmul_enabled``); the opt-out restores
-    the associativity-exact left-fold kernel, and the two must agree on
-    the oracle corpus within float round-off — on every corpus measured so
-    far they agree BITWISE (assignments never flipped), which the k=256
-    numpy-reference test above canary-pins by running the default
-    kernel against the left-fold reference."""
-    import numpy as np
+    monkeypatch.setattr(clustering, "FIT_SAMPLE_MAX_VALUES", budget)
+    monkeypatch.setattr(type(emb), "toPandas", spy)
+    model = kmeans_fit(emb, k=SD_K, max_iter=3)
+    monkeypatch.undo()
+    assert model.sample_mod >= 4
+    assert len(collected) > 1 and all(n <= budget // DIM + 1 for n in collected)
+    assert collected[-1] * DIM <= budget
 
-    from wnba_data_pipeline_spark.operators.clustering import _fit_matmul_enabled
-    from wnba_data_pipeline_spark.sources.tables import load_table
-
-    monkeypatch.delenv("SPARK_GRAFT_FIT_MATMUL", raising=False)
-    assert _fit_matmul_enabled()
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    mm = kmeans_fit(emb, k=80, max_iter=2)
-    monkeypatch.setenv("SPARK_GRAFT_FIT_MATMUL", "0")
-    exact = kmeans_fit(emb, k=80, max_iter=2)
-    np.testing.assert_allclose(
-        np.array(mm.centroids), np.array(exact.centroids), rtol=1e-9, atol=1e-9
-    )
+    direct = kmeans_fit(emb, k=SD_K, max_iter=3, sample_mod=model.sample_mod)
+    assert direct.sample_mod == model.sample_mod
+    got = (model.centroids, model.n_iter, model.inertia, model.sizes, model.converged)
+    assert got == (direct.centroids, direct.n_iter, direct.inertia, direct.sizes, direct.converged)
+    ids, V = _load_vectors(SF_ORACLE)
+    keep = np.array([md5_long_py(f"kms:{int(i)}") % model.sample_mod == 0 for i in ids])
+    assert keep.sum() == collected[-1]
+    ref = ref_kmeans(ids[keep], V[keep], SD_K, 3)
+    assert model.centroids == ref.centroids and model.inertia == ref.inertia
 
 
 def test_semantic_dedup_pairs_match_duckdb_twin(spark, duck):
@@ -398,32 +388,6 @@ def test_kmeans_farthest_init_unmerges_what_hash_init_merges(spark):
         by_true.setdefault(r["vec_id"] % 8, set()).add(r["cluster"])
     assert all(len(cells) == 1 for cells in by_true.values()), by_true  # pure
     assert len(set().union(*by_true.values())) == 8  # one cell per cluster
-    # determinism: the traversal is TakeOrdered-based, so a refit is exact
+    # determinism: seed ranks and the traversal are exact, so a refit is too
     refit = kmeans_fit(df, k=8, max_iter=5, init="farthest")
     assert refit.centroids == model.centroids
-
-
-def test_farthest_driver_traversal_equals_distributed(spark, monkeypatch):
-    """Round 16: the default driver-side Gonzalez traversal (one bounded
-    collect + numpy per-dim left folds) must reproduce the per-pass
-    TakeOrdered arm EXACTLY — same fold association, min(best, d_new) ≡
-    F.least over all centroids, ties to the lowest id. Full-model equality
-    (centroids, n_iter, inertia history, sizes, converged) on the sf0.01
-    embeddings, including a duplicated-row corpus (distance-0 ties)."""
-    from wnba_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
-    from pyspark.sql import functions as F
-
-    # deterministic subsets (no bare limit); the union plants exact
-    # duplicate rows → distance-0 ties exercise the id tie-break
-    dup = emb.filter(F.col("vec_id") < 40).union(emb.filter(F.col("vec_id") < 8))
-    for df, k in ((emb, 12), (dup, 6)):
-        monkeypatch.setenv("SPARK_GRAFT_FARTHEST_DRIVER", "0")
-        ref = kmeans_fit(df, k=k, max_iter=3, init="farthest")
-        monkeypatch.setenv("SPARK_GRAFT_FARTHEST_DRIVER", "1")
-        got = kmeans_fit(df, k=k, max_iter=3, init="farthest")
-        assert got.centroids == ref.centroids
-        assert (got.n_iter, got.inertia, got.sizes, got.converged) == (
-            ref.n_iter, ref.inertia, ref.sizes, ref.converged
-        )

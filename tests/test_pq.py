@@ -184,28 +184,57 @@ def test_separation_statistic_and_recall_advisory(spark, caplog):
         assert [r for r in caplog.records if "inertia/SS" in r.message]
 
 
-def test_pq_fit_fused_equals_per_subspace(spark, model, monkeypatch):
-    """Round 13 (VERDICT r12 item 2): the fused sub-fit iteration — one
-    Arrow pass per Lloyd iteration for all m subspaces, integer partial
-    sums — must reproduce the r12 per-subspace fits EXACTLY: codebooks and
-    every KMeansModel metadatum (n_iter, inertia history, sizes,
-    converged). The module `model` fixture runs the fused default, so
-    this also chains the fused path to the checked-in fixture literals."""
+def test_fits_run_one_bounded_collect(spark):
+    """With AQE off, each fit is one Arrow collect of its training sample
+    — no Spark job per seed pick or Lloyd's iteration. ``ivfpq_fit`` reads
+    the corpus size off that collect when the corpus fits the budget, so
+    it pays no count job (a count is 2 jobs under AQE)."""
+    import uuid
+
+    from wnba_data_pipeline_spark.operators import clustering
+
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    monkeypatch.setenv("SPARK_GRAFT_FIT_FUSED", "0")
-    base = pq.pq_fit(emb)
-    assert base.codebooks == model.codebooks
-    meta = lambda mm: [  # noqa: E731
-        (s.n_iter, s.inertia, s.sizes, s.converged) for s in mm.sub_models
-    ]
-    assert meta(base) == meta(model)
-    # and with a sample gate engaged (the 100 TB shape)
-    monkeypatch.setenv("SPARK_GRAFT_FIT_FUSED", "1")
-    fused_s = pq.pq_fit(emb, sample_mod=2)
-    monkeypatch.setenv("SPARK_GRAFT_FIT_FUSED", "0")
-    base_s = pq.pq_fit(emb, sample_mod=2)
-    assert fused_s.codebooks == base_s.codebooks
-    assert meta(fused_s) == meta(base_s)
+    sc = spark.sparkContext
+
+    def jobs(fit) -> int:
+        group = f"fit-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "fit job budget")
+        try:
+            fit(emb)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert jobs(clustering.kmeans_fit) == 1
+        assert jobs(pq.pq_fit) == 1
+        assert jobs(pq.ivfpq_fit) == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_ivfpq_fit_driver_sample_gate_equals_spark_gate(spark, monkeypatch):
+    """A corpus inside the budget is collected whole and ``ivfpq_fit``
+    applies the kms: sample gate on the driver; over the budget the gate
+    runs in Spark. Both must pick the same rows, so the two indexes are
+    identical."""
+    from wnba_data_pipeline_spark.functions.hashing import md5_long_py
+    from wnba_data_pipeline_spark.operators import clustering
+
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
+    n_half = sum(md5_long_py(f"kms:{i}") % 2 == 0 for i in ids)
+    assert n_half < len(ids)
+    driver = pq.ivfpq_fit(emb, sample_mod=2)
+    monkeypatch.setattr(clustering, "FIT_SAMPLE_MAX_VALUES", n_half * pq.DIM)
+    spark_gated = pq.ivfpq_fit(emb, sample_mod=2)
+    assert spark_gated.pq.sub_models[0].sample_mod == 2
+    assert (driver.coarse, driver.pq.codebooks, driver.n_vectors, driver.separation) == (
+        spark_gated.coarse, spark_gated.pq.codebooks, spark_gated.n_vectors, spark_gated.separation,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -533,34 +562,21 @@ def test_ivfpq_residual_beats_raw_on_clustered_corpus(spark, clustered_emb, clus
 
 
 def test_residual_arrow_equals_expression(spark):
-    """Round 11: the Arrow residual path (large cell counts, where the
-    literal centroid table would explode the analyzer) must produce the
-    same doubles as the expression path — one IEEE subtraction either
-    way."""
-    from pyspark.sql import functions as F
+    """The residual the fit and the fused Arrow passes compute in numpy
+    (``X - C[cells]``) is the same doubles as the expression path's
+    ``_residual_col`` — one IEEE subtraction either way."""
+    import numpy as np
 
-    from wnba_data_pipeline_spark.operators import pq
-    from wnba_data_pipeline_spark.sources.tables import load_table
-
-    from .conftest import SF_ORACLE
-
-    emb = load_table(spark, SF_ORACLE, "embeddings").limit(200)
-    cents = [r["embedding"] for r in emb.limit(5).collect()]
-    cents = [[float(x) for x in c] for c in cents]
+    emb = load_table(spark, SF_ORACLE, "embeddings").filter(F.col("vec_id") < 200)
+    cents = [[float(x) for x in r["embedding"]] for r in emb.filter(F.col("vec_id") < 5).collect()]
     cell = (F.col("vec_id") % len(cents)).cast("int")
-    expr = sorted(
-        (r["vec_id"], tuple(r["r"]))
-        for r in emb.select(
-            "vec_id", pq._residual_col(F.col("embedding"), cents, cell).alias("r")
-        ).collect()
-    )
-    arrow = sorted(
-        (r["vec_id"], tuple(r["r"]))
-        for r in emb.select(
-            "vec_id", pq._residual_udf(cents)(F.col("embedding"), cell).alias("r")
-        ).collect()
-    )
-    assert expr == arrow
+    rows = emb.select(
+        "vec_id", "embedding", pq._residual_col(F.col("embedding"), cents, cell).alias("r")
+    ).collect()
+    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    cells = np.array([r["vec_id"] % len(cents) for r in rows])
+    R = X - np.asarray(cents)[cells]
+    assert [list(r["r"]) for r in rows] == R.tolist()
 
 
 def test_auto_geometry_resolves_fixture_values_at_driver_scales(spark):
@@ -611,65 +627,58 @@ def test_ivfpq_search_large_geometry_equals_expression_path(spark, monkeypatch):
     assert len(arrow) > 0
 
 
-def test_pq_fused_gemm_kernel_canary(spark, monkeypatch):
-    """Round 14 (ADVICE r13): above the expression-k bound
-    (ksub > KM_EXPR_MAX_K) `_pq_partials_fn` now honors the gemm dial the
-    same way `_batch_partials_fn` does, so the fused path and the opt-out
-    reference arm keep picking the SAME kernel at every ksub. Identity of
-    the gemm arm vs the left-fold arm is measured, not structural (the
-    expanded form associates differently) — this is its standing canary
-    at scaled ksub, mirroring the k=256 coarse-fit canary."""
+def test_pq_gemm_kernel_canary(spark):
+    """Above the expression shape (ksub > KM_EXPR_MAX_K) the sub-fits run
+    the gemm distance kernel, whose identity with the left fold is
+    measured, not structural (the expanded form associates differently).
+    This is its standing canary at scaled ksub, mirroring the k=256
+    coarse-fit canary: every sub-codebook and its fit metadata must equal
+    the left-fold numpy reference on that subspace."""
+    from wnba_data_pipeline_spark.functions.hashing import md5_long_py
+
+    from .test_clustering import _load_vectors, ref_kmeans
+
+    model = pq.pq_fit(load_table(spark, SF_ORACLE, "embeddings"), ksub=96, max_iter=2)
+    ids, V = _load_vectors(SF_ORACLE)
+    dsub = pq.DIM // pq.PQ_M
+    for j, sub in enumerate(model.sub_models):
+        ref = ref_kmeans(
+            ids, V[:, j * dsub : (j + 1) * dsub], 96, 2,
+            rank=lambda i, j=j: md5_long_py(f"pq{j}:{i}"),
+        )
+        assert sub.centroids == ref.centroids, j
+        assert (sub.n_iter, sub.inertia, sub.sizes) == (ref.n_iter, ref.inertia, ref.sizes), j
+
+
+def test_ivfpq_fused_encode_and_residual_bit_identical(spark):
+    """Above the expression shape the encode is ONE fused Arrow pass (cell
+    + in-memory residual + codes). At coarse_k=96 (> KM_EXPR_MAX_K, the
+    smallest corpus that exercises the fused branch) its cells and codes
+    must equal a left-fold numpy reference of the same index, and its plan
+    must be one MapInPandas stage with no ArrowEvalPython hop."""
+    import numpy as np
+
+    from .test_clustering import _fold_sqdists, _load_vectors
+
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    meta = lambda mm: [  # noqa: E731
-        (s.n_iter, s.inertia, s.sizes, s.converged) for s in mm.sub_models
-    ]
-    monkeypatch.setenv("SPARK_GRAFT_FIT_MATMUL", "1")
-    gemm = pq.pq_fit_fused(emb, ksub=96, max_iter=2)
-    monkeypatch.setenv("SPARK_GRAFT_FIT_MATMUL", "0")
-    fold = pq.pq_fit_fused(emb, ksub=96, max_iter=2)
-    assert gemm.codebooks == fold.codebooks
-    assert meta(gemm) == meta(fold)
+    index = pq.ivfpq_fit(emb, coarse_k=96)
+    enc = pq.ivfpq_encode(emb.select("vec_id", "embedding"), index)
+    got = {r["vec_id"]: (r["cell"], tuple(r["codes"])) for r in enc.collect()}
 
-
-def test_ivfpq_fused_encode_and_residual_bit_identical(spark, monkeypatch):
-    """Round 14 (VERDICT r13 item 4): above the expression-k bound the
-    encode defaults to ONE fused Arrow pass (cell + in-memory residual +
-    codes) instead of three Python round-trips, and the fit's residual
-    materialization fuses assign+subtract into one slim (id, residual)
-    pass. Both reuse the pinned kernels verbatim, so cells, codes, AND
-    fitted codebooks must be bit-identical to the three-stage opt-out —
-    asserted here at coarse_k=96 (> KM_EXPR_MAX_K, the smallest corpus
-    that exercises the fused branch) and fingerprint-compared at 1 M in
-    BENCH_SCALE_r14."""
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-
-    def _fit():
-        return pq.ivfpq_fit(emb, coarse_k=96)
-
-    def _enc(index):
-        return {
-            r["vec_id"]: (r["cell"], tuple(r["codes"]))
-            for r in pq.ivfpq_encode(emb.select("vec_id", "embedding"), index)
-            .select("vec_id", "cell", "codes")
-            .collect()
-        }
-
-    monkeypatch.setenv("SPARK_GRAFT_ENCODE_FUSED", "1")
-    idx_fused = _fit()
-    enc_fused = _enc(idx_fused)
-    monkeypatch.setenv("SPARK_GRAFT_ENCODE_FUSED", "0")
-    idx_base = _fit()
-    enc_base = _enc(idx_base)
-    assert idx_fused.coarse == idx_base.coarse
-    assert idx_fused.pq.codebooks == idx_base.pq.codebooks
-    assert enc_fused == enc_base
-    # the fused branch really engaged: the plan is ONE Arrow stage, not
-    # an assign stage feeding a residual udf feeding an encode stage
-    monkeypatch.setenv("SPARK_GRAFT_ENCODE_FUSED", "1")
-    plan = (
-        pq.ivfpq_encode(emb.select("vec_id", "embedding"), idx_fused)
-        ._jdf.queryExecution().executedPlan().toString()
+    ids, V = _load_vectors(SF_ORACLE)
+    cells = _fold_sqdists(V, index.coarse).argmin(axis=1)
+    R = V - np.asarray(index.coarse)[cells]
+    dsub = index.pq.dsub
+    codes = np.stack(
+        [
+            _fold_sqdists(R[:, j * dsub : (j + 1) * dsub], cb).argmin(axis=1)
+            for j, cb in enumerate(index.pq.codebooks)
+        ],
+        axis=1,
     )
+    want = {int(i): (int(c), tuple(int(x) for x in cs)) for i, c, cs in zip(ids, cells, codes)}
+    assert got == want
+    plan = enc._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1 and "ArrowEvalPython" not in plan
 
 

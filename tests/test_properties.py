@@ -91,3 +91,34 @@ def test_rolling_avg_matches_pandas(sp, rows, n):
     )
     for idx, i in zip(pdf.index, pdf["i"]):
         assert got[i] == pytest.approx(want[idx])
+
+
+_md5_edges = ["", "km:0", "kms:-17", "pq3:-9223372036854775808", "é", "日本語テキスト", "emoji 🏀", "a  b", "x" * 10_000]
+
+
+_md5_text = st.text(
+    st.characters(blacklist_categories=("Cs",), blacklist_characters="\x00"), max_size=64
+)
+
+
+@given(extra=st.lists(_md5_text, max_size=20))
+@_SETTINGS
+def test_md5_long_python_spark_duckdb_agree(sp, extra):
+    """The md5 → 60-bit rank is one value in Python (``md5_long_py``, the
+    fit's seed ranks), Spark (``md5_long``) and DuckDB (``md5_long_sql``):
+    empty, multibyte, negative-id and long strings included."""
+    import duckdb
+
+    from wnba_data_pipeline_spark.functions.hashing import md5_long, md5_long_py, md5_long_sql
+
+    strings = _md5_edges + extra
+    rows = list(enumerate(strings))
+    spark_h = dict(
+        sp.createDataFrame(rows, "i int, s string").select("i", md5_long("s").alias("h")).collect()
+    )
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(strings)), "s": strings}))
+    duck_h = dict(con.sql(f"SELECT i, {md5_long_sql('s')} AS h FROM t").fetchall())
+    con.close()
+    py_h = {i: md5_long_py(s) for i, s in rows}
+    assert py_h == spark_h == duck_h

@@ -8,6 +8,7 @@ first 15 hex chars of md5 — md5 is identical everywhere:
 
     Spark : conv(substring(md5(s), 1, 15), 16, 10)::long
     DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT
+    Python: int(md5(s.encode()).hexdigest()[:15], 16)
 
 60 bits < 63, so the value is always a positive BIGINT in both engines, which
 keeps downstream modular arithmetic sign-identical.
@@ -21,6 +22,7 @@ embedded as literals in both the Spark plan and the generated oracle SQL.
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 from pyspark.sql import Column
@@ -39,6 +41,12 @@ def md5_long(col: Column | str) -> Column:
 def md5_long_sql(expr: str) -> str:
     """DuckDB side of the contract above; ``expr`` is a SQL expression."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
+
+
+def md5_long_py(s: str) -> int:
+    """Driver/worker Python side of the contract above (UTF-8 bytes, as
+    both engines hash strings)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
 def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:

@@ -14,56 +14,62 @@ has no vector data; its nearest analog is the sklearn feature matrix in
   buckets; centroids follow the density, so near-identical vectors land in
   the same cell unless they straddle a Voronoi boundary)
 
-Execution model (Lloyd's, driver-coordinated — the same shape MLlib uses):
-each iteration is ONE scan + ONE hash aggregate whose shuffle carries only
-k x (dim+2) partial sums, never the vectors; the k x dim centroid matrix
-(tiny) rides back to the driver and is re-broadcast into the next plan as
-literals. Assignment is a zero-shuffle map (k folds over the array column,
-all JVM-side — no Python UDF anywhere).
+Execution model: the FIT runs on the driver. ``kmeans_fit`` collects its
+hash-sampled training frame once, through Arrow (``_collect_fit_sample``,
+bounded by ``FIT_SAMPLE_MAX_VALUES``), and runs seeding, farthest-point
+init and every Lloyd's iteration in numpy on that one array — one Spark
+job per fit, where a per-iteration scan + aggregate paid Spark's per-job
+floor for a few hundred vectors. Only ASSIGNMENT touches the full corpus,
+as one zero-shuffle map: k folds over the array column (all JVM-side, no
+Python) at small k, an Arrow-batched numpy argmin above it.
 
-Determinism contract: per-component partial sums are FIXED-POINT —
-``sum(floor(x * 10^9 + 0.5)::decimal(38,0))`` — so the centroid update is
-exact integer arithmetic, independent of partition layout and
-partial-aggregation order, and bit-replicable by the numpy reference in
-``tests/test_clustering.py`` (same quantization, same left-fold distance).
-The quantizer is ``floor(y + 0.5)`` SPELLED OUT in both implementations
-(round-5 ADVICE): engine-native round() half-modes (Spark BigDecimal
-HALF_UP over the shortest decimal repr vs numpy HALF_EVEN) can diverge in
-last-ulp cases where y + 0.5 crosses an integer boundary; the shared
-floor expression is identical by construction, not by coincidence.
-Plain double sums would make centroids drift across runs with partitioning,
-which would cascade into assignment flips at Voronoi boundaries.
+Determinism contract: per-component centroid sums are FIXED-POINT —
+``floor(x * 10^9 + 0.5)`` as int64, summed exactly — so the centroid
+update is exact integer arithmetic, independent of row order, and
+bit-replicable by the numpy reference in ``tests/test_clustering.py``
+(same quantization, same left-fold distance). The quantizer is
+``floor(y + 0.5)`` SPELLED OUT, not a native round(): half-modes differ
+across engines (BigDecimal HALF_UP vs numpy HALF_EVEN) in last-ulp cases.
+Distances use the 0.0-seeded per-component left fold wherever the Spark
+expression path would run (``_expr_path_ok``), so the fit and the
+expression assignment cannot disagree on a cell; above that shape the gemm
+expansion takes over (see ``_nearest``).
 
 Scale posture (100 TB):
-- fit: iterations scan the input; pass ``sample_mod > 1`` to fit on a
-  deterministic hash-sample (md5("kms:" || id) % mod == 0 — uniform over
-  ANY id space, unlike a raw id modulus) and assign the full corpus
-  once afterwards — the standard big-data k-means recipe. Persist the
-  input upstream if iterating over an expensive lineage.
-- k: the per-iteration shuffle is k x dim longs — negligible. The
-  ASSIGNMENT has two physical paths switched on ``KM_EXPR_MAX_K``:
-  unrolled JVM fold expressions at small k (zero Python), an
-  Arrow-batched numpy argmin (``_batch_assign_fn``) above it — the shape
+- fit: pass ``sample_mod > 1`` to fit on a deterministic hash-sample
+  (md5("kms:" || id) % mod == 0 — uniform over ANY id space, unlike a raw
+  id modulus) and assign the full corpus once afterwards — the standard
+  big-data k-means recipe. The collected sample holds at most
+  ``FIT_SAMPLE_MAX_VALUES`` values; a sample over that budget is refit at
+  a doubled modulus until it fits (the samples nest: mod 2m ⊂ mod m), and
+  the modulus used is recorded in ``KMeansModel.sample_mod``. The budget
+  holds the largest auto geometry in use (``pq.ivfpq_fit`` at 2 M vectors:
+  ~400 k × 64), so only fits beyond that scale train on a sparser sample
+  than their caller asked for. Driver memory is the sample plus
+  ``ROW_BLK`` × ``KBLK`` distance blocks.
+- k: the ASSIGNMENT has two physical paths switched on ``_expr_path_ok``:
+  unrolled JVM fold expressions at small k (zero Python), an Arrow-batched
+  numpy argmin (``_batch_assign_fn``) above it — the shape
   production-SemDeDup k ~ 10k+ requires, bit-identical to the expression
-  path by construction and equality-tested (round-6; closes the round-5
-  "documented escape hatch").
-- semantic dedup: within-cluster all-pairs is quadratic per cluster, so
+  path by construction and equality-tested.
+- semantic dedup: within-cell all-pairs is quadratic per cluster, so
   k must scale with the corpus (k ~ N / target_cell_size keeps per-cell
   candidate counts bounded — production SemDeDup uses 10k+ cells); the
   candidate join shuffles on the cluster id only.
-- decimal(38,0) partial sums overflow at ~10^28 scaled units per
-  (cluster, component) — i.e. never (10^19 rows of unit-scale floats).
+- int64 fixed-point sums are exact while rows-per-cell × max|x| stays
+  under ~9·10^9 (e.g. 400 k rows of |x| < 2·10^4); embeddings are O(1).
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
+import heapq
+import logging
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long, md5_long_py
 from .similarity import DIM, _augmented_corpus, _cosine_sql, _dot
 
 # fixed-point scales: components are O(1) floats, so round(x*1e9) is exact
@@ -82,16 +88,20 @@ SD_K = 8  # semantic-dedup cells for the test corpus (~500 rows; see module doc)
 # path is chosen independently by the k x dim term budget below.)
 SD_CELL_TARGET = 512
 # Fit-on-sample dial for the scaled-k regime: with k ~ n/512 a full-corpus
-# Lloyd's pass costs O(n·k) distance work AND n rows × (dim+2) fixed-point
-# decimal partial sums PER ITERATION — both quadratic-ish in n once k
-# scales. The funnel therefore fits on a deterministic hash-sample sized
-# ~SD_FIT_PER_CELL points per cell (the standard big-data recipe the
-# module docstring prescribes; kmeans_fit(sample_mod=...)) and pays the
-# full-corpus cost exactly once, in the final probe assignment. 64 points
-# per cell keeps centroid estimates stable while shrinking the fit input
-# by n/(64k) ≈ 8x whenever the k-scaling dial is active; small corpora
-# (mod == 1) keep the exact previous behavior.
+# Lloyd's pass costs O(n·k) distance work per iteration. The funnel
+# therefore fits on a deterministic hash-sample sized ~SD_FIT_PER_CELL
+# points per cell (kmeans_fit(sample_mod=...)) and pays the full-corpus
+# cost exactly once, in the final probe assignment. 64 points per cell
+# keeps centroid estimates stable while shrinking the fit input by
+# n/(64k) ≈ 8x whenever the k-scaling dial is active; small corpora
+# (mod == 1) fit on every row.
 SD_FIT_PER_CELL = 64
+
+# Value budget (rows × dim) of the one Arrow collect a fit makes of its
+# hash-sampled training frame: 2^25 doubles ≈ 268 MB on the driver. The
+# largest auto geometry in use — ivfpq_fit at 2 M vectors, sample_mod 5 —
+# trains on ~400 k × 64 = 25.6 M values, inside it.
+FIT_SAMPLE_MAX_VALUES = 1 << 25
 
 
 def sd_fit_mod_for(n: int, k: int) -> int:
@@ -117,10 +127,10 @@ SD_NPROBE = 2  # cells probed per vector in the dedup candidate join — the
 
 
 def seed_hash(vec_id: int | str) -> int:
-    """Python side of the md5->int64 seed-selection contract (same 60-bit
-    construction as ``functions/hashing.md5_long``) — exported so the test
-    reference can replicate seed choice exactly."""
-    return int(hashlib.md5(f"km:{vec_id}".encode()).hexdigest()[:15], 16)
+    """The md5 seed rank of ``vec_id`` under the default ``km`` seed tag
+    (``functions/hashing.md5_long_py``) — exported so the test reference
+    can replicate seed choice exactly."""
+    return md5_long_py(f"km:{vec_id}")
 
 
 def _sqdist(v: Column, centroid: list[float]) -> Column:
@@ -160,10 +170,9 @@ def _assignment_cols(vec: Column, centroids: list[list[float]]) -> tuple[Column,
 # the plan carries k x dim centroid literals and k unrolled fold chains
 # (analysis/codegen cost grows linearly in k, and production SemDeDup wants
 # k ~ 10k+ cells). Above it, assignment switches to an Arrow-batched
-# numpy argmin over the same centroids (``_batch_assign_fn``) — the
-# escape hatch round 5 documented, implemented and equality-tested in
-# round 6 (tests/test_clustering.py: both paths agree exactly at k=8, and
-# a k=256 fit is bit-exact vs the numpy reference through the pandas path).
+# numpy argmin over the same centroids (``_batch_assign_fn``) —
+# equality-tested (tests/test_clustering.py: both paths agree exactly at
+# k=8, and a k=256 fit is bit-exact vs the numpy reference).
 KM_EXPR_MAX_K = 64
 # Round 8: the switch must weigh k x dim, not k alone — the expression
 # path's per-row cost is the FULL unrolled term count (k fold chains of
@@ -179,221 +188,171 @@ KM_EXPR_MAX_K = 64
 KM_EXPR_TERM_BUDGET = 512
 
 
-def _expr_path_ok(centroids: list[list[float]]) -> bool:
+def _expr_path_ok(centroids) -> bool:
     k = len(centroids)
     return k <= KM_EXPR_MAX_K and k * len(centroids[0]) <= KM_EXPR_TERM_BUDGET
 
 
-# Row bound for the driver-side farthest-point traversal (round 16): the
-# fit frame is collected once (LIMIT-bounded probe, so the job never pulls
-# more than this + 1 rows) and the k-1 Gonzalez passes run in numpy with
-# the exact fold/tie-break contract. 64 Ki rows × dim=64 doubles ≈ 32 MB —
-# the same order as the broadcast relations fitted plans already ship.
-# Bigger frames keep the distributed per-pass TakeOrdered arm.
-FARTHEST_COLLECT_MAX_ROWS = 1 << 16
+# Block sizes of ``_nearest``: each distance block is at most
+# ROW_BLK × KBLK doubles (16 MB), whatever the row count or k. At the auto
+# IVF-PQ geometry (k ≈ 5.7 k) an unblocked (rows × k) matrix per Arrow
+# batch was ~450 MB and stalled the encode stage at sf100 (round 11).
+ROW_BLK = 4096
+KBLK = 512
 
 
-def _batch_assign_fn(centroids: list[list[float]], vec_col: str, out_col: str, dist_col: str | None):
-    """mapInPandas generator: append (cluster id [, min sq distance]) via a
-    numpy argmin over the broadcast k x dim centroid matrix.
-
-    Determinism contract (same as ``_sqdist``/`_assignment_cols``): squared
-    distances accumulate COMPONENT-BY-COMPONENT in index order from 0.0 —
-    elementwise IEEE doubles in the identical association as the Spark
-    left fold — and ``argmin`` takes the first minimum exactly like
-    ``array_position``; array<float> inputs widen f32→f64 exactly in both
-    paths. So the two physical paths cannot disagree on a single cluster
-    id, which the equality test pins.
-
-    Scale shape: zero-shuffle map stage; per-task memory is
-    O(batch x k + k x dim) doubles — independent of corpus size, and the
-    centroid matrix rides to executors once per task via the closure.
-
-    The gemm kernel (default ON since round 13 — dossier and opt-out at
-    ``_fit_matmul_enabled``) serves this pass too: the 1 M encode is the
-    same argmin at k=4 000 that dominated the fit, measured 271.8→37.1 s
-    with identical cells+codes; under the opt-out the blocked left fold
-    below is the bit-contract the k=256 equality test pins."""
+def _fold_sqdists(X, C):
+    """(rows × k) squared distances accumulated COMPONENT-BY-COMPONENT in
+    index order from 0.0 — elementwise IEEE doubles in the association of
+    ``_sqdist``'s left fold (array<float> inputs widen f32→f64 exactly in
+    both), so every numpy path that ranks by these agrees bit-for-bit
+    with the Spark expressions and their DuckDB twins."""
     import numpy as np
 
-    # centroid-column blocking (round 11): at the auto IVF-PQ geometry
-    # (k ≈ 5.7 k at 2 M vectors) an unblocked (batch × k) distance matrix
-    # is ~450 MB and the per-dim accumulation makes 64 full passes over it
-    # — pure cache thrash (measured as a stalled fit stage at sf100).
-    # Blocking k into ≤512-wide column groups keeps each accumulation
-    # target ~40 MB while PRESERVING the left-fold association exactly
-    # (each D column still accumulates component-by-component from 0.0 in
-    # index order — the blocking only changes which columns share a pass),
-    # so cluster ids are bit-identical (the k=256 numpy-reference equality
-    # test pins it).
-    KBLK = 512
-    matmul = _fit_matmul_enabled()  # captured at plan build, driver-side
+    D = np.zeros((len(X), len(C)))
+    for d in range(X.shape[1]):
+        diff = X[:, d, None] - C[None, :, d]
+        D += diff * diff
+    return D
+
+
+def _nearest(X, C, gemm: bool | None = None):
+    """(index, squared distance) of each row's nearest centroid, first
+    minimum on ties (≡ ``array_position``). The kernel follows the data
+    unless the caller pins it: the left fold where ``_expr_path_ok`` holds
+    (bit-identical to the expression path by construction) and the gemm
+    expansion ||x||² − 2x·c + ||c||² above it — BLAS associates
+    differently, so identity with the fold is measured (the k=256 and
+    ksub=96 numpy-reference tests are its canaries), not structural; it
+    cut the 1 M-vector coarse fit iterations 230→18 s and the encode
+    271.8→37.1 s with identical outputs (BENCH_SCALE_r13). A later block
+    replaces the running best only when strictly smaller, which keeps the
+    first minimum across blocks."""
+    import numpy as np
+
+    C = np.asarray(C, dtype=np.float64)
+    if gemm is None:
+        gemm = not _expr_path_ok(C)
+    CT = np.ascontiguousarray(C.T)
+    c2 = (C * C).sum(axis=1) if gemm else None
+    idx = np.zeros(len(X), dtype=np.int64)
+    dist = np.full(len(X), np.inf)
+    for r0 in range(0, len(X), ROW_BLK):
+        Xb = X[r0 : r0 + ROW_BLK]
+        best_i, best_d = idx[r0 : r0 + ROW_BLK], dist[r0 : r0 + ROW_BLK]  # views
+        rows = np.arange(len(Xb))
+        for k0 in range(0, len(C), KBLK):
+            k1 = min(k0 + KBLK, len(C))
+            if gemm:  # ||x||² is constant per row — added after the argmin
+                Db = c2[None, k0:k1] - 2.0 * (Xb @ CT[:, k0:k1])
+            else:
+                Db = _fold_sqdists(Xb, C[k0:k1])
+            bi = Db.argmin(axis=1)
+            bd = Db[rows, bi]
+            upd = bd < best_d
+            best_d[upd] = bd[upd]
+            best_i[upd] = bi[upd] + k0
+        if gemm:  # the true distance, clamped against round-off
+            best_d[:] = np.maximum(best_d + (Xb * Xb).sum(axis=1), 0.0)
+    return idx, dist
+
+
+def _batch_assign_fn(centroids: list[list[float]], vec_col: str, out_col: str):
+    """mapInPandas generator: append the nearest-centroid id (``_nearest``,
+    kernel fixed at plan build on the driver). Scale shape: zero-shuffle
+    map stage; per-task memory is one Arrow batch plus the k × dim
+    centroid matrix, which rides to executors once per task via the
+    closure."""
+    import numpy as np
+
+    gemm = not _expr_path_ok(centroids)
 
     def assign(batches):
-        C = np.asarray(centroids, dtype=np.float64)  # k x dim
-        k, dim = C.shape
-        CT = np.ascontiguousarray(C.T)  # dim x k — contiguous per-d rows
-        c2 = (C * C).sum(axis=1) if matmul else None
+        C = np.asarray(centroids, dtype=np.float64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            XT = np.ascontiguousarray(X.T)  # dim x batch
-            D = np.empty((len(X), k))
-            for k0 in range(0, k, KBLK):
-                k1 = min(k0 + KBLK, k)
-                if matmul:
-                    Db = c2[None, k0:k1] - 2.0 * (X @ CT[:, k0:k1])
-                else:
-                    Db = np.zeros((len(X), k1 - k0))
-                    for d in range(dim):  # left-fold association, see docstring
-                        diff = XT[d][:, None] - CT[d][None, k0:k1]
-                        Db += diff * diff
-                D[:, k0:k1] = Db
-            cl = D.argmin(axis=1)  # first-min, same tie-break as array_position
             out = pdf.copy()
-            out[out_col] = cl.astype(np.int32)
-            if dist_col is not None:
-                md = D[np.arange(len(X)), cl]
-                if matmul:  # restore the true distance (+||x||², clamped)
-                    md = np.maximum(md + (X * X).sum(axis=1), 0.0)
-                out[dist_col] = md
+            out[out_col] = _nearest(X, C, gemm)[0].astype(np.int32)
             yield out
 
     return assign
 
 
-def _fit_fused_enabled() -> bool:
-    """Env gate for the fused fit iteration (round 13, VERDICT r12 item 2)
-    — default ON: at the IVF-PQ auto geometry (k=4 000 over a ~333 k
-    sample) the per-iteration frame of 333 k (vec, cl, mind) rows plus the
-    per-ROW fixed-point decimal aggregate was the fit wall's biggest term.
-    The fused pass computes the SAME argmin (running blocked left-fold,
-    first-min across blocks preserved by strict-< updates in index order)
-    and the SAME fixed-point sums (per-element floor(x·scale + 0.5) then
-    int64 per-batch partials — integer addition is exactly associative, so
-    the decimal totals are bit-identical) inside one mapInPandas stage,
-    shuffling ≤k partial rows per Arrow batch instead of the whole sample.
-    ``SPARK_GRAFT_FIT_FUSED=0`` opts back to the r12 per-row plan;
-    equality is differential-tested (tests/test_clustering.py) and
-    A/B-fingerprinted at 1 M vectors (BENCH_SCALE_r13 fit_opt_ab).
-
-    int64 partial-sum bound: |component| < ~9e5 with the default 10 k-row
-    Arrow batches (9e5 × 1e9 × 1e4 < 2^63) — embeddings are O(1)-O(10)
-    floats per the module contract, so the bound is never approached; the
-    cross-batch totals go through decimal(38,0) exactly as before."""
-    return os.environ.get("SPARK_GRAFT_FIT_FUSED", "1") != "0"
+def _sample_gate(df: DataFrame, id_col: str, mod: int) -> DataFrame:
+    """The fit's hash-sample: rows with md5("kms:" || id) % mod == 0. The
+    gate is md5-HASHED, not a raw ``id % mod``: id spaces with modular
+    structure (all-odd ids, strided generators) would leave a raw-modulo
+    sample empty or biased, while the hash gate is uniform over any id
+    space and reshuffle-proof (same recipe as ``text.sample_gate``; "kms:"
+    de-correlates it from the seed ranks). Samples nest: mod 2m ⊂ mod m."""
+    if mod <= 1:
+        return df
+    return df.filter(md5_long(F.concat(F.lit("kms:"), F.col(id_col).cast("string"))) % mod == 0)
 
 
-def _fit_matmul_enabled() -> bool:
-    """gemm distance kernel for the scaled-k (k > KM_EXPR_MAX_K) numpy
-    paths — default ON since round 13, after the measurement dossier
-    (BENCH_SCALE_r13 fit_matmul_ab / encode_matmul_ab / matmul_pin_overlap):
-    the expanded form ||x−c||² = ||x||² − 2x·c + ||c||² via BLAS cut the
-    1 M-vector coarse fit iterations 230→18 s (fit 3.37×), the encode pass
-    271.8→37.1 s (7.33×), and on BOTH 1 M extremes — the well-separated
-    clustered corpus AND the boundary-dense sigma=0.5 overlapping corpus —
-    produced IDENTICAL codebook fingerprints and identical cells+codes
-    (the fixed-point design makes centroids a function of ASSIGNMENTS
-    only, so divergence needs an actual argmin flip between two centroids
-    within gemm round-off of equidistant — never observed across 3 M
-    assignments; the full clustering+pq suite incl. the k=256
-    numpy-reference bit-pin is green under the kernel, and that test now
-    runs it by default as the standing canary).
-
-    Why the flip is SAFE for every oracle: matmul engages only above
-    KM_EXPR_MAX_K, and every checked-in fixture / DuckDB twin / driver
-    correctness row fits and assigns at expression-path k (8–31), which
-    this dial never touches. Theoretical residue: gemm associates
-    differently than the left fold, so bit-identity with the numpy
-    left-fold reference is measured (canary-pinned), not guaranteed —
-    ``SPARK_GRAFT_FIT_MATMUL=0`` restores the associativity-exact kernel
-    if a numpy/BLAS change ever trips the canary."""
-    return os.environ.get("SPARK_GRAFT_FIT_MATMUL", "1") != "0"
+def _in_sample(ids: list, mod: int) -> list[bool]:
+    """Driver twin of ``_sample_gate`` over collected ids (same rows:
+    ``md5_long_py`` ≡ ``md5_long``, property-tested)."""
+    return [md5_long_py(f"kms:{i}") % mod == 0 for i in ids]
 
 
-def _batch_partials_fn(centroids: list[list[float]], vec_col: str):
-    """mapInPandas generator for the fused fit iteration: per Arrow batch,
-    assign rows to nearest centroid (identical argmin/mind as
-    ``_batch_assign_fn`` — same blocked left-fold association, first-min
-    tie-break preserved across blocks) and emit per-cluster INTEGER
-    partial sums of the fixed-point quantized components and inertia —
-    the exact per-row quantities the r12 plan floored row-by-row in
-    Catalyst, pre-reduced batch-locally (associative, so totals are
-    bit-identical). The gemm distance kernel is the default here since
-    round 13 (dossier + opt-out at ``_fit_matmul_enabled``); same
-    blocking, same strict-< first-min merge either way."""
+def _collect_bounded(df: DataFrame, id_col: str, vec_col: str):
+    """(ids, X) of ``df`` in ONE Arrow collect, ``limit``-bounded so the job
+    never returns more than FIT_SAMPLE_MAX_VALUES // DIM + 1 rows; None
+    when the frame is over the value budget."""
     import numpy as np
 
-    KBLK = 512
-    matmul = _fit_matmul_enabled()  # captured at plan build, driver-side
-
-    def partials(batches):
-        import pandas as pd
-
-        C = np.asarray(centroids, dtype=np.float64)  # k x dim
-        k, dim = C.shape
-        CT = np.ascontiguousarray(C.T)
-        c2 = (C * C).sum(axis=1) if matmul else None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            XT = np.ascontiguousarray(X.T)
-            x2 = (X * X).sum(axis=1) if matmul else None
-            best_d = np.full(len(X), np.inf)
-            best_i = np.zeros(len(X), dtype=np.int64)
-            for k0 in range(0, k, KBLK):
-                k1 = min(k0 + KBLK, k)
-                if matmul:
-                    # expanded form via gemm: ||c||² − 2 X·Cᵀ (||x||² is
-                    # constant per row — added once after the argmin)
-                    Db = c2[None, k0:k1] - 2.0 * (X @ CT[:, k0:k1])
-                else:
-                    Db = np.zeros((len(X), k1 - k0))
-                    for d in range(dim):  # left-fold association (see _batch_assign_fn)
-                        diff = XT[d][:, None] - CT[d][None, k0:k1]
-                        Db += diff * diff
-                bi = Db.argmin(axis=1)  # first-min within the block
-                bd = Db[np.arange(len(X)), bi]
-                upd = bd < best_d  # strict <: earlier block wins ties ≡ first-min
-                best_d[upd] = bd[upd]
-                best_i[upd] = bi[upd] + k0
-            if matmul:
-                best_d = np.maximum(best_d + x2, 0.0)  # clamp gemm round-off
-            # fixed-point quantization — identical per-element expression
-            # as the r12 plan (floor(y + 0.5), both engines' contract)
-            SV = np.floor(X * COMP_SCALE + 0.5).astype(np.int64)
-            SI = np.floor(best_d * INERTIA_SCALE + 0.5).astype(np.int64)
-            order = np.argsort(best_i, kind="stable")
-            cl_sorted = best_i[order]
-            uniq, starts = np.unique(cl_sorted, return_index=True)
-            sums = np.add.reduceat(SV[order], starts, axis=0)
-            inert = np.add.reduceat(SI[order], starts)
-            counts = np.diff(np.append(starts, len(cl_sorted)))
-            out = {"_cl": uniq.astype(np.int32), "_n": counts.astype(np.int64), "_inert": inert}
-            for i in range(dim):
-                out[f"_s{i}"] = sums[:, i]
-            yield pd.DataFrame(out)
-
-    return partials
-
-
-def _assignment_df(base: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
-    """The per-iteration assignment frame (_cl, _mind, _v), physical path
-    picked by k: unrolled JVM fold expressions at small k (zero Python),
-    Arrow-batched numpy argmin above ``KM_EXPR_MAX_K`` (same values — see
-    ``_batch_assign_fn``)."""
-    vec = F.col(vec_col)
-    if _expr_path_ok(centroids):
-        cluster, mind = _assignment_cols(vec, centroids)
-        return base.select(
-            cluster.alias("_cl"), mind.alias("_mind"), vec.cast("array<double>").alias("_v")
-        )
-    return base.select(vec.cast("array<double>").alias("_v")).mapInPandas(
-        _batch_assign_fn(centroids, "_v", "_cl", "_mind"),
-        "_v array<double>, _cl int, _mind double",
+    max_rows = FIT_SAMPLE_MAX_VALUES // DIM
+    pdf = (
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v"))
+        .limit(max_rows + 1)
+        .toPandas()
     )
+    if len(pdf) > max_rows:
+        return None
+    X = np.array(pdf["_v"].tolist(), dtype=np.float64)
+    return (pdf["_id"].tolist(), X) if X.size <= FIT_SAMPLE_MAX_VALUES else None
+
+
+def _collect_fit_sample(df: DataFrame, *, id_col: str, vec_col: str, sample_mod: int):
+    """(ids, X, sample_mod): the ``_sample_gate`` sample of ``df`` on the
+    driver. A sample over the value budget is dropped and retaken at a
+    doubled modulus (each task of an over-budget probe stops at the
+    limit); the modulus finally used is returned."""
+    mod = max(1, sample_mod)
+    while (got := _collect_bounded(_sample_gate(df, id_col, mod), id_col, vec_col)) is None:
+        mod *= 2
+    if mod != max(1, sample_mod):
+        logging.getLogger(__name__).warning(
+            "fit sample over %d values at sample_mod=%d; fitted at sample_mod=%d",
+            FIT_SAMPLE_MAX_VALUES, sample_mod, mod,
+        )
+    return (*got, mod)
+
+
+def _seed_rows(ids: list, tag: str, k: int) -> list[int]:
+    """Row positions of the k smallest (md5(tag || ':' || id), id) — the
+    deterministic, data-independent seed pick."""
+    keys = [(md5_long_py(f"{tag}:{i}"), i) for i in ids]
+    return heapq.nsmallest(k, range(len(keys)), key=keys.__getitem__)
+
+
+def _farthest_rows(ids: list, X, first: int, k: int) -> list[int]:
+    """Gonzalez farthest-point traversal from row ``first``: k-1 times pick
+    argmax_x min_c d²(x, c) under the fold distance; NaN distances first
+    (Spark sorts NaN above every double), ties to the lowest id."""
+    import numpy as np
+
+    rows = [first]
+    best = _fold_sqdists(X, X[first : first + 1])[:, 0]
+    for _ in range(k - 1):
+        nan_rows = np.flatnonzero(np.isnan(best))
+        cand = nan_rows if len(nan_rows) else np.flatnonzero(best == best.max())
+        rows.append(min(cand, key=lambda j: ids[j]))
+        best = np.minimum(best, _fold_sqdists(X, X[rows[-1] : rows[-1] + 1])[:, 0])
+    return rows
 
 
 @dataclass
@@ -403,6 +362,52 @@ class KMeansModel:
     inertia: list[float]  # per-iteration total inertia (pre-update)
     sizes: dict[int, int]  # final cluster -> row count
     converged: bool  # centroids reached an exact fixed point
+    sample_mod: int = 1  # hash-sample modulus the fit trained on
+
+
+def _lloyd(
+    ids: list,
+    X,
+    *,
+    k: int,
+    max_iter: int,
+    seed_tag: str = "km",
+    init: str = "hash",
+    sample_mod: int = 1,
+) -> KMeansModel:
+    """Lloyd's k-means on the driver over a collected sample (``ids`` and
+    the rows × dim array ``X``) — the algorithm ``kmeans_fit`` documents.
+    Centroid sums are exact int64 fixed-point (module docstring)."""
+    import numpy as np
+
+    if len(X) < k:
+        raise ValueError(f"corpus has only {len(X)} rows; need k={k} seeds")
+    seeds = _seed_rows(ids, seed_tag, k)
+    if init == "farthest":
+        seeds = _farthest_rows(ids, X, seeds[0], k)
+    elif init != "hash":
+        raise ValueError(f"unknown init: {init!r}")
+    C = X[seeds]
+    gemm = not _expr_path_ok(C)
+    Q = np.floor(X * COMP_SCALE + 0.5).astype(np.int64)
+    inertia: list[float] = []
+    sizes: dict[int, int] = {}
+    converged, n_iter = False, 0
+    for n_iter in range(1, max_iter + 1):
+        cl, mind = _nearest(X, C, gemm)
+        inertia.append(int(np.floor(mind * INERTIA_SCALE + 0.5).astype(np.int64).sum()) / INERTIA_SCALE)
+        counts = np.bincount(cl, minlength=k)
+        full = np.flatnonzero(counts)  # empty clusters keep their centroid
+        starts = np.cumsum(counts)[full] - counts[full]
+        sums = np.add.reduceat(Q[np.argsort(cl, kind="stable")], starts, axis=0)
+        sizes = {int(j): int(counts[j]) for j in full}
+        new = C.copy()
+        new[full] = sums / (COMP_SCALE * counts[full])[:, None]
+        if np.array_equal(new, C):
+            converged = True
+            break
+        C = new
+    return KMeansModel(C.tolist(), n_iter, inertia, sizes, converged, sample_mod)
 
 
 def kmeans_fit(
@@ -415,246 +420,34 @@ def kmeans_fit(
     sample_mod: int = 1,
     seed_tag: str = "km",
     init: str = "hash",
-    timings: dict | None = None,
 ) -> KMeansModel:
     """Lloyd's k-means on an ``array<float|double>`` column of ANY length
-    (dimension is derived from the seed rows — the PQ sub-quantizers reuse
-    this fit on 8-dim slices; ``seed_tag`` de-correlates their seed picks).
+    (``seed_tag`` de-correlates the seed picks of fits over one id
+    space). One Spark job: the (``sample_mod``-gated) frame is collected
+    once (``_collect_fit_sample``) and everything after runs in numpy.
 
     Seeds (``init="hash"``, the default every checked-in fixture pins):
     the k rows with the smallest md5(seed_tag || ':' || id) —
-    deterministic, data-independent, no corpus shuffle (TakeOrdered).
-    That is a uniform pick, and on a corpus with well-separated macro
-    clusters it fails the classic way: two seeds land in one cluster and
-    Lloyd's never un-merges them (measured on the planted 8-cluster
-    probe: cell sizes [5000, 5000, 2500, ...] — two true clusters per
-    merged cell, BENCH_SCALE_r09 ``ivfpq_clustered``). ``init="farthest"``
+    deterministic and data-independent. That is a uniform pick, and on a
+    corpus with well-separated macro clusters it fails the classic way:
+    two seeds land in one cluster and Lloyd's never un-merges them
+    (measured on the planted 8-cluster probe: cell sizes [5000, 5000,
+    2500, ...], BENCH_SCALE_r09 ``ivfpq_clustered``). ``init="farthest"``
     is the deterministic fix: Gonzalez farthest-point traversal (the
     k-center heuristic; the derandomized cousin of k-means++'s D²
     sampling) — first seed is the hash-smallest row, each next seed is
     the row MAXIMIZING distance to its nearest chosen seed (ties: lowest
-    id). Cost is k-1 extra TakeOrdered passes over the (sampled) fit
-    frame — the right trade for coarse quantizers (small k); leave the
-    default for the k≈n/512 semantic-cell fits where k passes would not
-    amortize and uniform seeding is fine (cells there are a partition
-    dial, not a structure claim). This fit's own default stays "hash";
-    ``ivfpq_fit`` passes "farthest" since round 10 (its coarse fixture
-    literals pin the farthest fit — both inits are equally deterministic,
-    so the fixture-pin contract is unchanged).
+    id). It costs k passes over the sample — the right trade for coarse
+    quantizers (small k); the k≈n/512 semantic-cell fits keep uniform
+    seeding (cells there are a partition dial, not a structure claim).
+    ``ivfpq_fit`` passes "farthest" at small k.
 
-    Each iteration assigns every row to its nearest centroid (zero-shuffle
-    map) and rebuilds centroids with one hash aggregate (fixed-point
-    decimal sums; see module docstring). Empty clusters keep their
-    previous centroid. Stops early when the quantized centroids reach an
-    exact fixed point."""
-    # sample gate is md5-HASHED, not a raw `id % mod` (round-8 review fix):
-    # id spaces with modular structure (all-odd ids, strided generators)
-    # would leave a raw-modulo sample empty or biased, crashing the seed
-    # pick; the hash gate is uniform over any id space and reshuffle-proof
-    # (same recipe as text.sample_gate). "kms:" de-correlates it from the
-    # "km:"-tagged seed selection hash.
-    import time as _time
-
-    from ..functions.hashing import md5_long
-
-    _t0 = _time.perf_counter()
-
-    def _mark(key: str) -> None:
-        # per-phase wall attribution (round 13 — the fit-wall probe's
-        # hook; a plain dict, zero cost when not passed)
-        nonlocal _t0
-        if timings is not None:
-            timings[key] = round(timings.get(key, 0.0) + _time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
-
-    base = (
-        df
-        if sample_mod <= 1
-        else df.filter(
-            md5_long(F.concat(F.lit("kms:"), F.col(id_col).cast("string"))) % sample_mod == 0
-        )
-    )
-    # the sampled fit frame is BY DESIGN small (≈ n/mod rows) and re-read
-    # by every seed pick + iteration — persist it across the fit instead
-    # of re-scanning + re-hashing the corpus each pass (round 13; values
-    # unchanged, pure plan physics). A full-corpus fit (mod == 1) keeps
-    # the caller-owns-persistence contract from the module docstring, and
-    # an ALREADY-cached input (ivfpq_fit's persisted residual sample
-    # feeding the per-subspace fits) is not re-persisted — the duplicate
-    # cache costs a fresh materialization pass for nothing.
-    persisted_base = None
-    if sample_mod > 1 and not df.is_cached:
-        persisted_base = base.persist()
-        base = persisted_base
-    # persisted fit frame released even when the seed pick or an
-    # iteration job raises (ADVICE r13: a failed fit must not leak its
-    # cache for the rest of the session)
-    try:
-        vec = F.col(vec_col)
-
-        seed_rows = (
-            base.select(
-                F.col(id_col).alias("_sid"),
-                vec.cast("array<double>").alias("_semb"),
-                F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed_tag}:"), F.col(id_col).cast("string"))), 1, 15), 16, 10)
-                .cast("long")
-                .alias("_h"),
-            )
-            .orderBy("_h", "_sid")
-            .limit(k)
-            .collect()
-        )
-        centroids = [[float(x) for x in r["_semb"]] for r in seed_rows]
-        _mark("seed_sec")
-        if len(centroids) < k:
-            raise ValueError(f"corpus has only {len(centroids)} rows; need k={k} seeds")
-        if init == "farthest":
-            # Gonzalez farthest-point traversal from the hash-smallest row:
-            # pick argmax_x min_c d²(x, c), k-1 times (deterministic
-            # tie-break on the lower id). Same fold-distance contract as
-            # assignment, so the traversal is bit-reproducible.
-            #
-            # Round 16 (optimization, guide §5/§1.2): the r10–r15 shape ran
-            # k-1 SEQUENTIAL TakeOrdered jobs, pass i re-deriving
-            # ``F.least`` over ALL i chosen centroids — O(k²·n·dim)
-            # interpreted expression work plus k-1 codegen compiles and job
-            # floors (measured 131.5 s of the 149 s sf0.1 ivfpq_fit wall;
-            # the farthest gate caps k at FARTHEST_INIT_MAX_K=64 and the
-            # auto geometry only selects it for corpora ≤ ~4 k rows, so the
-            # traversal input is small BY CONSTRUCTION). Default now: one
-            # bounded collect of the fit frame (≤ FARTHEST_COLLECT_MAX_ROWS
-            # rows — ~32 MB of doubles at dim=64, the same order as the
-            # broadcast tables every fitted plan already ships) and the
-            # traversal in numpy with the IDENTICAL arithmetic: per-dim
-            # left-fold accumulation from 0.0 (≡ ``_sqdist``'s 0.0-seeded
-            # fold), incremental ``np.minimum`` against the previous best
-            # (min is exact and associative, so min(best, d_new) ≡
-            # F.least over all centroids), NaN-first selection (Spark
-            # orders NaN above every double in a DESC sort), ties to the
-            # lowest id. Centroids are equal by construction — pinned by
-            # the differential test (SPARK_GRAFT_FARTHEST_DRIVER=0 opts
-            # back to the per-pass TakeOrdered jobs). A frame larger than
-            # the bound (only reachable by calling kmeans_fit directly
-            # with init="farthest" on a big un-sampled corpus) falls back
-            # to the per-pass arm — the collect is LIMIT-bounded, so the
-            # probe never pulls more than bound+1 rows.
-            import numpy as np
-
-            centroids = [centroids[0]]
-            cast_vec = vec.cast("array<double>")
-            collected = None
-            if os.environ.get("SPARK_GRAFT_FARTHEST_DRIVER", "1") != "0":
-                probe = (
-                    base.select(F.col(id_col).alias("_sid"), cast_vec.alias("_semb"))
-                    .limit(FARTHEST_COLLECT_MAX_ROWS + 1)
-                    .collect()
-                )
-                if len(probe) <= FARTHEST_COLLECT_MAX_ROWS:
-                    collected = probe
-            if collected is not None:
-                sids = [r["_sid"] for r in collected]
-                V = np.array([r["_semb"] for r in collected], dtype=np.float64)
-                dim0 = V.shape[1]
-
-                def _fold_d2(c: list[float]) -> "np.ndarray":
-                    # 0.0-seeded per-dim left fold — the _sqdist association
-                    acc = np.zeros(len(V))
-                    for d in range(dim0):
-                        diff = V[:, d] - c[d]
-                        acc += diff * diff
-                    return acc
-
-                best = _fold_d2(centroids[0])
-                for _ in range(k - 1):
-                    nan_rows = np.flatnonzero(np.isnan(best))
-                    cand = (
-                        nan_rows
-                        if len(nan_rows)
-                        else np.flatnonzero(best == best.max())
-                    )
-                    sel = min(cand, key=lambda j: sids[j])
-                    centroids.append([float(x) for x in V[sel]])
-                    best = np.minimum(best, _fold_d2(centroids[-1]))
-            else:
-                for _ in range(k - 1):
-                    d2 = F.least(*[_sqdist(cast_vec, c) for c in centroids]) if len(centroids) > 1 else _sqdist(cast_vec, centroids[0])
-                    far = (
-                        base.select(F.col(id_col).alias("_sid"), cast_vec.alias("_semb"), d2.alias("_d2"))
-                        .orderBy(F.col("_d2").desc(), F.col("_sid").asc())
-                        .limit(1)
-                        .collect()[0]
-                    )
-                    centroids.append([float(x) for x in far["_semb"]])
-            _mark("farthest_init_sec")
-        elif init != "hash":
-            raise ValueError(f"unknown init: {init!r}")
-        dim = len(centroids[0])
-
-        inertia_hist: list[float] = []
-        sizes: dict[int, int] = {}
-        converged = False
-        n_iter = 0
-        fused = not _expr_path_ok(centroids) and _fit_fused_enabled()
-        for _ in range(max_iter):
-            n_iter += 1
-            if fused:
-                # fused iteration (round 13): argmin + fixed-point partial
-                # sums in ONE Arrow pass — bit-identical totals (integer
-                # partials are exactly associative; see _fit_fused_enabled)
-                schema = "_cl int, _n long, _inert long, " + ", ".join(
-                    f"_s{i} long" for i in range(dim)
-                )
-                partial = base.select(vec.cast("array<double>").alias("_v")).mapInPandas(
-                    _batch_partials_fn(centroids, "_v"), schema
-                )
-                rows = {
-                    r["_cl"]: r
-                    for r in partial.groupBy("_cl")
-                    .agg(
-                        F.sum("_n").alias("_n"),
-                        F.sum(F.col("_inert").cast("decimal(38,0)")).alias("_inert"),
-                        *[
-                            F.sum(F.col(f"_s{i}").cast("decimal(38,0)")).alias(f"_s{i}")
-                            for i in range(dim)
-                        ],
-                    )
-                    .collect()
-                }
-            else:
-                assigned = _assignment_df(base, vec_col, centroids)
-                # floor(y + 0.5), not F.round: see the module-docstring determinism
-                # contract (identical-by-construction with the numpy reference)
-                aggs = [
-                    F.count(F.lit(1)).alias("_n"),
-                    F.sum(F.floor(F.col("_mind") * INERTIA_SCALE + F.lit(0.5)).cast("decimal(38,0)")).alias("_inert"),
-                ] + [
-                    F.sum(
-                        F.floor(F.element_at("_v", i + 1) * COMP_SCALE + F.lit(0.5)).cast("decimal(38,0)")
-                    ).alias(f"_s{i}")
-                    for i in range(dim)
-                ]
-                rows = {r["_cl"]: r for r in assigned.groupBy("_cl").agg(*aggs).collect()}
-            _mark("iter_sec")
-
-            sizes = {j: int(rows[j]["_n"]) for j in rows}
-            inertia_hist.append(sum(int(r["_inert"]) for r in rows.values()) / INERTIA_SCALE)
-            new_centroids = []
-            for j, old in enumerate(centroids):
-                r = rows.get(j)
-                if r is None:  # empty cluster: keep the previous centroid
-                    new_centroids.append(old)
-                    continue
-                n = int(r["_n"])
-                new_centroids.append([float(int(r[f"_s{i}"])) / (COMP_SCALE * n) for i in range(dim)])
-            if new_centroids == centroids:
-                converged = True
-                break
-            centroids = new_centroids
-
-        return KMeansModel(centroids, n_iter, inertia_hist, sizes, converged)
-    finally:
-        if persisted_base is not None:
-            persisted_base.unpersist()
+    Each iteration assigns every sample row to its nearest centroid and
+    rebuilds centroids from exact fixed-point sums (module docstring).
+    Empty clusters keep their previous centroid. Stops early when the
+    quantized centroids reach an exact fixed point."""
+    ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod)
+    return _lloyd(ids, X, k=k, max_iter=max_iter, seed_tag=seed_tag, init=init, sample_mod=sample_mod)
 
 
 def assign_clusters(
@@ -685,7 +478,7 @@ def assign_clusters(
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, IntegerType())])
-    return df.mapInPandas(_batch_assign_fn(centroids, vec_col, out_col, None), out_schema)
+    return df.mapInPandas(_batch_assign_fn(centroids, vec_col, out_col), out_schema)
 
 
 def _probe_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
@@ -707,25 +500,20 @@ def _batch_probe_fn(centroids: list[list[float]], vec_col: str, cell_col: str, n
     """mapInPandas generator for the multi-probe expansion at large k:
     nprobe output rows per input row, cells = the nprobe nearest centroids.
     Stable argsort ties break on the lower cell index — exactly the
-    (distance, index) struct sort of ``_probe_cells``; distances share
-    ``_batch_assign_fn``'s left-fold association."""
+    (distance, index) struct sort of ``_probe_cells``; distances are the
+    left fold (``_fold_sqdists``)."""
     import numpy as np
 
     def probe(batches):
         C = np.asarray(centroids, dtype=np.float64)
-        k, dim = C.shape
         # clamp to the cell count (ADVICE r15): matches the expression
         # branch, whose F.slice degrades to "all k cells" for nprobe > k
-        np_eff = min(nprobe, k)
+        np_eff = min(nprobe, len(C))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            D = np.zeros((len(X), k))
-            for d in range(dim):
-                diff = X[:, d, None] - C[None, :, d]
-                D += diff * diff
-            order = np.argsort(D, axis=1, kind="stable")[:, :np_eff]
+            order = np.argsort(_fold_sqdists(X, C), axis=1, kind="stable")[:, :np_eff]
             out = pdf.loc[pdf.index.repeat(np_eff)].copy()
             out[cell_col] = order.astype(np.int32).ravel()
             yield out
@@ -887,8 +675,9 @@ def semantic_pairs(
     nprobe nearest cells, report pairs sharing any probed cell with cosine
     >= threshold. The reusable transform behind ``q_semantic_dedup`` and
     the curation funnel's ``near_dedup="semantic"`` stage
-    (``plans/curation.py``). The fit runs eagerly (driver-coordinated
-    Lloyd's — max_iter+1 small jobs); the pair plan is lazy.
+    (``plans/curation.py``). The fit runs eagerly (one bounded collect,
+    then Lloyd's in numpy on the driver — ``kmeans_fit``); the pair plan
+    is lazy.
 
     ``path`` picks the within-cell pair physics:
 

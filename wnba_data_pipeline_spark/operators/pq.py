@@ -14,11 +14,12 @@ embedding surface at all (its numeric feature work stops at scaling,
 (``similarity.py``) the brief's LLM-pipeline mandate adds.
 
 Structure:
-- ``pq_fit`` — m independent sub-quantizer k-means fits (reusing
-  ``clustering.kmeans_fit`` on 8-dim slices with per-subspace seed tags);
-  training cost is m × max_iter passes over the TRAINING SAMPLE (pass
-  ``sample_mod`` — at 100 TB you train on ~1M hash-sampled rows, never the
-  corpus), while the corpus itself is touched exactly once, by encode.
+- ``pq_fit`` — m independent sub-quantizer k-means fits (the
+  ``clustering`` Lloyd's on 8-dim slices with per-subspace seed tags),
+  run in numpy on the driver over ONE bounded Arrow collect of the
+  TRAINING SAMPLE (pass ``sample_mod`` — at 100 TB you train on ~1M
+  hash-sampled rows, never the corpus), while the corpus itself is
+  touched exactly once, by encode.
 - ``pq_encode`` — codes column via unrolled JVM fold expressions (small
   ksub; zero Python) or an Arrow-batched numpy argmin (``path="pandas"``),
   bit-identical by the same association/tie-break contract as
@@ -45,7 +46,19 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .clustering import KMeansModel, _sqdist, _sqdist_sql, kmeans_fit
+from .clustering import (  # noqa: F401 — kmeans_fit is re-exported as pq.kmeans_fit
+    KMeansModel,
+    _collect_bounded,
+    _collect_fit_sample,
+    _expr_path_ok,
+    _fold_sqdists,
+    _in_sample,
+    _lloyd,
+    _nearest,
+    _sqdist,
+    _sqdist_sql,
+    kmeans_fit,
+)
 from .similarity import DIM
 
 PQ_M = 8  # subspaces
@@ -70,253 +83,25 @@ class PQModel:
         return len(self.codebooks[0][0])
 
 
-def _pq_partials_fn(codebooks: list, active: list[bool], vec_col: str, dsub: int):
-    """mapInPandas generator for the FUSED sub-fit iteration: one pass over
-    the (sampled) training frame computes, for every still-active subspace,
-    the numpy assignment and the per-cluster INTEGER partial sums of the
-    fixed-point quantized components/inertia. Integer addition is exactly
-    associative, so the cross-batch decimal totals — and with them every
-    centroid — are bit-identical to the r12 per-subspace fits
-    (differential-tested in tests/test_pq.py).
-
-    Kernel choice mirrors the opt-out reference arm (round 14, ADVICE
-    r13): at ``ksub <= KM_EXPR_MAX_K`` (every fixture/oracle — the default
-    ksub is 16) the left-fold association reproduces the expression path
-    bit-for-bit BY CONSTRUCTION; above it the reference arm
-    (``SPARK_GRAFT_FIT_FUSED=0`` → ``kmeans_fit``) would itself run the
-    gemm kernel, so this path engages the same expanded-form BLAS kernel
-    under the same ``_fit_matmul_enabled`` dial (identity there is
-    MEASURED, canary-tested like ``_batch_partials_fn``'s, not
-    structural)."""
+def _pq_lloyd(ids: list, X, *, m: int, ksub: int, max_iter: int, sample_mod: int = 1) -> PQModel:
+    """The m sub-quantizer fits over a collected sample: subspace j is
+    ``clustering._lloyd`` on ``X[:, j·dsub : (j+1)·dsub]`` with seed tag
+    ``pq{j}``."""
     import numpy as np
 
-    from .clustering import KM_EXPR_MAX_K, _fit_matmul_enabled
-
-    # captured at plan build, driver-side — same discipline as
-    # _batch_partials_fn; gemm only above the expression-k bound so the
-    # small-ksub equality contract stays structural
-    matmul = _fit_matmul_enabled() and len(codebooks[0]) > KM_EXPR_MAX_K
-
-    def partials(batches):
-        import pandas as pd
-
-        from .clustering import COMP_SCALE, INERTIA_SCALE
-
-        Cs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            frames = []
-            for j, C in enumerate(Cs):
-                if not active[j]:
-                    continue
-                S = np.ascontiguousarray(X[:, j * dsub : (j + 1) * dsub])
-                ST = np.ascontiguousarray(S.T)
-                CT = np.ascontiguousarray(C.T)
-                if matmul:
-                    # expanded form ||s−c||² = ||c||² − 2 s·c (+ ||s||²,
-                    # added after the argmin) — same kernel as
-                    # _batch_assign_fn/_batch_partials_fn's gemm arm
-                    c2 = (C * C).sum(axis=1)
-                    D = c2[None, :] - 2.0 * (S @ CT)
-                else:
-                    D = np.zeros((len(S), len(C)))
-                    for d in range(dsub):  # left-fold association
-                        diff = ST[d][:, None] - CT[d][None, :]
-                        D += diff * diff
-                cl = D.argmin(axis=1)  # first-min ≡ array_position
-                mind = D[np.arange(len(S)), cl]
-                if matmul:  # restore the true distance (clamp round-off)
-                    mind = np.maximum(mind + (S * S).sum(axis=1), 0.0)
-                SV = np.floor(S * COMP_SCALE + 0.5).astype(np.int64)
-                SI = np.floor(mind * INERTIA_SCALE + 0.5).astype(np.int64)
-                order = np.argsort(cl, kind="stable")
-                cls = cl[order]
-                uniq, starts = np.unique(cls, return_index=True)
-                sums = np.add.reduceat(SV[order], starts, axis=0)
-                inert = np.add.reduceat(SI[order], starts)
-                counts = np.diff(np.append(starts, len(cls)))
-                row = {
-                    "_j": np.full(len(uniq), j, dtype=np.int32),
-                    "_cl": uniq.astype(np.int32),
-                    "_n": counts.astype(np.int64),
-                    "_inert": inert,
-                }
-                for i in range(dsub):
-                    row[f"_s{i}"] = sums[:, i]
-                frames.append(pd.DataFrame(row))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return partials
-
-
-def pq_fit_fused(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    max_iter: int = PQ_ITERS,
-    sample_mod: int = 1,
-    timings: dict | None = None,
-) -> PQModel:
-    """The fused twin of :func:`pq_fit` (round 13, VERDICT r12 item 2):
-    the r12 path launches m×(seed + iterations) SEPARATE Spark jobs — at
-    the 1 M-vector auto geometry the 8 sub-fits' 32 interpreted-expression
-    iteration jobs over the ~333 k-row residual sample were a first-order
-    term of the 532.8 s fit wall. This path keeps the m seed picks (tiny
-    TakeOrdered jobs, exact same plan per subspace) but runs each Lloyd
-    ITERATION for all still-active subspaces in ONE Arrow pass emitting
-    per-cluster integer partial sums (``_pq_partials_fn``), so an
-    iteration costs one scan of the sample instead of m.
-
-    Bit-identity: seeds are the same per-subspace hash TakeOrdered; the
-    numpy assignment shares the expression path's association/tie-break
-    contract (pinned); fixed-point partials are integer-associative; empty
-    clusters keep their previous centroid; per-subspace convergence
-    deactivates that subspace exactly where its standalone fit would have
-    stopped. Codebooks AND KMeansModel metadata (n_iter, inertia history,
-    sizes, converged) are therefore equal by construction — asserted
-    exactly in tests/test_pq.py and fingerprint-checked at 1 M vectors in
-    BENCH_SCALE_r13 fit_opt_ab."""
-    import time as _time
-
-    from ..functions.hashing import md5_long
-    from .clustering import COMP_SCALE, INERTIA_SCALE, KMeansModel
-
     dsub = DIM // m
-    base = (
-        df
-        if sample_mod <= 1
-        else df.filter(
-            md5_long(F.concat(F.lit("kms:"), F.col(id_col).cast("string"))) % sample_mod == 0
-        )
-    )
-    # same sampled-frame persist as kmeans_fit's (round 13): the m seed
-    # picks + every fused iteration re-read it. Skipped when the caller —
-    # ivfpq_fit — already persisted the residual sample upstream: a second
-    # persist of the filtered copy duplicates the cache AND pays a fresh
-    # materialization pass (measured as a 20 s sub_seed_sec term in the
-    # shipped fit_attrib; the filter-over-cache reads are cheap).
-    persisted_base = None
-    if sample_mod > 1 and not df.is_cached:
-        persisted_base = base.persist()
-        base = persisted_base
-    # released even when a seed pick or an iteration job raises
-    # (ADVICE r13 — same contract as kmeans_fit's)
-    try:
-
-        _t0 = _time.perf_counter()
-
-        def _mark(key: str) -> None:
-            nonlocal _t0
-            if timings is not None:
-                timings[key] = round(timings.get(key, 0.0) + _time.perf_counter() - _t0, 3)
-            _t0 = _time.perf_counter()
-
-        # per-subspace seeds: the exact kmeans_fit seed plan on the slice frame
-        centroids: list[list[list[float]]] = []
-        for j in range(m):
-            seed_rows = (
-                base.select(
-                    F.col(id_col).alias("_sid"),
-                    F.slice(F.col(vec_col), j * dsub + 1, dsub)
-                    .cast("array<double>")
-                    .alias("_semb"),
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(f"pq{j}:"), F.col(id_col).cast("string"))), 1, 15
-                        ),
-                        16,
-                        10,
-                    )
-                    .cast("long")
-                    .alias("_h"),
-                )
-                .orderBy("_h", "_sid")
-                .limit(ksub)
-                .collect()
-            )
-            cb = [[float(x) for x in r["_semb"]] for r in seed_rows]
-            if len(cb) < ksub:
-                raise ValueError(f"corpus has only {len(cb)} rows; need k={ksub} seeds")
-            centroids.append(cb)
-        _mark("sub_seed_sec")
-
-        active = [True] * m
-        n_iter = [0] * m
-        inertia: list[list[float]] = [[] for _ in range(m)]
-        sizes: list[dict[int, int]] = [{} for _ in range(m)]
-        converged = [False] * m
-        schema = "_j int, _cl int, _n long, _inert long, " + ", ".join(
-            f"_s{i} long" for i in range(dsub)
-        )
-        for _ in range(max_iter):
-            if not any(active):
-                break
-            partial = base.select(F.col(vec_col).cast("array<double>").alias("_v")).mapInPandas(
-                _pq_partials_fn(centroids, list(active), "_v", dsub), schema
-            )
-            rows_all: dict[int, dict[int, object]] = {}
-            for r in (
-                partial.groupBy("_j", "_cl")
-                .agg(
-                    F.sum("_n").alias("_n"),
-                    F.sum(F.col("_inert").cast("decimal(38,0)")).alias("_inert"),
-                    *[
-                        F.sum(F.col(f"_s{i}").cast("decimal(38,0)")).alias(f"_s{i}")
-                        for i in range(dsub)
-                    ],
-                )
-                .collect()
-            ):
-                rows_all.setdefault(r["_j"], {})[r["_cl"]] = r
-            _mark("sub_iter_sec")
-            for j in range(m):
-                if not active[j]:
-                    continue
-                rows = rows_all.get(j, {})
-                n_iter[j] += 1
-                sizes[j] = {c: int(rows[c]["_n"]) for c in rows}
-                inertia[j].append(
-                    sum(int(r["_inert"]) for r in rows.values()) / INERTIA_SCALE
-                )
-                new_cb = []
-                for c, old in enumerate(centroids[j]):
-                    r = rows.get(c)
-                    if r is None:  # empty cluster: keep the previous centroid
-                        new_cb.append(old)
-                        continue
-                    n = int(r["_n"])
-                    new_cb.append(
-                        [float(int(r[f"_s{i}"])) / (COMP_SCALE * n) for i in range(dsub)]
-                    )
-                if new_cb == centroids[j]:
-                    converged[j] = True
-                    active[j] = False
-                else:
-                    centroids[j] = new_cb
-
-    finally:
-        if persisted_base is not None:
-            persisted_base.unpersist()
     subs = [
-        KMeansModel(centroids[j], n_iter[j], inertia[j], sizes[j], converged[j])
+        _lloyd(
+            ids,
+            np.ascontiguousarray(X[:, j * dsub : (j + 1) * dsub]),
+            k=ksub,
+            max_iter=max_iter,
+            seed_tag=f"pq{j}",
+            sample_mod=sample_mod,
+        )
         for j in range(m)
     ]
     return PQModel([s.centroids for s in subs], subs)
-
-
-def _pq_fused_enabled() -> bool:
-    """Shares SPARK_GRAFT_FIT_FUSED with the coarse fused iteration —
-    one dial for the whole fit path (default ON; see
-    ``clustering._fit_fused_enabled``)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_FIT_FUSED", "1") != "0"
 
 
 def pq_fit(
@@ -328,50 +113,28 @@ def pq_fit(
     ksub: int = PQ_KSUB,
     max_iter: int = PQ_ITERS,
     sample_mod: int = 1,
-    timings: dict | None = None,
 ) -> PQModel:
     """Train the m sub-codebooks: subspace j is the Lloyd fit of
     ``vec[j·dsub : (j+1)·dsub]`` with seed tag ``pq{j}`` (so subspaces
-    draw different seed rows). Each fit inherits ``kmeans_fit``'s
-    determinism contract; ``sample_mod`` is the 100 TB knob — train on the
-    hash sample, encode everything. Default path since round 13 is the
-    FUSED iteration (one Arrow pass per iteration for all m subspaces —
-    bit-identical, see :func:`pq_fit_fused`); ``SPARK_GRAFT_FIT_FUSED=0``
-    opts back to the m independent ``kmeans_fit`` calls."""
-    if _pq_fused_enabled() and m > 1:
-        return pq_fit_fused(
-            df,
-            id_col=id_col,
-            vec_col=vec_col,
-            m=m,
-            ksub=ksub,
-            max_iter=max_iter,
-            sample_mod=sample_mod,
-            timings=timings,
-        )
-    dsub = DIM // m
-    codebooks, subs = [], []
-    for j in range(m):
-        sub_t: dict = {}
-        sub = df.select(
-            F.col(id_col), F.slice(F.col(vec_col), j * dsub + 1, dsub).alias("_sub")
-        )
-        fitted = kmeans_fit(
-            sub,
-            id_col=id_col,
-            vec_col="_sub",
-            k=ksub,
-            max_iter=max_iter,
-            sample_mod=sample_mod,
-            seed_tag=f"pq{j}",
-            timings=sub_t,
-        )
-        codebooks.append(fitted.centroids)
-        subs.append(fitted)
-        if timings is not None:
-            for key, v in sub_t.items():
-                timings[f"sub_{key}"] = round(timings.get(f"sub_{key}", 0.0) + v, 3)
-    return PQModel(codebooks, subs)
+    draw different seed rows). One Spark job: the training sample is
+    collected once (``clustering._collect_fit_sample``) and the m fits run
+    in numpy, each with ``kmeans_fit``'s determinism contract;
+    ``sample_mod`` is the 100 TB knob — train on the hash sample, encode
+    everything."""
+    ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod)
+    return _pq_lloyd(ids, X, m=m, ksub=ksub, max_iter=max_iter, sample_mod=sample_mod)
+
+
+def _pq_codes(R, codebooks: list[list[list[float]]], dsub: int):
+    """(rows × m) int32 codes: per subspace, the first-min argmin
+    (≡ ``array_position``) of the left-fold distances to the codewords."""
+    import numpy as np
+
+    codes = np.zeros((len(R), len(codebooks)), dtype=np.int32)
+    for j, cb in enumerate(codebooks):
+        S = R[:, j * dsub : (j + 1) * dsub]
+        codes[:, j] = _fold_sqdists(S, np.asarray(cb, dtype=np.float64)).argmin(axis=1)
+    return codes
 
 
 def _sqdist_vec(a: Column, b: Column) -> Column:
@@ -432,21 +195,12 @@ def pq_encode(
     codebooks, dsub = model.codebooks, model.dsub
 
     def encode(batches):
-        C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]  # m × ksub × dsub
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.zeros((len(X), len(C)), dtype=np.int32)
-            for j, Cj in enumerate(C):
-                S = X[:, j * dsub : (j + 1) * dsub]
-                D = np.zeros((len(S), len(Cj)))
-                for d in range(dsub):  # left-fold association (see module doc)
-                    diff = S[:, d, None] - Cj[None, :, d]
-                    D += diff * diff
-                codes[:, j] = D.argmin(axis=1)  # first-min ≡ array_position
             out = pdf.copy()
-            out[out_col] = list(codes)
+            out[out_col] = list(_pq_codes(X, codebooks, dsub))
             yield out
 
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, ArrayType(IntegerType()))])
@@ -962,48 +716,19 @@ def ivfpq_resolve_nprobe(index: "IVFPQIndex", nprobe: int | str | None) -> int:
 def _residual_col(vec: Column, centroids: list[list[float]], cell: Column) -> Column:
     """``vec - centroids[cell]`` as an in-plan expression (centroid table as
     a literal array-of-arrays, one element_at lookup, one zip_with). IEEE
-    double subtraction — bit-identical between the JVM and the numpy
-    reference, so the residual variant keeps the fit/encode determinism
-    contract.
+    double subtraction — bit-identical to the numpy ``X - C[cells]`` of the
+    fit and the fused Arrow passes, so the residual variant keeps the
+    fit/encode determinism contract.
 
     Scale bound: the literal table is cells × dim expression NODES, and a
     consumer like the search LUT duplicates it into every distance term —
-    fine at the fixture scales (8–31 cells), catastrophic at the round-11
-    auto geometry (5 656 cells → ~46 M analyzer nodes). Callers go through
-    :func:`_residual_any` which switches to the Arrow path above
-    ``clustering.KM_EXPR_MAX_K`` — identical doubles (same single IEEE
-    subtraction in numpy), differential-tested in tests/test_pq.py."""
+    fine at the fixture scales, catastrophic at the round-11 auto geometry
+    (5 656 cells → ~46 M analyzer nodes). It is used only where
+    ``clustering._expr_path_ok`` holds; above that the encode and the
+    query side compute the residual inside their one Arrow pass."""
     table = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
     cent = F.element_at(table, cell + F.lit(1))
     return F.zip_with(vec, cent, lambda a, b: a.cast("double") - b)
-
-
-def _residual_udf(centroids: list[list[float]]):
-    """Arrow twin of ``_residual_col`` for large cell counts: the centroid
-    table lives in the worker closure (bytes, not expression nodes);
-    ``X.astype(float64) - C[cells]`` is the same one IEEE subtraction."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-
-    def _f(vec, cell):
-        X = np.array(vec.tolist(), dtype=np.float64)
-        return pd.Series(list(X - C[cell.to_numpy()]))
-
-    return F.pandas_udf(_f, "array<double>")
-
-
-def _residual_any(vec: Column, centroids: list[list[float]], cell: Column) -> Column:
-    """Residual column via the expression path at fixture-scale cell
-    counts (plan-identical to every checked-in oracle) or the Arrow path
-    above ``KM_EXPR_MAX_K`` (where the literal table would explode the
-    analyzer) — same doubles either way."""
-    from .clustering import KM_EXPR_MAX_K
-
-    if len(centroids) <= KM_EXPR_MAX_K:
-        return _residual_col(vec, centroids, cell)
-    return _residual_udf(centroids)(vec, cell)
 
 
 def ivfpq_fit(
@@ -1018,7 +743,6 @@ def ivfpq_fit(
     sample_mod: int | str = "auto",
     by_residual: bool = True,
     coarse_init: str = "auto",
-    timings: dict | None = None,
 ) -> IVFPQIndex:
     """Train both quantizers (VERDICT r8 item 4 — the composed 100 TB ANN
     stack FAISS spells IVFx,PQy): the coarse Lloyd fit partitions the
@@ -1045,6 +769,15 @@ def ivfpq_fit(
     cross-engine parity contract (``ivfpq_search_sql`` renders either).
     Both fits inherit ``kmeans_fit``'s bit-determinism; ``sample_mod`` is
     the scale knob for both (train on a hash sample, encode everything).
+    One Spark job when the corpus fits ``clustering.FIT_SAMPLE_MAX_VALUES``:
+    a bounded collect of the whole corpus gives the corpus size (it
+    resolves the auto geometry and is the auto-rerank statistic), and the
+    ``kms:`` sample gate is applied to it on the driver
+    (``clustering._in_sample``, the same rows as ``_sample_gate``). A larger corpus pays
+    that over-budget probe, a count and the sample collect
+    (``clustering._collect_fit_sample``). Either way the coarse fit, the
+    residuals, the m sub-fits and the separation statistic run in numpy
+    on the one sample array.
 
     Round-11 auto geometry: ``coarse_k=None`` resolves to
     ``ivfpq_cells_for(n)``, ``sample_mod="auto"`` to
@@ -1054,219 +787,74 @@ def ivfpq_fit(
     three resolve to the exact round-10 values at the driver fixture
     scales (n ≤ ~3.7 k → 8 cells, full fit, farthest), so every
     checked-in oracle literal is unchanged by construction."""
-    import time as _time
+    import numpy as np
 
-    from .clustering import assign_clusters
-
-    _t0 = _time.perf_counter()
-
-    def _mark(key: str) -> None:
-        nonlocal _t0
-        if timings is not None:
-            timings[key] = round(_time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
-
-    n_vectors = df.count()
-    _mark("count_sec")
+    whole = _collect_bounded(df, id_col, vec_col)
+    n_vectors = len(whole[0]) if whole is not None else df.count()
     if coarse_k is None:
         coarse_k = ivfpq_cells_for(n_vectors)
     if sample_mod == "auto":
         sample_mod = ivfpq_fit_sample_mod(n_vectors, coarse_k)
     if coarse_init == "auto":
         coarse_init = "farthest" if coarse_k <= FARTHEST_INIT_MAX_K else "hash"
-    coarse_t: dict = {}
-    coarse = kmeans_fit(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=coarse_k,
-        max_iter=max_iter,
-        sample_mod=sample_mod,
-        seed_tag="ivfc",
-        init=coarse_init,
-        timings=coarse_t,
-    )
-    if timings is not None:
-        timings["coarse_detail"] = coarse_t
-        timings["coarse_n_iter"] = coarse.n_iter
-        # last pre-update inertia over the fit sample — the separation
-        # statistic the r13 overlap sweep records (inertia/total-SS → 1
-        # means cells explain nothing, i.e. isotropic geometry)
-        timings["coarse_final_inertia"] = coarse.inertia[-1] if coarse.inertia else None
-    _mark("coarse_fit_sec")
-    # PQ training source: at sample_mod > 1 pre-filter by the SAME kms:
-    # hash gate pq_fit's sub-fits apply (idempotent — the inner filter is
-    # then a no-op subset), so the residual assignment below runs over the
-    # TRAINING SAMPLE, not the corpus. Without this, each of the m
-    # subspace fits re-derives the full-corpus assignment + residual from
-    # scratch (m × (seed + iters) stages × a 2 M-row pandas argmin at the
-    # auto geometry — the stalled-fit shape the sf100 ann probe caught).
-    pq_src = df
-    if sample_mod > 1:
-        from ..functions.hashing import md5_long
-
-        pq_src = df.filter(
-            md5_long(F.concat(F.lit("kms:"), F.col(id_col).cast("string"))) % sample_mod == 0
-        )
-    # separation statistic + recall-collapse advisory (round 13, VERDICT
-    # r12 item 1): final coarse inertia / total SS of the same fit sample
-    # about its global mean — one extra agg over the sample, advisory
-    # only (never a silent dial change; see IVFPQ_SEPARATION_ADVISORY).
-    separation = None
-    if coarse.inertia:
-        dim = len(coarse.centroids[0])
-        vecd = F.col(vec_col).cast("array<double>")
-        srow = pq_src.agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(
-                F.aggregate(vecd, F.lit(0.0), lambda a, x: a + x * x)
-            ).alias("_ssq"),
-            *[F.sum(F.element_at(vecd, i + 1)).alias(f"_s{i}") for i in range(dim)],
-        ).collect()[0]
-        n_s = int(srow["_n"])
-        if n_s > 0:
-            total_ss = float(srow["_ssq"]) - sum(
-                float(srow[f"_s{i}"]) ** 2 for i in range(dim)
-            ) / n_s
-            if total_ss > 0:
-                separation = coarse.inertia[-1] / total_ss
-                # advisory only where the physics bites: a fixture-scale
-                # index probing ≥10% of its cells gets coverage from
-                # volume alone (nprobe 2 of 8 = 25% measured ≥0.85
-                # recall), so the warning is reserved for the sub-linear
-                # probed fractions the auto geometry produces at scale
-                probed_frac = ivfpq_nprobe_for(coarse_k) / max(coarse_k, 1)
-                if separation >= IVFPQ_SEPARATION_ADVISORY and probed_frac <= 0.1:
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        "IVF-PQ coarse cells explain only %.0f%% of the fit "
-                        "sample's variance (inertia/SS = %.2f ≥ %.2f) — on this "
-                        "near-isotropic geometry the auto nprobe (%d of %d cells) "
-                        "measured recall@10 ≈ 0.35-0.53 at 1 M vectors "
-                        "(BENCH_SCALE_r13/r14 overlap sweeps). Measured "
-                        "escalation curve at separation 0.77 (BENCH_SCALE_r14 "
-                        "ann_escalation_sweep, 1 M vectors): probing 6%% of "
-                        "cells → recall 0.634, 12%% → 0.787, 25%% → 0.927, "
-                        "50%% → 0.989 — cost grows ~linearly with the probed "
-                        "fraction (auto ~13 s → 93 s at 25%%). Explicit dials: "
-                        "pass nprobe='auto-escalate' to ivfpq_search (opt-in; "
-                        "probes 25%% of cells when the recorded separation is "
-                        "past this threshold), set nprobe yourself from the "
-                        "curve, or use the exact (sim_topk / emb_near_dup) or "
-                        "Hamming-rerank paths, which do not rely on cluster "
-                        "structure.",
-                        100.0 * (1.0 - separation),
-                        separation,
-                        IVFPQ_SEPARATION_ADVISORY,
-                        ivfpq_nprobe_for(coarse_k),
-                        coarse_k,
-                    )
-    if timings is not None:
-        timings["separation_inertia_over_ss"] = (
-            round(separation, 4) if separation is not None else None
-        )
-    _mark("separation_sec")
-    pq_train, pq_vec_col = pq_src, vec_col
-    persisted = None
-    if by_residual:
-        from .clustering import KM_EXPR_MAX_K
-
-        if len(coarse.centroids) > KM_EXPR_MAX_K and _encode_fused_enabled():
-            # fused assign+residual (round 14, VERDICT r13 item 4): ONE
-            # Arrow pass emitting just (id, residual) instead of the
-            # two-pass assign-then-subtract chain — and the persist below
-            # caches the slim (id, _res) frame rather than embedding +
-            # cell + _res (same kernels verbatim, so the residual doubles
-            # — and with them the codebooks — are bit-identical;
-            # fingerprint-asserted in BENCH_SCALE_r14 fit_resfuse_ab).
-            # Measured ~neutral on wall at 1 M (residual 13.2 → 12.5 s
-            # best-vs-best, interleaved warm A/B — at the auto
-            # sample_mod the pass covers only ~n/3 rows, so one fewer
-            # Arrow hop buys little); kept default-ON for the identical
-            # values, one fewer stage, and the halved cache footprint.
-            from pyspark.sql.types import (
-                ArrayType,
-                DoubleType,
-                StructField,
-                StructType,
-            )
-
-            id_field = next(f for f in pq_src.schema.fields if f.name == id_col)
-            schema = StructType(
-                [id_field, StructField("_res", ArrayType(DoubleType()))]
-            )
-            pq_train = pq_src.select(id_col, vec_col).mapInPandas(
-                _fused_residual_fn(coarse.centroids, vec_col, id_col), schema
-            )
-        else:
-            asg = assign_clusters(
-                pq_src, coarse.centroids, vec_col=vec_col, out_col="_ivfc"
-            )
-            pq_train = asg.withColumn(
-                "_res", _residual_any(F.col(vec_col), coarse.centroids, F.col("_ivfc"))
-            )
-        pq_vec_col = "_res"
+    if whole is None:
+        ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod)
+    else:
+        ids, X = whole
         if sample_mod > 1:
-            # large-corpus regime: one residual materialization shared by
-            # all m subspace fits (values unchanged — pure plan physics)
-            persisted = pq_train.persist()
-            persisted.count()
-            pq_train = persisted
-    _mark("residual_sec")
-    try:
-        model = pq_fit(
-            pq_train,
-            id_col=id_col,
-            vec_col=pq_vec_col,
-            m=m,
-            ksub=ksub,
-            max_iter=max_iter,
-            sample_mod=sample_mod,
-            timings=timings,
-        )
-        _mark("pq_fit_sec")
-    finally:
-        # the shared residual cache is released even when the PQ fit
-        # raises (ADVICE r13 — same contract as kmeans_fit's)
-        if persisted is not None:
-            persisted.unpersist()
-    # the full-frame count (taken once, up front — it also resolved the
-    # auto geometry) — the corpus-size statistic the auto-rerank dial needs
+            keep = _in_sample(ids, sample_mod)
+            ids, X = [i for i, kept in zip(ids, keep) if kept], X[np.array(keep, dtype=bool)]
+    coarse = _lloyd(
+        ids, X, k=coarse_k, max_iter=max_iter, seed_tag="ivfc", init=coarse_init, sample_mod=sample_mod
+    )
+    # separation statistic + recall-collapse advisory (round 13, VERDICT
+    # r12 item 1): final coarse inertia / total SS of the fit sample about
+    # its global mean — advisory only (never a silent dial change; see
+    # IVFPQ_SEPARATION_ADVISORY).
+    separation = None
+    total_ss = float((X * X).sum()) - float((X.sum(axis=0) ** 2).sum()) / len(X)
+    if coarse.inertia and total_ss > 0:
+        separation = coarse.inertia[-1] / total_ss
+        # advisory only where the physics bites: a fixture-scale index
+        # probing ≥10% of its cells gets coverage from volume alone
+        # (nprobe 2 of 8 = 25% measured ≥0.85 recall), so the warning is
+        # reserved for the sub-linear probed fractions the auto geometry
+        # produces at scale
+        probed_frac = ivfpq_nprobe_for(coarse_k) / max(coarse_k, 1)
+        if separation >= IVFPQ_SEPARATION_ADVISORY and probed_frac <= 0.1:
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "IVF-PQ coarse cells explain only %.0f%% of the fit "
+                "sample's variance (inertia/SS = %.2f ≥ %.2f) — on this "
+                "near-isotropic geometry the auto nprobe (%d of %d cells) "
+                "measured recall@10 ≈ 0.35-0.53 at 1 M vectors "
+                "(BENCH_SCALE_r13/r14 overlap sweeps). Measured "
+                "escalation curve at separation 0.77 (BENCH_SCALE_r14 "
+                "ann_escalation_sweep, 1 M vectors): probing 6%% of "
+                "cells → recall 0.634, 12%% → 0.787, 25%% → 0.927, "
+                "50%% → 0.989 — cost grows ~linearly with the probed "
+                "fraction (auto ~13 s → 93 s at 25%%). Explicit dials: "
+                "pass nprobe='auto-escalate' to ivfpq_search (opt-in; "
+                "probes 25%% of cells when the recorded separation is "
+                "past this threshold), set nprobe yourself from the "
+                "curve, or use the exact (sim_topk / emb_near_dup) or "
+                "Hamming-rerank paths, which do not rely on cluster "
+                "structure.",
+                100.0 * (1.0 - separation),
+                separation,
+                IVFPQ_SEPARATION_ADVISORY,
+                ivfpq_nprobe_for(coarse_k),
+                coarse_k,
+            )
+    if by_residual:
+        C = np.asarray(coarse.centroids, dtype=np.float64)
+        X = X - C[_nearest(X, C)[0]]  # one IEEE subtraction (≡ _residual_col)
+    model = _pq_lloyd(ids, X, m=m, ksub=ksub, max_iter=max_iter, sample_mod=sample_mod)
     return IVFPQIndex(
         coarse.centroids, model, by_residual, n_vectors=n_vectors,
         separation=round(separation, 4) if separation is not None else None,
     )
-
-
-def _encode_fused_enabled() -> bool:
-    """Env gate for the single-pass fused encode (round 14, VERDICT r13
-    item 4) — default ON: at the auto geometry (cells > KM_EXPR_MAX_K) the
-    three-stage encode shipped in r13 paid THREE Python/Arrow round-trips
-    of the full corpus (cell assignment mapInPandas → residual pandas_udf
-    → codes mapInPandas), each serializing the 64-dim vectors both ways
-    plus the residual column once materialized into the plan. The fused
-    pass computes cell, residual (numpy-local, never crossing Arrow), and
-    codes in ONE mapInPandas — same kernels verbatim (``_batch_assign_fn``'s
-    blocked argmin incl. the gemm dial, ``_residual_udf``'s single IEEE
-    subtraction, ``pq_encode``'s per-subspace left fold), so cells and
-    codes are bit-identical (equality-pinned at coarse_k=96 in
-    tests/test_pq.py; fingerprints identical in EVERY 1 M run of
-    BENCH_SCALE_r14 encode_fuse_ab). Measured at 1 M / 4 000 cells
-    (5-trial interleaved persist+count A/B): on a CLEAN JVM the arms are
-    equal (~18.3 vs ~18.6 s — r13's 37.1 s encode claim was itself
-    session-drift-inflated), and both degrade as the session ages
-    (reused Python worker state), but the fused pass degrades far more
-    slowly — medians 19.8 s fused vs 37.4 s three-stage in the same JVM
-    (1.88×). The honest claim: values-identical, equal at best,
-    markedly more drift-robust in long sessions — which is what a
-    production build job actually runs in. ``SPARK_GRAFT_ENCODE_FUSED=0``
-    opts back to the three-stage plan. Fixture scales
-    (cells ≤ KM_EXPR_MAX_K) stay on the expression path untouched by
-    construction."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_ENCODE_FUSED", "1") != "0"
 
 
 def _fused_encode_fn(
@@ -1279,53 +867,23 @@ def _fused_encode_fn(
     codes_col: str,
 ):
     """mapInPandas generator for the fused encode: per Arrow batch — the
-    blocked coarse argmin (verbatim ``_batch_assign_fn`` kernel: KBLK=512
-    column blocks, left fold per column or the gemm expansion under
-    ``_fit_matmul_enabled``, first-min ≡ array_position), the residual
-    subtraction (one IEEE op, ≡ ``_residual_udf``), and the per-subspace
-    left-fold code argmin (verbatim ``pq_encode`` pandas kernel)."""
+    coarse argmin (``clustering._nearest``, kernel fixed at plan build),
+    the residual subtraction (one IEEE op, ≡ ``_residual_col``), and the
+    per-subspace code argmin (``_pq_codes``, the ``pq_encode`` kernel)."""
     import numpy as np
 
-    from .clustering import _fit_matmul_enabled
-
-    KBLK = 512
-    matmul = _fit_matmul_enabled()  # captured at plan build, driver-side
+    gemm = not _expr_path_ok(coarse)
 
     def encode(batches):
         C = np.asarray(coarse, dtype=np.float64)  # k x dim
-        k, dim = C.shape
-        CT = np.ascontiguousarray(C.T)
-        c2 = (C * C).sum(axis=1) if matmul else None
-        CB = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            XT = np.ascontiguousarray(X.T)
-            D = np.empty((len(X), k))
-            for k0 in range(0, k, KBLK):
-                k1 = min(k0 + KBLK, k)
-                if matmul:
-                    Db = c2[None, k0:k1] - 2.0 * (X @ CT[:, k0:k1])
-                else:
-                    Db = np.zeros((len(X), k1 - k0))
-                    for d in range(dim):  # left-fold association
-                        diff = XT[d][:, None] - CT[d][None, k0:k1]
-                        Db += diff * diff
-                D[:, k0:k1] = Db
-            cl = D.argmin(axis=1)  # first-min ≡ array_position
-            R = X - C[cl] if by_residual else X
-            codes = np.zeros((len(R), len(CB)), dtype=np.int32)
-            for j, Cj in enumerate(CB):
-                S = R[:, j * dsub : (j + 1) * dsub]
-                Dj = np.zeros((len(S), len(Cj)))
-                for d in range(dsub):  # left-fold association (pq_encode kernel)
-                    diff = S[:, d, None] - Cj[None, :, d]
-                    Dj += diff * diff
-                codes[:, j] = Dj.argmin(axis=1)
+            cl = _nearest(X, C, gemm)[0]
             out = pdf.copy()
             out[cell_col] = cl.astype(np.int32)
-            out[codes_col] = list(codes)
+            out[codes_col] = list(_pq_codes(X - C[cl] if by_residual else X, codebooks, dsub))
             yield out
 
     return encode
@@ -1345,7 +903,7 @@ def _fused_qlut_fn(
     ``ivfpq_search`` above the expression budget: probe expansion
     (verbatim ``_batch_probe_fn`` kernel — left-fold coarse distances,
     stable argsort so ties break on the lower cell index), the residual
-    subtraction (one IEEE op, ≡ ``_residual_udf``), and the m×ksub LUT
+    subtraction (one IEEE op, ≡ ``_residual_col``), and the m×ksub LUT
     (0.0-seeded left fold per codeword, ≡ ``clustering._sqdist``) in ONE
     Python crossing. Round 15: the expression branch inlined the
     ``_residual_col`` lookup into every one of the m×ksub (=128) LUT
@@ -1358,36 +916,25 @@ def _fused_qlut_fn(
         import pandas as pd
 
         C = np.asarray(coarse, dtype=np.float64)
-        k, dim = C.shape
         # clamp to the cell count (ADVICE r15): an explicit nprobe > k
         # yields at most k argsort columns, and the expression branch's
         # F.slice degrades to "all k cells" — match it instead of crashing
         # on the ids/R repeat-length mismatch
-        np_eff = min(nprobe, k)
+        np_eff = min(nprobe, len(C))
         CB = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[q_vec_col].tolist(), dtype=np.float64)
-            D = np.zeros((len(X), k))
-            for d in range(dim):  # left-fold association (_batch_probe_fn)
-                diff = X[:, d, None] - C[None, :, d]
-                D += diff * diff
-            order = np.argsort(D, axis=1, kind="stable")[:, :np_eff]
+            order = np.argsort(_fold_sqdists(X, C), axis=1, kind="stable")[:, :np_eff]
             ids = pdf[q_id_col].to_numpy().repeat(np_eff)
             cells = order.astype(np.int32).ravel()
             R = np.repeat(X, np_eff, axis=0)
             if by_residual:
-                R = R - C[cells]  # single IEEE subtraction (≡ _residual_udf)
-            n = len(R)
-            lut = np.zeros((n, len(CB), len(CB[0])))
+                R = R - C[cells]  # single IEEE subtraction (≡ _residual_col)
+            lut = np.zeros((len(R), len(CB), len(CB[0])))
             for j, Cj in enumerate(CB):
-                S = R[:, j * dsub : (j + 1) * dsub]
-                acc = np.zeros((n, len(Cj)))
-                for d in range(dsub):  # left-fold association (_sqdist)
-                    diff = S[:, d, None] - Cj[None, :, d]
-                    acc += diff * diff
-                lut[:, j, :] = acc
+                lut[:, j, :] = _fold_sqdists(R[:, j * dsub : (j + 1) * dsub], Cj)
             yield pd.DataFrame(
                 {
                     q_id_col: ids,
@@ -1397,48 +944,6 @@ def _fused_qlut_fn(
             )
 
     return qlut
-
-
-def _fused_residual_fn(coarse: list[list[float]], vec_col: str, id_col: str):
-    """mapInPandas generator for the fused fit-side residual pass: blocked
-    coarse argmin (verbatim ``_batch_assign_fn`` kernel incl. the gemm
-    dial) + the single-IEEE-op subtraction, emitting only (id, residual) —
-    the slim frame the PQ sub-fits persist and read."""
-    import numpy as np
-
-    from .clustering import _fit_matmul_enabled
-
-    KBLK = 512
-    matmul = _fit_matmul_enabled()  # captured at plan build, driver-side
-
-    def resid(batches):
-        import pandas as pd
-
-        C = np.asarray(coarse, dtype=np.float64)
-        k, dim = C.shape
-        CT = np.ascontiguousarray(C.T)
-        c2 = (C * C).sum(axis=1) if matmul else None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            XT = np.ascontiguousarray(X.T)
-            D = np.empty((len(X), k))
-            for k0 in range(0, k, KBLK):
-                k1 = min(k0 + KBLK, k)
-                if matmul:
-                    Db = c2[None, k0:k1] - 2.0 * (X @ CT[:, k0:k1])
-                else:
-                    Db = np.zeros((len(X), k1 - k0))
-                    for d in range(dim):  # left-fold association
-                        diff = XT[d][:, None] - CT[d][None, k0:k1]
-                        Db += diff * diff
-                D[:, k0:k1] = Db
-            cl = D.argmin(axis=1)  # first-min ≡ array_position
-            R = X - C[cl]
-            yield pd.DataFrame({id_col: pdf[id_col], "_res": list(R)})
-
-    return resid
 
 
 def ivfpq_encode(
@@ -1455,60 +960,45 @@ def ivfpq_encode(
     nprobe/coarse_k of the files; locally the cell equi-join plays that
     role. A residual index encodes ``vec - centroid[cell]`` — still the
     same single map pass (the assignment provides the cell the residual
-    needs). Whenever the assignment is off the expression path the default
-    is the FUSED Arrow pass (one Python round-trip instead of three — see
-    ``_encode_fused_enabled``)."""
-    from .clustering import _expr_path_ok, assign_clusters
+    needs). Whenever the assignment is off the expression path
+    (``clustering._expr_path_ok``: k ≤ 64 AND k×dim ≤ 512) the whole
+    encode is ONE Arrow pass (``_fused_encode_fn``: cell, in-memory
+    residual and codes — the residual never crosses Arrow); at or below
+    it the cell and residual stay JVM expressions, plan-identical to every
+    checked-in oracle. Round 15 measured why the gate is the term budget,
+    not k alone: at the sf0.1 auto geometry (31 cells × 64 dims) a mixed
+    plan — Arrow assignment + Arrow residual + the 1 024-term codes
+    expression — took 2.30 s vs 0.22 s for the fused pass (2 000 rows,
+    warm forces), outputs bit-identical."""
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    # Round 15 (optimization): gate the fused pass on the SAME term budget
-    # the assignment uses (``_expr_path_ok``: k ≤ 64 AND k×dim ≤ 512), not
-    # on k alone. With k ≤ 64 but k×dim over the budget (e.g. the sf0.1
-    # auto geometry: 31 cells × dim 64 = 1 984 terms) the old gate left a
-    # MIXED plan — Arrow assignment + Arrow residual + the m×ksub×dsub
-    # (= 1 024-term) codes EXPRESSION — i.e. two Python crossings AND the
-    # interpreted fold chain. Measured at sf0.1 (2 000 rows, warm noop
-    # forces): mixed 2.30 s vs fused 0.22 s, outputs bit-identical
-    # (sym-diff 0 both directions; equality also pinned at coarse_k=31 in
-    # tests/test_pq.py). Fixture scales (8 cells × 64 dims = 512 ≤ budget)
-    # keep the expression plan untouched by construction.
+    from .clustering import assign_clusters
+
     if not _expr_path_ok(index.coarse):
-        if _encode_fused_enabled():
-            from pyspark.sql.types import (
-                ArrayType,
-                IntegerType,
-                StructField,
-                StructType,
-            )
-
-            schema = StructType(
-                list(df.schema.fields)
-                + [
-                    StructField(cell_col, IntegerType()),
-                    StructField(codes_col, ArrayType(IntegerType())),
-                ]
-            )
-            return df.mapInPandas(
-                _fused_encode_fn(
-                    index.coarse,
-                    index.pq.codebooks,
-                    index.pq.dsub,
-                    index.by_residual,
-                    vec_col,
-                    cell_col,
-                    codes_col,
-                ),
-                schema,
-            )
-        enc_path = "pandas"
-    else:
-        enc_path = None
+        schema = StructType(
+            list(df.schema.fields)
+            + [
+                StructField(cell_col, IntegerType()),
+                StructField(codes_col, ArrayType(IntegerType())),
+            ]
+        )
+        return df.mapInPandas(
+            _fused_encode_fn(
+                index.coarse,
+                index.pq.codebooks,
+                index.pq.dsub,
+                index.by_residual,
+                vec_col,
+                cell_col,
+                codes_col,
+            ),
+            schema,
+        )
     assigned = assign_clusters(df, index.coarse, vec_col=vec_col, out_col=cell_col)
     if not index.by_residual:
-        return pq_encode(assigned, index.pq, vec_col=vec_col, out_col=codes_col, path=enc_path)
-    res = assigned.withColumn(
-        "_res", _residual_any(F.col(vec_col), index.coarse, F.col(cell_col))
-    )
-    return pq_encode(res, index.pq, vec_col="_res", out_col=codes_col, path=enc_path).drop("_res")
+        return pq_encode(assigned, index.pq, vec_col=vec_col, out_col=codes_col)
+    res = assigned.withColumn("_res", _residual_col(F.col(vec_col), index.coarse, F.col(cell_col)))
+    return pq_encode(res, index.pq, vec_col="_res", out_col=codes_col).drop("_res")
 
 
 def resolve_rerank(index: IVFPQIndex, nprobe: int, rerank: int | str) -> int:
@@ -1570,7 +1060,7 @@ def ivfpq_search(
     that only hold the encoded table — e.g. a production deployment
     reading the written inverted lists, which pays a (cheap, pruned)
     column read, not a re-encode."""
-    from .clustering import _expr_path_ok, probe_assignments
+    from .clustering import probe_assignments
 
     nprobe = ivfpq_resolve_nprobe(index, nprobe)
     rerank = resolve_rerank(index, nprobe, rerank)
@@ -1600,14 +1090,13 @@ def ivfpq_search(
         q = qp.select(F.col(q_id_col), F.col(cell_col), lut.alias("_lut"))
     else:
         # Above the budget the whole query side (probe + residual + LUT)
-        # runs as ONE Arrow pass — round 15: probe_assignments was already
-        # Arrow here, the residual needed a second crossing
-        # (_residual_udf; Spark forbids Python UDFs inside higher-order
-        # lambdas so it cannot inline into the folds), and _residual_col's
-        # inline-expression alternative duplicated the k×dim centroid
-        # table into all m×ksub fold terms (measured 2.28 s per warm
-        # force for 50 rows at sf0.1 — the whole query-side now runs in
-        # ~0.2 s, values bit-identical, equality-pinned).
+        # runs as ONE Arrow pass. A separate residual pass would be a
+        # second Python crossing (Spark forbids Python UDFs inside
+        # higher-order lambdas, so it cannot inline into the folds), and
+        # _residual_col's inline expression duplicates the k×dim centroid
+        # table into all m×ksub fold terms (measured 2.28 s per warm force
+        # for 50 rows at sf0.1; this pass runs in ~0.2 s, values
+        # bit-identical, equality-pinned).
         from pyspark.sql.types import (
             ArrayType,
             DoubleType,
