@@ -215,15 +215,16 @@ def test_kmeans_k256_pandas_path_bitexact_vs_reference(spark):
 
 
 def test_fit_sample_over_budget_raises_sample_mod(spark, monkeypatch):
-    """Over FIT_SAMPLE_MAX_VALUES the fit doubles sample_mod until its
-    sample fits, never collecting more than the budget's rows (+1, the
-    over-budget probe), records the modulus it used, and equals a direct
-    fit — and the numpy reference on the kms: hash-sample — at it."""
+    """Over FIT_SAMPLE_MAX_VALUES the fit counts the gated frame once and
+    retakes its sample at the modulus the count implies — two collects,
+    neither over the budget's rows (+1, the over-budget probe) — records
+    the modulus it used, and equals a direct fit — and the numpy
+    reference on the kms: hash-sample — at it."""
     from wnba_data_pipeline_spark.functions.hashing import md5_long_py
     from wnba_data_pipeline_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
-    budget = 200 * DIM  # the 500-row corpus needs sample_mod >= 4
+    budget = 200 * DIM  # the 500-row corpus needs sample_mod >= 3
     collected = []
     real = type(emb).toPandas
 
@@ -236,8 +237,8 @@ def test_fit_sample_over_budget_raises_sample_mod(spark, monkeypatch):
     monkeypatch.setattr(type(emb), "toPandas", spy)
     model = kmeans_fit(emb, k=SD_K, max_iter=3)
     monkeypatch.undo()
-    assert model.sample_mod >= 4
-    assert len(collected) > 1 and all(n <= budget // DIM + 1 for n in collected)
+    assert model.sample_mod >= 3
+    assert len(collected) == 2 and all(n <= budget // DIM + 1 for n in collected)
     assert collected[-1] * DIM <= budget
 
     direct = kmeans_fit(emb, k=SD_K, max_iter=3, sample_mod=model.sample_mod)
@@ -249,6 +250,18 @@ def test_fit_sample_over_budget_raises_sample_mod(spark, monkeypatch):
     assert keep.sum() == collected[-1]
     ref = ref_kmeans(ids[keep], V[keep], SD_K, 3)
     assert model.centroids == ref.centroids and model.inertia == ref.inertia
+
+
+def test_fit_k_over_sample_budget_raises(spark, monkeypatch):
+    """A k that no sample inside FIT_SAMPLE_MAX_VALUES can seed raises a
+    ValueError naming the budget before any row is collected."""
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    monkeypatch.setattr(clustering, "FIT_SAMPLE_MAX_VALUES", (SD_K - 1) * DIM)
+    monkeypatch.setattr(type(emb), "toPandas", lambda self: pytest.fail("collected"))
+    with pytest.raises(ValueError, match="FIT_SAMPLE_MAX_VALUES"):
+        kmeans_fit(emb, k=SD_K, max_iter=3)
 
 
 def test_semantic_dedup_pairs_match_duckdb_twin(spark, duck):

@@ -188,7 +188,8 @@ def test_fits_run_one_bounded_collect(spark):
     """With AQE off, each fit is one Arrow collect of its training sample
     — no Spark job per seed pick or Lloyd's iteration. ``ivfpq_fit`` reads
     the corpus size off that collect when the corpus fits the budget, so
-    it pays no count job (a count is 2 jobs under AQE)."""
+    it pays no count job (a count is 2 jobs under AQE); with a hash sample
+    to train on it collects that sample too."""
     import uuid
 
     from wnba_data_pipeline_spark.operators import clustering
@@ -212,29 +213,9 @@ def test_fits_run_one_bounded_collect(spark):
         assert jobs(clustering.kmeans_fit) == 1
         assert jobs(pq.pq_fit) == 1
         assert jobs(pq.ivfpq_fit) == 1
+        assert jobs(lambda e: pq.ivfpq_fit(e, sample_mod=2)) == 2
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-
-
-def test_ivfpq_fit_driver_sample_gate_equals_spark_gate(spark, monkeypatch):
-    """A corpus inside the budget is collected whole and ``ivfpq_fit``
-    applies the kms: sample gate on the driver; over the budget the gate
-    runs in Spark. Both must pick the same rows, so the two indexes are
-    identical."""
-    from wnba_data_pipeline_spark.functions.hashing import md5_long_py
-    from wnba_data_pipeline_spark.operators import clustering
-
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
-    n_half = sum(md5_long_py(f"kms:{i}") % 2 == 0 for i in ids)
-    assert n_half < len(ids)
-    driver = pq.ivfpq_fit(emb, sample_mod=2)
-    monkeypatch.setattr(clustering, "FIT_SAMPLE_MAX_VALUES", n_half * pq.DIM)
-    spark_gated = pq.ivfpq_fit(emb, sample_mod=2)
-    assert spark_gated.pq.sub_models[0].sample_mod == 2
-    assert (driver.coarse, driver.pq.codebooks, driver.n_vectors, driver.separation) == (
-        spark_gated.coarse, spark_gated.pq.codebooks, spark_gated.n_vectors, spark_gated.separation,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -40,13 +40,22 @@ Scale posture (100 TB):
   (md5("kms:" || id) % mod == 0 — uniform over ANY id space, unlike a raw
   id modulus) and assign the full corpus once afterwards — the standard
   big-data k-means recipe. The collected sample holds at most
-  ``FIT_SAMPLE_MAX_VALUES`` values; a sample over that budget is refit at
-  a doubled modulus until it fits (the samples nest: mod 2m ⊂ mod m), and
-  the modulus used is recorded in ``KMeansModel.sample_mod``. The budget
-  holds the largest auto geometry in use (``pq.ivfpq_fit`` at 2 M vectors:
-  ~400 k × 64), so only fits beyond that scale train on a sparser sample
-  than their caller asked for. Driver memory is the sample plus
-  ``ROW_BLK`` × ``KBLK`` distance blocks.
+  ``FIT_SAMPLE_MAX_VALUES`` values: 524,288 rows at dim 64. A sample over
+  that budget costs one count of the gated frame, and the fit is retaken
+  once at the modulus the count implies (the samples nest: mod f·m ⊂
+  mod m); the modulus used is recorded in ``KMeansModel.sample_mod`` and
+  logged. A k the budget cannot seed raises ``ValueError``. Driver memory
+  is the sample plus ``ROW_BLK`` × ``KBLK`` distance blocks.
+- largest corpus each fit trains on as its caller asked, at dim 64 (the
+  arithmetic of the budget; the fits were measured at fixture scale, ≤ 2 k
+  vectors, and up to the funnel geometry of a 1 M-doc corpus, see
+  ``FIT_SAMPLE_MAX_VALUES``): ``kmeans_fit`` / ``pq.pq_fit``, a sample of
+  524,288 rows at the caller's ``sample_mod``; the curation funnel's
+  semantic fit (k = n/512, sample ≈ n/8), ~4.2 M docs — past it the cells
+  get fewer than ``SD_FIT_PER_CELL`` training points, and near 250 M docs
+  k outgrows the budget and the fit raises; ``pq.ivfpq_fit``'s auto
+  geometry (sample ≈ 64 points × 4√n cells), ~4.2 M vectors — past it
+  fewer than 64 points per cell.
 - k: the ASSIGNMENT has two physical paths switched on ``_expr_path_ok``:
   unrolled JVM fold expressions at small k (zero Python), an Arrow-batched
   numpy argmin (``_batch_assign_fn``) above it — the shape
@@ -98,9 +107,16 @@ SD_CELL_TARGET = 512
 SD_FIT_PER_CELL = 64
 
 # Value budget (rows × dim) of the one Arrow collect a fit makes of its
-# hash-sampled training frame: 2^25 doubles ≈ 268 MB on the driver. The
-# largest auto geometry in use — ivfpq_fit at 2 M vectors, sample_mod 5 —
-# trains on ~400 k × 64 = 25.6 M values, inside it.
+# hash-sampled training frame: 2^25 doubles ≈ 268 MB on the driver,
+# 524,288 rows at dim 64. The auto geometries reach it at ~4.2 M vectors
+# (ivfpq_fit: ~256·√n rows; the curation semantic fit: ~n/8 rows); see the
+# module docstring for what happens past it. Measured on a 4-core host at
+# the funnel geometry of a 1 M-doc corpus (k = 1954, sample_mod 7,
+# 142 k × 64 sample): collect 4.8 s, 4 Lloyd's iterations 13.8 s, driver
+# RSS 437 MB; with the budget patched to 65,536 rows the same fit took
+# probe + count + collect 10.2 s at sample_mod 21. Lloyd's work grows as
+# rows × k; a fit at the budget (524 k rows, k ≈ 8 k at 4.2 M docs) has
+# not been run.
 FIT_SAMPLE_MAX_VALUES = 1 << 25
 
 
@@ -216,10 +232,10 @@ def _fold_sqdists(X, C):
     return D
 
 
-def _nearest(X, C, gemm: bool | None = None):
+def _nearest(X, C):
     """(index, squared distance) of each row's nearest centroid, first
-    minimum on ties (≡ ``array_position``). The kernel follows the data
-    unless the caller pins it: the left fold where ``_expr_path_ok`` holds
+    minimum on ties (≡ ``array_position``). The kernel follows the
+    centroids: the left fold where ``_expr_path_ok`` holds
     (bit-identical to the expression path by construction) and the gemm
     expansion ||x||² − 2x·c + ||c||² above it — BLAS associates
     differently, so identity with the fold is measured (the k=256 and
@@ -231,8 +247,7 @@ def _nearest(X, C, gemm: bool | None = None):
     import numpy as np
 
     C = np.asarray(C, dtype=np.float64)
-    if gemm is None:
-        gemm = not _expr_path_ok(C)
+    gemm = not _expr_path_ok(C)
     CT = np.ascontiguousarray(C.T)
     c2 = (C * C).sum(axis=1) if gemm else None
     idx = np.zeros(len(X), dtype=np.int64)
@@ -258,14 +273,11 @@ def _nearest(X, C, gemm: bool | None = None):
 
 
 def _batch_assign_fn(centroids: list[list[float]], vec_col: str, out_col: str):
-    """mapInPandas generator: append the nearest-centroid id (``_nearest``,
-    kernel fixed at plan build on the driver). Scale shape: zero-shuffle
-    map stage; per-task memory is one Arrow batch plus the k × dim
-    centroid matrix, which rides to executors once per task via the
-    closure."""
+    """mapInPandas generator: append the nearest-centroid id (``_nearest``).
+    Scale shape: zero-shuffle map stage; per-task memory is one Arrow
+    batch plus the k × dim centroid matrix, which rides to executors once
+    per task via the closure."""
     import numpy as np
-
-    gemm = not _expr_path_ok(centroids)
 
     def assign(batches):
         C = np.asarray(centroids, dtype=np.float64)
@@ -274,7 +286,7 @@ def _batch_assign_fn(centroids: list[list[float]], vec_col: str, out_col: str):
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             out = pdf.copy()
-            out[out_col] = _nearest(X, C, gemm)[0].astype(np.int32)
+            out[out_col] = _nearest(X, C)[0].astype(np.int32)
             yield out
 
     return assign
@@ -290,12 +302,6 @@ def _sample_gate(df: DataFrame, id_col: str, mod: int) -> DataFrame:
     if mod <= 1:
         return df
     return df.filter(md5_long(F.concat(F.lit("kms:"), F.col(id_col).cast("string"))) % mod == 0)
-
-
-def _in_sample(ids: list, mod: int) -> list[bool]:
-    """Driver twin of ``_sample_gate`` over collected ids (same rows:
-    ``md5_long_py`` ≡ ``md5_long``, property-tested)."""
-    return [md5_long_py(f"kms:{i}") % mod == 0 for i in ids]
 
 
 def _collect_bounded(df: DataFrame, id_col: str, vec_col: str):
@@ -316,19 +322,36 @@ def _collect_bounded(df: DataFrame, id_col: str, vec_col: str):
     return (pdf["_id"].tolist(), X) if X.size <= FIT_SAMPLE_MAX_VALUES else None
 
 
-def _collect_fit_sample(df: DataFrame, *, id_col: str, vec_col: str, sample_mod: int):
+def _collect_fit_sample(df: DataFrame, *, id_col: str, vec_col: str, sample_mod: int, k: int):
     """(ids, X, sample_mod): the ``_sample_gate`` sample of ``df`` on the
-    driver. A sample over the value budget is dropped and retaken at a
-    doubled modulus (each task of an over-budget probe stops at the
-    limit); the modulus finally used is returned."""
+    driver, holding at least the k rows a fit seeds from. A sample over
+    the value budget is dropped (each task of the over-budget probe stops
+    at the limit), the gated frame is counted once, and the sample is
+    retaken at the modulus that puts it at 15/16 of the budget's rows —
+    a margin of dozens of standard deviations of the hash sample's size;
+    a sample still over it (wider vectors than ``DIM``) doubles the
+    modulus. The modulus finally used is returned."""
+    max_rows = FIT_SAMPLE_MAX_VALUES // DIM
+    if k > max_rows:
+        raise ValueError(
+            f"k={k} exceeds the {max_rows} rows FIT_SAMPLE_MAX_VALUES={FIT_SAMPLE_MAX_VALUES} lets a fit collect"
+        )
     mod = max(1, sample_mod)
-    while (got := _collect_bounded(_sample_gate(df, id_col, mod), id_col, vec_col)) is None:
-        mod *= 2
-    if mod != max(1, sample_mod):
+    got = _collect_bounded(_sample_gate(df, id_col, mod), id_col, vec_col)
+    if got is None:
+        n = _sample_gate(df, id_col, mod).count()
+        mod *= max(2, -(-n * 16 // (max_rows * 15)))
+        while (got := _collect_bounded(_sample_gate(df, id_col, mod), id_col, vec_col)) is None:
+            mod *= 2
         logging.getLogger(__name__).warning(
             "fit sample over %d values at sample_mod=%d; fitted at sample_mod=%d",
             FIT_SAMPLE_MAX_VALUES, sample_mod, mod,
         )
+        if len(got[0]) < k:
+            raise ValueError(
+                f"the fit sample that fits FIT_SAMPLE_MAX_VALUES={FIT_SAMPLE_MAX_VALUES} "
+                f"(sample_mod={mod}) has {len(got[0])} rows; need k={k} seeds"
+            )
     return (*got, mod)
 
 
@@ -388,13 +411,12 @@ def _lloyd(
     elif init != "hash":
         raise ValueError(f"unknown init: {init!r}")
     C = X[seeds]
-    gemm = not _expr_path_ok(C)
     Q = np.floor(X * COMP_SCALE + 0.5).astype(np.int64)
     inertia: list[float] = []
     sizes: dict[int, int] = {}
     converged, n_iter = False, 0
     for n_iter in range(1, max_iter + 1):
-        cl, mind = _nearest(X, C, gemm)
+        cl, mind = _nearest(X, C)
         inertia.append(int(np.floor(mind * INERTIA_SCALE + 0.5).astype(np.int64).sum()) / INERTIA_SCALE)
         counts = np.bincount(cl, minlength=k)
         full = np.flatnonzero(counts)  # empty clusters keep their centroid
@@ -446,7 +468,7 @@ def kmeans_fit(
     rebuilds centroids from exact fixed-point sums (module docstring).
     Empty clusters keep their previous centroid. Stops early when the
     quantized centroids reach an exact fixed point."""
-    ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod)
+    ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod, k=k)
     return _lloyd(ids, X, k=k, max_iter=max_iter, seed_tag=seed_tag, init=init, sample_mod=sample_mod)
 
 

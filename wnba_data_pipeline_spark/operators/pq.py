@@ -52,7 +52,6 @@ from .clustering import (  # noqa: F401 — kmeans_fit is re-exported as pq.kmea
     _collect_fit_sample,
     _expr_path_ok,
     _fold_sqdists,
-    _in_sample,
     _lloyd,
     _nearest,
     _sqdist,
@@ -121,7 +120,7 @@ def pq_fit(
     in numpy, each with ``kmeans_fit``'s determinism contract;
     ``sample_mod`` is the 100 TB knob — train on the hash sample, encode
     everything."""
-    ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod)
+    ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod, k=ksub)
     return _pq_lloyd(ids, X, m=m, ksub=ksub, max_iter=max_iter, sample_mod=sample_mod)
 
 
@@ -769,13 +768,12 @@ def ivfpq_fit(
     cross-engine parity contract (``ivfpq_search_sql`` renders either).
     Both fits inherit ``kmeans_fit``'s bit-determinism; ``sample_mod`` is
     the scale knob for both (train on a hash sample, encode everything).
-    One Spark job when the corpus fits ``clustering.FIT_SAMPLE_MAX_VALUES``:
-    a bounded collect of the whole corpus gives the corpus size (it
-    resolves the auto geometry and is the auto-rerank statistic), and the
-    ``kms:`` sample gate is applied to it on the driver
-    (``clustering._in_sample``, the same rows as ``_sample_gate``). A larger corpus pays
-    that over-budget probe, a count and the sample collect
-    (``clustering._collect_fit_sample``). Either way the coarse fit, the
+    The corpus size (it resolves the auto geometry and is the auto-rerank
+    statistic) comes from a bounded collect of the whole corpus, or from
+    a count when the corpus is over ``clustering.FIT_SAMPLE_MAX_VALUES``.
+    When ``sample_mod`` resolves to 1 that collect is the training sample
+    and the fit is one Spark job; otherwise the ``kms:`` sample is
+    collected by ``clustering._collect_fit_sample``. The coarse fit, the
     residuals, the m sub-fits and the separation statistic run in numpy
     on the one sample array.
 
@@ -797,13 +795,12 @@ def ivfpq_fit(
         sample_mod = ivfpq_fit_sample_mod(n_vectors, coarse_k)
     if coarse_init == "auto":
         coarse_init = "farthest" if coarse_k <= FARTHEST_INIT_MAX_K else "hash"
-    if whole is None:
-        ids, X, sample_mod = _collect_fit_sample(df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod)
-    else:
+    if whole is not None and sample_mod <= 1:
         ids, X = whole
-        if sample_mod > 1:
-            keep = _in_sample(ids, sample_mod)
-            ids, X = [i for i, kept in zip(ids, keep) if kept], X[np.array(keep, dtype=bool)]
+    else:
+        ids, X, sample_mod = _collect_fit_sample(
+            df, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod, k=max(coarse_k, ksub)
+        )
     coarse = _lloyd(
         ids, X, k=coarse_k, max_iter=max_iter, seed_tag="ivfc", init=coarse_init, sample_mod=sample_mod
     )
@@ -867,12 +864,10 @@ def _fused_encode_fn(
     codes_col: str,
 ):
     """mapInPandas generator for the fused encode: per Arrow batch — the
-    coarse argmin (``clustering._nearest``, kernel fixed at plan build),
+    coarse argmin (``clustering._nearest``),
     the residual subtraction (one IEEE op, ≡ ``_residual_col``), and the
     per-subspace code argmin (``_pq_codes``, the ``pq_encode`` kernel)."""
     import numpy as np
-
-    gemm = not _expr_path_ok(coarse)
 
     def encode(batches):
         C = np.asarray(coarse, dtype=np.float64)  # k x dim
@@ -880,7 +875,7 @@ def _fused_encode_fn(
             if len(pdf) == 0:
                 continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cl = _nearest(X, C, gemm)[0]
+            cl = _nearest(X, C)[0]
             out = pdf.copy()
             out[cell_col] = cl.astype(np.int32)
             out[codes_col] = list(_pq_codes(X - C[cl] if by_residual else X, codebooks, dsub))
