@@ -189,7 +189,7 @@ def test_bucketed_events_makes_exact_tumbling_distinct_local(spark, tmp_path, mo
 
     from .conftest import SF_ORACLE
 
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_DISTINCT", "1")  # force the split shape at sf0.01
+    monkeypatch.setattr(relational, "SPLIT_DISTINCT_MIN_ROWS", 0)  # force the split shape
     before = sorted(tuple(r) for r in relational.q_tumbling_daily(spark, SF_ORACLE).collect())
     catalog.ensure_bucketed_layout(
         spark, SF_ORACLE, n_buckets=8, base_path=str(tmp_path / "bucketed_tu")

@@ -1,5 +1,4 @@
-"""Hot-key window mitigation gates (operators/chunked.py, round 10 —
-VERDICT r9 item 2): the chunked shapes must be VALUE-IDENTICAL to the
+"""Hot-key window mitigation gates (operators/chunked.py): the chunked shapes must be VALUE-IDENTICAL to the
 plain single-window shapes on real data and on adversarial boundary
 cases, the sampled detector must engage exactly on planted hot keys, and
 the chunked plan must actually bound the per-task work a hot key can
@@ -19,7 +18,6 @@ from wnba_data_pipeline_spark.sources.tables import load_table
 from .conftest import SF_ORACLE
 
 QUERIES = {
-    "sessionize_events": relational.q_sessionize_events,
     "asof_attribution": temporal.q_asof_attribution,
     "range_join_bins": temporal.q_range_join_bins,
     "rolling_5_10": relational.q_rolling_5_10,
@@ -30,11 +28,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _force_chunked(monkeypatch, on: bool) -> None:
+    """Pin the hot-key gate's decision: a fresh detection cache, and a
+    detector that answers ``on`` for every table."""
+    monkeypatch.setattr(chunked, "_HOT_EVENTS_CACHE", {})
+    monkeypatch.setattr(chunked, "detect_hot_keys", lambda *a, **k: on)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_chunked_equals_plain_on_oracle_corpus(name, spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_CHUNKED_WINDOWS", "0")
+    _force_chunked(monkeypatch, False)
     plain = _rows(QUERIES[name](spark, SF_ORACLE))
-    monkeypatch.setenv("SPARK_GRAFT_CHUNKED_WINDOWS", "1")
+    _force_chunked(monkeypatch, True)
     ck = _rows(QUERIES[name](spark, SF_ORACLE))
     assert plain == ck
     assert len(plain) > 0
@@ -94,28 +99,6 @@ def test_detector_engages_on_planted_hot_key(spark, skewed_events):
     assert chunked.detect_hot_keys(skewed_events, "user_id", "event_id", hot_key_min=1024)
     uniform = load_table(spark, SF_ORACLE, "events")
     assert not chunked.detect_hot_keys(uniform, "user_id", "event_id")
-
-
-def test_chunked_sessionize_equals_plain_on_skew(spark, skewed_events):
-    gap_s = 1800
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.lag(
-        F.unix_micros(F.col("ts").cast("timestamp"))
-    ).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_s * 1_000_000), F.lit(1)).otherwise(F.lit(0))
-    plain = _rows(
-        skewed_events.withColumn("_sess", F.sum(new_sess).over(w))
-        .groupBy("user_id", "_sess")
-        .agg(F.min("ts").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("user_id", "s", "n")
-    )
-    ck = _rows(
-        chunked.chunked_sessionize(skewed_events, gap_s=gap_s)
-        .groupBy("user_id", "_sess")
-        .agg(F.min("ts").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("user_id", "s", "n")
-    )
-    assert plain == ck
 
 
 def test_chunked_running_max_equals_plain_on_skew(spark, skewed_events):
@@ -222,31 +205,29 @@ def test_chunked_bounds_per_partition_work(spark, skewed_events):
 
 def test_registry_queries_equal_under_planted_skew(spark, skewed_events, tmp_path, monkeypatch):
     """End-to-end: write the skewed table as an events.parquet dir, run the
-    three registry queries with the gate forced OFF and ON — identical
-    rows, and the detector alone (no override) must pick the chunked
-    branch for this table."""
-    import os
-
+    two event-window registry queries with the gate forced OFF and ON —
+    identical rows, and the detector itself must pick the chunked branch
+    for this table."""
     from wnba_data_pipeline_spark.sources.sinks import overwrite_table
 
+    detect = chunked.detect_hot_keys
     sf_dir = str(tmp_path / "skewsf")
     overwrite_table(skewed_events, f"{sf_dir}/events.parquet")
     for name, q in QUERIES.items():
         if name == "rolling_5_10":
             continue  # lineitem family — covered by the planted-supplier test
-        monkeypatch.setenv("SPARK_GRAFT_CHUNKED_WINDOWS", "0")
+        _force_chunked(monkeypatch, False)
         plain = _rows(q(spark, sf_dir))
-        monkeypatch.setenv("SPARK_GRAFT_CHUNKED_WINDOWS", "1")
+        _force_chunked(monkeypatch, True)
         ck = _rows(q(spark, sf_dir))
         assert plain == ck, name
         assert len(plain) > 0, name
-    monkeypatch.delenv("SPARK_GRAFT_CHUNKED_WINDOWS")
     ev = load_table(spark, sf_dir, "events")
-    assert chunked.detect_hot_keys(ev, "user_id", "event_id", hot_key_min=1024)
+    assert detect(ev, "user_id", "event_id", hot_key_min=1024)
 
 
 # ---------------------------------------------------------------------------
-# planted NULL keys: the carry joins must be null-safe (ADVICE r10)
+# planted NULL keys: the carry joins must be null-safe
 # ---------------------------------------------------------------------------
 
 
@@ -282,30 +263,6 @@ def nullkey_events(spark):
     df.count()
     yield df
     df.unpersist()
-
-
-def test_chunked_sessionize_keeps_null_keys(spark, nullkey_events):
-    gap_s = 1800
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.lag(
-        F.unix_micros(F.col("ts").cast("timestamp"))
-    ).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_s * 1_000_000), F.lit(1)).otherwise(F.lit(0))
-    plain = _nrows(
-        nullkey_events.withColumn("_sess", F.sum(new_sess).over(w))
-        .groupBy("user_id", "_sess")
-        .agg(F.min("ts").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("user_id", "s", "n")
-    )
-    ck = _nrows(
-        chunked.chunked_sessionize(nullkey_events, gap_s=gap_s)
-        .groupBy("user_id", "_sess")
-        .agg(F.min("ts").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("user_id", "s", "n")
-    )
-    assert plain == ck
-    # the NULL-key group really is present on both sides
-    assert any(r[0] is None for r in plain)
 
 
 def test_chunked_running_max_keeps_null_keys(spark, nullkey_events):

@@ -154,7 +154,7 @@ def test_raw_layer_partition_pruning(spark, tmp_path):
 
 
 def test_split_distinct_paths_match_oracle(spark, duck, monkeypatch):
-    # the scale-switched count-distinct shape (split distinct subtree +
+    # the row-gated count-distinct shape (split distinct subtree +
     # join-back, relational._use_split_distinct) must return the SAME rows
     # as the inline-Expand shape the oracle gate runs at sf0.01 — forced on
     # here and hash-compared against the same DuckDB oracles
@@ -162,7 +162,7 @@ def test_split_distinct_paths_match_oracle(spark, duck, monkeypatch):
 
     from .oracle_compare import compare
 
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_DISTINCT", "1")
+    monkeypatch.setattr(relational, "SPLIT_DISTINCT_MIN_ROWS", 0)
     for name in ("quality_probe", "tumbling_daily"):
         sdf = relational.QUERIES[name](spark, SF_ORACLE)
         compare(sdf, duck.sql(relational.ORACLES[name]).df(), f"{name}[split]")
@@ -175,14 +175,17 @@ def test_split_distinct_plan_shape(spark, monkeypatch):
     # shape decouples them: the distinct subtree carries only the key, and
     # the join-back must be a BROADCAST (1-row / ~150-group side), never a
     # shuffle join over the fact data.
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_DISTINCT", "1")
+    from wnba_data_pipeline_spark.operators import relational
+
+    monkeypatch.setattr(relational, "SPLIT_DISTINCT_MIN_ROWS", 0)
     for name in ("quality_probe", "tumbling_daily"):
         plan = _plan(spark, name)
         assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
         assert "Broadcast" in plan, plan  # BHJ (tumbling) / BNLJ 1-row (probe)
     # inline shape: no join anywhere — the single-scan double-agg chain
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_DISTINCT", "0")
-    assert "Join" not in _plan(spark, "quality_probe")
+    monkeypatch.setattr(relational, "SPLIT_DISTINCT_MIN_ROWS", 10**12)
+    for name in ("quality_probe", "tumbling_daily"):
+        assert "Join" not in _plan(spark, name), name
 
 
 def test_whole_stage_codegen_everywhere(spark):

@@ -24,8 +24,8 @@ def test_unioned_sketches_match_exact_distinct(spark):
     daily.unpersist()
 
 
-def test_tumbling_daily_approx_shape_error_bound(spark, monkeypatch):
-    # SPARK_GRAFT_APPROX_DISTINCT=1 swaps the exact-distinct subtree for a
+def test_tumbling_daily_approx_shape_error_bound(spark):
+    # approx=True swaps the exact-distinct subtree for a
     # per-group HLL estimate: identical groups and exact columns, n_users
     # within HLL error per group, and the plan carries neither an Expand
     # nor a distinct subtree (the ~8M-tuple shuffle is gone)
@@ -35,8 +35,7 @@ def test_tumbling_daily_approx_shape_error_bound(spark, monkeypatch):
         (r["day"], r["event_type"]): r
         for r in relational.q_tumbling_daily(spark, SF_ORACLE).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_APPROX_DISTINCT", "1")
-    approx_df = relational.q_tumbling_daily(spark, SF_ORACLE)
+    approx_df = relational.q_tumbling_daily(spark, SF_ORACLE, approx=True)
     plan = spark._jvm.PythonSQLUtils.explainString(approx_df._jdf.queryExecution(), "formatted")
     assert "Expand" not in plan, plan
     assert plan.count("HashAggregate") <= 4, plan  # one partial+final pair, no distinct subtree

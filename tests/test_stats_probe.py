@@ -112,18 +112,18 @@ def test_meta_probe_rejects_schema_only_file(spark, tmp_path):
 
 
 def test_quality_report_footer_path_rows_identical(spark, duck, monkeypatch):
-    # the sf-switch must be plan selection only: forced footer mode returns
+    # the row gate must be plan selection only: forced footer mode returns
     # byte-identical report rows to the scan shape (and to the oracle)
-    monkeypatch.setenv("SPARK_GRAFT_FOOTER_STATS", "1")
+    monkeypatch.setattr(quality, "FOOTER_STATS_MIN_ROWS", 0)
     footer = quality.q_quality_report(spark, SF_ORACLE)
-    monkeypatch.setenv("SPARK_GRAFT_FOOTER_STATS", "0")
+    monkeypatch.setattr(quality, "FOOTER_STATS_MIN_ROWS", 10**12)
     scan = quality.q_quality_report(spark, SF_ORACLE)
     frows = sorted(tuple(r) for r in footer.collect())
     srows = sorted(tuple(r) for r in scan.collect())
     assert frows == srows
     from .oracle_compare import compare
 
-    monkeypatch.setenv("SPARK_GRAFT_FOOTER_STATS", "1")
+    monkeypatch.setattr(quality, "FOOTER_STATS_MIN_ROWS", 0)
     compare(
         quality.q_quality_report(spark, SF_ORACLE),
         duck.sql(quality.ORACLE_QUALITY_REPORT).df(),
@@ -134,7 +134,7 @@ def test_quality_report_footer_path_rows_identical(spark, duck, monkeypatch):
 def test_quality_report_footer_path_plan_shape(spark, monkeypatch):
     # at the footer shape: NO orders scan at all, and the one remaining
     # lineitem scan reads only the columns the footers cannot answer
-    monkeypatch.setenv("SPARK_GRAFT_FOOTER_STATS", "1")
+    monkeypatch.setattr(quality, "FOOTER_STATS_MIN_ROWS", 0)
     plan = (
         quality.q_quality_report(spark, SF_ORACLE)
         ._jdf.queryExecution()
@@ -158,10 +158,10 @@ def test_rowcount_probe_matches_scan_count(spark):
 
 
 def test_quality_queries_fall_back_to_scan_on_statless_files(spark, tmp_path, monkeypatch):
-    # write_statistics=False is legal parquet; at the footer-stats switch
+    # write_statistics=False is legal parquet; at the footer-stats gate
     # the QUERY entry points must fall back to the scan shape and return
-    # correct rows, not hard-fail (ADVICE r7 — only the explicit probe
-    # entry points keep the strict error).
+    # correct rows, not hard-fail (only the explicit probe entry points
+    # keep the strict error).
     from wnba_data_pipeline_spark.operators import relational
 
     import pyarrow.parquet as pq
@@ -174,13 +174,13 @@ def test_quality_queries_fall_back_to_scan_on_statless_files(spark, tmp_path, mo
         tbl = pq.read_table(f"{SF_ORACLE}/{name}.parquet")
         pq.write_table(tbl, f"{sf_dir}/{name}.parquet", write_statistics=False)
 
-    monkeypatch.setenv("SPARK_GRAFT_FOOTER_STATS", "1")
+    monkeypatch.setattr(quality, "FOOTER_STATS_MIN_ROWS", 0)
     got_probe = relational.q_quality_probe(spark, sf_dir).collect()[0].asDict()
     got_report = {
         r["check_name"]: (r["value"], r["status"])
         for r in quality.q_quality_report(spark, sf_dir).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_FOOTER_STATS", "0")
+    monkeypatch.setattr(quality, "FOOTER_STATS_MIN_ROWS", 10**12)
     want_probe = relational.q_quality_probe(spark, sf_dir).collect()[0].asDict()
     want_report = {
         r["check_name"]: (r["value"], r["status"])

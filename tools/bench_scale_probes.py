@@ -1,4 +1,4 @@
-"""Round-6 scale probes — produces the raw sections of BENCH_SCALE_r06.json:
+"""Scale probes — produces the raw sections of BENCH_SCALE_r06.json:
 
 1. bucketed-layout matrix: the three repeated-key o_custkey queries
    (topk_revenue, rank_partition_avg, join_left_enrich) timed on the plain
@@ -7,7 +7,7 @@
    cost reported separately (ingest cost, not query cost), executed-plan
    exchange check recorded per query.
 2. approx-distinct tumbling shape: q_tumbling_daily exact vs
-   SPARK_GRAFT_APPROX_DISTINCT=1 (per-group HLL sketch), with the measured
+   approx=True (per-group HLL sketch), with the measured
    max relative n_users error.
 3. sessionize_events per-stage attribution (the last unprofiled weak row):
    scan → +shuffle on user_id → +in-partition sort → full session agg.
@@ -142,13 +142,9 @@ def main() -> None:
     exact_df = relational.q_tumbling_daily(spark, sf_dir)
     exact_spread = _spread(exact_df)
     exact_rows = {(str(r["day"]), r["event_type"]): r["n_users"] for r in exact_df.collect()}
-    os.environ["SPARK_GRAFT_APPROX_DISTINCT"] = "1"
-    try:
-        approx_df = relational.q_tumbling_daily(spark, sf_dir)
-        approx_spread = _spread(approx_df)
-        approx_rows = {(str(r["day"]), r["event_type"]): r["n_users"] for r in approx_df.collect()}
-    finally:
-        del os.environ["SPARK_GRAFT_APPROX_DISTINCT"]
+    approx_df = relational.q_tumbling_daily(spark, sf_dir, approx=True)
+    approx_spread = _spread(approx_df)
+    approx_rows = {(str(r["day"]), r["event_type"]): r["n_users"] for r in approx_df.collect()}
     max_rel_err = max(
         abs(approx_rows[k] - v) / v for k, v in exact_rows.items() if v > 0
     )

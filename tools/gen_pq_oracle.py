@@ -22,10 +22,8 @@ os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from wnba_data_pipeline_spark.operators.pq import ivfpq_fit, pq_fit  # noqa: E402
-from wnba_data_pipeline_spark.session import ensure_confs  # noqa: E402
+from wnba_data_pipeline_spark.session import ensure_confs, get_spark  # noqa: E402
 from wnba_data_pipeline_spark.sources.tables import load_table  # noqa: E402
 
 SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
@@ -90,7 +88,7 @@ def _codebook_body(by_sf: dict) -> str:
 
 
 def main() -> None:
-    spark = SparkSession.builder.master("local[16]").getOrCreate()
+    spark = get_spark(Path(__file__).stem)
     ensure_confs(spark)
     out = {}
     coarse_out = {}

@@ -26,11 +26,9 @@ os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from wnba_data_pipeline_spark.operators.clustering import kmeans_fit  # noqa: E402
 from wnba_data_pipeline_spark.operators.similarity import _augmented_corpus  # noqa: E402
-from wnba_data_pipeline_spark.session import ensure_confs  # noqa: E402
+from wnba_data_pipeline_spark.session import ensure_confs, get_spark  # noqa: E402
 
 SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 OUT = REPO / "wnba_data_pipeline_spark" / "operators" / "_semantic_centroids.py"
@@ -50,7 +48,7 @@ CENTROIDS_BY_SF = '''
 
 
 def main() -> None:
-    spark = SparkSession.builder.master("local[16]").getOrCreate()
+    spark = get_spark(Path(__file__).stem)
     ensure_confs(spark)
     out = {}
     for sf_dir in SF_DIRS:

@@ -1,45 +1,34 @@
-"""Time-chunked per-key windows with carry-merge — the hot-KEY mitigation
-for the cumulative window family (round 10, VERDICT r9 item 2).
+"""Time-chunked per-key windows with carry-merge: the hot-key shapes of
+the cumulative event windows.
 
-The problem: every per-key running window (sessionize's lag+cumsum, the
-as-of running max, the trailing-24h difference-of-cumulatives) serializes
-one key's entire stream onto ONE task. AQE's skew handling cannot help —
-skew-join splitting applies to joins, and a window's hash partitioning is
-all-or-nothing per key. A user holding 1% of a 10^12-row event table puts
-10^10 rows on one core while the rest of the cluster idles; that is the
-last unguarded skew surface this engine had (join skew → AQE + salting,
-LSH bucket skew → the r9 salted hot-bucket gate).
+The problem: a per-key running window (the as-of running max, the
+trailing-24h difference of cumulatives, the rolling ROWS frame) puts one
+key's entire stream on ONE task. AQE's skew handling cannot help: it
+splits skewed joins, and a window's hash partitioning is all-or-nothing
+per key. A user holding 1% of a 10^12-row event table puts 10^10 rows on
+one core while the rest of the cluster idles.
 
 The fix is the classic prefix-sum parallelization (Blelloch scan, applied
 per key along event time): split each key's stream into fixed-width TIME
 chunks, run the window WITHIN each (key, chunk) — parallel across chunks —
-then carry the tiny per-chunk summaries (last ts / running max / totals)
-across chunks with a second window over the summary table (thousands of
-rows, not billions) and merge the carry back per row with one broadcast
-join. Values are identical by associativity of the carried aggregates
-(count / int64 fixed-point sum / max / the session-boundary flag) — each
-chunked query below states its own carry-correctness argument.
+then carry the tiny per-chunk summaries (running max / totals) across
+chunks with a second window over the summary table (thousands of rows,
+not billions) and merge the carry back per row with one join. Values are
+identical by associativity of the carried aggregates (count / int64
+fixed-point sum / max); each shape below states its own carry argument.
 
-Gating follows the repo's committed posture (scale switches change plan
-physics, never values) and is PER QUERY, from measurement
-(BENCH_SCALE_r10 skew_windows/skew_rolling): the plain single-window
-shape stays the default everywhere; ``detect_hot_keys`` samples
-1/``HK_SAMPLE_MOD`` of rows (deterministic md5 gate, same recipe as the
-dedup hot-bucket detector) and the asof / trailing-range / rolling
-queries — whose chunked forms measured FASTER under a dominant key —
-switch when a key's estimated share clears the relative bar. Sessionize
-does NOT auto-gate: its plain session_window is one shuffle whose output
-is already the aggregate, and the chunked rewrite measured slower at
-every planted regime (see q_sessionize_events). Misdetection changes the
-physical branch, never the rows. ``SPARK_GRAFT_CHUNKED_WINDOWS=1/0``
-forces the branch for tests and benches; detection is cached per
-(sf_dir, layout, key) since a table's key histogram does not change
-between plan builds.
+Gating: the plain single-window shape is the default. ``detect_hot_keys``
+samples 1/``HK_SAMPLE_MOD`` of rows (deterministic md5 gate, same recipe
+as the dedup hot-bucket detector), and ``q_asof_attribution``,
+``q_range_join_bins`` and ``q_rolling_5_10`` take the chunked shape when
+a key's estimated share clears the relative bar below; their chunked
+forms measured faster under a dominant key (BENCH_SCALE_r10
+skew_windows/skew_rolling). Misdetection changes the physical branch,
+never the rows. Detection is cached per (sf_dir, layout, table, key),
+since a table's key histogram does not change between plan builds.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,16 +53,6 @@ HOT_PARTITION_FACTOR = 4
 HOT_SHARE_CAP = 0.5
 HK_SAMPLE_MOD = 64  # detection sample fraction (1/64)
 CHUNK_US = 24 * 3600 * 1_000_000  # chunk width: 1 day of event time
-
-
-def chunked_windows_enabled(default: bool) -> bool:
-    """Env override for the physical branch (None → caller's detection)."""
-    v = os.environ.get("SPARK_GRAFT_CHUNKED_WINDOWS")
-    if v == "1":
-        return True
-    if v == "0":
-        return False
-    return default
 
 
 def detect_hot_keys(
@@ -119,8 +98,7 @@ _HOT_EVENTS_CACHE: dict[tuple, bool] = {}
 
 def use_chunked_events(ev: DataFrame, cache_key: tuple) -> bool:
     """The physical-branch decision for the event-window registry queries:
-    env override first (``SPARK_GRAFT_CHUNKED_WINDOWS=1/0``), else sampled
-    hot-key detection cached per (sf_dir, layout) — a table's key
+    sampled hot-key detection cached per (sf_dir, layout) — a table's key
     histogram does not change between plan builds, so the one detection
     job amortizes across the session (same caching idea as the stream
     reader's footer probe)."""
@@ -133,11 +111,6 @@ def use_chunked_events(ev: DataFrame, cache_key: tuple) -> bool:
 def use_chunked_table(df: DataFrame, cache_key: tuple, key_col: str, id_col: str) -> bool:
     """Generic form of :func:`use_chunked_events` (the rolling family keys
     lineitem by l_suppkey)."""
-    v = os.environ.get("SPARK_GRAFT_CHUNKED_WINDOWS")
-    if v == "1":
-        return True
-    if v == "0":
-        return False
     full_key = cache_key + (key_col,)
     if full_key not in _HOT_EVENTS_CACHE:
         _HOT_EVENTS_CACHE[full_key] = detect_hot_keys(df, key_col, id_col)
@@ -172,86 +145,6 @@ def _us(c) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# sessionize: lag + gap-flag + running session counter, chunked
-# ---------------------------------------------------------------------------
-
-
-def chunked_sessionize(
-    ev: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_s: int = 1800,
-    chunk_us: int = CHUNK_US,
-) -> DataFrame:
-    """(key, ts rows) → (key, _sess) session ids, value-identical to
-    ``sum(new_session) OVER (PARTITION BY key ORDER BY ts)`` with
-    new_session = (gap NULL or gap > gap_s), but with each key's stream
-    split across time chunks.
-
-    Carry-merge: a chunk's FIRST row needs the previous chunk's last ts
-    (its lag crosses the boundary) and every row needs the number of
-    session starts in all previous chunks (the running counter's prefix).
-    Both are per-(key, chunk) scalars: the summary table carries
-    last_ts/first_ts/in-chunk flag totals, a lag+running-sum window over
-    the summaries (ordered by chunk id — thousands of rows) resolves the
-    boundary flag and the prefix, and one join on (key, chunk) hands them
-    back to the rows. Correct because the session counter is a plain
-    prefix sum of boundary flags — associative — and a boundary flag
-    depends only on the previous EVENT's ts, which is last_ts of the
-    previous non-empty chunk for exactly the first row of a chunk.
-    Ts-ties share a chunk (chunk is derived from ts), so tie-peer
-    semantics match the RANGE-frame plain shape."""
-    gap_us = gap_s * 1_000_000
-    us = _us(ts_col)
-    rows = ev.withColumn("_us", us).withColumn("_ck", _chunk_col("_us", chunk_us))
-    w_in = Window.partitionBy(key_col, "_ck").orderBy("_us")
-    gap_in = F.col("_us") - F.lag("_us").over(w_in)
-    flag_in = F.when(gap_in > F.lit(gap_us), 1).when(gap_in.isNull(), None).otherwise(0)
-    rows = rows.withColumn("_flag_in", flag_in).withColumn(
-        "_cum_in",
-        F.sum(F.coalesce(F.col("_flag_in"), F.lit(0))).over(
-            w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    summary = rows.groupBy(key_col, "_ck").agg(
-        F.min("_us").alias("_first_us"),
-        F.max("_us").alias("_last_us"),
-        F.sum(F.coalesce(F.col("_flag_in"), F.lit(0))).alias("_flags_in"),
-    )
-    w_s = Window.partitionBy(key_col).orderBy("_ck")
-    prev_last = F.lag("_last_us").over(w_s)
-    first_flag = F.when(
-        prev_last.isNull() | ((F.col("_first_us") - prev_last) > F.lit(gap_us)), 1
-    ).otherwise(0)
-    summary = summary.withColumn("_first_flag", first_flag)
-    chunk_total = F.col("_flags_in") + F.col("_first_flag")
-    summary = summary.withColumn(
-        "_prefix",
-        F.coalesce(
-            F.sum(chunk_total).over(w_s.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    ).select(key_col, "_ck", "_first_flag", "_prefix")
-    # no join hint (round-10 measurement): a shuffle_hash hint measured
-    # NO win at sf10 and OOM'd at sf100 (SHJ's hash build cannot spill);
-    # the summary is small next to the data but NOT driver-sized at
-    # 100 TB (keys × days), so leave broadcast-vs-SMJ to AQE's runtime
-    # stats — the robust default.
-    # NULL-SAFE key equality (ADVICE r10): the plain shapes' window
-    # partitioning groups NULL keys into one partition, so the carry join
-    # must match them too — a name-list inner join would silently drop
-    # every NULL-key row and break the value-identity contract.
-    joined = _nullsafe_carry_join(rows, summary, key_col)
-    # session id = prefix sessions + (this chunk's first-row flag, which the
-    # in-chunk cumsum could not see) + in-chunk running flags
-    sess = F.col("_prefix") + F.col("_first_flag") + F.col("_cum_in")
-    return joined.withColumn("_sess", sess).drop(
-        "_us", "_ck", "_flag_in", "_cum_in", "_first_flag", "_prefix"
-    )
-
-
-# ---------------------------------------------------------------------------
 # as-of: running max(payload struct), chunked
 # ---------------------------------------------------------------------------
 
@@ -281,8 +174,10 @@ def chunked_running_max(
     summary = summary.withColumn(
         "_pre", F.max("_cmax").over(w_s.rowsBetween(Window.unboundedPreceding, -1))
     ).select(key_col, "_ck", "_pre")
-    # no hint — see chunked_sessionize's carry join; null-safe for the
-    # same reason (a NULL-key/NULL-ts row must keep its carry)
+    # no join hint: a shuffle_hash hint measured no win at sf10 and ran
+    # out of memory at sf100 (its hash build cannot spill); the summary is
+    # small next to the data but not driver-sized at 100 TB (keys × days),
+    # so AQE's runtime statistics choose broadcast or sort-merge
     joined = _nullsafe_carry_join(rows, summary, key_col)
     merged = (
         F.when(F.col("_m_in").isNull(), F.col("_pre"))
@@ -435,8 +330,8 @@ def chunked_rolling(
     as a scalar (a short chunk would need rows from two chunks back), so
     the carry is the CUMULATIVE form instead: global row index and
     cumulative fixed-point sum / non-null count = within-chunk running
-    values + per-chunk scalar offsets (lag-cumsum over the summary table —
-    exactly the sessionize carry shape). The trailing frame is then a
+    values + per-chunk scalar offsets (a running sum over the summary
+    table). The trailing frame is then a
     difference of cumulatives AT ROW OFFSETS: row i's N-frame sum =
     cum(i) − cum(i−N), fetched with one LEFT self-equi-join per N on
     (key, idx−N) — hash-distributed over (key, idx), so a hot key's work

@@ -39,33 +39,37 @@ def _check(name, value, passed):
     )
 
 
-def _use_footer_stats(sf_dir: str) -> bool:
-    """Pick the completeness/freshness physical source by data scale
-    (mirrors ``relational._use_split_distinct``'s switch mechanics): above
-    the threshold the checks the parquet footers answer EXACTLY (row
-    counts, null counts, min/max — not estimates, per the parquet spec)
-    come from the O(files) metadata probe instead of the fact-table scan,
-    and the remaining scan reads only the columns the footers cannot
-    answer (avg/stddev/distinct). ``SPARK_GRAFT_FOOTER_STATS=0/1``
-    forces either shape; rows are identical by construction
-    (differential-asserted in tests/test_stats_probe.py)."""
-    from ..functions.scale import use_scale_shape
+# Lineitem rows at which the completeness/freshness checks move to the
+# parquet footers: lineitem's rows at sf0.5, the shape's flip point since
+# it was measured faster than the scan at sf10 (60 M rows; BENCH_SCALE_r07
+# round7_changes_measured).
+FOOTER_STATS_MIN_ROWS = 3_000_000
 
-    return use_scale_shape(sf_dir, "SPARK_GRAFT_FOOTER_STATS")
+
+def _use_footer_stats(spark: SparkSession, sf_dir: str) -> bool:
+    """True when lineitem has at least ``FOOTER_STATS_MIN_ROWS`` rows, read
+    exactly from its footers. Then the checks the footers answer exactly
+    (row counts, null counts, min/max — exact per the parquet spec, not
+    estimates) come from the O(files) metadata probe instead of the
+    fact-table scan, and the remaining scan reads only the columns the
+    footers cannot answer (avg/stddev/distinct). Rows are identical in
+    both shapes (tests/test_stats_probe.py)."""
+    rows = footer_rowcount_value(spark, os.path.join(sf_dir, "lineitem.parquet"))
+    return rows is None or rows >= FOOTER_STATS_MIN_ROWS
 
 
 def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per quality check, computed in a single pass per table and
     exploded from one aggregate row — the reference's 8 sequential probes
-    become 2 scans and zero driver-side logic. At scale
+    become 2 scans and zero driver-side logic. On a large lineitem
     (``_use_footer_stats``) the footer-answerable checks move to the
     metadata probe: the orders scan disappears entirely and the lineitem
     scan narrows to the two columns needing data pages."""
     li = load_table(spark, sf_dir, "lineitem")
 
     row = None
-    if _use_footer_stats(sf_dir):
-        # Footer shape, with an explicit fallback (ADVICE r7): parquet
+    if _use_footer_stats(spark, sf_dir):
+        # Footer shape, with an explicit fallback: parquet
         # files may legally lack column statistics (write_statistics=False)
         # or carry zero row groups — the strict metadata path raises
         # ValueError on them, and the query falls back to the scan shape
@@ -436,7 +440,11 @@ def footer_stats_row(spark: SparkSession, path: str) -> dict | None:
 
 def footer_rowcount_value(spark: SparkSession, path: str) -> int | None:
     """Driver-path row count (see ``footer_stats_row``): the exact total
-    when the file count permits driver-side footer reads, else None."""
+    when the file count permits driver-side footer reads, else None. The
+    row gates that pick a physical shape (``_use_footer_stats``,
+    ``relational._use_split_distinct``, ``similarity.q_embedding_spectrum``)
+    treat None — more than ``PROBE_DRIVER_MAX`` files — as above every
+    threshold: a table that large takes the large-data shape."""
     paths = _list_parquet_files(spark, path)
     if not paths:
         raise ValueError(f"no parquet files under {path}")

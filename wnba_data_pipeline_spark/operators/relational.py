@@ -64,31 +64,30 @@ def _dsum_sql(expr: str) -> str:
     return f"(CAST(sum(CAST(floor(({expr}) * {_DSCALE} + 0.5) AS BIGINT)) AS DOUBLE) / {_DSCALE})"
 
 
-_SCALE_SWITCH_SF = 0.5  # same threshold as bench.py's AQE-posture switch
+# Rows of the table a count-distinct runs over at which the split shape
+# takes over: lineitem's rows at sf0.5. Measured sides (BENCH_SCALE_r05
+# "split_distinct"): inline is faster for lineitem at sf0.1 (600 k rows);
+# split is faster for lineitem at sf10 (60 M) and events at sf10 (10 M).
+SPLIT_DISTINCT_MIN_ROWS = 3_000_000
 
 
-def _use_split_distinct(sf_dir: str) -> bool:
-    """Pick the count-distinct physical shape by data scale.
+def _use_split_distinct(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """True when table ``name`` has at least ``SPLIT_DISTINCT_MIN_ROWS``
+    rows, read exactly from its parquet footers.
 
     ``count_distinct`` alongside other aggregates compiles to an Expand
-    (every input row duplicated per grouping-set) — one scan, but the
-    doubled row volume through the partial agg dominates once the scan is
-    no longer floor-bound. The split plan computes the distinct count in
-    its own subtree and joins it back: one extra (tiny, broadcast) stage,
-    measured at sf10 (BENCH_SCALE_r05.json "split_distinct"): 38% faster
-    for quality_probe (1.065 s → 0.662 s — the Expand doubled 60 M rows
-    through the partial agg; the split subtree carries only the key) and
-    9% for tumbling_daily (its residual is the ~8 M-row distinct-tuple
-    shuffle itself, not the Expand — see the round-5 stage attribution);
-    slower at sf0.1 where the extra stage sits on the per-job floor
-    (BASELINE.md round-3 addendum). Threshold matches the bench's AQE
-    posture switch; ``SPARK_GRAFT_SPLIT_DISTINCT=0/1`` forces either shape
-    (the measurement override). For extreme scale where even the distinct
-    subtree's shuffle hurts, ``operators/sketches.py`` is the documented
-    approximate (HLL, mergeable-state) variant of the same probes."""
-    from ..functions.scale import use_scale_shape
+    that duplicates every input row per grouping set: one scan, but the
+    doubled rows through the partial aggregate dominate once the scan is
+    no longer bound by the per-job floor. The split shape computes the
+    distinct count in its own subtree and broadcast-joins it back: one
+    extra small stage, which costs more than it saves on small tables.
+    Both shapes return identical rows. Past the exact distinct's shuffle,
+    ``operators/sketches.py`` and ``q_tumbling_daily(approx=True)`` are
+    the approximate (HLL) answers."""
+    from .quality import footer_rowcount_value
 
-    return use_scale_shape(sf_dir, "SPARK_GRAFT_SPLIT_DISTINCT", threshold=_SCALE_SWITCH_SF)
+    rows = footer_rowcount_value(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return rows is None or rows >= SPLIT_DISTINCT_MIN_ROWS
 
 
 def _layout_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -920,22 +919,22 @@ def q_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     3σ outlier stats, distinct-count consistency) folded into ONE scan with
     partial aggregation — the reference runs 8 separate SQL probes.
 
-    Above the scale switch the distinct count moves to its own subtree
-    (distinct → count, broadcast-joined back onto the 1-row stats): the
-    inline ``count_distinct`` compiles to an Expand that doubles every row
-    through the partial agg, and at sf10 the split plan is measured faster
-    (see ``_use_split_distinct``). Both shapes return identical rows.
-    Layout-aware: on the bucketed lineitem the split-distinct subtree's
-    l_suppkey shuffle disappears (bucket-local distinct).
+    Two gates on lineitem's exact footer row count pick the physical
+    shape; every shape returns identical rows (tests/test_plans.py,
+    tests/test_stats_probe.py):
 
-    Round 7: above the same threshold the footer-answerable stats
-    (row/null counts, min/max, freshness) come from the O(files) parquet
-    metadata probe (``quality._use_footer_stats`` — same switch mechanics,
-    ``SPARK_GRAFT_FOOTER_STATS`` override, values exact per the parquet
-    spec), so the remaining fact scans read ONE column each
-    (l_extendedprice for the fixed-point sum + stddev, l_suppkey for the
-    distinct subtree) instead of four. Rows identical in all shapes
-    (differential-asserted in tests/test_stats_probe.py)."""
+    - ``quality._use_footer_stats``: the row/null counts, min/max and
+      freshness come from the parquet footers (exact per the parquet
+      spec), so the remaining scans read one column each
+      (l_extendedprice for the fixed-point sum and stddev, l_suppkey for
+      the distinct subtree). A table whose footers lack statistics falls
+      back to the scan shape.
+    - ``_use_split_distinct``: the distinct count moves to its own
+      subtree, broadcast-joined back onto the one-row stats, instead of
+      the inline ``count_distinct`` Expand.
+
+    Layout-aware: on the bucketed lineitem the distinct subtree's
+    l_suppkey shuffle disappears (bucket-local distinct)."""
     from .quality import (
         _use_footer_stats,
         footer_stats_row,
@@ -944,11 +943,11 @@ def q_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = _layout_table(spark, sf_dir, "lineitem")
-    if _use_footer_stats(sf_dir):
+    if _use_footer_stats(spark, sf_dir):
         # ValueError from the strict footer readers (statless files, zero
         # row groups — both legal parquet) falls through to the scan shape
-        # below instead of hard-failing at scale on valid data (ADVICE r7);
-        # the strict error stays on the explicit probe entry points.
+        # below instead of failing on valid data; the strict error stays
+        # on the explicit probe entry points.
         try:
             stats = li.agg(
                 _dsum("l_extendedprice").alias("_psum"),
@@ -1008,7 +1007,7 @@ def q_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("l_extendedprice").alias("price_min"),
         F.max(F.col("l_shipdate").cast("date")).alias("last_ship_date"),
     ]
-    if _use_split_distinct(sf_dir):
+    if _use_split_distinct(spark, sf_dir, "lineitem"):
         stats = li.agg(*base_aggs)
         distinct = li.select("l_suppkey").distinct().agg(
             F.count(F.lit(1)).alias("n_suppliers")
@@ -1558,59 +1557,30 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     new-session condition is strictly ``gap > 1800``). Plan: one shuffle on
     user_id; session merging happens inside the sort-based session agg; the
     same query runs under Structured Streaming with a watermark
-    (streaming/sessions.py). Layout-aware: on the bucketed events table
-    the user_id Exchange disappears, and (round 7, closes the 2.11x
-    marginal) the SHAPE switches to lag + gap-flag + running sum — the
-    window's required (user_id, ts) ordering is exactly the scan's
-    advertised sortBy order, so the plan runs with ZERO Exchange and
-    ZERO Sort, skipping session_window's sort + row-at-a-time
-    UpdatingSessionsIterator merge entirely. The round-6 rejection of
-    this shape was measured on the PLAIN layout (where it pays the same
-    sort and loses on the extra window pass); on the bucketed layout it
-    is 11% faster at sf10 (0.871 s vs 0.983 s min, identical 9.55 M
-    rows — BENCH_SCALE_r07). Identical results: ts ties share a session
-    under either formulation (gap 0 <= threshold merges), and min/count/
-    fixed-point-sum are tie-order-independent. The oracle's running sum
-    orders by (ts, event_id) — a DETERMINISTIC key for its ROWS frame
-    (round 8, VERDICT r7 item 3): with the lag on the same ordering, a
-    session-boundary flag can only land on the FIRST row of a ts-tie
-    group (later tie rows see gap 0), so every tie-peer receives the same
-    running sum — exactly the all-peers-included semantics of Spark's
-    default RANGE frame, under ANY physical tie order (planted
+    (streaming/sessions.py).
+
+    Layout-aware: on the bucketed events table the shape is lag +
+    gap-flag + running sum. The window's (user_id, ts) ordering is the
+    scan's advertised sort order, so that plan has no Exchange and no
+    Sort and skips session_window's row-at-a-time merge (11% faster at
+    sf10 on the bucketed layout, BENCH_SCALE_r07; slower on the plain
+    layout, where it pays the same sort plus an extra window pass). Both
+    shapes return identical rows: ts ties share a session under either
+    formulation (gap 0 merges), and min/count/fixed-point sum do not
+    depend on tie order. The oracle's running sum orders by (ts,
+    event_id), a deterministic key for its ROWS frame: with the lag on
+    the same ordering a session boundary can only land on the first row
+    of a ts-tie group, so every tie peer gets the same running sum,
+    matching Spark's RANGE frame under any physical tie order (planted
     boundary-tie case in tests/test_oracle_parity.py).
 
-    Hot-KEY posture (round 10, VERDICT r9 item 2 — measured, then
-    deliberately NOT auto-gated): a dominant user does serialize this
-    query's per-user sort onto one task, but the chunked carry-merge
-    rewrite (``chunked.chunked_sessionize``) measured SLOWER at BOTH
-    planted-skew regimes — sf10/33%-hot 1.28 s plain vs 3.18 s chunked,
-    sf100/33M-row-hot-key 7.6 s vs 18.0 s (BENCH_SCALE_r10
-    skew_windows) — because session_window's output IS the aggregate
-    (one shuffle+sort+merge total) while the chunked form must re-shuffle
-    every row a second time to group by (user, session). The asof /
-    range / rolling shapes, whose chunked forms DO win under a dominant
-    key, auto-gate on the sampled detector; sessionize keeps the plain
-    plan unless ``SPARK_GRAFT_CHUNKED_WINDOWS=1`` forces the chunked
-    shape (value-identical either way — tests/test_chunked.py)."""
-    from .chunked import chunked_sessionize, chunked_windows_enabled
-
+    No hot-key shape: a dominant user serializes the per-user sort onto
+    one task, but session_window's output is already the aggregate (one
+    shuffle, sort and merge), and a time-chunked carry-merge rewrite
+    measured slower at both planted-skew regimes (BENCH_SCALE_r10
+    skew_windows), because it must shuffle every row a second time to
+    group by (user, session)."""
     ev = _layout_table(spark, sf_dir, "events")
-    if chunked_windows_enabled(False):
-        return (
-            chunked_sessionize(ev, gap_s=SESSION_GAP_S)
-            .groupBy("user_id", "_sess")
-            .agg(
-                F.min("ts").alias("_start"),
-                F.count(F.lit(1)).alias("n_events"),
-                _r6(_dsum("value")).alias("value_sum"),
-            )
-            .select(
-                "user_id",
-                F.date_format(F.col("_start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-                "n_events",
-                "value_sum",
-            )
-        )
     if _is_bucketed(spark, sf_dir, "events"):
         from .temporal import _us
 
@@ -1679,64 +1649,38 @@ FROM numbered GROUP BY user_id, session_seq
 # ---------------------------------------------------------------------------
 
 
-def q_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tumbling_daily(spark: SparkSession, sf_dir: str, *, approx: bool = False) -> DataFrame:
     """Tumbling 1-day aggregation over the event stream table (SURVEY §2.J:
     the reference's 'streaming' is daily incremental batch; this is the batch
     twin of streaming/events.py's Structured Streaming query — identical
     grouping, so results can be cross-checked).
 
-    Above the scale switch the per-group user count splits into its own
-    distinct subtree joined back on the (tiny) group key (see
-    ``_use_split_distinct``): measured 9% faster at sf10, identical rows
-    either way. The round-5 stage attribution (BENCH_SCALE_r05.json)
-    shows the remaining cost is NOT a plan defect: (day, type, user) is
-    8.07 M distinct of 10 M events, so ANY exact-distinct shape shuffles
-    ~8 M tuples — that shuffle IS this query's sf10 signature.
-    ``streaming/events.py`` runs the same grouping incrementally.
+    The exact distinct user count has three physical shapes, all with
+    identical rows:
 
-    ``SPARK_GRAFT_APPROX_DISTINCT=1`` selects the third shape (round-6,
-    mirroring ``_use_split_distinct``'s switch mechanics): n_users becomes
-    a per-group HLL sketch estimate (``operators/sketches.py`` lg_k) — the
-    shuffle then carries one ≤16 KB sketch per (day, type) group instead
-    of ~8 M distinct tuples, which is the 100 TB answer when approximate
-    distinct is acceptable. Default OFF at every scale — the COMMITTED
-    posture (round 7, VERDICT r6 item 7): every shipped scale-switch
-    (split-distinct, footer stats, bucketed layout) changes plan physics
-    only, identical rows; a scale-triggered HLL default would be the
-    first switch that changes VALUES, making results depend on the sf
-    dir — approximation stays an explicit opt-in. The ≤5% error bound is
-    asserted in tests/test_sketches.py; sf10: HLL 1.80× vs DuckDB with
-    2.07% measured max error vs 5.53× exact (BENCH_SCALE_r07.json).
+    - inline ``count_distinct`` (the Expand) on small tables;
+    - the split shape when events has at least ``SPLIT_DISTINCT_MIN_ROWS``
+      rows (``_use_split_distinct``): the per-group user count becomes
+      its own distinct subtree, joined back on the small group key. It
+      still shuffles every distinct (day, type, user) tuple, about 8 M of
+      10 M events at sf10, which is this query's cost at scale;
+    - on the user-bucketed events layout, a fused shape: a bucket-local
+      ``groupBy(day, type, user_id)`` with count and fixed-point sum (no
+      Exchange: bucketing on user_id satisfies the grouping's
+      distribution), then ``groupBy(day, type)`` whose partial
+      aggregate sends only groups × partitions rows over the network;
+      ``n_users`` counts the unique first-level rows
+      (tests/test_catalog.py).
 
-    Layout-aware (late round 6): on the user-bucketed events table the
-    split subtree's ``distinct`` becomes BUCKET-LOCAL — HashPartitioning
-    on user_id satisfies the clustered distribution of (day, type,
-    user_id), so the EXACT shape stops shuffling ~8 M distinct tuples;
-    only per-partition partial counts cross the wire. The one exact-
-    distinct signature cost this query had disappears on the production
-    layout (measured in BENCH_SCALE_r06).
-
-    Round 8 (VERDICT r7 item 1 — the exact shape's residual): on the
-    bucketed layout the split plan still paid TWO scans (base agg +
-    distinct subtree) and two 10 M-row hash passes. The FUSED shape does
-    everything in one: a bucket-local ``groupBy(day, type, user_id)``
-    carrying count + fixed-point sum (zero Exchange — same subset rule as
-    the distinct), then a second-level ``groupBy(day, type)`` whose
-    map-side partial agg means only ~groups×partitions partial rows cross
-    the wire; ``n_users = count(*)`` of the unique first-level rows.
-    Identical values by associativity of count/int64-sum (identity
-    plan-asserted and row-compared in tests/test_catalog.py; measured in
-    BENCH_SCALE_r08).
-
-    STATUS (round 10, VERDICT r9 item 7 — file closed): the exact shape's
-    3.74× vs DuckDB at sf100 is an ACCEPTED engine constant — linear in
-    groups across two measured decades, with the sort+lag alternative at
-    parity and HLL measured 3.3 s / 2.6% err. No further optimization is
-    planned; the user-facing decision table lives in README (exact
-    default / HLL opt-in / mergeable sketch state for repeated windows)."""
+    ``approx=True`` answers a different question: ``n_users`` becomes a
+    per-group HLL sketch estimate (``operators/sketches.py`` ``LG_K``),
+    so the shuffle carries one small sketch per (day, type) group instead
+    of the distinct tuples. The error bound is asserted in
+    tests/test_sketches.py. The registry calls the exact default; README
+    has the exact/HLL/mergeable-sketch decision table."""
     ev = _layout_table(spark, sf_dir, "events")
     day = F.col("ts").cast("date").alias("day")
-    if os.environ.get("SPARK_GRAFT_APPROX_DISTINCT") == "1":
+    if approx:
         from .sketches import LG_K
 
         return ev.groupBy(day, "event_type").agg(
@@ -1754,13 +1698,13 @@ def q_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         # count("user_id"), not count(1): the NULL-user group (if any)
         # must not count as a user — count_distinct in the plain shape
         # excludes NULLs, and the layout switch must not change values
-        # (round-8 review fix; null-free driver data is unaffected)
+        # (null-free driver data is unaffected)
         return per_user.groupBy("day", "event_type").agg(
             F.sum("_c").alias("n_events"),
             _r6((F.sum("_s") / _DSCALE).cast("double")).alias("value_sum"),
             F.count("user_id").alias("n_users"),
         )
-    if _use_split_distinct(sf_dir):
+    if _use_split_distinct(spark, sf_dir, "events"):
         base = ev.groupBy(day, "event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             _r6(_dsum("value")).alias("value_sum"),

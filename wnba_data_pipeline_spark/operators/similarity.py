@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import hashlib
 import os as _os
-import re as _re
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -1034,19 +1033,13 @@ FROM (
 
 POWER_ITERS = 60
 SPECTRUM_SCHEMA = "label int, n_vecs long, top_eig double, explained double, total_var double"
-_SPECTRUM_SCALE_SF = 0.5  # same threshold family as relational's split-distinct switch
+# Embeddings rows at which the spectrum switches to the Gram partial-moments
+# shape: 5× the 2,000 rows of the largest fixture (sf0.1), the rows the
+# scaled copies reach at sf0.5. Every fixture keeps the pandas shape, whose
+# per-label groups fit an executor there; the Gram shape bounds executor
+# memory by batch size when a dominant label could not fit.
+SPECTRUM_GRAM_MIN_ROWS = 10_000
 _VAR_EPS = 1e-9  # below this total variance the group is numerically degenerate
-
-
-def _sf_of(sf_dir: str) -> float:
-    """Scale factor parsed from the directory name; ONLY a physical-plan
-    selector (never semantics), so unparseable paths — no 'sf<digits>'
-    token, or a degenerate 'sf.' segment — fall back to 0.0 (the
-    smallest-scale physical shape) instead of raising (round-5 ADVICE).
-    Callers that know better pass the explicit ``mode=``/env override."""
-    from ..functions.scale import sf_of_path
-
-    return sf_of_path(sf_dir)
 
 
 def _top_eig(C) -> float:
@@ -1199,15 +1192,15 @@ def embedding_spectrum(emb: DataFrame, *, mode: str = "pandas") -> DataFrame:
 
 
 def q_embedding_spectrum(spark: SparkSession, sf_dir: str, *, mode: str | None = None) -> DataFrame:
-    """Spectrum over the ``embeddings`` table; physical path picked by data
-    scale (pandas below the switch — fewest moving parts at test SF; Gram
-    partial-moments above it, where a dominant label group would OOM the
-    grouped-pandas path). ``SPARK_GRAFT_SPECTRUM_MODE=pandas|gram`` forces
-    either shape (the measurement/equality-test override)."""
+    """Spectrum over the ``embeddings`` table. ``mode`` picks the physical
+    shape (see ``embedding_spectrum``); by default the table's exact footer
+    row count does: ``"gram"`` from ``SPECTRUM_GRAM_MIN_ROWS`` rows up,
+    else ``"pandas"``."""
     if mode is None:
-        mode = _os.environ.get("SPARK_GRAFT_SPECTRUM_MODE") or (
-            "gram" if _sf_of(sf_dir) >= _SPECTRUM_SCALE_SF else "pandas"
-        )
+        from .quality import footer_rowcount_value
+
+        rows = footer_rowcount_value(spark, _os.path.join(sf_dir, "embeddings.parquet"))
+        mode = "gram" if rows is None or rows >= SPECTRUM_GRAM_MIN_ROWS else "pandas"
     return embedding_spectrum(load_table(spark, sf_dir, "embeddings"), mode=mode)
 
 
