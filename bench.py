@@ -5,6 +5,9 @@ and prints ONE JSON line:
     {"metric": "headline_warm_total", "value": <sum of per-query best>,
      "unit": "sec", "queries": {"agg_multi": sec, ...}, "sf": 0.1}
 
+``sf`` is a label read off the directory name; the AQE, shuffle and split
+posture comes from lineitem's parquet footer row count.
+
 Methodology matches BASELINE.md ("compare warm query execution time, session
 already up, after one warm-up run"): each query's DataFrame is built ONCE
 (prepared-statement style — DuckDB's parse+plan is sub-ms, so including
@@ -43,9 +46,10 @@ HEADLINE = (
 WARMUPS = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "2"))
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "8"))  # best-of-N: local timings wobble ±15%; min is the stable statistic
 
-# Per-query posture overrides, applied only at big scale (sf >= 0.5) right
-# before each query's forces (the noop write builds a fresh QueryExecution
-# per run, so conf changes take effect per query). rolling_5: the round-5
+# Per-query posture overrides, applied only at big scale (lineitem at or
+# above SPLIT_DISTINCT_MIN_ROWS, about sf0.5) right before each query's
+# forces (the noop write builds a fresh QueryExecution per run, so conf
+# changes take effect per query). rolling_5: the round-5
 # variance probe (BENCH_SCALE_r05.json "rolling_5_variance_probe") showed
 # the 60 M-row window query's spread tightens markedly with AQE OFF at an
 # equal min (max 21 s → 9.3 s) — its plan is one wide sort stage, so AQE's
@@ -61,11 +65,27 @@ def _force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # a label for the JSON line only; the posture below reads the data
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
+    from wnba_data_pipeline_spark.operators.quality import footer_rowcount_value
+    from wnba_data_pipeline_spark.operators.relational import SPLIT_DISTINCT_MIN_ROWS
     from wnba_data_pipeline_spark.session import get_spark
     import __spark_entry__ as entrymod
+
+    # The session starts with only the scale-independent confs; the footer
+    # row count of lineitem (read on the driver, no Spark job) then picks
+    # the posture, as the package's row gates do. More files than the
+    # driver probe reads (None) counts as big.
+    spark = get_spark(
+        "wnba-pipeline-bench",
+        extra_confs={
+            "spark.sql.files.openCostInBytes": "256k",
+            "spark.local.dir": "/dev/shm/spark-bench-local",
+        },
+    )
+    rows = footer_rowcount_value(spark, os.path.join(sf_dir, "lineitem.parquet"))
 
     # Local-scale tuning (documented in session.get_spark). These queries
     # finish in 0.1-0.6 s at sf0.1, so fixed per-stage costs dominate and
@@ -74,9 +94,10 @@ def main() -> None:
     #    its own job; at sub-second scale that round-trip costs more than
     #    any re-plan saves (measured: headline total 1.93 s -> 1.45 s).
     #    SPARK_GRAFT_AQE=1 publishes the AQE-on (cluster-posture) column.
-    #  - static shuffle partitions: 8 at sf<=0.1 (plenty for <1 M-row
-    #    shuffles, fewer tasks to schedule); 32 at the 10x scale where the
-    #    per-partition sort/agg volume, not scheduling, dominates.
+    #  - static shuffle partitions: 8 below the split-distinct row bar
+    #    (plenty for <1 M-row shuffles, fewer tasks to schedule); 32 above
+    #    it, where the per-partition sort/agg volume, not scheduling,
+    #    dominates.
     #  - 4 MB splits: the sf0.1 files are ~10 MB; the default 128 MB
     #    maxPartitionBytes would scan on 1-3 tasks (under-parallel), 1 MB on
     #    ~30 (scheduling-bound); ~4 tasks/file is the sweet spot, and at
@@ -86,25 +107,21 @@ def main() -> None:
     # AQE default follows measurement: OFF at sub-second sf0.1 (the stage
     # round-trips cost more than re-planning saves: 1.36 s vs 1.44 s) but
     # ON from sf1 up (coalescing wins: 1.99 s vs 2.22 s at sf1) — which is
-    # also the cluster posture.
-    big = sf is not None and sf >= 0.5
+    # also the cluster posture. The bar, SPLIT_DISTINCT_MIN_ROWS (3 M
+    # lineitem rows), sits between the two (sf0.5).
+    big = rows is None or rows >= SPLIT_DISTINCT_MIN_ROWS
     aqe_on = os.environ.get("SPARK_GRAFT_AQE", "1" if big else "0") == "1"
     shuffle = int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "32" if big else "8"))
     # split size targets ~1 scan task per core at the data's scale: 4 MB
-    # for the ~10 MB sf0.1 files, 48 MB at the 1.4 GB sf10 scale (measured
-    # best: 340 4-MB tasks spend more on scheduling than scanning — sf10
-    # agg_multi 1.99 s at 4 MB vs 0.74 s at 48 MB)
-    split = os.environ.get("SPARK_GRAFT_BENCH_SPLIT", "48m" if (sf or 0) >= 5 else "4m")
-    spark = get_spark(
-        "wnba-pipeline-bench",
-        shuffle_partitions=shuffle,
-        extra_confs={
-            "spark.sql.adaptive.enabled": "true" if aqe_on else "false",
-            "spark.sql.files.maxPartitionBytes": split,
-            "spark.sql.files.openCostInBytes": "256k",
-            "spark.local.dir": "/dev/shm/spark-bench-local",
-        },
-    )
+    # for the ~10 MB sf0.1 files, 48 MB from 10× the bar (sf5; measured
+    # best at the 1.4 GB sf10 scale: 340 4-MB tasks spend more on
+    # scheduling than scanning — sf10 agg_multi 1.99 s at 4 MB vs 0.74 s
+    # at 48 MB)
+    huge = rows is None or rows >= 10 * SPLIT_DISTINCT_MIN_ROWS
+    split = os.environ.get("SPARK_GRAFT_BENCH_SPLIT", "48m" if huge else "4m")
+    spark.conf.set("spark.sql.adaptive.enabled", "true" if aqe_on else "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", split)
     qs = entrymod.queries()
     # rolling_5 stays the bench headline (it is BASELINE.md's rolling_win
     # analog) but the registered query is the merged rolling_5_10 — build

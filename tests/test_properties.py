@@ -105,11 +105,19 @@ _md5_text = st.text(
 @_SETTINGS
 def test_md5_long_python_spark_duckdb_agree(sp, extra):
     """The md5 → 60-bit rank is one value in Python (``md5_long_py``, the
-    fit's seed ranks), Spark (``md5_long``) and DuckDB (``md5_long_sql``):
-    empty, multibyte, negative-id and long strings included."""
+    fit's seed ranks; ``md5_long_bytes`` over the UTF-8 bytes and the
+    memoized ``md5_long_memo``, the Arrow gram passes), Spark
+    (``md5_long``) and DuckDB (``md5_long_sql``): empty, multibyte,
+    negative-id and long strings included."""
     import duckdb
 
-    from wnba_data_pipeline_spark.functions.hashing import md5_long, md5_long_py, md5_long_sql
+    from wnba_data_pipeline_spark.functions.hashing import (
+        md5_long,
+        md5_long_bytes,
+        md5_long_memo,
+        md5_long_py,
+        md5_long_sql,
+    )
 
     strings = _md5_edges + extra
     rows = list(enumerate(strings))
@@ -122,3 +130,9 @@ def test_md5_long_python_spark_duckdb_agree(sp, extra):
     con.close()
     py_h = {i: md5_long_py(s) for i, s in rows}
     assert py_h == spark_h == duck_h
+    assert {i: md5_long_bytes(s.encode()) for i, s in rows} == py_h
+    # both key types, each called twice: the second call is a cache hit
+    memo = md5_long_memo()
+    for _ in range(2):
+        assert {i: memo(s) for i, s in rows} == py_h
+        assert {i: memo(s.encode()) for i, s in rows} == py_h

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_PRIME as P
-from ..functions.hashing import md5_long, md5_long_sql, minhash_coeffs
+from ..functions.hashing import md5_long, md5_long_bytes, md5_long_sql, minhash_coeffs
 from ..sources.tables import load_table
 
 # Band geometry (round 9, VERDICT r8 item 3): the sf30 candidate anatomy
@@ -445,7 +445,7 @@ def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
     - ``text.split(" ")`` ≡ ``string_split`` (inner AND trailing empty
       words kept);
     - first-occurrence dedup (dict.fromkeys) ≡ ``list_distinct``'s set;
-    - ``int(md5(utf8).hexdigest()[:15], 16)`` ≡ ``md5_long_sql``;
+    - ``md5_long_bytes`` over the UTF-8 bytes ≡ ``md5_long_sql``;
     - texts under 3 words shingle to the whole text; a NULL text to
       sh=[NULL], hh=[NULL].
 
@@ -463,11 +463,12 @@ def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
     funnel's persisted cache. The strings are still built transiently
     (the hashes are defined over them), but never serialized across the
     Python→JVM boundary."""
-    import hashlib
-
     import pandas as pd
 
     def _batch(it):
+        # uncached: 3-word shingles are mostly distinct, so a memo would
+        # cost a dict insert per gram and save little
+        h = md5_long_bytes
         for pdf in it:
             sh_out, hh_out = [], []
             for text in pdf["text"]:
@@ -487,12 +488,7 @@ def shingle_docs(docs: DataFrame, *, hh_only: bool = False) -> DataFrame:
                     tris = [text]
                 if not hh_only:
                     sh_out.append(tris)
-                hh_out.append(
-                    [
-                        int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-                        for s in tris
-                    ]
-                )
+                hh_out.append([h(s.encode("utf-8")) for s in tris])
             cols = {"doc_id": pdf["doc_id"]}
             if not hh_only:
                 cols["sh"] = sh_out

@@ -19,8 +19,8 @@ tested.
 Payloads are built in-plan from ``documents.text`` (``encode(text,
 'UTF-8')``), which makes even the Python-UDF path ORACLE-CHECKABLE: the
 texts are ASCII, so byte values equal code points (DuckDB ``ord``), and the
-frame hashes use hashlib md5 — the same md5→int64 contract as the SQL side
-(``functions/hashing.py``).
+frame hashes use ``md5_long_bytes`` — the same md5→int64 contract as the
+SQL side (``functions/hashing.py``).
 
 Scale posture (100 TB): payload work is embarrassingly parallel map stages;
 mapInPandas streams Arrow batches (no per-row Python crossing, no driver
@@ -30,14 +30,13 @@ exactly like this — nothing here assumes the fake."""
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long_sql
+from ..functions.hashing import md5_long_bytes, md5_long_sql
 from ..sources.tables import load_table
 
 FRAME_MOD = 5  # fake stream yields (n_bytes % 5) + 1 frames
@@ -169,8 +168,8 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1→N frame sampling: each payload ("video") expands to
     ``n_bytes % 5 + 1`` frame rows inside the executor — the mapInPandas
     output schema differs from the input AND multiplies rows, the shape a
-    real frame sampler needs. Frame ids use hashlib md5 → the same int64
-    contract the SQL oracle computes."""
+    real frame sampler needs. Frame ids use ``md5_long_bytes`` → the same
+    int64 contract the SQL oracle computes."""
     docs = load_table(spark, sf_dir, "documents")
     binary = attach_payload(docs)
 
@@ -181,7 +180,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_frames = len(payload) % FRAME_MOD + 1
                 for idx in range(n_frames):
                     key = payload + b":" + str(idx).encode()
-                    h = int(hashlib.md5(key).hexdigest()[:15], 16)
+                    h = md5_long_bytes(key)
                     out["doc_id"].append(doc_id)
                     out["frame_idx"].append(idx)
                     out["frame_hash"].append(h)

@@ -29,14 +29,13 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import hashlib
 import os as _os
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long, md5_long_sql
+from ..functions.hashing import md5_long, md5_long_py, md5_long_sql
 from ..sources.tables import load_table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -436,7 +435,7 @@ def _nd_coeffs(band: int, plane: int) -> list[int]:
     determinism. Only the sign of Σ v[i]·k[i] matters, so the /1000
     normalization is dropped entirely."""
     return [
-        int(hashlib.md5(f"nd:{band}:{plane}:{i}".encode()).hexdigest()[:15], 16) % 2001 - 1000
+        md5_long_py(f"nd:{band}:{plane}:{i}") % 2001 - 1000
         for i in range(DIM)
     ]
 

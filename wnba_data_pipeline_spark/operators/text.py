@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long, md5_long_sql
+from ..functions.hashing import md5_long, md5_long_bytes, md5_long_memo, md5_long_sql
 from ..sources.tables import load_table
 
 # tiny fixed stopword list — embedded identically in the oracle SQL
@@ -72,6 +72,24 @@ def _count_in_sql(words: str, vocab_sql: str) -> str:
 # against those twins in tests/test_text_arrow.py.
 
 
+def _word_gram_hasher(n_words: int, *, distinct: bool):
+    """One task's text → word ``n_words``-gram hash list: ``str.split(" ")``
+    (≡ ``string_split``), every window of ``n_words`` words joined by one
+    space, hashed through ``md5_long_memo`` (word grams repeat across docs
+    over a shared vocabulary, so each distinct gram is hashed once per
+    task). ``distinct`` keeps each hash's first occurrence (≡
+    ``list_distinct``'s set). Texts with fewer than ``n_words`` words give
+    an empty list. Call once per task; the cache lives in the closure."""
+    h = md5_long_memo()
+
+    def grams(text: str) -> list[int]:
+        words = text.split(" ")
+        hs = [h(" ".join(words[i : i + n_words])) for i in range(len(words) - n_words + 1)]
+        return list(dict.fromkeys(hs)) if distinct else hs
+
+    return grams
+
+
 def word_gram_hash_rows(
     docs: DataFrame,
     *,
@@ -90,28 +108,12 @@ def word_gram_hash_rows(
     occurrence of a hash; ``with_pos`` adds the 0-based gram start as an
     int ``pos``."""
     assert not (distinct and with_pos)
-    import hashlib
-
     import pandas as pd
 
     oid = out_id or id_col
 
     def _batch(it):
-        md5 = hashlib.md5
-        # Round 15, second pass: word grams repeat heavily across docs
-        # (small shared vocabulary), so each task hashes every distinct
-        # gram STRING once and serves repeats from a dict — the md5 +
-        # int.from_bytes work drops to once per distinct gram; values are
-        # identical by construction (same bytes, same 60-bit fold).
-        cache: dict[str, int] = {}
-
-        def _h(g: str) -> int:
-            h = cache.get(g)
-            if h is None:
-                h = int.from_bytes(md5(g.encode("utf-8")).digest()[:8], "big") >> 4
-                cache[g] = h
-            return h
-
+        grams = _word_gram_hasher(n_words, distinct=distinct)
         for pdf in it:
             ids_out: list[int] = []
             pos_out: list[int] = []
@@ -119,13 +121,7 @@ def word_gram_hash_rows(
             for did, text in zip(pdf[id_col], pdf["text"]):
                 if text is None:
                     continue
-                words = text.split(" ")
-                m = len(words) - n_words + 1
-                if m <= 0:
-                    continue
-                hs = [_h(" ".join(words[i : i + n_words])) for i in range(m)]
-                if distinct:
-                    hs = list(dict.fromkeys(hs))
+                hs = grams(text)
                 ids_out.extend([did] * len(hs))
                 gh_out.extend(hs)
                 if with_pos:
@@ -137,14 +133,13 @@ def word_gram_hash_rows(
             yield pd.DataFrame(cols)
 
     schema = f"{oid} long" + (", pos int" if with_pos else "") + ", gh long"
-    # scan-level prefilter (round 16, VERDICT r15 item 4): the Python loop
-    # skips NULL texts and docs that cannot hold n_words words, but an
-    # opaque mapInPandas hides that from the optimizer — without the plan
-    # filter those rows pay parquet decode + the Arrow crossing for
-    # nothing, and the scan loses its pushed IsNotNull. n words need at
-    # least n-1 separators (words may be empty), so length >= n-1 is
-    # implied by the Python gate — rows dropped here emit nothing either
-    # way, values unchanged.
+    # scan-level prefilter: the Python loop skips NULL texts and docs that
+    # cannot hold n_words words, but an opaque mapInPandas hides that from
+    # the optimizer — without the plan filter those rows pay parquet
+    # decode + the Arrow crossing for nothing, and the scan loses its
+    # pushed IsNotNull. n words need at least n-1 separators (words may be
+    # empty), so length >= n-1 is implied by the Python gate — rows
+    # dropped here emit nothing either way, values unchanged.
     sel = docs.select(F.col(id_col).alias(id_col), "text").filter(
         F.col("text").isNotNull() & (F.length("text") >= n_words - 1)
     )
@@ -428,7 +423,7 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     window slices via DuckDB list_slice.
 
     The per-position md5 and per-window min run in one Arrow pass
-    (``_winnow_stats_rows``: hashlib md5, numpy sliding min, exact int64
+    (``_winnow_stats_rows``: memoized md5, numpy sliding min, exact int64
     throughout); the division/round stays plan-side so the double
     arithmetic is a codegen expression. The registry row only reads the
     fingerprint SET's size/min/max, so the pass never materializes the
@@ -457,23 +452,19 @@ def _winnow_stats_rows(docs: DataFrame, *, k: int, w: int) -> DataFrame:
     hash byte slices of the one-time UTF-8 encoding (identical bytes);
     multibyte texts fall back to per-slice encoding (edge rows for both
     in tests/test_text_arrow.py)."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
     def _batch(it):
-        md5 = hashlib.md5
-        # Round 15, second pass: positional grams repeat heavily (measured
-        # 111× at sf0.1 — 13 005 distinct among 1.45 M total), so each
-        # Arrow batch stacks EVERY doc's gram bytes into one matrix, runs
-        # ONE np.unique(return_inverse) across the whole batch, hashes
-        # only the distinct grams (dict-cached across batches within the
-        # task), and scatters the hashes back per position. One Python
-        # md5 call per distinct gram instead of per position — hash
-        # values are identical bytes-for-bytes (same md5, same 60-bit
-        # fold), so windows, minima and the registry row are unchanged.
-        cache: dict[bytes, int] = {}
+        # Positional grams repeat heavily (measured 111× at sf0.1 — 13 005
+        # distinct among 1.45 M total), so each Arrow batch stacks EVERY
+        # doc's gram bytes into one matrix, runs ONE
+        # np.unique(return_inverse) across the whole batch, hashes only
+        # the distinct grams (memoized across batches within the task),
+        # and scatters the hashes back per position: one md5 per distinct
+        # gram instead of per position, the same values.
+        h = md5_long_memo()
+        kb = md5_long_bytes
         # k = 8 bytes packs a gram into one uint64 — np.unique on a native
         # integer dtype sorts ~2.5× faster than on the void record view
         # (measured 0.86 s vs 2.12 s over 1.45 M grams)
@@ -502,13 +493,7 @@ def _winnow_stats_rows(docs: DataFrame, *, k: int, w: int) -> DataFrame:
                     ascii_rows.append((did, m))
                 else:
                     hs = np.fromiter(
-                        (
-                            int.from_bytes(
-                                md5(text[i : i + k].encode("utf-8")).digest()[:8], "big"
-                            )
-                            >> 4
-                            for i in range(m)
-                        ),
+                        (kb(text[i : i + k].encode("utf-8")) for i in range(m)),
                         dtype=np.int64,
                         count=m,
                     )
@@ -520,14 +505,7 @@ def _winnow_stats_rows(docs: DataFrame, *, k: int, w: int) -> DataFrame:
                 # uint8 view (byte-order-safe for both the uint64 and the
                 # void dtype) before hashing
                 uview = np.ascontiguousarray(u).view(np.uint8).reshape(-1, k)
-                hu = np.empty(len(u), dtype=np.int64)
-                for idx in range(len(u)):
-                    gb = uview[idx].tobytes()
-                    h = cache.get(gb)
-                    if h is None:
-                        h = int.from_bytes(md5(gb).digest()[:8], "big") >> 4
-                        cache[gb] = h
-                    hu[idx] = h
+                hu = np.fromiter((h(g.tobytes()) for g in uview), dtype=np.int64, count=len(u))
                 hs_all = hu[inv]
             pos = 0
             rows: list[tuple[int, int, "np.ndarray"]] = []
@@ -1028,8 +1006,9 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit one executor. At 100 TB this is the standard decontamination sweep
     shape: corpus-side scan + broadcast eval grams.
 
-    In the driver registry since the round-5 rotation; the same DuckDB
-    twin also runs locally in tests/test_contamination.py."""
+    The probe and ``word_gram_hash_rows`` share one per-text gram loop
+    (``_word_gram_hasher``), so both sides hash grams identically. The
+    same DuckDB twin also runs locally in tests/test_contamination.py."""
     docs = load_table(spark, sf_dir, "documents")
     eval_rows = word_gram_hash_rows(
         docs.filter(F.col("doc_id") % EVAL_MOD == 0),
@@ -1042,33 +1021,15 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         eval_map.setdefault(r["gh"], []).append(r["eval_doc_id"])
 
     def _probe(it):
-        import hashlib
-
         import pandas as pd
 
-        md5 = hashlib.md5
-        cache: dict[str, int] = {}
-
-        def _h(g: str) -> int:
-            h = cache.get(g)
-            if h is None:
-                h = int.from_bytes(md5(g.encode("utf-8")).digest()[:8], "big") >> 4
-                cache[g] = h
-            return h
-
-        n_words = CONTAM_NGRAM
+        grams = _word_gram_hasher(CONTAM_NGRAM, distinct=True)
         for pdf in it:
             ids_out, top_out, n_out = [], [], []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
-                words = text.split(" ")
-                m = len(words) - n_words + 1
-                if m <= 0:
-                    continue
-                hs = dict.fromkeys(
-                    _h(" ".join(words[i : i + n_words])) for i in range(m)
-                )
+                hs = grams(text)
                 counts: dict[int, int] = {}
                 for g in hs:
                     for e in eval_map.get(g, ()):
