@@ -13,8 +13,9 @@ import uuid
 import duckdb
 import pytest
 
+from wnba_data_pipeline_spark import session
 from wnba_data_pipeline_spark.plans import layers
-from wnba_data_pipeline_spark.sources import tables
+from wnba_data_pipeline_spark.sources import sinks, tables
 from wnba_data_pipeline_spark.sources.sinks import json_export_files, read_table
 
 from .conftest import SF_SMOKE, assert_handle_matches_path
@@ -99,12 +100,13 @@ def test_run_all_handles_equal_reads_by_path(spark, tmp_path):
 
 
 def test_run_all_job_budget(spark, tmp_path, monkeypatch):
-    """With AQE off every write is one Spark job, so run_all's jobs are its
-    13 writes (2 upserts, 2 analytics tables, 1 feature table, 4 marts, 4
-    JSON exports), the schema inference of its 2 fixture loads, and the
-    parallel listing of each raw table with more month directories than
-    Spark's parallel partition-discovery threshold. Any other job would be
-    a schema-inference read of a table this process wrote."""
+    """With AQE off every write is one Spark job, so run_all's jobs are
+    exactly its 13 writes (2 upserts, 2 analytics tables, 1 feature table,
+    4 marts, 4 JSON exports) and the schema inference of its 2 fixture
+    loads. The raw handles' month directories are listed on the driver
+    (``session.DRIVER_LISTING_MAX_DIRS``), so no listing job runs. Any
+    other job would be a schema-inference read of a table this process
+    wrote."""
     monkeypatch.setattr(tables, "_HANDLES", {})  # fixture loads infer afresh
     base = str(tmp_path / "wh")
     sc = spark.sparkContext
@@ -118,14 +120,39 @@ def test_run_all_job_budget(spark, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-    paths = layers.layer_tables(base)
-    listings = sum(
-        len(glob.glob(os.path.join(paths[t], "*=*"))) > threshold
-        for t in ("raw.lineitem_box", "raw.orders_box")
-    )
     writes, fixture_loads = 13, 2
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == writes + fixture_loads + listings
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == writes + fixture_loads
+
+
+def test_raw_handle_listed_on_driver(spark, tmp_path):
+    # the raw handle of a table with more month directories than Spark's
+    # default parallel-discovery threshold (32) but fewer than the
+    # session's bound is built without a Spark job; at the default the same
+    # build is one listing job of one task per directory
+    base = str(tmp_path / "wh")
+    path = layers.layer_tables(base)["raw.lineitem_box"]
+    written = layers.run_raw_layer(spark, SF_SMOKE, base)["raw.lineitem_box"]
+    assert 32 < len(glob.glob(os.path.join(path, "*=*"))) <= session.DRIVER_LISTING_MAX_DIRS
+    sc = spark.sparkContext
+
+    def jobs_to_build_handle() -> int:
+        group = f"raw-handle-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "raw handle listing")
+        try:
+            sinks._read_written(written, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(key) == str(session.DRIVER_LISTING_MAX_DIRS)
+    assert jobs_to_build_handle() == 0
+    spark.conf.set(key, "32")
+    try:
+        assert jobs_to_build_handle() == 1
+    finally:
+        spark.conf.set(key, str(session.DRIVER_LISTING_MAX_DIRS))
 
 
 def _pool_threads() -> set:

@@ -8,6 +8,8 @@ import pytest
 
 import os
 
+from pyspark.sql.utils import is_remote
+
 import __spark_entry__ as entrymod
 from wnba_data_pipeline_spark.operators import clustering, pq
 from .conftest import SF_ORACLE
@@ -34,6 +36,33 @@ def test_query_matches_oracle(name, spark, duck):
         return
     ddf = duck.sql(_ORACLES[name]).df()
     compare(sdf, ddf, name)
+
+
+# the benchmark's registry scope: for each operator module with a fit-free
+# query its slowest one at sf0.01, plus rolling_5_10
+_WARM_SCOPE = (
+    "advanced_metrics", "rolling_5_10", "quality_report", "multimodal_features",
+    "dedup_minhash", "emb_near_dup", "hll_distinct_daily", "substring_spans",
+    "range_join_bins", "doc_winnow", "label_median_split",
+)
+
+
+@pytest.mark.skipif(is_remote(), reason="CodegenMetrics lives in the classic driver JVM")
+def test_warm_queries_compile_nothing(spark, duck):
+    # a query run again reuses the classes its first run compiled: the
+    # session's generated-class cache (session.CODEGEN_CACHE_ENTRIES)
+    # holds the scope's working set, where Spark's default of 100 entries
+    # recompiled about 200 classes on the second pass. Each run is a new
+    # Dataset, as a warm registry pass builds, and the second pass's rows
+    # still match the oracle.
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    dfs = {name: _QUERIES[name](spark, SF_ORACLE) for name in _WARM_SCOPE}
+    for sdf in dfs.values():
+        sdf.select("*").toPandas()
+    before = compiles.getCount()
+    for name, sdf in dfs.items():
+        compare(sdf.select("*"), duck.sql(_ORACLES[name]).df(), name)
+    assert compiles.getCount() == before
 
 
 def test_entry_smoke(spark):

@@ -18,6 +18,9 @@ Hand-off: every sink returns a schema-pinned read of what it wrote
 (``sources.sinks.overwrite_table``), and each layer returns those handles
 keyed like ``layer_tables``. ``run_all`` passes them to the next layer, so
 no read of a table this process just wrote launches a schema-inference job.
+Nor does building the raw handles launch a listing job: their month
+directories are fewer than ``session.DRIVER_LISTING_MAX_DIRS`` and are
+listed on the driver.
 A layer run on its own (no handles given) reads its inputs by path from the
 partitioned parquet warehouse, which stays the durable interface between
 layers, as the reference's DuckDB schemas are between its DAGs.

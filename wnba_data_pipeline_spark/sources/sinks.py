@@ -45,7 +45,10 @@ def _read_written(df: DataFrame, path: str) -> DataFrame:
     job. A file source reads a given schema the way it infers one: every
     field nullable (nested ones too) and the partition columns last. Only
     the writer may use it: a path another process rewrites needs
-    ``read_table``."""
+    ``read_table``. Building the read still lists the table's partition
+    directories; a session from ``session.get_spark`` lists up to
+    ``session.DRIVER_LISTING_MAX_DIRS`` of them (the raw tables' months) on
+    the driver, and more by a Spark job."""
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
