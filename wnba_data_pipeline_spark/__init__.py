@@ -8,6 +8,8 @@ Layout
 ------
 - ``session``    SparkSession factory (AQE on, tuned for local[32] testing,
                  scale-ready confs documented per setting).
+- ``worker_daemon`` the Python worker daemon ``session`` sets: zip archives
+                 on the workers' path are re-read only when they change.
 - ``sources``    table loaders for the driver's parquet star schema, the
                  REST fan-out ingest adapter, and append/overwrite sinks.
 - ``functions``  reusable Column-level expression library (avg_rank,

@@ -15,6 +15,15 @@ month directories are listed on the driver instead of by a
 one-task-per-directory job. A 100 TB table with more directories than the
 bound keeps the parallel listing; below it, on an object store, each
 directory costs the driver one listing call.
+
+Two confs serve both postures. ``spark.python.daemon.module`` runs the
+Python workers under ``worker_daemon``, so a task no longer re-reads the
+unchanged zip archives on the workers' path before it starts (CPython
+< 3.12). ``spark.executorEnv.PYTHONPATH`` puts the package root on that
+path. The daemon module needs it wherever the driver found the package
+through ``sys.path`` alone: if the daemon cannot import, every Python UDF
+fails. On a cluster the package must still be installed on, or shipped to,
+every executor.
 """
 
 from __future__ import annotations
@@ -83,6 +92,10 @@ CODEGEN_CACHE_ENTRIES = 2048
 # Above the bound the parallel listing stays.
 DRIVER_LISTING_MAX_DIRS = 1024
 
+# The directory that holds the package: Python workers need it on their
+# path to import the worker daemon and the operators' module functions.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "wnba-pipeline-spark",
@@ -99,6 +112,11 @@ def get_spark(
     across cores) without changing the 100 TB-posture defaults here.
     """
     cpus = default_parallelism()
+    confs = dict(extra_confs or {})
+    # the package root goes before any worker path the caller passes
+    worker_path = os.pathsep.join(
+        p for p in (PACKAGE_ROOT, confs.pop("spark.executorEnv.PYTHONPATH", "")) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -129,9 +147,14 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(DRIVER_LISTING_MAX_DIRS),
         )
+        # Python tasks skip re-reading unchanged zip archives (see
+        # worker_daemon); the package root on the workers' path lets the
+        # daemon and the operators' module functions import.
+        .config("spark.python.daemon.module", "wnba_data_pipeline_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_confs or {}).items():
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -152,6 +175,10 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     (``spark.sql.codegen.cache.maxEntries``, 100 entries): there a warm
     query may recompile its classes. Only ``get_spark`` sizes it. Nor is
     the listing bound set here: it is a speed setting, not a parity one.
+    The worker daemon (``spark.python.daemon.module``) is a core conf, fixed
+    when the SparkContext starts, so a handed-in session keeps Spark's own
+    daemon and its workers re-read every zip archive on their path before
+    each Python task.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
