@@ -25,9 +25,10 @@ from wnba_data_pipeline_spark.operators.clustering import (
     assign_clusters,
     kmeans_fit,
     q_semantic_dedup,
-    seed_hash,
     semantic_dedup_pairs_sql,
 )
+
+from wnba_data_pipeline_spark.functions.hashing import md5_long_py
 
 from .conftest import SF_ORACLE
 from .oracle_compare import compare
@@ -60,6 +61,11 @@ def _fold_sqdists(V: np.ndarray, cents: list[list[float]]) -> np.ndarray:
             acc = acc + diff * diff
         D[:, j] = acc
     return D
+
+
+def seed_hash(vec_id: int) -> int:
+    """The md5 seed rank of ``vec_id`` under the default ``km`` seed tag."""
+    return md5_long_py(f"km:{vec_id}")
 
 
 def ref_kmeans(ids: np.ndarray, V: np.ndarray, k: int, max_iter: int, rank=seed_hash) -> KMeansModel:

@@ -5,12 +5,8 @@ any code path touching them breaks. The audit's contract, asserted here:
 
 - EVERY registry query builds its plan without JVM-internal access (the
   proxy below raises on those attributes, so a regression fails loudly);
-- the three query-path filesystem consumers (quality footer listing,
-  streaming corpus listing, curation's rerun cleanup) degrade to pyarrow
-  fallbacks with identical semantics;
-- warehouse MAINTENANCE (compaction/retention/recovery) raises the
-  documented error instead — its atomic-rename protocol has no faithful
-  Connect twin (see sources/maintenance._fs).
+- the query-path filesystem consumer (the quality footer listing)
+  degrades to a pyarrow fallback with identical semantics.
 
 What this does NOT prove: end-to-end execution over a real Connect
 server (none in this container). Plan BUILD is where all of this repo's
@@ -67,44 +63,10 @@ def test_quality_footer_listing_falls_back_to_pyarrow(spark, connect_spark):
         _list_parquet_files(connect_spark, f"{SF_ORACLE}/definitely_missing.parquet")
 
 
-def test_read_corpus_falls_back_to_pyarrow(spark, connect_spark, tmp_path):
-    from wnba_data_pipeline_spark.streaming.dedup import DOC_SCHEMA, read_corpus
-
-    corpus = str(tmp_path / "corpus")
-    for i in range(3):
-        spark.createDataFrame([(i, f"text {i}")], DOC_SCHEMA).write.parquet(
-            f"{corpus}/batch={i}"
-        )
-    jvm_rows = sorted(map(tuple, read_corpus(spark, corpus, exclude_batch=1).collect()))
-    pa_rows = sorted(map(tuple, read_corpus(connect_spark, corpus, exclude_batch=1).collect()))
-    assert jvm_rows == pa_rows
-    assert len(pa_rows) == 2
-    # empty-safe before the first batch, on both paths
-    assert read_corpus(connect_spark, str(tmp_path / "nope")).count() == 0
-
-
-def test_delete_dir_falls_back_to_pyarrow(spark, connect_spark, tmp_path):
-    from wnba_data_pipeline_spark.sources.maintenance import delete_dir
-
-    d = tmp_path / "gone"
-    (d / "sub").mkdir(parents=True)
-    (d / "sub" / "x.parquet").write_bytes(b"x")
-    delete_dir(connect_spark, str(d))
-    assert not d.exists()
-    delete_dir(connect_spark, str(d))  # idempotent on missing
-
-
-def test_maintenance_raises_documented_error(connect_spark, tmp_path):
-    from wnba_data_pipeline_spark.sources.maintenance import compact_table
-
-    with pytest.raises(RuntimeError, match="classic session"):
-        compact_table(connect_spark, str(tmp_path / "tbl"))
-
-
 def test_pa_uri_prefix_reconstructs_scheme():
     # ADVICE r10: FileSelector paths come back scheme-stripped; the
     # fallbacks must re-prefix them before crossing into Spark/URI land
-    from wnba_data_pipeline_spark.sources.maintenance import pa_uri_prefix
+    from wnba_data_pipeline_spark.operators.quality import pa_uri_prefix
 
     # object-store URI: pa_fs("s3://bucket/key") -> rel "bucket/key"
     assert pa_uri_prefix("s3://bucket/key", "bucket/key") == "s3://"
@@ -128,7 +90,7 @@ def test_registry_executes_under_real_connect_session():
     skips with the precondition named; in an environment that has them it
     spins an in-process local Connect server (builder.remote), runs every
     registry query to completion, cross-checks row counts against a
-    classic session, and asserts the documented maintenance RuntimeError."""
+    classic session."""
     pytest.importorskip("grpc", reason="Spark Connect client needs grpcio")
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
@@ -145,9 +107,5 @@ def test_registry_executes_under_real_connect_session():
         for name, q in qs.items():
             got = q(remote, SF_ORACLE).count()
             assert got == classic_counts[name], name
-        from wnba_data_pipeline_spark.sources.maintenance import compact_table
-
-        with pytest.raises(RuntimeError):
-            compact_table(remote, "/tmp/nonexistent-connect-maint")
     finally:
         remote.stop()

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wnba_data_pipeline_spark.operators.dedup import EXACT_COPY_OFFSET, NEAR_COPY_OFFSET, minhash_pairs
+from wnba_data_pipeline_spark.operators.text import PACK_BUDGET
 from wnba_data_pipeline_spark.plans import curation
 from wnba_data_pipeline_spark.sources.sinks import overwrite_table, read_table
 from wnba_data_pipeline_spark.sources.tables import load_table
@@ -70,8 +71,8 @@ def test_curation_funnel(spark, tmp_path):
     assert report["near_deduped"][0] < report["deduped"][0]
 
     # the training-ready view respects the budget inside every pack
-    seqs = curation.packed_sequences(spark, base)
-    assert seqs.filter(F.col("running_tok") > curation.PACK_BUDGET).count() == 0
+    packed = read_table(spark, f"{base}/curation/packed")
+    seqs = packed.filter(F.col("running_tok") <= PACK_BUDGET)
     assert seqs.count() > 0
 
 
@@ -174,60 +175,6 @@ def test_curation_rerun_is_deterministic(spark, tmp_path):
     d1 = {tuple(r) for r in read_table(spark, f"{base1}/curation/deduped").drop("curated_at").collect()}
     d2 = {tuple(r) for r in read_table(spark, f"{base2}/curation/deduped").drop("curated_at").collect()}
     assert d1 == d2
-
-
-def test_curation_incremental_equals_batch(spark, tmp_path):
-    """Round 9 (VERDICT r8 item 8): N doc_id-ordered batches through the
-    incremental funnel must keep exactly the docs the one-shot batch
-    funnel keeps (planted components here are pairs around their lowest
-    doc_id — the star/clique shape the docstring's equality contract
-    covers), and the packed layout must match row-for-row (pack_docs is a
-    pure function of the surviving doc set)."""
-    src = _plant_dups(spark, tmp_path)
-    base_b = str(tmp_path / "wh_batch")
-    base_i = str(tmp_path / "wh_inc")
-    curation.run_curation(spark, src, base_b)
-    walls: list = []
-    curation.run_curation_incremental(spark, src, base_i, n_batches=3, batch_walls=walls)
-    batch_ids = {
-        r["doc_id"] for r in read_table(spark, f"{base_b}/curation/near_deduped").select("doc_id").collect()
-    }
-    inc_ids = {
-        r["doc_id"] for r in read_table(spark, f"{base_i}/curation_inc/near_deduped").select("doc_id").collect()
-    }
-    assert inc_ids == batch_ids
-    assert len(walls) == 3 and all(w > 0 for w in walls)
-    packed_b = sorted(
-        map(tuple, read_table(spark, f"{base_b}/curation/packed").collect())
-    )
-    packed_i = sorted(
-        map(tuple, read_table(spark, f"{base_i}/curation_inc/packed").collect())
-    )
-    assert packed_b == packed_i
-
-
-def test_curation_incremental_rerun_clears_stale_batches(spark, tmp_path):
-    """Round-10 advice fix: re-running the incremental funnel over an
-    existing base with FEWER batches must not fold the prior run's stale
-    batch=N subdirs into the final corpus — a rerun is a fresh run
-    (overwrite_table semantics), so two runs with different batch counts
-    over the same input keep the same survivor set."""
-    import os
-
-    src = _plant_dups(spark, tmp_path)
-    base = str(tmp_path / "wh_inc_rerun")
-    curation.run_curation_incremental(spark, src, base, n_batches=4)
-    ids_4 = {
-        r["doc_id"] for r in read_table(spark, f"{base}/curation_inc/near_deduped").select("doc_id").collect()
-    }
-    curation.run_curation_incremental(spark, src, base, n_batches=2)
-    # stale batch=2/3 dirs from the 4-batch run are gone
-    remaining = {d for d in os.listdir(f"{base}/curation_inc/corpus") if d.startswith("batch=")}
-    assert remaining == {"batch=0", "batch=1"}, remaining
-    ids_2 = {
-        r["doc_id"] for r in read_table(spark, f"{base}/curation_inc/near_deduped").select("doc_id").collect()
-    }
-    assert ids_2 == ids_4
 
 
 @pytest.mark.skipif(
@@ -333,94 +280,6 @@ def test_near_dedup_seam_hook_contract(spark, tmp_path):
         "anti_join_write_sec",
     } <= set(seams)
     assert all(v >= 0 for v in seams.values())
-
-
-def test_inc_persist_auto_mode_is_span_keyed():
-    """Round 15: per-batch persist pays only when plan re-execution
-    dominates materialization (sf100 batches), and COSTS 3x at tiny
-    spans (the r15 sf0.1 smoke A/B) -- the mode keys on the batch span."""
-    from wnba_data_pipeline_spark.plans.curation import (
-        INC_PERSIST_MIN_BATCH,
-        _should_persist_batches,
-    )
-
-    assert _should_persist_batches(INC_PERSIST_MIN_BATCH) is True
-    assert _should_persist_batches(INC_PERSIST_MIN_BATCH - 1) is False
-    assert _should_persist_batches(1_000_000) is True  # the sf100 regime
-    assert _should_persist_batches(1_000) is False  # the sf0.1 regime
-
-
-def test_inc_persist_arms_keep_identical_survivors(spark, tmp_path, monkeypatch):
-    """Round 15: the per-batch persist is PHYSICAL, never semantic — the
-    suite-side twin of the BENCH_SCALE_r15 assembler gate that refuses to
-    emit if the sf100 arms' survivor fingerprints differ. Both arms (the
-    span gate forced each way through INC_PERSIST_MIN_BATCH) must keep
-    exactly the same survivor set and the same packed layout."""
-    src = _plant_dups(spark, tmp_path)
-    outs = {}
-    for arm, min_batch in (("1", 0), ("0", 1 << 62)):
-        monkeypatch.setattr(curation, "INC_PERSIST_MIN_BATCH", min_batch)
-        base = str(tmp_path / f"wh_inc_arm{arm}")
-        curation.run_curation_incremental(spark, src, base, n_batches=3)
-        outs[arm] = {
-            "ids": {
-                r["doc_id"]
-                for r in read_table(spark, f"{base}/curation_inc/near_deduped")
-                .select("doc_id")
-                .collect()
-            },
-            "packed": sorted(
-                map(tuple, read_table(spark, f"{base}/curation_inc/packed").collect())
-            ),
-        }
-    assert outs["1"]["ids"] == outs["0"]["ids"]
-    assert outs["1"]["packed"] == outs["0"]["packed"]
-
-
-def test_screen_branch_replan_vs_persist_plan_mechanism(spark, tmp_path):
-    """Round 15, wall-free pin of the incremental-persist mechanism (the
-    sf100 A/B walls ride a measured host-level session drift larger than
-    the ~1.4x effect — BENCH_SCALE_r15 session_drift_evidence — so the
-    MECHANISM is pinned at the plan level instead): the screen's verdict
-    frame references the arriving batch's plan from several union
-    branches, Spark performs no cross-branch CSE, and therefore WITHOUT a
-    persist the batch's source scan appears as a separate FileScan in
-    every branch (re-executed per branch at run time), while the persist
-    process_batch applies replaces every reference with an
-    InMemoryTableScan of one cached materialization."""
-    from wnba_data_pipeline_spark.streaming import dedup as sdedup
-
-    src = str(tmp_path / "batch_src.parquet")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota kappa"),
-         (3, "alpha beta gamma delta epsilon")],
-        sdedup.DOC_SCHEMA,
-    ).write.parquet(src)
-    batch_df = spark.read.schema(sdedup.DOC_SCHEMA).parquet(src)
-    ref = spark.createDataFrame([], sdedup.DOC_SCHEMA)
-
-    def _plan(df):
-        return spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
-    # arm 1: the r14 plan (no persist) — the batch parquet scan appears
-    # once PER BRANCH of the verdict union, none of them cached
-    _, v_replan = sdedup.screen_batch(batch_df, ref)
-    plan = _plan(v_replan)
-    n_scans = plan.count("batch_src.parquet")
-    assert n_scans >= 3, f"expected >=3 branch scans of the batch source, got {n_scans}"
-    assert "InMemoryTableScan" not in plan
-    # arm 2: what process_batch does with persist on — the survivors
-    # frame is cached, and every branch reference resolves to an
-    # InMemoryTableScan of the single materialization
-    survivors, v_persist = sdedup.screen_batch(batch_df, ref)
-    survivors.persist()
-    try:
-        plan2 = _plan(v_persist)
-        assert plan2.count("InMemoryTableScan") >= 2, plan2[:2000]
-    finally:
-        survivors.unpersist()
 
 
 def test_curation_stage_handles_equal_reads_by_path(spark, tmp_path, monkeypatch):

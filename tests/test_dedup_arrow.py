@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from wnba_data_pipeline_spark.functions.hashing import md5_long_sql, minhash_coeffs
 from wnba_data_pipeline_spark.operators import dedup
@@ -185,34 +184,11 @@ def test_hh_verify_pairs_equal_sh_verify(spark):
     assert sh == hh and len(sh) > 0
 
 
-def test_hh_verify_verdicts_equal_sh_verify(spark):
-    """incremental_verdicts under verify='hh' (the streaming ingest
-    screen's mode) matches the string contract on the planted
-    incremental fixture — verdicts, matched refs, and jaccard values."""
-    from wnba_data_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
-    ref = docs.filter(F.col("doc_id") % 10 < 8)
-    batch = docs.filter(F.col("doc_id") % 10 >= 8)
-    sh = sorted(
-        tuple(r) for r in dedup.incremental_verdicts(batch, ref, verify="sh").collect()
-    )
-    hh = sorted(
-        tuple(r) for r in dedup.incremental_verdicts(batch, ref, verify="hh").collect()
-    )
-    assert sh == hh and len(sh) > 0
-
-
 def test_verify_dial_validation():
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="verify"):
         dedup.minhash_pairs(None, verify="bogus")
-    with _pytest.raises(ValueError, match="verify"):
-        dedup.incremental_verdicts(None, None, verify="nope")
-    # the signature index stores hh only: sh verify against it must refuse
-    with _pytest.raises(ValueError, match="hh"):
-        dedup.incremental_verdicts(None, None, ref_index={}, verify="sh")
 
 
 def test_forced_slicing_keeps_pairs(spark):

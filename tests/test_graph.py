@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wnba_data_pipeline_spark.operators.dedup import _shingles
+from wnba_data_pipeline_spark.operators.dedup import shingle_docs
 from wnba_data_pipeline_spark.operators.graph import cluster_survivors, connected_components
 
 
@@ -85,8 +85,7 @@ def test_multi_hop_near_dup_chain_dedups_transitively(spark):
         [(100, text0), (101, text1), (102, text2), (500, "completely different words here entirely unrelated")],
         "doc_id long, text string",
     )
-    words = F.split(F.col("text"), " ")
-    shingled = docs.select("doc_id", _shingles(F.col("text"), words).alias("sh"))
+    shingled = shingle_docs(docs).select("doc_id", "sh")
     a, b = shingled.alias("a"), shingled.alias("b")
     pairs = (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))

@@ -14,8 +14,14 @@ from .conftest import SF_ORACLE
 from .oracle_compare import compare
 
 
+def _hamming_topk(spark):
+    """Sign-signature Hamming top-3 for the sim_topk query set."""
+    sigs = similarity.binarize_embeddings(load_table(spark, SF_ORACLE, "embeddings"))
+    return similarity.hamming_topk(sigs, n_queries=similarity.N_QUERIES, k=similarity.HAM_TOP_K)
+
+
 def test_hamming_topk_matches_oracle(spark, duck):
-    sdf = similarity.q_hamming_topk(spark, SF_ORACLE)
+    sdf = _hamming_topk(spark)
     ddf = duck.sql(similarity.ORACLE_HAMMING_TOPK).df()
     compare(sdf, ddf, "hamming_topk")
 
@@ -49,7 +55,7 @@ def test_hamming_recall_vs_cosine(spark):
     }
     raw = {
         (r["q_vec_id"], r["n_vec_id"])
-        for r in similarity.q_hamming_topk(spark, SF_ORACLE).collect()
+        for r in _hamming_topk(spark).collect()
     }
     raw_recall = len(exact & raw) / len(exact)
     # > 10x chance, computed from the corpus (k/(n-1) per query) so the

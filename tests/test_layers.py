@@ -16,7 +16,7 @@ import pytest
 from wnba_data_pipeline_spark import session
 from wnba_data_pipeline_spark.plans import layers
 from wnba_data_pipeline_spark.sources import sinks, tables
-from wnba_data_pipeline_spark.sources.sinks import json_export_files, read_table
+from wnba_data_pipeline_spark.sources.sinks import read_table
 
 from .conftest import SF_SMOKE, assert_handle_matches_path
 
@@ -68,7 +68,7 @@ def test_full_pipeline(spark, tmp_path):
     assert parsed["as_of"] == layers.DEFAULT_AS_OF
 
     # JSON exports: single shard per mart, records parse and match counts
-    files = json_export_files(str(tmp_path / "warehouse" / "exports" / "top_suppliers"))
+    files = glob.glob(str(tmp_path / "warehouse" / "exports" / "top_suppliers" / "part-*"))
     assert len(files) == 1
     with open(files[0]) as f:
         recs = [json.loads(line) for line in f if line.strip()]

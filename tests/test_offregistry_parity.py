@@ -1,144 +1,22 @@
-"""Oracle-parity gates for queries rotated OUT of the capped 50-slot driver
-registry (round-5 rotation: doc_fingerprint → subsumed by doc_winnow,
-emb_near_dup → subsumed by emb_near_dup_bucketed, rank_global_marts →
-E4 covered by award_mart; round-6 rotation: freshness_now → H4/H7 also
-covered by scalar_funcs/quality_probe, seeded_noise → H8 fully
-property-covered in tests/test_noise.py). Rotation must not weaken their
-correctness story: the same hash-differential comparison the driver applies
-to registered queries runs here against the same DuckDB twins.
+"""Oracle parity for queries kept OFF the capped 50-slot driver registry.
+An off-registry query stays in the package only when no registered query
+has its shape; the same hash-differential comparison the driver applies
+to registered queries runs here against its DuckDB twin.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from wnba_data_pipeline_spark.operators import (
-    dedup,
-    multimodal,
-    relational,
-    similarity,
-    sketches,
-    temporal,
-    text,
-)
-from wnba_data_pipeline_spark.streaming import events as streaming_events
+from wnba_data_pipeline_spark.operators import relational
 
 from .conftest import SF_ORACLE
 from .oracle_compare import compare
 
 ROTATED = {
-    "doc_fingerprint": (text.q_doc_fingerprint, text.ORACLE_DOC_FINGERPRINT),
-    # emb_near_dup parked here rounds 5-12; the round-13 TWELFTH rotation
-    # put it BACK in-registry (the exact baseline beside its banded/celled/
-    # compressed scale paths).
-    "rank_global_marts": (relational.q_rank_global_marts, relational.ORACLE_RANK_GLOBAL_MARTS),
-    "freshness_now": (relational.q_freshness_now, relational.ORACLE_FRESHNESS_NOW),
+    # SURVEY §2 H8: the reference's seeded noise column, hash-derived here
+    # so both engines draw the same values (properties in tests/test_noise.py)
     "seeded_noise": (relational.q_seeded_noise, relational.ORACLE_SEEDED_NOISE),
-    # second rotation (late round 6): slots freed for substring_spans /
-    # unigram_ppl / dedup_incremental — see operators/relational.py registry
-    # comment for the per-§2-row coverage argument
-    "ratio_derive": (relational.q_ratio_derive, relational.ORACLE_RATIO_DERIVE),
-    "union_tagged": (relational.q_union_tagged, relational.ORACLE_UNION_TAGGED),
-    "kpi_json": (relational.q_kpi_json, relational.ORACLE_KPI_JSON),
-    # fourth rotation (round 6): slots freed for the temporal joins
-    # (asof_attribution, range_join_bins). Both rotated-out queries are the
-    # explicitly-labeled ground-truth BASELINES of families whose scale
-    # paths stay in-registry (sim_ann_lsh/sim_ivf; dedup_minhash/
-    # dedup_incremental) — see the registry comments in similarity.py and
-    # dedup.py.
-    # sim_topk parked here rounds 6-11; the round-12 ELEVENTH rotation put
-    # it BACK in-registry next to hamming_rerank's first driver row.
-    "ngram_jaccard": (dedup.q_ngram_jaccard, dedup.ORACLE_NGRAM_JACCARD),
-    # fifth rotation (round 7): simhash_fingerprint parked here until the
-    # round-10 NINTH rotation put it BACK in-registry.
-    # sixth rotation (round 7): slot freed for pq_rerank's hard driver row
-    # (static fitted-codebook oracle, operators/pq.py). frame_sample was
-    # parked here until the round-9 eighth rotation put it BACK in-registry.
-    # seventh rotation (round 8): slots freed for chunk_docs and
-    # hard_negatives_bucketed's hard driver rows. Both rotated-out queries
-    # are single-shuffle aggregation shapes whose §2-row coverage is
-    # duplicated by text_stats / text_corpus_rollup / tfidf_top_terms
-    # (identical posexplode-and-agg physics) — see text.py registry comment.
-    "lang_id_agreement": (text.q_lang_id_agreement, text._oracle_lang_id()),
-    "bigram_topk": (text.q_bigram_topk, text.ORACLE_BIGRAM_TOPK),
-    # eighth rotation (round 9, VERDICT r8 item 6): slots freed for
-    # url_domains, frame_sample (returning), and ivfpq_search's hard driver
-    # rows. dedup_incremental's band-join physics is dedup_minhash's (which
-    # keeps its row); corpus_sample's hash-gate sampling is
-    # mixture_sample's; pq_rerank's ADC+rerank runs INSIDE ivfpq_search's
-    # probed-cell path.
-    "dedup_incremental": (dedup.q_dedup_incremental, dedup.ORACLE_DEDUP_INCREMENTAL),
-    "corpus_sample": (text.q_corpus_sample, text._oracle_corpus_sample()),
-    # pq_rerank parked here rounds 9-10; the round-11 TENTH rotation put it
-    # BACK in-registry.
-    # ninth rotation (round 10, VERDICT r9 item 5): slots freed for
-    # heavy_hitters_cms, simhash_fingerprint (returning) and
-    # hopping_6h_batch. group_tail_n's window-tail physics is
-    # award_mart/rolling_5_10's window family; json_extract_events' H10
-    # JSON surface stays covered by scalar_funcs + kpi_json (already in
-    # this table); argmax_leader's max_by ordered-first physics is
-    # advanced_metrics' D3 ordered-first.
-    # group_tail_n parked here rounds 10-13; the round-14 THIRTEENTH
-    # rotation put it BACK in-registry (E5's only carrier — the
-    # longest-parked row).
-    "json_extract_events": (relational.q_json_extract_events, relational.ORACLE_JSON_EXTRACT_EVENTS),
-    "argmax_leader": (relational.q_argmax_leader, relational.ORACLE_ARGMAX_LEADER),
-    # tenth rotation (round 11, VERDICT r10 item 5): slots freed for
-    # range_agg_binjoin (the two-table bin-join range form, never had a
-    # driver row) and pq_rerank (returning). text_corpus_rollup's
-    # agg-over-agg token physics is text_stats' + tfidf_top_terms'
-    # (both in-registry); sim_ann_lsh's SRP band buckets are
-    # emb_near_dup_bucketed's and its celled probe is sim_ivf's +
-    # ivfpq_search's (all in-registry).
-    "text_corpus_rollup": (text.q_text_corpus_rollup, text.ORACLE_TEXT_CORPUS_ROLLUP),
-    "sim_ann_lsh": (similarity.q_sim_ann_lsh, similarity.ORACLE_SIM_ANN_LSH),
-    # eleventh rotation (round 12, VERDICT r11 item 6): slots freed for
-    # hamming_rerank (the Hamming prefilter+rerank family's FIRST driver
-    # row) and sim_topk (returning — the exact-cosine baseline of the query
-    # set hamming_rerank compresses). simhash_fingerprint's 64-bit
-    # fingerprint + Hamming arithmetic is hamming_rerank's packed-sign
-    # physics plus doc_winnow's in-registry fingerprint row; url_domains'
-    # regex-extract + per-key rollup is text_stats'/tfidf_top_terms'
-    # single-shuffle agg physics (planted-blocklist ground truth stays in
-    # test_contamination.py).
-    "simhash_fingerprint": (dedup.q_simhash_fingerprint, dedup.ORACLE_SIMHASH),
-    "url_domains": (text.q_url_domains, text.ORACLE_URL_DOMAINS),
-    # twelfth rotation (round 13): slots freed for hll_distinct_daily (the
-    # sketch family's first hash-exact driver row, operators/sketches.py)
-    # and emb_near_dup (returning). count_distinct_groups' D2 exact-distinct
-    # physics is tumbling_daily's in-registry count_distinct (incl. the
-    # split-distinct scale form) and the HLL row is its documented 100 TB
-    # swap; frame_sample's 1→N in-executor expansion is chunk_docs'
-    # in-registry explode shape beside multimodal_features' harder Arrow
-    # decode row.
-    "count_distinct_groups": (
-        relational.q_count_distinct_groups,
-        relational.ORACLE_COUNT_DISTINCT_GROUPS,
-    ),
-    "frame_sample": (multimodal.q_frame_sample, multimodal.ORACLE_FRAME_SAMPLE),
-    # thirteenth rotation (round 14, VERDICT r13 item 6): slots freed for
-    # hh_cms_vs_exact (the CMS accuracy audit's first driver row,
-    # operators/text.py) and group_tail_n (returning — E5's only carrier).
-    # range_agg_binjoin's two-table trailing-range physics is
-    # range_join_bins' (in-registry; same oracle SQL by construction, and
-    # the bin-join≡window twin equality stays pinned in
-    # tests/test_temporal.py); hopping_6h_batch's hopping-window physics
-    # is tumbling_daily's windowed agg + chunk_docs' 1→N expansion, with
-    # the stream≡batch twin in tests/test_streaming.py and the planted
-    # null-ts oracle in tests/test_oracle_parity.py.
-    "range_agg_binjoin": (temporal.range_agg_binjoin, temporal.ORACLE_RANGE_JOIN_BINS),
-    "hopping_6h_batch": (
-        streaming_events.hopping_6h_batch,
-        streaming_events.ORACLE_HOPPING_6H,
-    ),
-    # hll_vs_exact (the sketch family's accuracy audit — exact distinct vs
-    # the portable-HLL estimate vs 2x the documented rsd, the
-    # hh_cms_vs_exact pattern; operators/sketches.py) was drafted as the
-    # fourteenth-rotation candidate during the interrupted round-15
-    # build; round 15 shipped as an OPTIMIZATION round (registry frozen
-    # at the r14 set), so it is parity-gated here instead, ready for a
-    # future rotation.
-    "hll_vs_exact": (sketches.q_hll_vs_exact, sketches.ORACLE_HLL_VS_EXACT),
 }
 
 
@@ -149,14 +27,13 @@ def test_rotated_query_matches_oracle(name, spark, duck):
 
 
 def test_rotated_queries_stay_off_registry():
-    # the rotation is intentional: none of these may silently re-enter the
-    # capped registry and displace a checked slot
+    # none of these may silently enter the capped registry and displace a
+    # checked slot, and the registered queries below hold driver rows
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     assert not set(ROTATED) & set(qs)
-    # and their replacements hold hard driver rows
-    for newcomer in (
+    for registered in (
         "contamination_check",
         "sequence_packing",
         "trend_stats",
@@ -167,23 +44,14 @@ def test_rotated_queries_stay_off_registry():
         "asof_attribution",
         "range_join_bins",
         "semantic_dedup",
-        # eighth rotation (round 9; url_domains re-rotated out in round 12,
-        # frame_sample re-rotated out in round 13)
         "ivfpq_search",
-        # ninth rotation (round 10; simhash_fingerprint re-rotated out in
-        # round 12, hopping_6h_batch re-rotated out in round 14)
         "heavy_hitters_cms",
-        # tenth rotation (round 11; range_agg_binjoin re-rotated out in
-        # round 14)
         "pq_rerank",
-        # eleventh rotation (round 12)
         "hamming_rerank",
         "sim_topk",
-        # twelfth rotation (round 13)
         "hll_distinct_daily",
         "emb_near_dup",
-        # thirteenth rotation (round 14)
         "hh_cms_vs_exact",
         "group_tail_n",
     ):
-        assert newcomer in qs
+        assert registered in qs

@@ -133,40 +133,3 @@ def test_sessionize_oracle_deterministic_on_boundary_ties(spark, tmp_path):
     con.close()
 
 
-def test_hopping_oracle_matches_on_null_ts(spark, tmp_path):
-    # ADVICE r10: Spark's F.window DROPS null-ts rows; the DuckDB twin
-    # must filter them too (WHERE ts IS NOT NULL in the inner SELECT) or
-    # it emits a NULL win_start group counting each null-ts event 4x.
-    import datetime as dt
-
-    import duckdb
-
-    from wnba_data_pipeline_spark.streaming import events as se
-    from .oracle_compare import compare
-
-    t0 = dt.datetime(2024, 3, 1, 2, 15, 0)
-    rows = [
-        (1, t0, 1, "click", 1.5, "{}"),
-        (2, t0 + dt.timedelta(hours=7), 1, "view", 2.0, "{}"),
-        (3, None, 2, "click", 3.0, "{}"),  # the planted NULL ts
-        (4, t0 + dt.timedelta(days=1), 2, "view", 4.0, "{}"),
-        (5, None, 3, "view", 5.0, "{}"),
-    ]
-    sf_dir = str(tmp_path / "nullts_sf")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "ev_stage"))
-    part = next(f for f in os.listdir(str(tmp_path / "ev_stage")) if f.endswith(".parquet"))
-    os.rename(
-        os.path.join(str(tmp_path / "ev_stage"), part), os.path.join(sf_dir, "events.parquet")
-    )
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')")
-    sdf = se.hopping_6h_batch(spark, sf_dir)
-    ddf = con.sql(se.ORACLE_HOPPING_6H).df()
-    compare(sdf, ddf, "hopping_null_ts")
-    # the null-ts rows are really gone from both sides (3 live events x 4 windows)
-    assert sdf.agg({"n_events": "sum"}).collect()[0][0] == 12
-    con.close()

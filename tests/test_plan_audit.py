@@ -30,7 +30,6 @@ BNLJ_OK = {
     "quality_probe",  # 1-row stats x 1-row distinct-count cross
     "quality_report",  # 1-row lineitem stats x 1-row orders stats
     "agg_over_agg",  # per-group agg x 1-row global normalizer
-    "corpus_sample",  # 1-row quality-threshold subquery crossed on
     "mixture_sample",  # 1-row cap row (min over groups) crossed on
     "tfidf_top_terms",  # 1-row corpus doc-count broadcast
     "label_median_split",  # 1-row global median crossed on
@@ -39,7 +38,6 @@ BNLJ_OK = {
     "contamination_check",  # 1-row eval-gram count
     "unigram_ppl",  # 1-row corpus token total
     "sequence_packing",  # 1-row pack-count cap
-    "argmax_leader",  # 1-row per-metric max crossed for the lookup
     # broadcast-small-side by construction (not 1-row, but bounded by the
     # fixed query set / centroid table — never corpus x corpus):
     "pq_rerank",  # ADC scan: Q broadcast queries x compressed codes, with

@@ -1,7 +1,6 @@
 """Recall gate for the bucketed near-dup path: the banded-LSH candidate
 join must recover EXACTLY the all-pairs exact result — the property that
-makes it a valid 100 TB substitute for the cartesian baseline (the same
-relationship ``dedup_minhash`` has to ``ngram_jaccard``).
+makes it a valid 100 TB substitute for the cartesian baseline.
 
 The (planes, bands) = (8, 16) config was tuned on the actual corpus: the
 planted pairs' cosines sit at 0.87-0.93, right at the 0.9 threshold, so
@@ -11,6 +10,8 @@ sweep runs via SPARK_GRAFT_TEST_SF_DIR.
 """
 
 from __future__ import annotations
+
+import pytest
 
 from wnba_data_pipeline_spark.operators import similarity
 from wnba_data_pipeline_spark.sources.tables import load_table
@@ -252,3 +253,11 @@ def test_hot_bucket_salting_bounds_tasks_and_preserves_rows(spark, monkeypatch):
     assert cand_salted.exceptAll(cand_cold).count() == 0
     assert cand_cold.exceptAll(cand_salted).count() == 0
     assert cand_salted.count() > 0
+
+
+def test_sim_topk_query_rows_over_budget_raise(spark, monkeypatch):
+    # the query-set collect is bounded: N_QUERIES rows while vec_id is
+    # unique; more than the budget fails the plan build with it named
+    monkeypatch.setattr(similarity, "QUERY_ROWS_MAX", similarity.N_QUERIES - 1)
+    with pytest.raises(ValueError, match=f"QUERY_ROWS_MAX={similarity.N_QUERIES - 1}"):
+        similarity.q_sim_topk(spark, SF_ORACLE)

@@ -28,7 +28,7 @@ def _scan_subset(df):
 
 
 def test_meta_probe_matches_scan_probe(spark):
-    got = quality.q_quality_probe_meta(spark, SF_ORACLE).collect()[0].asDict()
+    got = quality.parquet_stats_probe(spark, f"{SF_ORACLE}/lineitem.parquet").collect()[0].asDict()
     want = _scan_subset(load_table(spark, SF_ORACLE, "lineitem")).collect()[0].asDict()
     assert got == want
 

@@ -104,6 +104,52 @@ def test_python_workers_run_the_guard(classic_spark):
     assert got == {f"_invalidate_if_changed@{worker_daemon.__file__}"}
 
 
+def test_python_workers_import_installed_pyspark(classic_spark):
+    """The daemon moved pyspark.zip and the py4j archive behind the
+    installed packages, so workers import compiled modules, not sources
+    read from an archive."""
+
+    def report(batches):
+        import pandas as pd
+        import py4j
+        import pyspark
+
+        for _ in batches:
+            yield pd.DataFrame({"pyspark": [pyspark.__file__], "py4j": [py4j.__file__]})
+
+    rows = classic_spark.range(4, numPartitions=2).mapInPandas(report, "pyspark string, py4j string").collect()
+    files = {f for r in rows for f in (r.pyspark, r.py4j)}
+    assert len(files) == 2
+    assert not any(".zip" in f for f in files), files
+
+
+def _archive(path, pkg: str, version: str) -> str:
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{pkg}/__init__.py", "")
+        zf.writestr(f"{pkg}/version.py", f"__version__: str = {version!r}\n")
+    return str(path)
+
+
+def test_version_mismatch_keeps_archives_first(tmp_path):
+    import py4j.version
+    import pyspark
+
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    pyspark_zip = _archive(lib / "pyspark.zip", "pyspark", pyspark.__version__)
+    py4j_zip = _archive(lib / "py4j-0.0.0-src.zip", "py4j", py4j.version.__version__)
+    installed = [p for p in sys.path if ".zip" not in p]
+
+    path = [pyspark_zip, py4j_zip, *installed]
+    worker_daemon.prefer_installed_pyspark(path)
+    assert path == [*installed, pyspark_zip, py4j_zip]
+
+    _archive(lib / "pyspark.zip", "pyspark", "0.0.0")
+    path = [pyspark_zip, py4j_zip, *installed]
+    worker_daemon.prefer_installed_pyspark(path)
+    assert path == [pyspark_zip, py4j_zip, *installed]
+
+
 def test_add_py_file_imports_on_warm_workers(classic_spark, tmp_path):
     sc = classic_spark.sparkContext
     assert sc.range(0, 8, numSlices=4).map(lambda x: x + 1).sum() == 36  # warm workers

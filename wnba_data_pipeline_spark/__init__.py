@@ -9,9 +9,11 @@ Layout
 - ``session``    SparkSession factory (AQE on, tuned for local[32] testing,
                  scale-ready confs documented per setting).
 - ``worker_daemon`` the Python worker daemon ``session`` sets: zip archives
-                 on the workers' path are re-read only when they change.
-- ``sources``    table loaders for the driver's parquet star schema, the
-                 REST fan-out ingest adapter, and append/overwrite sinks.
+                 on the workers' path are re-read only when they change,
+                 and pyspark imports from the installed package.
+- ``sources``    table loaders for the driver's parquet star schema, bounded
+                 driver collects, the REST fan-out ingest adapter, and the
+                 overwrite/upsert sinks.
 - ``functions``  reusable Column-level expression library (avg_rank,
                  rolling means, cross-engine deterministic hashing,
                  text/vector expressions).
@@ -19,8 +21,8 @@ Layout
                  dedup, similarity search, text analysis + corpus curation,
                  multimodal (binary payload) processing, ML.
 - ``plans``      reference-domain layer jobs (raw → analytics →
-                 ml_features → dashboard) over canonical schemas.
-- ``streaming``  Structured Streaming twins of the batch event queries.
+                 ml_features → dashboard) over canonical schemas, the
+                 curation funnel, and the bucketed catalog layout.
 """
 
 __version__ = "0.1.0"

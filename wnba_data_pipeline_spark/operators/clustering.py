@@ -79,6 +79,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_py
+from ..sources.tables import collect_bounded
 from .similarity import DIM, _augmented_corpus, _cosine_sql, _dot
 
 # fixed-point scales: components are O(1) floats, so round(x*1e9) is exact
@@ -140,13 +141,6 @@ SD_NPROBE = 2  # cells probed per vector in the dedup candidate join — the
 # lost (measured 27/32 planted pairs at sf0.01); with the top-2 cells both
 # sides of a boundary-straddling pair overlap (measured 32/32), at ~nprobe²×
 # the candidate volume — still k/nprobe² times under all-pairs
-
-
-def seed_hash(vec_id: int | str) -> int:
-    """The md5 seed rank of ``vec_id`` under the default ``km`` seed tag
-    (``functions/hashing.md5_long_py``) — exported so the test reference
-    can replicate seed choice exactly."""
-    return md5_long_py(f"km:{vec_id}")
 
 
 def _sqdist(v: Column, centroid: list[float]) -> Column:
@@ -305,18 +299,16 @@ def _sample_gate(df: DataFrame, id_col: str, mod: int) -> DataFrame:
 
 
 def _collect_bounded(df: DataFrame, id_col: str, vec_col: str):
-    """(ids, X) of ``df`` in ONE Arrow collect, ``limit``-bounded so the job
-    never returns more than FIT_SAMPLE_MAX_VALUES // DIM + 1 rows; None
-    when the frame is over the value budget."""
+    """(ids, X) of ``df`` in ONE Arrow collect, bounded so the job never
+    returns more than FIT_SAMPLE_MAX_VALUES // DIM + 1 rows; None when the
+    frame is over the value budget."""
     import numpy as np
 
-    max_rows = FIT_SAMPLE_MAX_VALUES // DIM
-    pdf = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v"))
-        .limit(max_rows + 1)
-        .toPandas()
+    pdf = collect_bounded(
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")),
+        FIT_SAMPLE_MAX_VALUES // DIM,
     )
-    if len(pdf) > max_rows:
+    if pdf is None:
         return None
     X = np.array(pdf["_v"].tolist(), dtype=np.float64)
     return (pdf["_id"].tolist(), X) if X.size <= FIT_SAMPLE_MAX_VALUES else None

@@ -1,5 +1,5 @@
 """Deduplication operators over the ``documents`` table — exact content-hash
-dedup, MinHash-LSH near-duplicate detection, and SimHash fingerprints.
+dedup and MinHash-LSH near-duplicate detection.
 
 These are the LLM-training-data operators the reference pipeline does not
 have but a 100 TB corpus pipeline needs (the build brief's north star; the
@@ -24,8 +24,6 @@ Scale posture (100 TB):
 - minhash: candidates come from BANDED BUCKETS (explode k/r band keys,
   group on band_key) — pair work ~ O(colliding pairs), never the all-pairs
   O(n²); exact Jaccard runs once per candidate, inside its bucket group.
-- simhash: embarrassingly parallel map (no shuffle at all); downstream
-  near-dup grouping is a groupBy on the 16-bit fingerprint.
 """
 
 from __future__ import annotations
@@ -82,17 +80,13 @@ BAND_ROWS = 4  # rows per band → 4 bands; P(candidate) = 1-(1-j⁴)⁴
 # S-curve midpoint (~0.77) and j=0.9 per-pair detection 0.966 vs 0.986 —
 # a SEMANTIC dial, so it is an explicit caller choice
 # (``run_curation(band_geometry=...)``), never a silent scale switch:
-# the incremental funnel's increment-equals-batch contract requires both
-# paths to run the same detector, and a corpus-size auto-dial would break
-# it the moment batch sizes and corpus sizes straddle the cut.
+# the S-curve midpoint decides which pairs count as duplicates.
 GEOMETRY_LARGE_N = (48, 8)  # the measured-cure (K, band_rows) at n ≳ 1M
 N_BANDS = K_MINHASH // BAND_ROWS
 COEFFS = minhash_coeffs(K_MINHASH)  # seeded — identical constants both engines
 
 EXACT_COPY_OFFSET = 2_000_000  # doc_id offset for planted exact copies
 NEAR_COPY_OFFSET = 1_000_000  # doc_id offset for planted near-copies
-SIMHASH_BITS = 16
-
 # LSH band buckets above this many rows are sliced into pair groups of at
 # most 2 × HOT_BUCKET_MIN rows (see band_slices). The sf30 organic
 # maximum bucket was 359 rows (BENCH_SCALE_r09 minhash_probe), so only
@@ -166,21 +160,6 @@ FROM hashed WHERE rn = 1
 # ---------------------------------------------------------------------------
 # MinHash-LSH near-dup — shingle → k-hash signature → banded bucket join
 # ---------------------------------------------------------------------------
-
-
-def _shingles(text: Column, words: Column) -> Column:
-    """Distinct 3-word shingles; texts under 3 words fall back to the whole
-    text as a single shingle (both engines guard identically)."""
-    tri = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(3)),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(words, i + F.lit(1)),
-            F.element_at(words, i + F.lit(2)),
-            F.element_at(words, i + F.lit(3)),
-        ),
-    )
-    return F.array_distinct(F.when(F.size(words) >= 3, tri).otherwise(F.array(text)))
 
 
 _SHINGLES_SQL = """list_distinct(CASE WHEN len(words) >= 3
@@ -385,8 +364,7 @@ def banded_keys(
 # one-line pointer at GEOMETRY_LARGE_N when the ESTIMATED LSH pair volume
 # per doc crosses the fitted break-even — surfacing the sf100 finding
 # where users meet it while preserving the explicit-dial contract (no
-# auto-switch: the S-curve midpoint is semantics, and increment-equals-
-# batch needs ONE detector across both paths). The fitted constants:
+# auto-switch: the S-curve midpoint is semantics). The fitted constants:
 # the r10 sf100 run measured ~14.6 µs/candidate of pure verification cost
 # and 6.5 candidates/doc under the default geometry (19.1 M over 2.93 M
 # docs) — the regime where the sharp geometry's 69× candidate cut beats
@@ -730,382 +708,12 @@ SELECT doc_a, doc_b, jaccard FROM (
 ORACLE_DEDUP_MINHASH = _oracle_dedup_minhash()
 
 
-# ---------------------------------------------------------------------------
-# n-gram Jaccard — blocked all-pairs exact similarity (the non-LSH baseline)
-# ---------------------------------------------------------------------------
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard near-dup detection with BLOCKED all-pairs:
-    candidate pairs come from equality on (lang, source) plus a length
-    proximity guard, not from hashing. This is the exact baseline the
-    MinHash-LSH path (``q_dedup_minhash``) approximates.
-
-    Scale posture: the quadratic term is bounded by the largest block, so
-    the blocking key choice IS the scale knob — (lang, source) caps block
-    size at corpus/|blocks|, and the ±40-char length band cuts surviving
-    pairs ~10×. Still O(block²) worst-case: at 100 TB you either add a
-    sharper blocking key (e.g. a SimHash prefix from
-    ``q_simhash_fingerprint``) or switch to the LSH path; this operator is
-    the ground-truth oracle you validate that approximation against at sampled
-    scale. (Word 3-grams, not char n-grams: the synthetic corpus draws from
-    a ~31-word vocabulary, so char-4-gram sets saturate and separate
-    nothing, while the ~29k-point trigram space keeps organic pairs far
-    below the 0.5 threshold.)
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    pert = docs.filter(F.col("n_chars") >= 200).select(
-        (F.col("doc_id") + F.lit(NEAR_COPY_OFFSET)).alias("doc_id"),
-        F.regexp_replace(F.col("text"), " [^ ]+$", "").alias("text"),
-        "lang",
-        "source",
-    )
-    aug = docs.select("doc_id", "text", "lang", "source").unionByName(pert)
-    words = F.split(F.col("text"), " ")
-    shingled = aug.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.length("text").alias("nc"),
-        _shingles(F.col("text"), words).alias("sh"),
-    )
-    a, b = shingled.alias("a"), shingled.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.abs(F.col("a.nc") - F.col("b.nc")) <= F.lit(40)),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(
-                F.size(F.array_intersect("a.sh", "b.sh")) / F.size(F.array_union("a.sh", "b.sh")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
-
-
-ORACLE_NGRAM_JACCARD = f"""
-WITH aug AS (
-  SELECT doc_id, text, lang, source FROM documents
-  UNION ALL
-  SELECT doc_id + {NEAR_COPY_OFFSET}, regexp_replace(text, ' [^ ]+$', ''), lang, source
-  FROM documents WHERE n_chars >= 200
-), tok AS (
-  SELECT doc_id, lang, source, text, length(text) AS nc,
-         string_split(text, ' ') AS words
-  FROM aug
-), shingled AS (
-  SELECT doc_id, lang, source, nc, {_SHINGLES_SQL} AS sh FROM tok
-)
-SELECT doc_a, doc_b, jaccard FROM (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         round(len(list_intersect(a.sh, b.sh)) / len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
-  FROM shingled a JOIN shingled b
-    ON a.lang = b.lang AND a.source = b.source
-   AND a.doc_id < b.doc_id AND abs(a.nc - b.nc) <= 40
-) WHERE jaccard >= 0.5
-"""
-
-
-# ---------------------------------------------------------------------------
-# SimHash — 16-bit fingerprint over the word multiset
-# ---------------------------------------------------------------------------
-
-
-def q_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document SimHash: each word's md5-int64 votes ±1 on each of 16 bit
-    positions; a bit is set when its vote sum is positive. Pure per-row
-    expression work (one codegen'd map stage, zero shuffles) — at 100 TB the
-    fingerprint column costs one pass and near-dup grouping is a groupBy on
-    the fingerprint."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    hashes = F.transform(words, md5_long)
-    def _vote(d: int):
-        # closure (not default args): PySpark derives lambda arity by signature
-        return lambda acc, h: acc + F.when(h.bitwiseAND(F.lit(d)) != 0, F.lit(1)).otherwise(F.lit(-1))
-
-    sums = [F.aggregate(hashes, F.lit(0).cast("long"), _vote(1 << bit)) for bit in range(SIMHASH_BITS)]
-    simhash = None
-    for bit, s in enumerate(sums):
-        term = F.when(s > 0, F.lit(1 << bit)).otherwise(F.lit(0))
-        simhash = term if simhash is None else simhash + term
-    return docs.select(
-        "doc_id",
-        F.size(words).cast("bigint").alias("n_tokens"),
-        simhash.cast("bigint").alias("simhash16"),
-    )
-
-
-def _oracle_simhash() -> str:
-    sums = ", ".join(
-        f"list_sum(list_transform(hh, h -> CASE WHEN (h & {1 << bit}) <> 0 THEN 1 ELSE -1 END)) AS s{bit}"
-        for bit in range(SIMHASH_BITS)
-    )
-    total = " + ".join(f"CASE WHEN s{bit} > 0 THEN {1 << bit} ELSE 0 END" for bit in range(SIMHASH_BITS))
-    return f"""
-WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), hashed AS (
-  SELECT doc_id, len(words) AS n_tokens,
-         list_transform(words, w -> {md5_long_sql("w")}) AS hh
-  FROM tok
-), votes AS (
-  SELECT doc_id, n_tokens, {sums} FROM hashed
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST({total} AS BIGINT) AS simhash16
-FROM votes
-"""
-
-
-# ---------------------------------------------------------------------------
-# incremental dedup — dedup a NEW batch against an existing REFERENCE corpus
-# ---------------------------------------------------------------------------
-
-
-def incremental_verdicts(
-    batch: DataFrame,
-    ref: DataFrame,
-    *,
-    threshold: float = 0.5,
-    ref_index: dict[str, DataFrame] | None = None,
-    verify: str = "sh",
-) -> DataFrame:
-    """Classify every batch document against a reference corpus:
-    ``exact_dup`` (content hash already present), ``near_dup`` (MinHash-LSH
-    candidate with shingle-Jaccard ≥ threshold vs some ref doc), or
-    ``kept``. This is the production INGESTION shape of dedup — the corpus
-    is already clean; each arriving batch is screened against it — which
-    ``exact_survivors``/``minhash_pairs`` (whole-corpus, self-join) do not
-    express.
-
-    Inputs are (doc_id, text) frames. Output per batch doc: ``verdict``,
-    ``matched_ref`` (min matching ref doc_id, -1 when kept) and
-    ``best_jaccard`` (1.0 for exact, max candidate Jaccard for near, 0.0
-    for kept — max and min are aggregated independently, so both are
-    deterministic even when several refs tie).
-
-    Scale posture (100 TB corpus, ~GB batches): both joins key the REF side
-    on columns a real deployment precomputes ONCE and stores bucketed
-    (content_hash table, band-key table — amortized across every future
-    batch), while the batch side is small enough to broadcast; neither
-    stage rescans ref text. Here both sides derive in-plan from parquet so
-    the oracle can mirror the whole computation. The near stage joins
-    batch bands × ref bands (never batch × ref rows) and verifies exact
-    Jaccard only on colliding candidates — same LSH bound as
-    ``minhash_pairs``.
-
-    ``ref_index`` (round 11, VERDICT r10 item 2): the precomputed-ONCE
-    store the scale note above always promised — a dict of ``hash``
-    (content_hash, doc_id), ``bands`` (doc_id, band_key) and ``hh``
-    (doc_id, hh) frames (``streaming.dedup.read_index``). When given,
-    ``ref`` text is never touched: the per-batch corpus-side cost drops
-    from full shingle+signature recompute (the measured 334→522 s sf100
-    per-batch growth) to a column scan of the index. Values identical —
-    the index rows are exactly the derivations below.
-
-    ``verify``: ``"sh"`` (string shingle Jaccard — the oracle contract,
-    default) or ``"hh"`` (md5-int64 hash Jaccard — the scale dial; see
-    ``minhash_pairs``). The signature index stores hh only (8-byte
-    longs, round 12), so ``ref_index`` requires ``verify="hh"`` — the
-    streaming ingest screen (``streaming.dedup.screen_batch``) passes it
-    in both the indexed and textual modes so the two stay
-    differential-equal."""
-    if verify not in ("sh", "hh"):
-        raise ValueError(f"verify must be 'sh' or 'hh', got {verify!r}")
-    if ref_index is not None and verify != "hh":
-        raise ValueError("ref_index stores hashed shingles - pass verify='hh'")
-
-    if ref_index is not None:
-        ref_hash = (
-            ref_index["hash"]
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("ref_exact"))
-        )
-    else:
-        ref_hash = (
-            ref.select(md5_long(F.col("text")).alias("content_hash"), "doc_id")
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("ref_exact"))
-        )
-    batch_hashed = batch.withColumn("content_hash", md5_long(F.col("text")))
-
-    def _bands(df: DataFrame, id_alias: str) -> DataFrame:
-        # routed through shingle_docs (round 12): the batch side gets the
-        # Arrow shingle pass by default like every other consumer, and
-        # the hh mode keeps the string arrays out of the transfer; the
-        # verify column rides along for the exact-Jaccard stage
-        shingled = shingle_docs(df, hh_only=(verify == "hh")).withColumnRenamed(
-            "doc_id", id_alias
-        )
-        banded = banded_keys(shingled, id_col=id_alias)
-        return shingled.select(id_alias, F.col(verify).alias("vv")), banded
-
-    if ref_index is not None:
-        ref_sh = ref_index["hh"].select(
-            F.col("doc_id").alias("ref_id"), F.col("hh").alias("vv")
-        )
-        ref_bands = ref_index["bands"].select(F.col("doc_id").alias("ref_id"), "band_key")
-    else:
-        ref_sh, ref_bands = _bands(ref, "ref_id")
-    batch_sh, batch_bands = _bands(batch, "batch_id")
-
-    cand = (
-        batch_bands.join(ref_bands, "band_key")
-        .select("batch_id", "ref_id")
-        .distinct()
-    )
-    near = (
-        cand.join(batch_sh.withColumnRenamed("vv", "vv_b"), "batch_id")
-        .join(ref_sh.withColumnRenamed("vv", "vv_r"), "ref_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("vv_b", "vv_r"))
-                / F.size(F.array_union("vv_b", "vv_r")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .groupBy("batch_id")
-        .agg(F.max("jaccard").alias("near_jaccard"), F.min("ref_id").alias("ref_near"))
-    )
-
-    return (
-        batch_hashed.join(ref_hash, "content_hash", "left")
-        .join(near, batch_hashed["doc_id"] == near["batch_id"], "left")
-        .select(
-            "doc_id",
-            F.when(F.col("ref_exact").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("ref_near").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("kept"))
-            .alias("verdict"),
-            F.coalesce("ref_exact", "ref_near", F.lit(-1)).cast("bigint").alias("matched_ref"),
-            F.when(F.col("ref_exact").isNotNull(), F.lit(1.0))
-            .otherwise(F.coalesce("near_jaccard", F.lit(0.0)))
-            .cast("double")
-            .alias("best_jaccard"),
-        )
-    )
-
-
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental-ingestion dedup check: docs with doc_id % 10 < 8 play the
-    existing corpus; the rest are the arriving batch, augmented with one
-    planted exact copy of every short ref doc and one planted near-copy
-    (last word dropped) of every long ref doc. ``incremental_verdicts``
-    must flag exactly the planted rows (plus any organic cross-split
-    collisions, identically on both engines)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    ref = docs.filter(F.col("doc_id") % 10 < 8)
-    exact_plants = ref.filter(F.col("n_chars") < 200).select(
-        (F.col("doc_id") + F.lit(EXACT_COPY_OFFSET)).alias("doc_id"), "text"
-    )
-    near_plants = ref.filter(F.col("n_chars") >= 200).select(
-        (F.col("doc_id") + F.lit(NEAR_COPY_OFFSET)).alias("doc_id"),
-        F.regexp_replace(F.col("text"), " [^ ]+$", "").alias("text"),
-    )
-    batch = (
-        docs.filter(F.col("doc_id") % 10 >= 8)
-        .select("doc_id", "text")
-        .unionByName(exact_plants)
-        .unionByName(near_plants)
-    )
-    return incremental_verdicts(batch, ref.select("doc_id", "text"))
-
-
-ORACLE_DEDUP_INCREMENTAL = f"""
-WITH ref AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 < 8
-), batch AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 8
-  UNION ALL
-  SELECT doc_id + {EXACT_COPY_OFFSET}, text
-  FROM documents WHERE doc_id % 10 < 8 AND n_chars < 200
-  UNION ALL
-  SELECT doc_id + {NEAR_COPY_OFFSET}, regexp_replace(text, ' [^ ]+$', '')
-  FROM documents WHERE doc_id % 10 < 8 AND n_chars >= 200
-), ref_hash AS (
-  SELECT {md5_long_sql("text")} AS content_hash, min(doc_id) AS ref_exact
-  FROM ref GROUP BY 1
-), batch_hashed AS (
-  SELECT doc_id, {md5_long_sql("text")} AS content_hash FROM batch
-), ref_sh AS (
-  SELECT doc_id AS ref_id, {_SHINGLES_SQL} AS sh
-  FROM (SELECT doc_id, text, string_split(text, ' ') AS words FROM ref)
-), batch_sh AS (
-  SELECT doc_id AS batch_id, {_SHINGLES_SQL} AS sh
-  FROM (SELECT doc_id, text, string_split(text, ' ') AS words FROM batch)
-), ref_bands AS (
-  SELECT ref_id, unnest({_minhash_band_keys_sql()}) AS band_key
-  FROM (SELECT ref_id, {_SIG_SQL} AS sig
-        FROM (SELECT ref_id, list_transform(sh, s -> {md5_long_sql("s")}) AS hh FROM ref_sh))
-), batch_bands AS (
-  SELECT batch_id, unnest({_minhash_band_keys_sql()}) AS band_key
-  FROM (SELECT batch_id, {_SIG_SQL} AS sig
-        FROM (SELECT batch_id, list_transform(sh, s -> {md5_long_sql("s")}) AS hh FROM batch_sh))
-), cand AS (
-  SELECT DISTINCT b.batch_id, r.ref_id
-  FROM batch_bands b JOIN ref_bands r ON b.band_key = r.band_key
-), near AS (
-  SELECT batch_id, max(jaccard) AS near_jaccard, min(ref_id) AS ref_near
-  FROM (
-    SELECT c.batch_id, c.ref_id,
-           round(len(list_intersect(x.sh, y.sh)) / len(list_distinct(list_concat(x.sh, y.sh))), 6) AS jaccard
-    FROM cand c
-    JOIN batch_sh x ON c.batch_id = x.batch_id
-    JOIN ref_sh y ON c.ref_id = y.ref_id
-  ) WHERE jaccard >= 0.5
-  GROUP BY batch_id
-)
-SELECT bh.doc_id,
-       CASE WHEN rh.ref_exact IS NOT NULL THEN 'exact_dup'
-            WHEN n.ref_near IS NOT NULL THEN 'near_dup'
-            ELSE 'kept' END AS verdict,
-       CAST(coalesce(rh.ref_exact, n.ref_near, -1) AS BIGINT) AS matched_ref,
-       CAST(CASE WHEN rh.ref_exact IS NOT NULL THEN 1.0
-                 ELSE coalesce(n.near_jaccard, 0.0) END AS DOUBLE) AS best_jaccard
-FROM batch_hashed bh
-LEFT JOIN ref_hash rh ON bh.content_hash = rh.content_hash
-LEFT JOIN near n ON bh.doc_id = n.batch_id
-"""
-
-
 QUERIES = {
     "dedup_exact": q_dedup_exact,
     "dedup_minhash": q_dedup_minhash,
-    # ngram_jaccard left OFF the capped registry (round-6 fourth rotation):
-    # it is the blocked all-pairs exact ground-truth baseline; the scaled
-    # near-dup paths (dedup_minhash, dedup_incremental, emb_near_dup_bucketed)
-    # all hold hard driver rows, and it keeps full oracle parity in
-    # tests/test_offregistry_parity.py. The freed slot registers
-    # range_join_bins (operators/temporal.py).
-    # simhash_fingerprint rotated OFF in round 7, BACK IN in the round-10
-    # ninth rotation, and OFF again in the round-12 ELEVENTH rotation
-    # (VERDICT r11 item 6): its 64-bit fingerprint + Hamming arithmetic is
-    # the same packed-sign physics hamming_rerank now holds a FIRST hard
-    # driver row for (similarity.py), next to doc_winnow's fingerprint row;
-    # full hash-differential parity stays pinned in
-    # tests/test_offregistry_parity.py.
-    # dedup_incremental rotated OFF (round-9 eighth rotation, VERDICT r8
-    # item 6): its §2 coverage — band-key candidate join + exact verify —
-    # is the same physics dedup_minhash holds a hard row for, and the
-    # batch-vs-corpus asymmetry keeps both its planted-control tests and
-    # the identical hash-differential parity row in
-    # tests/test_offregistry_parity.py. The freed slot registers
-    # url_domains (operators/text.py) — a never-rotated family.
 }
 
 ORACLES = {
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "dedup_minhash": ORACLE_DEDUP_MINHASH,
 }
-
-ORACLE_SIMHASH = _oracle_simhash()  # off-registry parity + bit-level tests

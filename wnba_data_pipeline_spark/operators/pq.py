@@ -1,5 +1,5 @@
 """Product quantization (PQ) for the embeddings corpus — codebook training,
-vector encoding, reconstruction, and asymmetric-distance (ADC) top-k search.
+vector encoding, and asymmetric-distance (ADC) top-k search.
 
 Why this exists at 100 TB: a 64-dim float32 embedding is 256 bytes; its PQ
 code at m=8 subspaces × 4 bits is 4 bytes — a 64× storage/scan compression.
@@ -24,8 +24,6 @@ Structure:
   ksub; zero Python) or an Arrow-batched numpy argmin (``path="pandas"``),
   bit-identical by the same association/tie-break contract as
   ``clustering.assign_clusters``.
-- ``pq_decode_col`` — reconstruction expression (codebook row lookup +
-  flatten), for reconstruction-error audits.
 - ``pq_adc_topk`` — per-query m×ksub distance lookup table built as
   literal-free in-plan expressions, broadcast against the codes scan;
   approximate distance = sum of m table lookups; top-k via the same
@@ -206,20 +204,6 @@ def pq_encode(
     return df.mapInPandas(encode, out_schema)
 
 
-def pq_decode_col(codes: Column, model: PQModel) -> Column:
-    """Reconstruction expression: codebook-row lookup per subspace, then
-    flatten back to a DIM-length array<double> — the audit path for
-    quantization error (never needed by search, which works on codes)."""
-    rows = [
-        F.element_at(
-            F.array(*[F.array(*[F.lit(x) for x in word]) for word in cb]),
-            F.element_at(codes, j + 1) + F.lit(1),
-        )
-        for j, cb in enumerate(model.codebooks)
-    ]
-    return F.flatten(F.array(*rows))
-
-
 def pq_adc_topk(
     corpus_codes: DataFrame,
     queries: DataFrame,
@@ -339,7 +323,7 @@ def pq_search_rerank(
 
 def q_pq_rerank(spark, sf_dir: str, *, model: PQModel | None = None) -> DataFrame:
     """ADC-shortlist + exact-rerank search over the embeddings table (the
-    recall-bearing variant of ``q_pq_topk``)."""
+    recall-bearing form of a raw ``pq_adc_topk``)."""
     from ..sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -352,23 +336,6 @@ def q_pq_rerank(spark, sf_dir: str, *, model: PQModel | None = None) -> DataFram
     # re-rank fetch from the raw table — keeps the encode expression out
     # of the fetch branch (see pq_search_rerank's corpus_raw note)
     return pq_search_rerank(corpus, q, model, corpus_raw=emb.select("vec_id", "embedding"))
-
-
-def q_pq_topk(spark, sf_dir: str, *, model: PQModel | None = None) -> DataFrame:
-    """End-to-end PQ search over the embeddings table: fit (if no model is
-    passed), encode the corpus, ADC top-3 for the first 10 vectors —
-    the compressed-domain twin of ``q_sim_topk`` (whose exact ranks the
-    recall test scores this against)."""
-    from ..sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    if model is None:
-        model = pq_fit(emb)
-    codes = pq_encode(emb.select("vec_id", "embedding"), model).select("vec_id", "codes")
-    q = emb.filter(F.col("vec_id") < PQ_N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_emb")
-    )
-    return pq_adc_topk(codes, q, model)
 
 
 # ---------------------------------------------------------------------------
@@ -1329,20 +1296,6 @@ def oracle_ivfpq(sf_name: str = "sf0.01") -> str:
     )
 
 
-# pq_rerank rotated OFF / ivfpq_search IN (round-9 eighth rotation,
-# VERDICT r8 items 4+6): the composed IVF-PQ stack subsumes pq_rerank's
-# ADC-shortlist + exact-rerank inside the probed-cell path (the actual
-# 100 TB shape), so the PQ family's hard driver row moves to the more
-# complete operator; pq_rerank keeps the identical hash-differential
-# parity row in tests/test_offregistry_parity.py.
-# pq_rerank RETURNS to the registry (round-11 tenth rotation): the ADC +
-# exact-rerank contract gets its own hard driver row again alongside the
-# composed ivfpq_search (which subsumed it during rounds 9-10).
-# Round 15 shipped as an OPTIMIZATION round: the registry is frozen at
-# the r14 set (no declared query may disappear), so pq_rerank STAYS
-# in-registry; the drafted fourteenth rotation (hll_vs_exact in,
-# pq_rerank out) is parked in tests/test_offregistry_parity.py for a
-# future build round.
 QUERIES = {"ivfpq_search": q_ivfpq_search, "pq_rerank": q_pq_rerank}
 ORACLE_PQ_RERANK = oracle_pq_rerank("sf0.01")
 ORACLES = {"ivfpq_search": oracle_ivfpq("sf0.01"), "pq_rerank": ORACLE_PQ_RERANK}

@@ -195,6 +195,36 @@ SELECT 'returnflag_cardinality', CAST(n_flags AS DOUBLE),
 # Metadata-only probe: completeness/freshness from parquet FOOTERS
 # ---------------------------------------------------------------------------
 
+def pa_fs(path: str):
+    """(pyarrow FileSystem, fs-relative path) — the Connect-safe fallback
+    resolver: local paths go to LocalFileSystem, URIs through
+    ``FileSystem.from_uri`` (s3/gcs/hdfs included)."""
+    from urllib.parse import urlparse
+
+    from pyarrow import fs as pafs
+
+    u = urlparse(path)
+    if u.scheme in ("", "file"):
+        return pafs.LocalFileSystem(), (u.path or path)
+    return pafs.FileSystem.from_uri(path)
+
+
+def pa_uri_prefix(path: str, rel: str) -> str:
+    """The scheme/authority prefix that ``pa_fs`` stripped from ``path``
+    (ADVICE r10): pyarrow FileSelector results are fs-relative (e.g.
+    ``bucket/key`` for s3), so handing them straight to
+    ``spark.read.parquet`` / the footer probe resolves them against the
+    DEFAULT filesystem — wrong or failing on exactly the object-store
+    posture the Connect fallbacks exist for. Re-attach ``pa_uri_prefix(
+    original, rel) + listed_path`` before crossing back into Spark/URI
+    land. Local paths (empty scheme) get an empty prefix — a no-op."""
+    p = path.rstrip("/")
+    r = rel.rstrip("/")
+    if r and p.endswith(r):
+        return p[: len(p) - len(r)]
+    return ""
+
+
 def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
     """Enumerate non-empty parquet files under ``path`` via the Hadoop
     FileSystem API — the listing goes through whatever filesystem the URI
@@ -209,8 +239,6 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
     except Exception:
         from pyarrow import fs as pafs
-
-        from ..sources.maintenance import pa_fs, pa_uri_prefix
 
         fsys, rel = pa_fs(path)
         info = fsys.get_file_info(rel)
@@ -480,13 +508,6 @@ def parquet_rowcount_probe(spark: SparkSession, path: str) -> DataFrame:
         .mapInPandas(_counts, "n_rows long")
     )
     return partials.agg(F.sum("n_rows").alias("n_rows"))
-
-
-def q_quality_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Footer-stats probe over the lineitem table (off-registry: same
-    semantics as the matching q_quality_probe subset, different physical
-    source; differential gate in tests/test_stats_probe.py)."""
-    return parquet_stats_probe(spark, f"{sf_dir}/lineitem.parquet")
 
 
 QUERIES = {"quality_report": q_quality_report}

@@ -1,6 +1,6 @@
 """Similarity-search operators over the ``embeddings`` table
-(``embedding: array<float>``, 64-dim) — brute-force cosine top-k, an
-LSH-bucketed ANN variant, and label-centroid array aggregation.
+(``embedding: array<float>``, 64-dim) — brute-force cosine top-k, banded
+and celled ANN search, and label-centroid array aggregation.
 
 LLM-training-data operators beyond the reference's surface (the build
 brief's north star; the reference has no vector data at all — its nearest
@@ -12,7 +12,7 @@ LEFT FOLD — ``acc + (double)a[i] * (double)b[i]`` — in BOTH engines
 bit-identical (same operand promotion, same association order; DuckDB's
 reduce seeds with the first element, Spark folds from 0.0, and
 0.0 + x ≡ x in IEEE). Ranking happens on the UNROUNDED value; only the
-output is rounded. The ANN hyperplanes are derived from the md5→int64
+output is rounded. The SRP hyperplanes are derived from the md5→int64
 contract (``functions/hashing.py``), so bucket assignments match exactly.
 
 Scale posture (100 TB):
@@ -20,9 +20,10 @@ Scale posture (100 TB):
   query set against the full corpus — one pass, per-partition top-k heaps
   via the rank-filter, no all-pairs materialization. Right up to ~10⁶
   corpus rows per query batch.
-- the LSH variant is the scale path: bucket assignment is a zero-shuffle
-  map; the candidate join shuffles on (bucket), cutting compared pairs by
-  ~2^planes; more planes + multi-probe = the standard recall/cost dial.
+- the banded and celled paths are the scale paths: bucket assignment is a
+  zero-shuffle map; the candidate join shuffles on (bucket), cutting
+  compared pairs by ~2^planes; more planes + multi-probe = the standard
+  recall/cost dial.
 - centroids: 64 per-component averages in ONE hash aggregate (partial maps
   combine per partition — the array never shuffles, only 64 running sums).
 """
@@ -36,11 +37,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_py, md5_long_sql
-from ..sources.tables import load_table
+from ..sources.tables import collect_bounded, load_table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
+# query rows sim_topk may collect at plan build (N_QUERIES while vec_id is
+# unique; the screen holds a rows × batch cosine matrix per Arrow batch)
+QUERY_ROWS_MAX = 1024
 TOP_K = 3
-N_PLANES = 4  # LSH: 2^4 = 16 buckets
 DIM = 64  # embedding dimensionality of the driver's tables
 
 
@@ -96,13 +99,16 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needed). The exact verify (fold cosine, window, round) then runs on
     # the ~tens of survivors, so rows equal the DuckDB twin's all-pairs
     # ranking.
-    q_rows = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .collect()
+    q_rows = collect_bounded(
+        emb.filter(F.col("vec_id") < N_QUERIES).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+        ),
+        QUERY_ROWS_MAX,
     )
-    q_ids = [int(r["vec_id"]) for r in q_rows]
-    q_vecs = [list(map(float, r["embedding"])) for r in q_rows]
+    if q_rows is None:
+        raise ValueError(f"more than QUERY_ROWS_MAX={QUERY_ROWS_MAX} embeddings rows have vec_id < {N_QUERIES}")
+    q_ids = [int(i) for i in q_rows["vec_id"]]
+    q_vecs = [list(map(float, v)) for v in q_rows["embedding"]]
 
     def _screen(batches):
         import numpy as np
@@ -177,100 +183,6 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# LSH-bucketed ANN top-k (signed random projections)
-# ---------------------------------------------------------------------------
-
-
-def _plane_component(plane: int):
-    """Deterministic pseudo-random hyperplane component for (plane, dim i):
-    md5-int64 of 'proj:<plane>:<i>' mapped to [-1, 1] — identical literals
-    and arithmetic in the oracle, so bucket bits can never disagree."""
-
-    def comp(i: Column) -> Column:
-        h = md5_long(F.concat(F.lit(f"proj:{plane}:"), i.cast("string")))
-        return ((h % F.lit(2001)) - F.lit(1000)) / F.lit(1000.0)
-
-    return comp
-
-
-def _bucket(v: Column) -> Column:
-    """2^N_PLANES-way bucket id from the signs of v·plane_p."""
-    def _proj_term(comp):
-        # closure (not default args): PySpark derives lambda arity by signature
-        return lambda i: F.element_at(v, i + F.lit(1)).cast("double") * comp(i)
-
-    out = None
-    for p in range(N_PLANES):
-        prods = F.transform(F.sequence(F.lit(0), F.size(v) - F.lit(1)), _proj_term(_plane_component(p)))
-        d = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-        term = F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        out = term if out is None else out + term
-    return out.cast("long")
-
-
-def _bucket_sql(v: str) -> str:
-    terms = []
-    for p in range(N_PLANES):
-        seed = f"'proj:{p}:' || CAST(i AS VARCHAR)"
-        comp = f"((({md5_long_sql(seed)}) % 2001) - 1000) / 1000.0"
-        dot = (
-            f"list_reduce(list_transform(range(len({v})), "
-            f"i -> CAST({v}[i+1] AS DOUBLE) * ({comp})), (x, y) -> x + y)"
-        )
-        terms.append(f"CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END")
-    return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
-
-
-def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-3 via signed-random-projection LSH: queries only compare
-    against corpus vectors in the SAME 16-way bucket (the 100 TB path —
-    bucket assignment is a map, the candidate join shuffles on the bucket
-    key instead of exploding all pairs). Recall < 1 by design; determinism
-    comes from the hash-derived planes."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    bucketed = emb.select("vec_id", "embedding", _bucket(F.col("embedding")).alias("bucket"))
-    q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("q_emb"), "bucket"
-    )
-    c = bucketed.select(F.col("vec_id").alias("n_vec_id"), F.col("embedding").alias("n_emb"), "bucket")
-    pairs = F.broadcast(q).join(c, ["bucket"]).filter(F.col("q_vec_id") != F.col("n_vec_id")).withColumn(
-        "_cos", _cosine(F.col("q_emb"), F.col("n_emb"))
-    )
-    w = Window.partitionBy("q_vec_id").orderBy(F.col("_cos").desc(), F.col("n_vec_id"))
-    return (
-        pairs.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= TOP_K)
-        .select(
-            "q_vec_id",
-            "n_vec_id",
-            "bucket",
-            F.round(F.col("_cos"), 6).alias("cosine"),
-            F.col("nn_rank").cast("long").alias("nn_rank"),
-        )
-    )
-
-
-ORACLE_SIM_ANN_LSH = f"""
-WITH bucketed AS (
-  SELECT vec_id, embedding, {_bucket_sql("embedding")} AS bucket FROM embeddings
-), q AS (
-  SELECT vec_id AS q_vec_id, embedding AS q_emb, bucket
-  FROM bucketed WHERE vec_id < {N_QUERIES}
-), pairs AS (
-  SELECT q.q_vec_id, c.vec_id AS n_vec_id, q.bucket,
-         {_cosine_sql("q.q_emb", "c.embedding")} AS cos
-  FROM q JOIN bucketed c USING (bucket)
-  WHERE q.q_vec_id <> c.vec_id
-)
-SELECT q_vec_id, n_vec_id, bucket, round(cos, 6) AS cosine, CAST(nn_rank AS BIGINT) AS nn_rank
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_vec_id ORDER BY cos DESC, n_vec_id) AS nn_rank
-  FROM pairs
-) WHERE nn_rank <= {TOP_K}
-"""
-
-
-# ---------------------------------------------------------------------------
 # embedding-cosine near-duplicate pairs
 # ---------------------------------------------------------------------------
 
@@ -319,8 +231,7 @@ def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥ 0.9 — which must be exactly the planted (original, copy) pairs, since
     this corpus's random cross-pair cosines top out ≈0.4.
 
-    Scale role: this is the ground-truth baseline (the role
-    ``q_ngram_jaccard`` plays for MinHash-LSH) — all N² pairs are examined,
+    Scale role: this is the ground-truth baseline — all N² pairs are examined,
     at sampled scale, to validate the bucketed path's recall. The 100 TB
     production shape is ``q_emb_near_dup_bucketed`` below (same filter over
     banded-LSH candidates).
@@ -430,9 +341,8 @@ def _nd_coeffs(band: int, plane: int) -> list[int]:
     """Integer hyperplane components in [-1000, 1000], derived from the
     md5→int64 contract but PRECOMPUTED in Python and embedded as literals
     in both engines — the hash family is fixed, so recomputing md5 per row
-    per dimension (as ``_plane_component`` does for the 4-plane ANN query)
-    would cost 128 md5 calls × 64 dims per row here for no added
-    determinism. Only the sign of Σ v[i]·k[i] matters, so the /1000
+    per dimension would cost 128 md5 calls × 64 dims per row here for no
+    added determinism. Only the sign of Σ v[i]·k[i] matters, so the /1000
     normalization is dropped entirely."""
     return [
         md5_long_py(f"nd:{band}:{plane}:{i}") % 2001 - 1000
@@ -911,10 +821,10 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     'ivf:<vec_id>'), every corpus vector is assigned to its nearest seed
     cell, and each query searches only its NPROBE nearest cells.
 
-    The complement to ``q_sim_ann_lsh``: LSH partitions by random
-    hyperplanes (data-independent), IVF partitions by the data's own
-    geometry — cells follow density, so probing 2/8 cells scans ~2/8 of
-    the corpus with much better recall on clustered data.
+    Unlike the SRP-banded paths (random hyperplanes, data-independent),
+    IVF partitions by the data's own geometry — cells follow density, so
+    probing 2/8 cells scans ~2/8 of the corpus with much better recall on
+    clustered data.
 
     Scale posture (100 TB): seed selection is a TakeOrdered (no shuffle of
     the corpus); assignment fans out corpus×K_CELLS but reduces back to one
@@ -1353,14 +1263,6 @@ def hamming_topk(sigs: DataFrame, *, n_queries: int, k: int) -> DataFrame:
     )
 
 
-def q_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-signature Hamming top-3 for the sim_topk query set.
-    Off-registry: DuckDB twin + recall-vs-cosine gates in
-    tests/test_hamming.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return hamming_topk(binarize_embeddings(emb), n_queries=N_QUERIES, k=HAM_TOP_K)
-
-
 ORACLE_HAMMING_TOPK = f"""
 WITH sigs AS (
   SELECT vec_id, {_sign_half_sql("embedding", 0)} AS sig_lo,
@@ -1767,38 +1669,12 @@ FROM (
 
 
 QUERIES = {
-    # sim_ann_lsh rotated OFF (round-11 tenth rotation, VERDICT r10
-    # item 5): its SRP band-bucket physics is emb_near_dup_bucketed's (in
-    # registry) and its celled probe shape is sim_ivf's + ivfpq_search's
-    # (both in registry); parity stays pinned in
-    # tests/test_offregistry_parity.py. The freed slot returns pq_rerank
-    # to the registry (operators/pq.py).
     "sim_ivf": q_sim_ivf,
     "emb_near_dup_bucketed": q_emb_near_dup_bucketed,
     "emb_label_centroids": q_emb_label_centroids,
-    # round-8 seventh rotation: hard driver row for the round-7 miner
-    # (slots freed by lang_id_agreement/bigram_topk — see text.py)
     "hard_negatives_bucketed": q_hard_negatives_bucketed,
-    # round-12 ELEVENTH rotation (VERDICT r11 item 6): sim_topk RETURNS
-    # after six rounds off-registry (rotated out round 6) and the Hamming
-    # prefilter+rerank family gets its FIRST driver row — together they
-    # document the exact-cosine baseline and the 1-bit compressed search
-    # against the same query set. Slots freed by simhash_fingerprint
-    # (dedup.py — its 64-bit fingerprint physics is doc_winnow's +
-    # hamming_rerank's own packed-sign arithmetic, now in-registry) and
-    # url_domains (text.py — single-shuffle regex-extract+agg physics
-    # covered by text_stats/tfidf_top_terms); both keep full parity in
-    # tests/test_offregistry_parity.py.
     "sim_topk": q_sim_topk,
     "hamming_rerank": q_hamming_rerank,
-    # round-13 TWELFTH rotation: emb_near_dup RETURNS after eight rounds
-    # off-registry (rotated out round 5) — the exact all-pairs cosine
-    # baseline re-holds a hard driver row beside the banded
-    # (emb_near_dup_bucketed), celled (sim_ivf), and compressed
-    # (hamming_rerank/ivfpq_search) paths it grounds: every similarity
-    # recall gate in the suite scores against THIS query's pair set.
-    # Slots freed by count_distinct_groups (relational.py) and
-    # frame_sample (multimodal.py) — see their registry comments.
     "emb_near_dup": q_emb_near_dup,
 }
 

@@ -1,21 +1,7 @@
-"""Mergeable-sketch operators: pre-aggregated HLL state over the event
-stream, unioned at query time — the incremental-analytics pattern that
-answers "distinct users over ANY day window" from per-day state instead of
-rescanning 100 TB of raw events.
-
-``approx_count_distinct`` (the D2 scale swap) gives one estimate per query
-over raw rows; the DataSketches functions here go further: the SKETCH
-itself is stored per (day) — a few KB of mergeable state — and
-``hll_union_agg`` combines arbitrary day subsets. That mergeability is the
-whole point: daily jobs write sketch rows once, every later window query
-is an aggregation over #days rows. The same pattern serves streaming
-(sketches as ``applyInPandasWithState`` state) and cross-partition rollups
-(region × day sketches union to region totals).
-
-The DataSketches rows have no DuckDB oracle by design (sketch binaries are
-engine-specific, same as the HLL variant — SURVEY D2); their gates are
-exactness bounds against the true distinct counts and union-vs-direct
-consistency (tests/test_sketches.py).
+"""Mergeable-sketch operators: per-day HyperLogLog registers over the
+event stream, merged at query time — the incremental-analytics pattern
+that answers "distinct users over ANY day window" from per-day state
+instead of rescanning 100 TB of raw events (the D2 scale swap).
 
 ``hll_distinct_daily`` (round 13 — the sketch family's FIRST hash-exact
 driver row) is the PORTABLE counterpart: a from-scratch HyperLogLog whose
@@ -39,28 +25,9 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_long, md5_long_sql
 from ..sources.tables import load_table
 
-LG_K = 14  # sketch precision: ~0.8% rsd, ~16 KB max per sketch
-
-
-def daily_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day HLL sketch of user_id over events — the stored state a
-    daily incremental job appends (one shuffle on day; sketch building is
-    map-side partial like any aggregate)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.hll_sketch_agg("user_id", F.lit(LG_K)).alias("user_sketch"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def distinct_users_over(sketches: DataFrame) -> DataFrame:
-    """Union any subset of stored day sketches into one distinct-user
-    estimate — #days rows aggregated, raw events never touched."""
-    return sketches.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("user_sketch", F.lit(True))).alias("distinct_users_est"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-
+# DataSketches HLL precision of relational.q_tumbling_daily(approx=True):
+# ~0.8% rsd, ~16 KB max per sketch
+LG_K = 14
 
 # ---------------------------------------------------------------------------
 # portable fixed-point HLL — the family's hash-exact driver row (round 13)
@@ -173,221 +140,5 @@ SELECT day, v_zero, hll_est FROM total
 """
 
 
-HLL_RSD = 1.04 / (HLL_M ** 0.5)  # the classic HLL relative standard
-# deviation at m = 64 registers (≈ 13%); the audit row below publishes
-# each day's error against TWICE this bound
-
-
-def q_hll_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HLL ACCURACY AUDIT (round 15, VERDICT r14 item 4 — the
-    ``hh_cms_vs_exact`` pattern applied to the distinct-count family):
-    per day — and for the register-merged all-days row — the EXACT
-    distinct (user, event_type) count, the portable-HLL estimate rebuilt
-    through the same cross-engine fixed-point pipeline as
-    ``hll_distinct_daily``, the signed relative error, and whether it
-    sits inside 2× the documented rsd (1.04/√64 ≈ 13% — Flajolet et al.
-    2007, public). Unlike the CMS row there is no one-sided bound to
-    prove (HLL error is two-sided); what the hash verifies cross-engine
-    is the ESTIMATOR ITSELF plus its measured error — the accuracy table
-    a 100 TB deployment publishes before swapping exact distincts for
-    sketch state (the documented D2 swap). Every term is hash-exact by
-    the same construction as ``hll_distinct_daily``: integer registers,
-    integer-scaled harmonic sum, one double division, and the error
-    arithmetic runs over those identical doubles in both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    key = F.concat(F.col("user_id").cast("string"), F.lit(":"), F.col("event_type"))
-    bucket, rank = _hll_rank_cols(key)
-    r = ev.select(
-        F.col("ts").cast("date").cast("string").alias("day"), key.alias("k"), bucket, rank
-    )
-    regs = r.groupBy("day", "bucket").agg(F.max("rank").alias("mb"))
-    est = _hll_estimate(regs, ["day"]).select("day", "hll_est")
-    merged = regs.groupBy("bucket").agg(F.max("mb").alias("mb"))
-    est = est.unionByName(
-        _hll_estimate(merged, []).select(F.lit("ALL").alias("day"), "hll_est")
-    )
-    exact = r.groupBy("day").agg(F.count_distinct("k").alias("exact_distinct"))
-    exact = exact.unionByName(
-        r.agg(F.count_distinct("k").alias("exact_distinct")).select(
-            F.lit("ALL").alias("day"), "exact_distinct"
-        )
-    )
-    err = (F.col("hll_est") - F.col("exact_distinct")) / F.col("exact_distinct")
-    return est.join(exact, "day").select(
-        "day",
-        "exact_distinct",
-        "hll_est",
-        F.round(err, 6).alias("rel_err"),
-        (F.abs(err) <= F.lit(2 * HLL_RSD)).alias("within_2rsd"),
-    )
-
-
-ORACLE_HLL_VS_EXACT = f"""
-WITH hashed AS (
-  SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-         (CAST(user_id AS VARCHAR) || ':' || event_type) AS k,
-         {md5_long_sql("(CAST(user_id AS VARCHAR) || ':' || event_type)")} AS h
-  FROM events
-), br AS (
-  SELECT day, CAST(h % {HLL_M} AS INT) AS bucket,
-         CASE WHEN (h >> {HLL_P}) = 0 THEN {HLL_W_BITS + 1}
-              ELSE {HLL_W_BITS + 1} - length(bin(h >> {HLL_P})) END AS mb_row
-  FROM hashed
-), regs AS (
-  SELECT day, bucket, max(mb_row) AS mb FROM br GROUP BY day, bucket
-), est AS (
-  SELECT day,
-         round({_HLL_NUM!r} / CAST(sum(1::BIGINT << ({HLL_W_BITS + 1} - mb))
-               + ({HLL_M} - count(*)) * (1::BIGINT << {HLL_W_BITS + 1}) AS DOUBLE), 4) AS hll_est
-  FROM regs GROUP BY day
-  UNION ALL
-  SELECT 'ALL' AS day,
-         round({_HLL_NUM!r} / CAST(sum(1::BIGINT << ({HLL_W_BITS + 1} - mb))
-               + ({HLL_M} - count(*)) * (1::BIGINT << {HLL_W_BITS + 1}) AS DOUBLE), 4) AS hll_est
-  FROM (SELECT bucket, max(mb) AS mb FROM regs GROUP BY bucket)
-), ex AS (
-  SELECT day, count(DISTINCT k) AS exact_distinct FROM hashed GROUP BY day
-  UNION ALL
-  SELECT 'ALL' AS day, count(DISTINCT k) AS exact_distinct FROM hashed
-)
-SELECT est.day, exact_distinct, hll_est,
-       round((hll_est - exact_distinct) / exact_distinct, 6) AS rel_err,
-       (abs(hll_est - exact_distinct) / exact_distinct) <= {2 * HLL_RSD!r} AS within_2rsd
-FROM est JOIN ex USING (day)
-"""
-
-
-# Round-13 TWELFTH rotation: the portable HLL gets the sketch family's
-# first hash-exact driver row (alongside emb_near_dup returning in
-# similarity.py); count_distinct_groups (relational.py) and frame_sample
-# (multimodal.py) rotate out with full parity kept off-registry.
-# hll_vs_exact — the family's accuracy audit (exact vs estimate vs the
-# documented rsd bound, the hh_cms_vs_exact pattern) — was drafted as the
-# fourteenth-rotation candidate during the interrupted round-15 build.
-# Round 15 shipped as an OPTIMIZATION round (registry frozen at the
-# r14 set: no query may disappear), so it stays OFF-registry with the
-# identical hash-differential parity gate in
-# tests/test_offregistry_parity.py, ready for a future rotation.
 QUERIES = {"hll_distinct_daily": q_hll_distinct_daily}
 ORACLES = {"hll_distinct_daily": ORACLE_HLL_DISTINCT_DAILY}
-
-
-# ---------------------------------------------------------------------------
-# mergeable equi-width histogram — the quantile family's audit row
-# (round 15; the hh_cms_vs_exact / hll_vs_exact pattern applied to
-# quantiles, prepared off-registry as the r16 rotation candidate)
-# ---------------------------------------------------------------------------
-
-HIST_BINS = 64
-HIST_WIDTH = 16  # fixed [0, 1024) domain over documents.n_chars — covers
-# every tested SF (max 577 at sf0.1) with headroom; out-of-domain values
-# clamp into the last bin and the audit publishes in_domain per group so
-# a clamped median can never masquerade as a bounded one
-HIST_HI = HIST_BINS * HIST_WIDTH
-
-
-def q_quantile_hist_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The QUANTILE ACCURACY AUDIT: per document source — and for the ALL
-    row MERGED from the per-source bin counts, never a re-scan — the
-    exact median of n_chars, the p50 estimate read off a fixed-geometry
-    equi-width histogram (64 bins × width 16 over [0, 1024)), the
-    absolute error, and whether it sits within one bin width. The
-    histogram IS the mergeable quantile sketch a 100 TB deployment
-    stores: B int64 counts per partition/day, added bin-wise to answer
-    any rollup — the same state-not-rescan economics as the HLL rows,
-    with a DETERMINISTIC error dial (bin width) instead of a
-    probabilistic one. Every term is cross-engine exact: bin indices are
-    clamped integer divisions, the rank is integer arithmetic
-    (r = floor((n+1)/2), the lower-median rank), the estimate is one
-    integer-to-double midpoint, and the exact median interpolates two
-    int data points identically in both engines (the dispersion_stats
-    D8 contract)."""
-    docs = load_table(spark, sf_dir, "documents")
-    binned = docs.select(
-        F.col("source").alias("grp"),
-        F.least(
-            F.floor(F.col("n_chars") / F.lit(HIST_WIDTH)), F.lit(HIST_BINS - 1)
-        ).cast("int").alias("bin"),
-        F.col("n_chars"),
-    )
-    per_grp = binned.groupBy("grp", "bin").agg(F.count(F.lit(1)).alias("cnt"))
-    merged = per_grp.groupBy("bin").agg(F.sum("cnt").alias("cnt")).select(
-        F.lit("ALL").alias("grp"), "bin", "cnt"
-    )
-    hist = per_grp.unionByName(merged)
-    from pyspark.sql import Window
-
-    w_cum = Window.partitionBy("grp").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy("grp")
-    cum = hist.select(
-        "grp", "bin",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
-    r = F.floor((F.col("n") + 1) / 2)
-    est = cum.filter(F.col("cum") >= r).groupBy("grp").agg(
-        F.min("bin").alias("p50_bin"), F.first("n").alias("n_docs")
-    )
-    est = est.select(
-        "grp", "n_docs",
-        ((F.col("p50_bin") + F.lit(0.5)) * F.lit(HIST_WIDTH)).alias("hist_p50"),
-    )
-    exact = binned.groupBy("grp").agg(
-        F.median("n_chars").alias("exact_median"),
-        (F.max("n_chars") < F.lit(HIST_HI)).alias("in_domain"),
-    )
-    exact = exact.unionByName(
-        binned.agg(
-            F.median("n_chars").alias("exact_median"),
-            (F.max("n_chars") < F.lit(HIST_HI)).alias("in_domain"),
-        ).select(F.lit("ALL").alias("grp"), "exact_median", "in_domain")
-    )
-    err = F.abs(F.col("hist_p50") - F.col("exact_median"))
-    return est.join(exact, "grp").select(
-        "grp", "n_docs", "exact_median", "hist_p50",
-        F.round(err, 6).alias("abs_err"),
-        (err <= F.lit(float(HIST_WIDTH))).alias("within_bin"),
-        "in_domain",
-    )
-
-
-ORACLE_QUANTILE_HIST_VS_EXACT = f"""
-WITH binned AS (
-  SELECT source AS grp,
-         least(CAST(floor(n_chars / {HIST_WIDTH}.0) AS INT), {HIST_BINS - 1}) AS bin,
-         n_chars
-  FROM documents
-), per_grp AS (
-  SELECT grp, bin, count(*) AS cnt FROM binned GROUP BY grp, bin
-), hist AS (
-  SELECT * FROM per_grp
-  UNION ALL
-  SELECT 'ALL' AS grp, bin, CAST(sum(cnt) AS BIGINT) AS cnt FROM per_grp GROUP BY bin
-), cum AS (
-  SELECT grp, bin,
-         CAST(sum(cnt) OVER (PARTITION BY grp ORDER BY bin
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-         CAST(sum(cnt) OVER (PARTITION BY grp) AS BIGINT) AS n
-  FROM hist
-), est AS (
-  SELECT grp, min(bin) AS p50_bin, CAST(first(n) AS BIGINT) AS n_docs
-  FROM cum WHERE cum >= floor((n + 1) / 2.0) GROUP BY grp
-), ex AS (
-  SELECT source AS grp, median(n_chars) AS exact_median,
-         (max(n_chars) < {HIST_HI}) AS in_domain
-  FROM documents GROUP BY source
-  UNION ALL
-  SELECT 'ALL' AS grp, median(n_chars) AS exact_median,
-         (max(n_chars) < {HIST_HI}) AS in_domain
-  FROM documents
-)
-SELECT est.grp, n_docs,
-       CAST(exact_median AS DOUBLE) AS exact_median,
-       (p50_bin + 0.5) * {HIST_WIDTH} AS hist_p50,
-       round(abs((p50_bin + 0.5) * {HIST_WIDTH} - exact_median), 6) AS abs_err,
-       (abs((p50_bin + 0.5) * {HIST_WIDTH} - exact_median) <= {HIST_WIDTH}.0) AS within_bin,
-       in_domain
-FROM est JOIN ex USING (grp)
-"""

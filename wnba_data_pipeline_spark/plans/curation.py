@@ -32,30 +32,12 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import exact_survivors, minhash_pairs, shingle_docs
 from ..operators.graph import cluster_survivors
-from ..operators.text import PACK_BUDGET, pack_docs, quality_score_col, sample_gate
-from ..sources.sinks import overwrite_table, read_table
+from ..operators.text import pack_docs, quality_score_col, sample_gate
+from ..sources.sinks import overwrite_table
 from ..sources.tables import load_table
 
 QUALITY_MIN = 0.5  # composite quality-score gate (doc_stats)
 DEFAULT_AS_OF = "2001-09-01 00:00:00"
-
-# Per-batch persist pays for itself only when re-EXECUTING the batch's
-# upstream plan costs more than materializing it: at sf100 (~590 k gated
-# docs/batch) the uncached plan re-ran ~6× per batch (BENCH_SCALE_r14
-# inc_shipped100's swinging walls), while at sf0.1 (~1 k docs/batch) the
-# eager materialization jobs cost 3× the recompute they saved (measured
-# 154.8 s vs 46.4 s, r15 smoke A/B — tiny batches are per-job-floor
-# bound). The auto mode keys on the driver-side batch SPAN (an upper
-# bound on gated batch size, known without a count job); the threshold
-# sits well under the sf100 regime and well over the per-job-floor one.
-INC_PERSIST_MIN_BATCH = 50_000
-
-
-def _should_persist_batches(span: int) -> bool:
-    """The incremental funnel's per-batch persist mode: persist exactly
-    when batches are big enough that plan re-execution dominates
-    materialization cost. Reads ``INC_PERSIST_MIN_BATCH`` at call time."""
-    return span >= INC_PERSIST_MIN_BATCH
 
 STAGES = ("corpus", "quality_kept", "sampled", "deduped", "near_deduped", "packed")
 
@@ -112,8 +94,7 @@ def run_curation(
     and the K_MINHASH comment): at ≳1 M docs pass
     ``dedup.GEOMETRY_LARGE_N`` to re-linearize the candidate step. A
     deliberate semantic choice (it moves the S-curve midpoint), so no
-    auto-switch — and the incremental funnel must run the same detector
-    for increment-equals-batch to hold."""
+    auto-switch."""
     import time as _time
 
     _t = _time.perf_counter()
@@ -238,8 +219,7 @@ def _geometry_advisory(
     sampled candidate-pair estimate says the DEFAULT band geometry has
     entered its background-quadratic regime — the sf100 finding, surfaced
     where users meet it. Advisory ONLY: the geometry stays an explicit
-    ``run_curation(band_geometry=...)`` choice (S-curve semantics +
-    the incremental funnel's one-detector contract — see
+    ``run_curation(band_geometry=...)`` choice (S-curve semantics — see
     ``dedup.GEOMETRY_LARGE_N``). Cost: one agg over ~1/64 of the docs."""
     import logging
 
@@ -327,155 +307,6 @@ def _semantic_survivors(
         corpus.unpersist()
 
 
-def run_curation_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    base: str,
-    as_of: str = DEFAULT_AS_OF,
-    *,
-    n_batches: int = 4,
-    cc_max_iter: int = 25,
-    batch_walls: list | None = None,
-    batch_stage_walls: list | None = None,
-) -> DataFrame:
-    """The funnel's INCREMENTAL mode (round 9, VERDICT r8 item 8) — the
-    shape a production 100 TB pipeline actually runs daily: documents
-    arrive in ``n_batches`` doc_id-ordered slices; each batch passes the
-    same row-local quality/sample gates, collapses its WITHIN-batch exact
-    and near duplicates (the batch-local ``minhash_pairs`` +
-    ``cluster_survivors`` pass), screens the remainder against the
-    ACCUMULATED corpus through ``streaming.dedup.process_batch`` (exact
-    hash + banded near screen — never batch × corpus), and appends its
-    survivors. Packing then runs over the final corpus (``pack_docs`` is
-    a pure function of the surviving doc set, so the packed layout is
-    identical to the batch funnel's whenever the survivor sets agree).
-
-    INCREMENT-EQUALS-BATCH (asserted in tests/test_curation.py): in
-    doc_id-ascending arrival order this produces the same survivor set as
-    ``run_curation`` over the union whenever near-dup components are
-    stars/cliques around their lowest doc_id (planted copies and
-    boilerplate families are). The one semantic divergence is inherent to
-    ANY streaming dedup: a CHAIN component A–B–C where sim(A,C) < t
-    removes C in the global transitive closure but keeps it
-    incrementally once B (its only witness) was dropped in an earlier
-    batch — the whole-corpus sweep (`run_curation`) is the documented
-    repair, exactly like compaction repairs small files.
-
-    Row-local gates commute with batching (same verdict per doc whatever
-    slice it rides in), so gating INSIDE the loop is the real streaming
-    shape AND comparable to the batch funnel."""
-    import time as _time
-
-    from ..streaming.dedup import process_batch, read_corpus
-
-    audit = F.lit(as_of).cast("timestamp_ntz").alias("curated_at")
-    docs = load_table(spark, sf_dir, "documents")
-    lo_hi = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    lo, hi = int(lo_hi[0]), int(lo_hi[1])
-    span = (hi - lo) // n_batches + 1
-
-    corpus_dir = _p(base, "curation_inc", "corpus")
-    verdicts_dir = _p(base, "curation_inc", "verdicts")
-    # signature index (round 11, VERDICT r10 item 2): the corpus-side
-    # hash/band/shingle derivations are written ONCE per batch and read
-    # back by every later batch — per-batch cost stops growing with the
-    # corpus's recompute volume (the measured 334→522 s sf100 growth)
-    index_dir = _p(base, "curation_inc", "index")
-    # A fresh run must not inherit the previous run's batch=N subdirs:
-    # process_batch only overwrites the batches THIS run produces, so a
-    # re-run with fewer batches (or changed gates) would silently fold the
-    # prior run's stale batch=N output into read_corpus and the packed
-    # corpus. Delete the whole tree first — the same drop-then-write
-    # semantics overwrite_table gives the batch funnel (round-10 advice
-    # fix; asserted in tests/test_curation.py).
-    from ..sources.maintenance import delete_dir
-
-    for d in (corpus_dir, verdicts_dir, index_dir):
-        delete_dir(spark, d)
-    # Round 15 (VERDICT r14 item 1 — why the incremental funnel never
-    # inherited the batch funnel's 3.4× near-dedup win): the per-batch
-    # plan re-EXECUTED its upstream repeatedly. (a) the batch's shingles
-    # are persisted with it, so one Arrow pass materializes both caches
-    # and the shingle pass is timed as its own seam (local_shingle_sec);
-    # (b) the gated scan (documents read + quality
-    # score + sample gate) and the local anti-join are subplans of
-    # screen_batch's verdict branches AND the kept write — Spark performs
-    # no cross-branch CSE, so they re-ran ~6× per batch (the swinging
-    # 23.5–93.9 s batch_local_dedup / 10.4–81.8 s screen_verdicts walls
-    # in BENCH_SCALE_r14 inc_shipped100). Persist the gated batch, its
-    # shingles, and the local-survivor frame for the batch's lifetime —
-    # a PHYSICAL choice (values identical; A/B'd survivor-hash-equal in
-    # BENCH_SCALE_r15 inc_seam_attrib) that the span-keyed gate makes (see
-    # _should_persist_batches). Seam walls land in ``batch_stage_walls``.
-    inc_persist = _should_persist_batches(span)
-    _ts = 0.0
-    for i in range(n_batches):
-        t0 = _time.perf_counter()
-        _ts = t0
-        stages: dict | None = {} if batch_stage_walls is not None else None
-
-        def _smark(key: str) -> None:
-            nonlocal _ts
-            if stages is not None:
-                stages[key] = round(_time.perf_counter() - _ts, 2)
-            _ts = _time.perf_counter()
-
-        arriving = docs.filter(
-            (F.col("doc_id") >= lo + i * span) & (F.col("doc_id") < lo + (i + 1) * span)
-        )
-        gated = sample_gate(
-            arriving.withColumn("quality_score", quality_score_col("text")).filter(
-                F.col("quality_score") >= QUALITY_MIN
-            )
-        ).select("doc_id", "text")
-        to_unpersist = []
-        # same hh verify as the batch funnel's near-dup stage AND the
-        # corpus screen below — increment-equals-batch requires one
-        # detector end to end
-        if inc_persist:
-            gated = gated.persist()
-            shingled = shingle_docs(gated, hh_only=True).persist()
-            to_unpersist += [gated, shingled]
-            shingled.count()  # materializes both caches (one Arrow pass)
-            _smark("local_shingle_sec")
-            pairs = minhash_pairs(gated, shingled=shingled, verify="hh")
-        else:
-            pairs = minhash_pairs(gated, verify="hh")
-        losers = (
-            cluster_survivors(pairs, max_iter=cc_max_iter, seam_seconds=stages)
-            .filter(~F.col("is_survivor"))
-            .select(F.col("id").alias("doc_id"))
-        )
-        _smark("local_pairs_cc_sec")
-        batch = gated.join(losers, "doc_id", "left_anti")
-        if inc_persist:
-            batch = batch.persist()
-            to_unpersist.append(batch)
-            batch.count()
-            _smark("local_batch_mat_sec")
-        if stages is not None:
-            # total for continuity with the r13/r14 probes (the seam
-            # marks above sum to it); cluster_survivors evaluates the
-            # pair plan eagerly, so these walls are real work
-            stages["batch_local_dedup"] = round(_time.perf_counter() - t0, 2)
-        process_batch(
-            spark, batch, i, corpus_dir, verdicts_dir, index_dir=index_dir,
-            stage_seconds=stages, persist=inc_persist,
-        )
-        for df in to_unpersist:
-            df.unpersist()
-        if batch_stage_walls is not None:
-            batch_stage_walls.append(stages)
-        if batch_walls is not None:
-            batch_walls.append(round(_time.perf_counter() - t0, 2))
-
-    final = read_corpus(spark, corpus_dir)
-    overwrite_table(final.select("*", audit), _p(base, "curation_inc", "near_deduped"))
-    packed = pack_docs(read_table(spark, _p(base, "curation_inc", "near_deduped")))
-    overwrite_table(packed, _p(base, "curation_inc", "packed"))
-    return read_table(spark, _p(base, "curation_inc", "near_deduped"))
-
-
 def funnel_report(stages: Mapping[str, DataFrame]) -> DataFrame:
     """(stage, n_docs, n_tokens) per funnel stage, in funnel order, over
     the stage tables keyed by ``STAGES`` name."""
@@ -497,8 +328,3 @@ def funnel_report(stages: Mapping[str, DataFrame]) -> DataFrame:
     return out
 
 
-def packed_sequences(spark: SparkSession, base: str) -> DataFrame:
-    """The training-ready view: documents that fit their pack's budget cut
-    (running_tok ≤ PACK_BUDGET), ordered within packs."""
-    packed = read_table(spark, _p(base, "curation", "packed"))
-    return packed.filter(F.col("running_tok") <= PACK_BUDGET).orderBy("pack_id", "running_tok")

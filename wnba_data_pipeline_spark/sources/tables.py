@@ -7,7 +7,7 @@ lazy scan node that Catalyst prunes (columns) and filters (predicates) at the
 parquet reader, so "load then filter" costs only what the query touches.
 
 Scale notes: at 100 TB these would be date/key-partitioned directories (see
-``sinks.append_table(partition_by=...)`` and the raw layer in
+``sinks.upsert_partitions`` and the raw layer in
 ``plans.layers``) so partition pruning kicks in on the date predicates
 (SURVEY §2 B2); the loader API is the same.
 """
@@ -77,6 +77,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
     _HANDLES[key] = df
     return df
+
+
+def collect_bounded(df: DataFrame, max_rows: int):
+    """``df`` on the driver as a pandas frame, from one collect that returns
+    at most ``max_rows + 1`` rows; None when ``df`` has more than
+    ``max_rows``. The plan-build collects whose size grows with the data
+    go through here, so an oversized side fails fast instead of filling
+    the driver."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    return None if len(pdf) > max_rows else pdf
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

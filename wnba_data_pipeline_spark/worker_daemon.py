@@ -10,13 +10,24 @@ started. Here an importer re-reads its archive only when the archive's
 ``(st_mtime_ns, st_size)`` differs from the stat it recorded at its last
 read, so a new or rewritten archive is still read. The daemon imports
 pyspark and the standard library only, never the engine's modules.
+
+Spark also puts ``$SPARK_HOME/python/lib/pyspark.zip`` and the py4j source
+archive on the workers' path ahead of site-packages. ``zipimport`` caches
+no bytecode, so every daemon start would compile pyspark from source.
+When the installed pyspark and py4j have the archives' versions, the
+daemon moves the archives behind them before it imports pyspark.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import zipfile
 import zipimport
+from importlib.machinery import PathFinder
+
+_VERSION = re.compile(r"""^__version__(?:\s*:\s*str)?\s*=\s*["']([^"']+)["']""", re.M)
 
 _read_archive = zipimport.zipimporter.invalidate_caches
 
@@ -37,7 +48,47 @@ def install_zip_guard() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 
+def _archived_package(entry: str) -> str | None:
+    """The package an archive on the path ships: pyspark or py4j."""
+    name = os.path.basename(entry)
+    if name == "pyspark.zip":
+        return "pyspark"
+    if name.startswith("py4j-") and name.endswith("-src.zip"):
+        return "py4j"
+    return None
+
+
+def _version(text: str) -> str | None:
+    m = _VERSION.search(text)
+    return m.group(1) if m else None
+
+
+def prefer_installed_pyspark(path: list[str]) -> None:
+    """Move the pyspark and py4j archives in ``path`` behind the installed
+    packages, in place, when each installed ``__version__`` equals its
+    archive's; otherwise leave ``path`` as it is."""
+    archives = {pkg: entry for entry in path if (pkg := _archived_package(entry))}
+    if set(archives) != {"pyspark", "py4j"}:
+        return
+    rest = [entry for entry in path if entry not in archives.values()]
+    for pkg, archive in archives.items():
+        spec = PathFinder.find_spec(pkg, rest)
+        if spec is None or not spec.submodule_search_locations:
+            return
+        try:
+            with open(os.path.join(spec.submodule_search_locations[0], "version.py")) as f:
+                installed = _version(f.read())
+            with zipfile.ZipFile(archive) as zf:
+                archived = _version(zf.read(f"{pkg}/version.py").decode())
+        except (OSError, KeyError, zipfile.BadZipFile):
+            return
+        if installed is None or installed != archived:
+            return
+    path[:] = rest + list(archives.values())
+
+
 def main() -> None:
+    prefer_installed_pyspark(sys.path)
     from pyspark import daemon
 
     if sys.version_info < (3, 12):
