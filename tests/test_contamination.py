@@ -280,6 +280,69 @@ def test_mixture_sample_invariants(spark):
     assert binding >= 1  # the scarcest group is fully taken by construction
 
 
+def test_mixture_rate_gate_shares_match_exact_variant(spark):
+    # the metadata-fed zero-shuffle variant must achieve per-group sizes
+    # binomially close to the exact rank-cutoff variant's n_take
+    from pyspark.sql import functions as F
+
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_ORACLE, "documents")
+    counts = {
+        r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()
+    }
+    exact = {r["lang"]: r for r in text.q_mixture_sample(spark, SF_ORACLE).collect()}
+    takes = text.mixture_takes(counts)
+    # the metadata arithmetic reproduces the exact variant's integer plan
+    for lang, r in exact.items():
+        assert takes[lang][0] == r["n_total"]
+        assert takes[lang][1] == r["n_take"]
+    got = {
+        r["lang"]: r["n"]
+        for r in text.mixture_rate_gate(docs, counts)
+        .groupBy("lang")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert set(got) == set(takes)
+    for lang, (n_total, n_take, _) in takes.items():
+        # binomial tolerance: 3σ of Binomial(n_total, n_take/n_total) + slack
+        sigma = (n_take * max(1.0 - n_take / n_total, 0.0)) ** 0.5
+        assert abs(got[lang] - n_take) <= 3 * sigma + 3, (lang, got[lang], n_take)
+
+
+def test_mixture_rate_gate_is_zero_shuffle_and_deterministic(spark):
+    from pyspark.sql import functions as F
+
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_ORACLE, "documents")
+    counts = {
+        r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()
+    }
+    gated = text.mixture_rate_gate(docs, counts).select("doc_id", "lang")
+    plan = spark._jvm.PythonSQLUtils.explainString(gated._jdf.queryExecution(), "formatted")
+    assert "Exchange" not in plan, plan  # the whole point of the variant
+    ids = {r["doc_id"] for r in gated.collect()}
+    again = {
+        r["doc_id"]
+        for r in text.mixture_rate_gate(docs.repartition(13), counts).select("doc_id").collect()
+    }
+    assert ids == again  # hash gate: layout-independent selection
+
+
+def test_mixture_rate_gate_degenerate_inputs(spark):
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_ORACLE, "documents")
+    assert text.mixture_takes({}) == {}
+    assert text.mixture_takes({"xx": 100}) == {}  # no weighted group
+    assert text.mixture_rate_gate(docs, {}).count() == 0
+    # zero-count metadata rows can't bind S or emit rows
+    t = text.mixture_takes({"en": 0, "de": 50})
+    assert set(t) == {"de"}
+
+
 def test_mixture_sample_selection_is_layout_independent(spark):
     # the selected ID set (pinned by the checksum) must not move under a
     # hostile repartition of the input — rank is on (md5, doc_id), not layout
@@ -300,6 +363,44 @@ def test_mixture_sample_selection_is_layout_independent(spark):
         if r["_rn"] <= takes[r["lang"]]:
             got[r["lang"]] = got.get(r["lang"], 0) + r["doc_id"]
     assert {(lang, s) for lang, s in got.items()} == base
+
+
+def test_url_domains_match_oracle(spark, duck):
+    sdf = text.q_url_domains(spark, SF_ORACLE)
+    ddf = duck.sql(text.ORACLE_URL_DOMAINS).df()
+    compare(sdf, ddf, "url_domains")
+
+
+def test_url_domains_planted_ground_truth(spark):
+    # every URL_MOD-th doc carries exactly one site URL + one CDN URL:
+    # the CDN domain must aggregate ALL planted docs, and the site
+    # domains must partition them by doc_id % URL_SITES
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    n_docs = load_table(spark, SF_ORACLE, "documents").count()
+    planted = len([d for d in range(n_docs) if d % text.URL_MOD == 0])
+    rows = {r["domain"]: r for r in text.q_url_domains(spark, SF_ORACLE).collect()}
+    cdn = rows["cdn.example.org"]
+    assert cdn["n_docs"] == cdn["n_hits"] == planted
+    site_total = sum(
+        r["n_docs"] for d, r in rows.items() if d.endswith(".example.com")
+    )
+    assert site_total == planted
+
+
+def test_domain_blocklist_filter_removes_exactly_flagged_docs(spark):
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    docs = text._with_planted_urls(load_table(spark, SF_ORACLE, "documents"))
+    blocked = spark.createDataFrame([("site1.example.com",), ("site4.example.com",)], "domain string")
+    kept = text.domain_blocklist_filter(docs, blocked)
+    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
+    all_ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
+    removed = all_ids - kept_ids
+    want_removed = {
+        d for d in all_ids if d % text.URL_MOD == 0 and d % text.URL_SITES in (1, 4)
+    }
+    assert removed == want_removed and len(removed) > 0
 
 
 def test_gram_partials_yield_once_per_partition(spark):

@@ -113,8 +113,9 @@ def test_mixture_sample_with_absent_weight_group(spark):
 
 
 def test_temporal_joins_on_empty_sides(spark):
-    """as-of joins must flow empty frames through: empty right side ->
-    all-null matches; empty left side -> empty output. No stage raises."""
+    """as-of and range joins must flow empty frames through: empty right
+    side -> all-null matches (as-of) / zero counts (range agg); empty left
+    side -> empty output. No stage raises."""
     import datetime as dt
 
     from wnba_data_pipeline_spark.operators import temporal
@@ -135,10 +136,21 @@ def test_temporal_joins_on_empty_sides(spark):
     assert (
         temporal.asof_join(empty_l, one_r, on="user_id", left_ts="lts", right_ts="rts").count() == 0
     )
+    pairs = temporal.range_join(
+        one_l, empty_r, on="user_id", left_ts="lts", right_ts="rts", window_us=3_600_000_000, how="left"
+    )
+    agg = pairs.groupBy("lid").agg(F.count("rid").alias("n")).collect()
+    assert len(agg) == 1 and agg[0]["n"] == 0
+    assert (
+        temporal.range_join(
+            empty_l, one_r, on="user_id", left_ts="lts", right_ts="rts", window_us=3_600_000_000
+        ).count()
+        == 0
+    )
 
 
 def test_new_round6_ops_on_empty_corpus(spark):
-    """CMS heavy hitters, leakage split, and the binary
+    """CMS heavy hitters, URL analytics, leakage split, and the binary
     signature family must all flow an empty corpus through without error."""
     from wnba_data_pipeline_spark.operators import ml, similarity, text
     from wnba_data_pipeline_spark.sources.tables import load_table
@@ -149,6 +161,9 @@ def test_new_round6_ops_on_empty_corpus(spark):
         .filter(F.lit(False))
     )
     assert text.heavy_hitters_cms(docs, min_count=1).count() == 0
+    assert text.doc_domains(docs).count() == 0
+    blocked = spark.createDataFrame([("x.com",)], "domain string")
+    assert text.domain_blocklist_filter(docs, blocked).count() == 0
     pairs = spark.createDataFrame([], "doc_a long, doc_b long")
     assert ml.leakage_safe_split(docs, pairs).count() == 0
     emb = load_table(spark, SF_SMOKE, "embeddings").filter(F.lit(False))
@@ -163,8 +178,10 @@ def test_new_round6_ops_on_empty_corpus(spark):
 
 def test_round7_ops_on_empty_inputs(spark, tmp_path):
     """Round-7 additions flow empty frames without error: chunking yields
-    zero chunks and hard-negative mining zero pairs (both paths)."""
+    zero chunks, hard-negative mining zero pairs (both paths), and the
+    z-order key builds on a single-row frame (degenerate min==max spans)."""
     from wnba_data_pipeline_spark.operators import similarity, text
+    from wnba_data_pipeline_spark.sources.sinks import zorder_key
 
     empty_docs = spark.createDataFrame([], "doc_id long, lang string, text string")
     assert text.chunk_docs(empty_docs).count() == 0
@@ -172,6 +189,10 @@ def test_round7_ops_on_empty_inputs(spark, tmp_path):
     empty_emb = spark.createDataFrame([], "vec_id long, embedding array<double>, label int")
     assert similarity.hard_negatives_exact(empty_emb).count() == 0
     assert similarity.hard_negatives_bucketed(empty_emb).count() == 0
+
+    one = spark.createDataFrame([(1, 1)], "a long, b long")
+    z = one.withColumn("z", zorder_key(one, ("a", "b"))).collect()
+    assert z[0]["z"] == 0  # min==max collapses each dim to bucket 0
 
 
 def test_hard_negatives_single_label_corpus_is_empty(spark):

@@ -3,6 +3,9 @@ by metric bounds, not row identity — I1 sampling differs from sklearn)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 from wnba_data_pipeline_spark.operators import ml
 
 from .conftest import SF_ORACLE
@@ -28,3 +31,16 @@ def test_classifier_beats_chance(spark):
     assert abs(sum(r["importances"].values()) - 1.0) < 1e-6
 
 
+def test_artifact_sinks(spark, tmp_path):
+    r = ml.train_regressor(spark, SF_ORACLE)
+    out = ml.save_artifacts(r, str(tmp_path), "reg")
+    assert os.path.isdir(out["model_path"])  # MLlib model directory
+    with open(out["metadata_path"]) as f:
+        meta = json.load(f)
+    assert meta["n_train"] == r["n_train"]
+    assert set(meta["importances"]) == set(ml.REG_FEATURES)
+    # reload round-trip
+    from pyspark.ml.regression import RandomForestRegressionModel
+
+    loaded = RandomForestRegressionModel.load(out["model_path"])
+    assert loaded.getNumTrees == ml.NUM_TREES

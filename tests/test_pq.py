@@ -116,6 +116,43 @@ def test_pq_recall_vs_exact_l2(spark, model):
     assert rr >= raw
 
 
+def test_pq_reconstruction_beats_global_mean(spark, model):
+    """Quantization sanity: per-vector reconstruction MSE from codes must be
+    far below the MSE of predicting every vector by the global mean (i.e.
+    the codebooks explain most of the variance)."""
+    emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
+    enc = pq.pq_encode(emb, model, path="expr").withColumn(
+        "recon", pq.pq_decode_col(F.col("codes"), model)
+    )
+    err = enc.select(
+        F.aggregate(
+            F.zip_with("embedding", "recon", lambda a, b: (a.cast("double") - b) ** 2),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("se")
+    ).agg(F.avg("se").alias("mse")).collect()[0]["mse"]
+
+    mean_vec = emb.select(
+        F.array(*[F.avg(F.element_at("embedding", i + 1)) for i in range(pq.DIM)]).alias("mu")
+    ).collect()[0]["mu"]
+    base = emb.select(
+        F.aggregate(
+            F.zip_with(
+                "embedding",
+                F.array(*[F.lit(float(x)) for x in mean_vec]),
+                lambda a, b: (a.cast("double") - b) ** 2,
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("se")
+    ).agg(F.avg("se").alias("mse")).collect()[0]["mse"]
+    # measured 0.56 vs 1.00 on the near-uniform driver corpus — 16 codewords
+    # per 8-dim subspace can only carve so much of an isotropic cube; the
+    # gate is "quantizer genuinely fitted" (well below baseline), not a
+    # compression-ratio promise
+    assert err < 0.7 * base, f"PQ mse {err} vs mean-baseline mse {base}"
+
+
 def test_fit_reproduces_checked_in_codebooks(spark, model):
     # Guards the round-7 pq_rerank driver oracle: the static codebook
     # literals in _pq_codebooks.py must be EXACTLY what the runtime fit

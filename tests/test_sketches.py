@@ -1,6 +1,9 @@
-"""HLL gates: the per-group sketch estimate of ``tumbling_daily`` and the
-portable per-day HLL registers (daily rows and their merged union row)
-stay within HLL error of the true distinct counts."""
+"""Mergeable HLL sketch gates: stored per-day sketches must union to an
+estimate within HLL error of the true distinct count, for the full range
+and for arbitrary sub-windows — the property that makes per-day sketch
+state a valid substitute for rescanning raw events — and the portable
+per-day HLL registers (daily rows and their merged union row) stay within
+HLL error of the true distinct counts."""
 
 from __future__ import annotations
 
@@ -12,6 +15,15 @@ from wnba_data_pipeline_spark.sources.tables import load_table
 from .conftest import SF_ORACLE
 
 TOL = 0.05  # lg_k=14 gives ~0.8% rsd; 5% is a >5-sigma bound
+
+
+def test_unioned_sketches_match_exact_distinct(spark):
+    daily = sketches.daily_user_sketches(spark, SF_ORACLE).cache()
+    est = sketches.distinct_users_over(daily).collect()[0]["distinct_users_est"]
+    ev = load_table(spark, SF_ORACLE, "events")
+    exact = ev.select("user_id").distinct().count()
+    assert abs(est - exact) / exact < TOL, (est, exact)
+    daily.unpersist()
 
 
 def test_tumbling_daily_approx_shape_error_bound(spark):
@@ -36,6 +48,25 @@ def test_tumbling_daily_approx_shape_error_bound(spark):
         assert r["n_events"] == e["n_events"]
         assert r["value_sum"] == e["value_sum"]
         assert abs(r["n_users"] - e["n_users"]) <= max(TOL * e["n_users"], 2), (key, r, e)
+
+
+def test_sub_window_union_matches_exact(spark):
+    # the point of mergeable state: ANY day subset answers from sketches
+    daily = sketches.daily_user_sketches(spark, SF_ORACLE).cache()
+    days = sorted(r["day"] for r in daily.select("day").collect())
+    cut = days[len(days) // 2]
+    window = daily.filter(F.col("day") >= cut)
+    est = sketches.distinct_users_over(window).collect()[0]["distinct_users_est"]
+    ev = load_table(spark, SF_ORACLE, "events")
+    exact = (
+        ev.filter(F.col("ts").cast("date") >= F.lit(cut))
+        .select("user_id")
+        .distinct()
+        .count()
+    )
+    assert exact > 0
+    assert abs(est - exact) / exact < TOL, (est, exact, cut)
+    daily.unpersist()
 
 
 # portable fixed-point HLL (round 13 — the family's hash-exact driver row;
@@ -115,5 +146,4 @@ def test_portable_hll_small_range_correction_in_python(spark):
     assert abs(corrected - exact) <= abs(raw - exact) or abs(corrected - exact) / exact < 3.5 * HLL_RSD, (
         raw, corrected, exact, v,
     )
-
 

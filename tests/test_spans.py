@@ -1,10 +1,14 @@
-"""Exact-substring span dedup: span-merge semantics on planted corpora.
-The registry query's hash-differential oracle runs in
-tests/test_oracle_parity.py (substring_spans)."""
+"""Exact-substring span dedup: the ExactSubstr rewrite (strip_dup_spans)
+and span-merge semantics on planted corpora. The registry query's
+hash-differential oracle runs in tests/test_oracle_parity.py
+(substring_spans); these tests cover the non-SQL rewrite path."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from wnba_data_pipeline_spark.operators import spans
+from wnba_data_pipeline_spark.operators.spans import SPAN_W
 
 
 def _mk(spark, rows):
@@ -34,6 +38,57 @@ def test_span_stats_merges_overlapping_grams(spark):
     for r in got.values():
         assert r["n_dup_spans"] == 1
         assert r["dup_tokens"] == 12
+
+
+def test_strip_keeps_only_lowest_owner(spark):
+    docs = _mk(
+        spark,
+        [
+            (5, f"{_uniq_words('a', 10)} {RUN} {_uniq_words('b', 10)}"),
+            (2, f"{_uniq_words('c', 10)} {RUN}"),
+            (9, f"{RUN} {_uniq_words('d', 10)}"),
+        ],
+    )
+    out = {r["doc_id"]: r for r in spans.strip_dup_spans(docs).collect()}
+    # doc 2 is the lowest doc_id sharing every gram of the run: it keeps it
+    assert out[2]["n_removed_tokens"] == 0
+    assert RUN in out[2]["text"]
+    # the others lose exactly the 12-token run, filler intact
+    for d, filler in ((5, ("a", "b")), (9, ("d",))):
+        assert out[d]["n_removed_tokens"] == 12
+        assert "shared0" not in out[d]["text"]
+        for tag in filler:
+            assert f"{tag}0" in out[d]["text"]
+
+
+def test_strip_converges_to_no_cross_doc_duplicates(spark):
+    docs = _mk(
+        spark,
+        [
+            (5, f"{_uniq_words('a', 10)} {RUN} {_uniq_words('b', 10)}"),
+            (2, f"{_uniq_words('c', 10)} {RUN}"),
+            (9, f"{RUN} {_uniq_words('d', 10)}"),
+        ],
+    )
+    stripped = spans.strip_dup_spans(docs).select("doc_id", "text")
+    # after the rewrite the run survives only in its owner: a re-scan finds
+    # zero cross-doc duplicated grams (ExactSubstr fixed point in one pass)
+    assert spans.dup_gram_hits(stripped).count() == 0
+
+
+def test_short_and_unique_docs_untouched(spark):
+    docs = _mk(
+        spark,
+        [
+            (1, "tiny doc"),  # shorter than SPAN_W: no grams at all
+            (2, _uniq_words("u", SPAN_W + 4)),  # unique content
+            (3, _uniq_words("v", SPAN_W + 4)),
+        ],
+    )
+    assert spans.dup_span_stats(docs).count() == 0
+    out = {r["doc_id"]: r for r in spans.strip_dup_spans(docs).collect()}
+    assert all(r["n_removed_tokens"] == 0 for r in out.values())
+    assert out[1]["text"] == "tiny doc"
 
 
 def test_within_doc_repeat_is_not_cross_doc_dup(spark):

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import functions as F
 
 from wnba_data_pipeline_spark.operators import temporal
 
@@ -62,6 +63,69 @@ def test_asof_equal_ts_dup_right_takes_max_payload(spark):
     assert got[1] == 201 and got[2] == 201
 
 
+def test_range_join_bounds_closed_open(spark):
+    hour = 3600 * 1_000_000
+    left = spark.createDataFrame(
+        [(1, 10, _ts("2024-01-01 12:00:00"))], "lid long, user_id long, lts timestamp_ntz"
+    )
+    right = spark.createDataFrame(
+        [
+            (100, 10, _ts("2024-01-01 11:00:00")),  # == lts - W: INCLUDED
+            (101, 10, _ts("2024-01-01 11:30:00")),  # inside
+            (102, 10, _ts("2024-01-01 12:00:00")),  # == lts: EXCLUDED (open end)
+            (103, 10, _ts("2024-01-01 10:59:59")),  # before window
+            (104, 11, _ts("2024-01-01 11:30:00")),  # other key
+        ],
+        "rid long, user_id long, rts timestamp_ntz",
+    )
+    out = temporal.range_join(
+        left, right, on="user_id", left_ts="lts", right_ts="rts", window_us=hour
+    )
+    assert sorted(r.rid for r in out.collect()) == [100, 101]
+
+
+def test_range_join_left_keeps_unmatched_with_null_skipping_agg(spark):
+    hour = 3600 * 1_000_000
+    left = spark.createDataFrame(
+        [(1, 10, _ts("2024-01-01 12:00:00")), (2, 99, _ts("2024-01-01 12:00:00"))],
+        "lid long, user_id long, lts timestamp_ntz",
+    )
+    right = spark.createDataFrame(
+        [(100, 10, _ts("2024-01-01 11:30:00"))], "rid long, user_id long, rts timestamp_ntz"
+    )
+    out = (
+        temporal.range_join(
+            left, right, on="user_id", left_ts="lts", right_ts="rts", window_us=hour, how="left"
+        )
+        .groupBy("lid")
+        .agg(F.count("rid").alias("n"))
+    )
+    got = {r.lid: r.n for r in out.collect()}
+    assert got == {1: 1, 2: 0}
+
+
+def test_range_join_left_null_rows_only_for_unmatched(spark):
+    # The bin fan-out must NOT leak per-bin null padding: a matched left
+    # row emits only its pairs, an unmatched one exactly one null row —
+    # so count(*) and `rid IS NULL` are faithful on the raw pair output
+    # (ADVICE r6: the old behavior emitted a null row per empty bin).
+    hour = 3600 * 1_000_000
+    left = spark.createDataFrame(
+        [(1, 10, _ts("2024-01-01 12:00:00")), (2, 99, _ts("2024-01-01 12:00:00"))],
+        "lid long, user_id long, lts timestamp_ntz",
+    )
+    right = spark.createDataFrame(
+        [(100, 10, _ts("2024-01-01 11:30:00"))], "rid long, user_id long, rts timestamp_ntz"
+    )
+    rows = temporal.range_join(
+        left, right, on="user_id", left_ts="lts", right_ts="rts", window_us=hour, how="left"
+    ).collect()
+    by_lid = {}
+    for r in rows:
+        by_lid.setdefault(r.lid, []).append(r.rid)
+    assert by_lid == {1: [100], 2: [None]}
+
+
 def test_asof_plan_single_exchange(spark):
     plan = (
         temporal.q_asof_attribution(spark, "/root/testdata/sf0.001")
@@ -84,6 +148,25 @@ def test_range_agg_plan_is_single_shuffle_window(spark):
     )
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan and "Window" in plan
+
+
+def test_range_join_plan_is_equi_hash_join(spark):
+    from wnba_data_pipeline_spark.sources.tables import load_table
+
+    # every same-user event in the 24 hours before each purchase
+    events = load_table(spark, "/root/testdata/sf0.001", "events")
+    purchases = events.filter(F.col("event_type") == temporal.ASOF_LEFT_TYPE).select(
+        F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("purchase_ts")
+    )
+    prior = events.select("user_id", F.col("event_id").alias("prior_id"), F.col("ts").alias("prior_ts"))
+    pairs = temporal.range_join(
+        purchases, prior, on="user_id", left_ts="purchase_ts", right_ts="prior_ts"
+    ).select("purchase_id", "user_id", "prior_id")
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    # the (key, bin) equality must reach a hash-partitionable join — the
+    # whole point of the bin trick; a raw range predicate plans as BNLJ
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
 def test_asof_differential_vs_pandas_merge_asof(spark):

@@ -12,8 +12,8 @@ Layout
                  on the workers' path are re-read only when they change,
                  and pyspark imports from the installed package.
 - ``sources``    table loaders for the driver's parquet star schema, bounded
-                 driver collects, the REST fan-out ingest adapter, and the
-                 overwrite/upsert sinks.
+                 driver collects, the REST fan-out ingest adapter, the
+                 overwrite/upsert sinks and clustered/Z-order layout writes.
 - ``functions``  reusable Column-level expression library (avg_rank,
                  rolling means, cross-engine deterministic hashing,
                  text/vector expressions).
@@ -22,7 +22,8 @@ Layout
                  multimodal (binary payload) processing, ML.
 - ``plans``      reference-domain layer jobs (raw → analytics →
                  ml_features → dashboard) over canonical schemas, the
-                 curation funnel, and the bucketed catalog layout.
+                 curation funnel, the bucketed catalog layout and catalog
+                 registration.
 """
 
 __version__ = "0.1.0"

@@ -1,5 +1,5 @@
 """Deduplication operators over the ``documents`` table — exact content-hash
-dedup and MinHash-LSH near-duplicate detection.
+dedup, MinHash-LSH near-duplicate detection, and SimHash fingerprints.
 
 These are the LLM-training-data operators the reference pipeline does not
 have but a 100 TB corpus pipeline needs (the build brief's north star; the
@@ -24,6 +24,8 @@ Scale posture (100 TB):
 - minhash: candidates come from BANDED BUCKETS (explode k/r band keys,
   group on band_key) — pair work ~ O(colliding pairs), never the all-pairs
   O(n²); exact Jaccard runs once per candidate, inside its bucket group.
+- simhash: embarrassingly parallel map (no shuffle at all); downstream
+  near-dup grouping is a groupBy on the 16-bit fingerprint.
 """
 
 from __future__ import annotations
@@ -87,6 +89,8 @@ COEFFS = minhash_coeffs(K_MINHASH)  # seeded — identical constants both engine
 
 EXACT_COPY_OFFSET = 2_000_000  # doc_id offset for planted exact copies
 NEAR_COPY_OFFSET = 1_000_000  # doc_id offset for planted near-copies
+SIMHASH_BITS = 16
+
 # LSH band buckets above this many rows are sliced into pair groups of at
 # most 2 × HOT_BUCKET_MIN rows (see band_slices). The sf30 organic
 # maximum bucket was 359 rows (BENCH_SCALE_r09 minhash_probe), so only
@@ -708,12 +712,69 @@ SELECT doc_a, doc_b, jaccard FROM (
 ORACLE_DEDUP_MINHASH = _oracle_dedup_minhash()
 
 
+# ---------------------------------------------------------------------------
+# SimHash — 16-bit fingerprint over the word multiset
+# ---------------------------------------------------------------------------
+
+
+def q_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document SimHash: each word's md5-int64 votes ±1 on each of 16 bit
+    positions; a bit is set when its vote sum is positive. Pure per-row
+    expression work (one codegen'd map stage, zero shuffles) — at 100 TB the
+    fingerprint column costs one pass and near-dup grouping is a groupBy on
+    the fingerprint."""
+    docs = load_table(spark, sf_dir, "documents")
+    words = F.split(F.col("text"), " ")
+    hashes = F.transform(words, md5_long)
+    def _vote(d: int):
+        # closure (not default args): PySpark derives lambda arity by signature
+        return lambda acc, h: acc + F.when(h.bitwiseAND(F.lit(d)) != 0, F.lit(1)).otherwise(F.lit(-1))
+
+    sums = [F.aggregate(hashes, F.lit(0).cast("long"), _vote(1 << bit)) for bit in range(SIMHASH_BITS)]
+    simhash = None
+    for bit, s in enumerate(sums):
+        term = F.when(s > 0, F.lit(1 << bit)).otherwise(F.lit(0))
+        simhash = term if simhash is None else simhash + term
+    return docs.select(
+        "doc_id",
+        F.size(words).cast("bigint").alias("n_tokens"),
+        simhash.cast("bigint").alias("simhash16"),
+    )
+
+
+def _oracle_simhash() -> str:
+    sums = ", ".join(
+        f"list_sum(list_transform(hh, h -> CASE WHEN (h & {1 << bit}) <> 0 THEN 1 ELSE -1 END)) AS s{bit}"
+        for bit in range(SIMHASH_BITS)
+    )
+    total = " + ".join(f"CASE WHEN s{bit} > 0 THEN {1 << bit} ELSE 0 END" for bit in range(SIMHASH_BITS))
+    return f"""
+WITH tok AS (
+  SELECT doc_id, string_split(text, ' ') AS words FROM documents
+), hashed AS (
+  SELECT doc_id, len(words) AS n_tokens,
+         list_transform(words, w -> {md5_long_sql("w")}) AS hh
+  FROM tok
+), votes AS (
+  SELECT doc_id, n_tokens, {sums} FROM hashed
+)
+SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+       CAST({total} AS BIGINT) AS simhash16
+FROM votes
+"""
+
+
 QUERIES = {
     "dedup_exact": q_dedup_exact,
     "dedup_minhash": q_dedup_minhash,
+    # simhash_fingerprint stays off the capped registry: hamming_rerank
+    # holds its packed-sign Hamming arithmetic; it keeps oracle parity in
+    # tests/test_offregistry_parity.py.
 }
 
 ORACLES = {
     "dedup_exact": ORACLE_DEDUP_EXACT,
     "dedup_minhash": ORACLE_DEDUP_MINHASH,
 }
+
+ORACLE_SIMHASH = _oracle_simhash()  # off-registry parity

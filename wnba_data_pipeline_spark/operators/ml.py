@@ -29,6 +29,9 @@ metrics and importances.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.ml.classification import RandomForestClassifier
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator, RegressionEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
@@ -248,6 +251,19 @@ def leakage_safe_split(
             ).otherwise(F.lit("train")),
         )
     )
+
+
+def save_artifacts(result: dict, out_dir: str, name: str) -> dict:
+    """A10: model artifact + JSON metadata sinks (the reference pickles the
+    model and json.dumps metadata, ``model_training.py:87-97,316-320``)."""
+    model_path = os.path.join(out_dir, f"{name}_model")
+    result["model"].write().overwrite().save(model_path)
+    meta = {k: v for k, v in result.items() if k not in ("model", "scaler")}
+    meta["model_path"] = model_path
+    meta_path = os.path.join(out_dir, f"{name}_metadata.json")
+    with open(meta_path, "w") as f:
+        json.dump(meta, f, indent=2, sort_keys=True)
+    return {"model_path": model_path, "metadata_path": meta_path}
 
 
 # --- driver-facing query (rows-only: sampling differs from sklearn, so

@@ -1,5 +1,5 @@
 """Product quantization (PQ) for the embeddings corpus — codebook training,
-vector encoding, and asymmetric-distance (ADC) top-k search.
+vector encoding, reconstruction, and asymmetric-distance (ADC) top-k search.
 
 Why this exists at 100 TB: a 64-dim float32 embedding is 256 bytes; its PQ
 code at m=8 subspaces × 4 bits is 4 bytes — a 64× storage/scan compression.
@@ -24,6 +24,8 @@ Structure:
   ksub; zero Python) or an Arrow-batched numpy argmin (``path="pandas"``),
   bit-identical by the same association/tie-break contract as
   ``clustering.assign_clusters``.
+- ``pq_decode_col`` — reconstruction expression (codebook row lookup +
+  flatten), for reconstruction-error audits.
 - ``pq_adc_topk`` — per-query m×ksub distance lookup table built as
   literal-free in-plan expressions, broadcast against the codes scan;
   approximate distance = sum of m table lookups; top-k via the same
@@ -202,6 +204,20 @@ def pq_encode(
 
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, ArrayType(IntegerType()))])
     return df.mapInPandas(encode, out_schema)
+
+
+def pq_decode_col(codes: Column, model: PQModel) -> Column:
+    """Reconstruction expression: codebook-row lookup per subspace, then
+    flatten back to a DIM-length array<double> — the audit path for
+    quantization error (never needed by search, which works on codes)."""
+    rows = [
+        F.element_at(
+            F.array(*[F.array(*[F.lit(x) for x in word]) for word in cb]),
+            F.element_at(codes, j + 1) + F.lit(1),
+        )
+        for j, cb in enumerate(model.codebooks)
+    ]
+    return F.flatten(F.array(*rows))
 
 
 def pq_adc_topk(

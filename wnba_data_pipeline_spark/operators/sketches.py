@@ -25,9 +25,28 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_long, md5_long_sql
 from ..sources.tables import load_table
 
-# DataSketches HLL precision of relational.q_tumbling_daily(approx=True):
-# ~0.8% rsd, ~16 KB max per sketch
-LG_K = 14
+LG_K = 14  # sketch precision: ~0.8% rsd, ~16 KB max per sketch
+
+
+def daily_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-day HLL sketch of user_id over events — the stored state a
+    daily incremental job appends (one shuffle on day; sketch building is
+    map-side partial like any aggregate)."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
+        F.hll_sketch_agg("user_id", F.lit(LG_K)).alias("user_sketch"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+
+
+def distinct_users_over(sketches: DataFrame) -> DataFrame:
+    """Union any subset of stored day sketches into one distinct-user
+    estimate — #days rows aggregated, raw events never touched."""
+    return sketches.agg(
+        F.hll_sketch_estimate(F.hll_union_agg("user_sketch", F.lit(True))).alias("distinct_users_est"),
+        F.count(F.lit(1)).alias("n_days"),
+    )
+
 
 # ---------------------------------------------------------------------------
 # portable fixed-point HLL — the family's hash-exact driver row (round 13)

@@ -9,7 +9,9 @@ north star): document-level dedup (``operators/dedup.py``) misses the
 boilerplate case — a licence block or navigation footer repeated verbatim
 inside otherwise-unique documents. This pass finds every token run of
 length ≥ SPAN_W that also occurs in another document, merges the
-overlapping gram hits into maximal per-document spans.
+overlapping gram hits into maximal per-document spans, and (in
+``strip_dup_spans``) excises every occurrence except the one in the
+lowest-doc_id owner.
 
 Plan shape (and why it survives 100 TB):
   1. gram inventory — one Arrow pass emitting (doc, pos, gram hash) per
@@ -189,6 +191,67 @@ SELECT p.doc_id, CAST(len(t.words) AS BIGINT) AS n_tokens,
        round(p.dup_tokens / CAST(len(t.words) AS DOUBLE), 6) AS dup_share
 FROM per_doc p JOIN tok t ON p.doc_id = t.doc_id
 """
+
+
+def strip_dup_spans(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, text, n_removed_tokens): the corpus with
+    every duplicated run removed EXCEPT its canonical occurrence — the
+    actual ExactSubstr rewrite, not just the report.
+
+    Ownership is per gram hash: the lowest doc_id containing a gram keeps
+    it; every other doc's hit positions for that gram are removal
+    candidates. Per doc, non-owned hit positions merge into maximal spans
+    (same gaps-and-islands as ``dup_span_stats``) and the covered token
+    indices are filtered out of the split array before re-joining the
+    text. A doc that owns part of a longer shared run keeps exactly the
+    grams it canonically owns — spans are trimmed, not all-or-nothing.
+
+    Scale: adds one hash aggregate (min doc_id per gram) and one
+    per-doc array-interval aggregation on top of ``dup_gram_hits``; the
+    rewrite itself is a zero-shuffle codegen filter over the token array.
+    """
+    words = F.split(F.col("text"), " ")
+    hits = dup_gram_hits(docs)
+    owners = hits.groupBy("gh").agg(F.min("doc_id").alias("owner"))
+    removals = (
+        hits.join(owners, "gh")
+        .filter(F.col("doc_id") != F.col("owner"))
+        .select("doc_id", "pos")
+        .distinct()
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    intervals = (
+        removals.withColumn("prev", F.lag("pos").over(w))
+        .withColumn(
+            "new_island",
+            F.when(F.col("prev").isNull() | (F.col("pos") > F.col("prev") + SPAN_W), 1).otherwise(0),
+        )
+        .withColumn("island", F.sum("new_island").over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy("doc_id", "island")
+        .agg(
+            F.min("pos").cast("int").alias("lo"),
+            (F.max("pos") + F.lit(SPAN_W)).cast("int").alias("hi"),
+        )
+        .groupBy("doc_id")
+        .agg(F.collect_list(F.struct("lo", "hi")).alias("cut"))
+    )
+    kept = F.filter(
+        F.transform(words, lambda tok, i: F.struct(tok.alias("tok"), i.alias("i"))),
+        lambda s: ~F.exists(
+            F.col("cut"), lambda c: (s["i"] >= c["lo"]) & (s["i"] < c["hi"])
+        ),
+    )
+    return (
+        docs.join(intervals, "doc_id", "left")
+        .withColumn(
+            "cut", F.coalesce("cut", F.expr("cast(array() as array<struct<lo:int,hi:int>>)"))
+        )
+        .select(
+            "doc_id",
+            F.concat_ws(" ", F.transform(kept, lambda s: s["tok"])).alias("text"),
+            (F.size(words) - F.size(kept)).cast("long").alias("n_removed_tokens"),
+        )
+    )
 
 
 QUERIES = {"substring_spans": q_substring_spans}

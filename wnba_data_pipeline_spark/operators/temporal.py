@@ -14,16 +14,22 @@ attribution pipeline additionally needs:
     union + tag + single partitioned sort + ``last(..., ignorenulls)``
     running window: ONE shuffle on the join key, one in-partition sort —
     the same cost family as sessionization, never all-pairs.
-  * **bounded range aggregate** — "aggregate right-hand rows with
+  * **bounded range join** — "aggregate right-hand rows with
     ts ∈ [left_ts − W, left_ts)" (trailing-window features). A raw range
     predicate plans as BroadcastNestedLoopJoin (O(L·R) — the scale
-    cliff); over one keyed event stream the aggregate is a range-frame
-    window over epoch microseconds instead (``q_range_join_bins``).
+    cliff). With the time axis bucketed into W-sized bins, each left row
+    probes at most TWO bins and the join is a plain equi-join on
+    (key, bin) with the exact range predicate evaluated inside the join:
+    shuffle volume is O(L + R), skew bounded by rows-per-key-per-window.
 
-Scale posture (100 TB): both shapes shuffle once on the key, then do
-per-partition sorted work. The as-of window state is one row (``last``
-over unbounded-preceding is a running value, not a buffered frame).
-Neither operator ever materializes a cross-product.
+Scale posture (100 TB): both shapes shuffle once on (key[, bin]) — a
+uniform composite key — then do per-partition sorted/hashed work. The
+as-of window state is one row (``last`` over unbounded-preceding is a
+running value, not a buffered frame). The range join's fan-out is exactly
+2× on the probe side and 1× on the build side, independent of corpus
+size; the equality keys reach the shuffle exchange so AQE's skew-join
+splitting applies as usual. Neither operator ever materializes a
+cross-product.
 
 Determinism contract: right-side ties at identical (key, ts) are broken
 by the max payload struct (lexicographic), and every hash-compared double
@@ -41,9 +47,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .relational import _dsum_sql, _is_bucketed, _layout_table
+from ..sources.tables import load_table
+from .relational import _dsum, _dsum_sql, _is_bucketed, _layout_table
 
-# the trailing window of q_range_join_bins: 24 hours in microseconds
+# 24h trailing window = bin width (window == bin ⇒ each probe touches ≤2 bins)
 WINDOW_US = 24 * 3600 * 1_000_000
 
 
@@ -55,6 +62,10 @@ def _us(c: str | Column) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     return F.unix_micros(c.cast("timestamp"))
 
+
+def _us_sql_expr(col: str) -> str:
+    """Same conversion for F.expr fragments."""
+    return f"unix_micros(cast({col} as timestamp))"
 
 ASOF_LEFT_TYPE = "purchase"  # rows being enriched
 ASOF_RIGHT_TYPE = "click"  # rows supplying the as-of payload
@@ -171,6 +182,81 @@ def asof_join(
     out_cols = [F.col(f"_l.{c}").alias(c) for c in left.columns]
     out_cols += [F.col(f"_m.{c}").alias(c) for c in r_payload]
     return matched.select(*out_cols)
+
+
+def range_join(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    on: str,
+    left_ts: str,
+    right_ts: str,
+    window_us: int = WINDOW_US,
+    how: str = "inner",
+) -> DataFrame:
+    """Bounded range join: pairs every ``left`` row with the ``right``
+    rows of the same ``on`` key whose ``right_ts`` falls in
+    ``[left_ts − window_us, left_ts)`` (trailing window, end-exclusive —
+    a row never joins itself when both sides come from one table).
+
+    ``how='left'`` keeps unmatched left rows with EXACTLY one null-padded
+    row each, and matched left rows emit only their match pairs — the bin
+    fan-out's spurious per-bin null rows (a matched left row whose OTHER
+    bin-row found nothing, or a doubly-unmatched row's second bin) are
+    post-filtered per original left row, so ``right_col IS NULL`` on the
+    output is a faithful unmatched test. The filter costs one extra
+    window shuffle on the left-row id and runs only for ``how='left'``.
+
+    Scalability is the bin trick described in the module docstring: the
+    range predicate stays in the JOIN CONDITION (left-join correctness
+    and join-time evaluation) while the (key, bin) equality gives
+    Catalyst a hash-partitionable equi-join — no BroadcastNestedLoop.
+    """
+    # Internal renames make both sides' attributes disjoint — left and
+    # right usually derive from the SAME table here (trailing self-join),
+    # and same-lineage references would trip Spark's ambiguous-self-join
+    # detection. Bin INDEX bounds use integer division (exact on int64 —
+    # no double rounding at epoch-microsecond magnitude).
+    lhs = left.select([F.col(c).alias(f"_l_{c}") for c in left.columns])
+    if how == "left":
+        # stable per-ORIGINAL-left-row identity, assigned BEFORE the bin
+        # explode so both bin-rows of one left row share it
+        lhs = lhs.withColumn("_lrow", F.monotonically_increasing_id())
+    lhs = lhs.withColumn(
+        "_lbin",
+        F.explode(
+            F.sequence(
+                F.expr(f"({_us_sql_expr(f'_l_{left_ts}')} - {window_us}) div {window_us}"),
+                F.expr(f"({_us_sql_expr(f'_l_{left_ts}')} - 1) div {window_us}"),
+            )
+        ),
+    )
+    rhs = right.select([F.col(c).alias(f"_r_{c}") for c in right.columns]).withColumn(
+        "_rbin", F.expr(f"{_us_sql_expr(f'_r_{right_ts}')} div {window_us}")
+    )
+    us_l, us_r = _us(f"_l_{left_ts}"), _us(f"_r_{right_ts}")
+    cond = (
+        (F.col(f"_l_{on}") == F.col(f"_r_{on}"))
+        & (F.col("_lbin") == F.col("_rbin"))
+        & (us_r >= us_l - F.lit(window_us))
+        & (us_r < us_l)
+    )
+    joined = lhs.join(rhs, cond, how)
+    if how == "left":
+        # Collapse the bin fan-out's null-padding to at most ONE null row
+        # per original left row, emitted only when NEITHER bin matched:
+        # keep every matched pair; among a left row's null bin-rows keep
+        # the first only if the row has zero matches across both bins.
+        matched = F.col(f"_r_{on}").isNotNull()
+        w = Window.partitionBy("_lrow")
+        joined = (
+            joined.withColumn("_any", F.max(matched.cast("int")).over(w) == 1)
+            .withColumn("_rn", F.row_number().over(w.orderBy(F.col("_lbin"))))
+            .filter(matched | (~F.col("_any") & (F.col("_rn") == 1)))
+        )
+    out = [F.col(f"_l_{c}").alias(c) for c in left.columns]
+    out += [F.col(f"_r_{c}").alias(c) for c in right.columns if c != on]
+    return joined.select(*out)
 
 
 # ---------------------------------------------------------------------------
@@ -308,7 +394,9 @@ def q_range_join_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bin-join materialized ~4.4 M pairs and re-shuffled them to group
     by purchase). The frame [us−W, us−1] over the full per-user stream is
     exactly ts' ∈ [ts−W, ts) — current row self-excluded since (user_id,
-    ts) collisions cannot land inside a frame ending at us−1.
+    ts) collisions cannot land inside a frame ending at us−1. The
+    pair-producing general form stays :func:`range_join` (exercised by
+    its unit tests in tests/test_temporal.py).
 
     Layout-aware (round 8, VERDICT r7 item 2): the epoch-micros ordering
     expression is semantically the raw ``ts`` order, but Spark's ordering
@@ -414,6 +502,40 @@ def q_range_join_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def range_agg_binjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bin-join physical shape of ``q_range_join_bins`` — same rows,
+    measured SLOWER at sf10 (the join materializes ~4.4 M pairs and
+    re-shuffles them to group by purchase; see BENCH_SCALE_r06
+    temporal_joins). Kept as the measured alternative and the shape a
+    TWO-TABLE trailing aggregate (where no shared event stream exists for
+    a window pass) would use."""
+    events = load_table(spark, sf_dir, "events")
+    purchases = events.filter(F.col("event_type") == ASOF_LEFT_TYPE).select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+    )
+    prior = events.select(
+        "user_id",
+        F.col("event_id").alias("prior_id"),
+        F.col("ts").alias("prior_ts"),
+        F.col("value").alias("prior_value"),
+    )
+    pairs = range_join(
+        purchases,
+        prior,
+        on="user_id",
+        left_ts="purchase_ts",
+        right_ts="prior_ts",
+        window_us=WINDOW_US,
+        how="left",
+    )
+    return pairs.groupBy("purchase_id", "user_id", "purchase_ts").agg(
+        F.count("prior_id").cast("long").alias("n_prior_24h"),
+        F.coalesce(_dsum("prior_value"), F.lit(0.0)).alias("value_sum_24h"),
+    )
+
+
 ORACLE_RANGE_JOIN_BINS = f"""
 WITH p AS (
   SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
@@ -433,6 +555,9 @@ GROUP BY p.purchase_id, p.user_id, p.purchase_ts
 QUERIES = {
     "asof_attribution": q_asof_attribution,
     "range_join_bins": q_range_join_bins,
+    # range_agg_binjoin (the two-table bin-join form of the same rows,
+    # sharing ORACLE_RANGE_JOIN_BINS) stays off the capped registry with
+    # oracle parity in tests/test_offregistry_parity.py.
 }
 ORACLES = {
     "asof_attribution": ORACLE_ASOF_ATTRIBUTION,

@@ -29,6 +29,16 @@ from ..sources.tables import collect_bounded, load_table
 STOPWORDS = ("a", "the", "of", "to", "and", "in", "is")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
+# language marker words for the heuristic (the corpus vocabulary is synthetic
+# English-ish for every lang label, so the heuristic mostly answers 'en' —
+# the DETERMINISM and the agreement report are the point, not accuracy)
+LANG_MARKERS = {
+    "en": ("the", "a", "is", "of"),
+    "de": ("der", "die", "das", "und"),
+    "es": ("el", "la", "los", "y"),
+    "fr": ("le", "les", "des", "et"),
+}
+
 TOKEN_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"  # BPE-ish: runs of letters/digits, else single char
 
 
@@ -271,16 +281,138 @@ FROM s
 
 
 # ---------------------------------------------------------------------------
-# winnowing fingerprints — per-window k-gram hash minima (MOSS-style)
+# language-ID heuristic + agreement report
+# ---------------------------------------------------------------------------
+
+
+def q_lang_id_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Marker-word language ID, reported as an agreement matrix against the
+    labeled ``lang`` column: (lang, predicted_lang, n_docs, avg marker hit
+    rate). Prediction is a fixed-precedence CASE over marker counts so ties
+    resolve identically in both engines."""
+    docs = load_table(spark, sf_dir, "documents")
+    words = F.split(F.col("text"), " ")
+    scores = {k: _count_in(words, v) for k, v in LANG_MARKERS.items()}
+    pred = (
+        F.when(scores["en"] >= F.greatest(scores["de"], scores["es"], scores["fr"]) + 1, F.lit("en"))
+        .when(scores["de"] >= F.greatest(scores["en"], scores["es"], scores["fr"]) + 1, F.lit("de"))
+        .when(scores["es"] >= F.greatest(scores["en"], scores["de"], scores["fr"]) + 1, F.lit("es"))
+        .when(scores["fr"] >= F.greatest(scores["en"], scores["de"], scores["es"]) + 1, F.lit("fr"))
+        .otherwise(F.lit("und"))
+    )
+    hit_rate = sum(scores.values()) / F.size(words)
+    return (
+        docs.select("lang", pred.alias("predicted_lang"), hit_rate.alias("_hr"))
+        .groupBy("lang", "predicted_lang")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.round(F.avg("_hr"), 6).alias("avg_marker_rate"))
+    )
+
+
+def _oracle_lang_id() -> str:
+    score_cols = ", ".join(
+        _count_in_sql("words", ", ".join(f"'{w}'" for w in v)) + f" AS s_{k}" for k, v in LANG_MARKERS.items()
+    )
+    pred = """CASE
+      WHEN s_en >= greatest(s_de, s_es, s_fr) + 1 THEN 'en'
+      WHEN s_de >= greatest(s_en, s_es, s_fr) + 1 THEN 'de'
+      WHEN s_es >= greatest(s_en, s_de, s_fr) + 1 THEN 'es'
+      WHEN s_fr >= greatest(s_en, s_de, s_es) + 1 THEN 'fr'
+      ELSE 'und' END"""
+    return f"""
+WITH tok AS (
+  SELECT lang, string_split(text, ' ') AS words FROM documents
+), s AS (
+  SELECT lang, len(words) AS n, {score_cols} FROM tok
+)
+SELECT lang, {pred} AS predicted_lang, count(*) AS n_docs,
+       round(avg((s_en + s_de + s_es + s_fr) / n), 6) AS avg_marker_rate
+FROM s GROUP BY lang, {pred}
+"""
+
+
+# ---------------------------------------------------------------------------
+# corpus rollup by (lang, source)
+# ---------------------------------------------------------------------------
+
+
+def q_text_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus curation rollup: per (lang, source) doc counts and length
+    moments — the pass that decides source sampling weights. One shuffle on
+    the (small) group key."""
+    docs = load_table(spark, sf_dir, "documents")
+    n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
+    return docs.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.round(F.avg("n_chars"), 6).alias("avg_chars"),
+        F.round(F.avg(n_tok), 6).alias("avg_tokens"),
+        F.min("n_chars").alias("min_chars"),
+        F.max("n_chars").alias("max_chars"),
+        F.sum(n_tok).alias("total_tokens"),
+    )
+
+
+ORACLE_TEXT_CORPUS_ROLLUP = """
+SELECT lang, source, count(*) AS n_docs,
+       round(avg(n_chars), 6) AS avg_chars,
+       round(avg(len(string_split(text, ' '))), 6) AS avg_tokens,
+       min(n_chars) AS min_chars, max(n_chars) AS max_chars,
+       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
+FROM documents GROUP BY lang, source
+"""
+
+
+# ---------------------------------------------------------------------------
+# character-shingle fingerprint (rolling-hash style)
 # ---------------------------------------------------------------------------
 
 SHINGLE_CHARS = 8
+
+
+def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document fingerprint from character 8-gram shingles: distinct-shingle
+    count + the minimum shingle hash (the winnowing primitive — at 100 TB
+    the per-window min selection extends this same expression). Zero-shuffle
+    map stage."""
+    # length guard on BOTH sides (round-8 review fix): below SHINGLE_CHARS
+    # Spark's sequence(1, len-7) runs DESCENDING (default step -1) and
+    # fabricates garbage shingles while DuckDB's range() is empty — the
+    # same guard the sibling winnow_fingerprints always had
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.length("text") >= SHINGLE_CHARS
+    )
+    grams = F.expr(f"transform(sequence(1, length(text) - {SHINGLE_CHARS - 1}), i -> substring(text, i, {SHINGLE_CHARS}))")
+    shingles = F.array_distinct(grams)
+    hashes = F.transform(shingles, md5_long)
+    return docs.select(
+        "doc_id",
+        F.size(shingles).cast("long").alias("n_shingles"),
+        F.array_min(hashes).alias("min_shingle_hash"),
+    )
+
+
+ORACLE_DOC_FINGERPRINT = f"""
+WITH g AS (
+  SELECT doc_id,
+         list_distinct(list_transform(range(length(text) - {SHINGLE_CHARS - 1}),
+                                      i -> substr(text, i + 1, {SHINGLE_CHARS}))) AS sh
+  FROM documents WHERE length(text) >= {SHINGLE_CHARS}
+)
+SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles,
+       list_min(list_transform(sh, s -> {md5_long_sql("s")})) AS min_shingle_hash
+FROM g
+"""
+
+
+# ---------------------------------------------------------------------------
+# winnowing fingerprints — per-window k-gram hash minima (MOSS-style)
+# ---------------------------------------------------------------------------
+
 WINNOW_WINDOW = 4
 
 
 def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full winnowing (a global-min fingerprint is its degenerate w=∞
-    case): hash every POSITIONAL character 8-gram,
+    """Full winnowing (the algorithm ``q_doc_fingerprint``'s global min is
+    the degenerate w=∞ case of): hash every POSITIONAL character 8-gram,
     slide a window of {WINNOW_WINDOW} consecutive hashes, keep each
     window's minimum — the distinct minima are the document's fingerprint
     set, guaranteeing any match of length ≥ k+w-1 between two documents
@@ -484,6 +616,29 @@ def sample_gate(docs: DataFrame) -> DataFrame:
     return docs.filter(gate < rate)
 
 
+def q_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stratified corpus sampling by language with HASH-based selection:
+    a doc survives iff md5-int64('sample:'+doc_id) % 100 < rate(lang).
+
+    Spark's ``sampleBy`` is seeded per-partition — a shuffle or a different
+    engine draws a different sample. The hash gate is order- and
+    engine-independent (same reasoning as the seeded-noise operator), so
+    the sample is reproducible at any scale and oracle-checkable. Plan:
+    zero-shuffle filter; at 100 TB this is a scan with the gate evaluated
+    in codegen."""
+    docs = load_table(spark, sf_dir, "documents")
+    return sample_gate(docs).select("doc_id", "lang", "source", "n_chars")
+
+
+def _oracle_corpus_sample() -> str:
+    cases = " ".join(f"WHEN lang = '{k}' THEN {v}" for k, v in SAMPLE_RATES.items())
+    gate = md5_long_sql("'sample:' || CAST(doc_id AS VARCHAR)")
+    return f"""
+SELECT doc_id, lang, source, n_chars FROM documents
+WHERE ({gate}) % 100 < (CASE {cases} ELSE 0 END)
+"""
+
+
 # ---------------------------------------------------------------------------
 # mixture rebalancing — sample to TARGET mixture weights (data-mixing step)
 # ---------------------------------------------------------------------------
@@ -512,9 +667,10 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one count agg (partial-combining, group keys only), two 1-row /
     k-row broadcasts back, and ONE shuffle of the corpus on the group key
     for the per-group rank window. Groups are few → that window is the
-    skew point at 100 TB; once group counts come from metadata instead
-    of a scan, the exact rank cutoff can swap for a zero-shuffle
-    hash-rate gate with threshold n_take_g/n_g. Groups
+    skew point at 100 TB; the scale path that removes it is
+    ``mixture_rate_gate`` below (round-6): once group counts come from
+    metadata instead of a scan, the exact rank cutoff swaps for a
+    zero-shuffle hash-rate gate with threshold n_take_g/n_g. Groups
     absent from MIX_WEIGHTS are excluded; a weight for a group absent
     from the corpus simply cannot bind S (no row, no cap)."""
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -579,6 +735,65 @@ FROM sel GROUP BY lang
 """
 
 
+_RATE_DEN = 1_000_000  # hash-gate denominator: rate resolution 1e-6
+
+
+def mixture_takes(
+    group_counts: dict[str, int], *, weights: dict[str, int] = MIX_WEIGHTS
+) -> dict[str, tuple[int, int, int]]:
+    """The metadata half of mixture rebalancing, as pure driver arithmetic:
+    given per-group row counts (from catalog statistics / partition
+    metadata — NO scan), derive the same S = min_g(n_g·100 div w_g) cap
+    and n_take_g = (w_g·S) div 100 as ``q_mixture_sample``, plus the
+    integer hash-gate threshold t_g = (n_take_g·RATE_DEN) div n_g.
+    Returns {group: (n_total, n_take, threshold)} — all-integer, so any
+    engine fed the same counts derives the identical thresholds."""
+    known = {g: n for g, n in group_counts.items() if g in weights and n > 0}
+    if not known:
+        return {}
+    S = min(n * 100 // weights[g] for g, n in known.items())
+    return {
+        g: (n, weights[g] * S // 100, (weights[g] * S // 100) * _RATE_DEN // n)
+        for g, n in known.items()
+    }
+
+
+def mixture_rate_gate(
+    docs: DataFrame,
+    group_counts: dict[str, int],
+    *,
+    weights: dict[str, int] = MIX_WEIGHTS,
+    group_col: str = "lang",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The 100 TB form of ``q_mixture_sample``'s selection (the documented
+    hash-rate-gate swap): when group counts come from table METADATA
+    instead of a scan, the per-group rank window — the exact variant's one
+    corpus shuffle — disappears entirely. A row survives iff
+    md5-int64('mix:'+id) % RATE_DEN < t_g, with t_g derived by
+    ``mixture_takes`` from the metadata counts: a ZERO-SHUFFLE codegen
+    filter stacked on the scan (plan-asserted in tests/test_contamination).
+
+    Trade: the achieved group sizes are binomial around n_take_g
+    (relative error ~1/√n_take) instead of exact — the standard
+    approximation a real mixing job accepts for removing the only
+    exchange. Selection stays reshuffle/engine-independent (same hash
+    contract as every gate in this module) but picks a DIFFERENT
+    deterministic subset than the exact variant's rank cutoff — the two
+    variants' achieved shares are differentially compared in
+    tests/test_contamination.py. Groups with no metadata row or zero/
+    missing weight are excluded, matching the exact variant."""
+    takes = mixture_takes(group_counts, weights=weights)
+    if not takes:
+        return docs.filter(F.lit(False))
+    h = md5_long(F.concat(F.lit("mix:"), F.col(id_col).cast("string"))) % F.lit(_RATE_DEN)
+    thresh = None
+    for g, (_, _, t) in takes.items():
+        cond = (thresh if thresh is not None else F).when(F.col(group_col) == g, F.lit(t))
+        thresh = cond
+    return docs.filter(h < thresh.otherwise(F.lit(0)))
+
+
 # ---------------------------------------------------------------------------
 # TF-IDF top terms per document
 # ---------------------------------------------------------------------------
@@ -641,6 +856,39 @@ FROM (
   SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rnk
   FROM scored
 ) WHERE rnk <= {TFIDF_TOP}
+"""
+
+
+# ---------------------------------------------------------------------------
+# corpus-wide n-gram counts
+# ---------------------------------------------------------------------------
+
+NGRAM_TOP = 20
+
+
+def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-wide top-20 word bigrams (n-gram statistics for tokenizer /
+    contamination analysis): per-row bigram expansion (zero-shuffle), one
+    count shuffle, TakeOrderedAndProject for the top-k."""
+    return (
+        _bigram_stream(load_table(spark, sf_dir, "documents"))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.col("n").desc(), F.col("bigram"))
+        .limit(NGRAM_TOP)
+    )
+
+
+ORACLE_BIGRAM_TOPK = f"""
+WITH tok AS (
+  SELECT string_split(text, ' ') AS words FROM documents WHERE len(string_split(text, ' ')) >= 2
+), bg AS (
+  SELECT unnest(list_transform(range(len(words) - 1),
+                               i -> words[i+1] || ' ' || words[i+2])) AS bigram
+  FROM tok
+)
+SELECT bigram, count(*) AS n FROM bg GROUP BY bigram
+ORDER BY n DESC, bigram LIMIT {NGRAM_TOP}
 """
 
 
@@ -1176,6 +1424,109 @@ FROM scored
 """
 
 
+# doc_fingerprint left OFF the capped registry (round-5 rotation): it is
+# the global-min special case of doc_winnow, which stays registered; its
+# oracle still runs in tests/test_offregistry_parity.py. The freed slots
+# give the round-3 LLM operators (contamination check, sequence packing)
+# hard driver rows. Round-6 rotation: pii_stats + mixture_sample take the
+# slots freed by freshness_now/seeded_noise (see operators/relational.py).
+
+# ---------------------------------------------------------------------------
+# URL / domain analytics (web-crawl curation: provenance + blocklists)
+# ---------------------------------------------------------------------------
+
+# one regex, byte-identical semantics in Java (Spark) and RE2 (DuckDB):
+# scheme + captured domain, domain charset restricted to the common subset
+URL_DOMAIN_RE = r"https?://([0-9a-zA-Z.-]+)"
+URL_MOD = 3  # every URL_MOD-th doc gets planted provenance URLs
+URL_SITES = 7  # rotating site-domain count for the plant
+
+
+def _with_planted_urls(docs: DataFrame) -> DataFrame:
+    """Deterministic positive control (the PII/boilerplate pattern): every
+    URL_MOD-th doc carries one rotating site URL and one fixed CDN URL, so
+    the domain rollup and the blocklist filter have known ground truth on
+    a corpus whose organic text contains no URLs."""
+    return docs.select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % URL_MOD == 0,
+            F.concat(
+                F.col("text"),
+                F.lit(" see https://site"),
+                (F.col("doc_id") % URL_SITES).cast("string"),
+                F.lit(".example.com/p/"),
+                F.col("doc_id").cast("string"),
+                F.lit(" and https://cdn.example.org/a/"),
+                F.col("doc_id").cast("string"),
+            ),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+
+
+def doc_domains(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → one row per URL OCCURRENCE: (doc_id, domain).
+    Zero-shuffle codegen map (regexp_extract_all + explode) — the
+    provenance-extraction primitive for crawl curation."""
+    return docs.select(
+        "doc_id",
+        F.explode(
+            F.regexp_extract_all(F.col("text"), F.lit(URL_DOMAIN_RE), 1)
+        ).alias("domain"),
+    )
+
+
+def q_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-domain provenance rollup over the planted corpus: distinct docs
+    citing the domain + total occurrences. One hash-agg shuffle on the
+    (low-cardinality, uniform) domain key. Off-registry: DuckDB twin runs
+    in tests/test_contamination.py."""
+    docs = _with_planted_urls(load_table(spark, sf_dir, "documents"))
+    return (
+        doc_domains(docs)
+        .groupBy("domain")
+        .agg(
+            F.count_distinct("doc_id").alias("n_docs"),
+            F.count(F.lit(1)).alias("n_hits"),
+        )
+    )
+
+
+ORACLE_URL_DOMAINS = f"""
+WITH corpus AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % {URL_MOD} = 0
+              THEN text || ' see https://site' || CAST(doc_id % {URL_SITES} AS VARCHAR)
+                        || '.example.com/p/' || CAST(doc_id AS VARCHAR)
+                        || ' and https://cdn.example.org/a/' || CAST(doc_id AS VARCHAR)
+              ELSE text END AS text
+  FROM documents
+), hits AS (
+  SELECT doc_id, unnest(regexp_extract_all(text, 'https?://([0-9a-zA-Z.-]+)', 1)) AS domain
+  FROM corpus
+)
+SELECT domain, count(DISTINCT doc_id) AS n_docs, count(*) AS n_hits
+FROM hits GROUP BY domain
+"""
+
+
+def domain_blocklist_filter(docs: DataFrame, blocked: DataFrame) -> DataFrame:
+    """Remove every document citing a blocked domain — the crawl-curation
+    gate. ``blocked`` is a (domain) DataFrame so a 100 TB-scale blocklist
+    works as a plain join (AQE broadcasts a small one from runtime stats);
+    the doc-level removal is a left_anti on doc_id. Docs with no URLs are
+    never touched (the explode emits nothing for them)."""
+    flagged = (
+        doc_domains(docs)
+        .join(blocked.select(F.col(blocked.columns[0]).alias("domain")), "domain")
+        .select("doc_id")
+        .distinct()
+    )
+    return docs.join(flagged, "doc_id", "left_anti")
+
+
 # ---------------------------------------------------------------------------
 # Count-min-sketch heavy hitters (no-false-negative prefilter)
 # ---------------------------------------------------------------------------
@@ -1185,8 +1536,8 @@ CMS_WIDTH = 8192
 
 
 def _bigram_stream(docs: DataFrame) -> DataFrame:
-    """(text) → one row per bigram OCCURRENCE — the exact reference the
-    count-min heavy-hitter tests count against."""
+    """(text) → one row per bigram OCCURRENCE — the zero-shuffle expansion
+    behind the exact top-k (``q_bigram_topk``)."""
     words = F.split(F.col("text"), " ")
     bigrams = F.transform(
         F.sequence(F.lit(0), F.size(words) - F.lit(2)),
@@ -1410,6 +1761,11 @@ SELECT bigram, n_exact, CAST(cms_est AS BIGINT) AS cms_est,
 FROM est
 """
 
+# lang_id_agreement, bigram_topk, text_corpus_rollup and url_domains
+# (single-shuffle token aggregations, the shape text_stats and
+# tfidf_top_terms hold), doc_fingerprint (doc_winnow's) and corpus_sample
+# (mixture_sample's hash gate) stay off the capped registry with oracle
+# parity in tests/test_offregistry_parity.py.
 QUERIES = {
     "text_stats": q_text_stats,
     "doc_winnow": q_doc_winnow,
