@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from wnba_data_pipeline_spark.operators import temporal
 
+from .conftest import SF_SMOKE
+
 
 def _ts(s: str):
     return dt.datetime.fromisoformat(s)
@@ -154,7 +156,7 @@ def test_range_join_plan_is_equi_hash_join(spark):
     from wnba_data_pipeline_spark.sources.tables import load_table
 
     # every same-user event in the 24 hours before each purchase
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
+    events = load_table(spark, SF_SMOKE, "events")
     purchases = events.filter(F.col("event_type") == temporal.ASOF_LEFT_TYPE).select(
         F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("purchase_ts")
     )
